@@ -512,7 +512,8 @@ object Api {
       val req = payload.asInstanceOf[MaintenanceRequest]
       val c = procCtx(ctx, req.procId)
       graft.rollup.Downsampler.maintain(c.store, c.now(),
-        sinceDays = req.sinceDays, retainHistory = req.retainHistory)
+        sinceDays = req.sinceDays, retainHistory = req.retainHistory,
+        profile = c.profile)
       ctrlReport(ctx, "run_maintenance", "ok", "", req.procId)
 
     case "cmd.tsdb.backfill" =>
@@ -521,7 +522,7 @@ object Api {
       val req = payload.asInstanceOf[BackfillRequest]
       val c = procCtx(ctx, req.procId)
       graft.rollup.Downsampler.backfill(c.store, req.fromDate, req.toDate,
-        retainHistory = req.retainHistory)
+        retainHistory = req.retainHistory, profile = c.profile)
       ctrlReport(ctx, "backfill", "ok", "", req.procId)
     case "cmd.tsdb.verify_rollup" =>
       // EXTENSION: the "can I trust my rollups" audit — all-zero
@@ -530,7 +531,7 @@ object Api {
       val req = payload.asInstanceOf[VerifyRollupRequest]
       val c = procCtx(ctx, req.procId)
       graft.rollup.Downsampler.verifyRollups(c.store, req.fromDate,
-        req.toDate, tolerance = req.tolerance)
+        req.toDate, tolerance = req.tolerance, profile = c.profile)
     case "cmd.tsdb.diff_data_points" =>
       // EXTENSION: what changed between two pinned corpus states
       val req = payload.asInstanceOf[DiffRequest]

@@ -19,6 +19,14 @@ object IngestPipeline {
   /** events (Schemas.rawEvent shape) → canonical points DataFrame. */
   def transform(events: DataFrame, config: ProcessConfig,
       metadata: Option[DataFrame]): DataFrame = {
+    val filtered = selectAndFilter(events, config)
+    val enriched = metadata.map(MetadataStore.enrich(filtered, _)).getOrElse(filtered)
+    Transform(enriched)
+  }
+
+  /** The plan prefix every ingest form shares: site id → selector
+   *  match → filter chain. */
+  private def selectAndFilter(events: DataFrame, config: ProcessConfig): DataFrame = {
     // SiteId overrides the address global prefix (= domain tag),
     // reference: process.go:137-139
     val sited =
@@ -30,9 +38,7 @@ object IngestPipeline {
         sited.filter(TopicMatch.anySelector(sited("topic"),
           config.selectors.map(_.topic)))
       else sited
-    val filtered = selected.filter(FilterCompiler.compile(config.filters))
-    val enriched = metadata.map(MetadataStore.enrich(filtered, _)).getOrElse(filtered)
-    Transform(enriched)
+    selected.filter(FilterCompiler.compile(config.filters))
   }
 
   /** Batch form: replayed/loaded events → tiered store (S2+S3). */
@@ -94,16 +100,7 @@ object IngestPipeline {
       provider: MetadataStore.Provider, store: TierStore,
       checkpoint: String, writer: String = ""): StreamingQuery = {
     val w = if (writer.nonEmpty) writer else writerId(checkpoint)
-    val sited =
-      if (config.siteId.nonEmpty)
-        events.withColumn("domain", org.apache.spark.sql.functions.lit(config.siteId))
-      else events
-    val selected =
-      if (config.selectors.nonEmpty)
-        sited.filter(TopicMatch.anySelector(sited("topic"),
-          config.selectors.map(_.topic)))
-      else sited
-    selected.filter(FilterCompiler.compile(config.filters))
+    selectAndFilter(events, config)
       .writeStream
       .outputMode("append")
       .option("checkpointLocation", checkpoint)

@@ -229,13 +229,3 @@ object Schemas {
     StructField("location_id", IntegerType),
     StructField("device_type", StringType)))
 }
-
-/** Aggregation-intent names carried per point (reference: processing/agreggator.go:12-19). */
-object AggFunc {
-  val Mean = "mean"
-  val Last = "last"
-  val Min = "min"
-  val Max = "max"
-  val Difference = "difference"
-  val Sum = "sum"
-}

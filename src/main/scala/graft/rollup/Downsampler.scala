@@ -29,6 +29,16 @@ object Downsampler {
   val defaultTagCols: Seq[String] =
     Seq("dev_id", "dev_type", "dir", "location_id", "service", "src", "topic", "domain", "unit")
 
+  /** Does ingest, under the process's write `profile`, route
+   *  measurement `m` straight into `target` (mapping.go:146-168)? A hop
+   *  into `target` does not own such a measurement's partitions: it must
+   *  neither replace nor retire them, and the rollup audit must not count
+   *  them. Under the optimized profile `electricity_meter_energy_sampled`
+   *  lands in `gen_year` directly; under the simple profile it lands in
+   *  `gen_raw` and reaches `gen_year` only through the cascade. */
+  private def ingestOwned(target: Tier, profile: String)(m: String): Boolean =
+    TierPolicy.resolveWriteTier(m, profile).name == target.name
+
   /**
    * One downsampling hop: mean of `value` per epoch-aligned bucket per
    * (measurement, tags). Buckets align to the epoch like InfluxDB
@@ -140,7 +150,8 @@ object Downsampler {
    */
   def backfill(store: graft.store.TierStore, fromDate: String, toDate: String,
       tagCols: Seq[String] = defaultTagCols,
-      retainHistory: Boolean = false): Unit = {
+      retainHistory: Boolean = false,
+      profile: String = Tier.ProfileOptimized): Unit = {
     val from = java.sql.Date.valueOf(fromDate)
     val to = java.sql.Date.valueOf(toDate)
     require(!from.after(to), s"backfill window is inverted: $fromDate > $toDate")
@@ -168,7 +179,8 @@ object Downsampler {
         .distinct().collect().map(_.getString(0)).toSet
       if (affected.nonEmpty)
         store.replaceDatePartitions(t, downsample(src.drop("date"), res, tagCols),
-          affected.toSeq.sorted, retainHistory = retainHistory)
+          affected.toSeq.sorted, retainHistory = retainHistory,
+          keep = ingestOwned(t, profile))
     }
   }
 
@@ -195,7 +207,8 @@ object Downsampler {
   def verifyRollups(store: graft.store.TierStore, fromDate: String,
       toDate: String, tagCols: Seq[String] = defaultTagCols,
       tolerance: Double = 1e-6,
-      hops: Seq[(Tier, Tier)] = Nil): org.apache.spark.sql.DataFrame = {
+      hops: Seq[(Tier, Tier)] = Nil,
+      profile: String = Tier.ProfileOptimized): org.apache.spark.sql.DataFrame = {
     val from = java.sql.Date.valueOf(fromDate)
     val to = java.sql.Date.valueOf(toDate)
     require(!from.after(to), s"verify window is inverted: $fromDate > $toDate")
@@ -247,7 +260,11 @@ object Downsampler {
       // extra copies, not silently multiply the join — expected is one
       // row per key by construction (a group-by output), actual is
       // whatever the tier really stores
-      val actual = keyed(window(store.read(t)).drop("date"), "v_act")
+      // measurements ingest writes into `t` directly are not rollup rows
+      val owned = store.measurements(t).filter(ingestOwned(t, profile))
+      val stored = window(store.read(t)).drop("date")
+      val actual = keyed(if (owned.isEmpty) stored
+          else stored.filter(!col("measurement").isin(owned: _*)), "v_act")
         .groupBy(keys.map(col): _*)
         .agg(count(lit(1)).as("_c"), min(col("v_act")).as("_vmin"),
           max(col("v_act")).as("_vmax"))
@@ -290,11 +307,15 @@ object Downsampler {
    * partitions, which no snapshot protects) so
    * [[graft.store.TierStore.readAsOf]] can pin pre-pass corpus states
    * across ALL tiers; reclaim space — and re-enforce retention — with
-   * `vacuumTier` per tier plus a later plain maintain.
+   * `vacuumTier` per tier plus a later plain maintain. `profile` is the
+   * process's write profile: a hop leaves alone the measurements ingest
+   * writes straight into its target under that profile ([[backfill]]
+   * and [[verifyRollups]] take the same argument).
    */
   def maintain(store: graft.store.TierStore, now: java.time.Instant,
       sinceDays: Int = 3, tagCols: Seq[String] = defaultTagCols,
-      retainHistory: Boolean = false): Unit = {
+      retainHistory: Boolean = false,
+      profile: String = Tier.ProfileOptimized): Unit = {
     val cutoff = java.sql.Date.valueOf(
       java.time.LocalDate.ofInstant(now, java.time.ZoneOffset.UTC).minusDays(sinceDays))
     // the fixed cascade, then the user-registered CQs in registration
@@ -325,7 +346,8 @@ object Downsampler {
         // publish) — the old drop-then-append left the window missing
         // for the whole aggregation job under concurrent readers
         store.replaceDatePartitions(to, downsample(src.drop("date"), res, tagCols),
-          dates.toSeq, retainHistory = retainHistory)
+          dates.toSeq, retainHistory = retainHistory,
+          keep = ingestOwned(to, profile))
       }
       // retention expiry physically DELETES whole date partitions — no
       // snapshot protects them — so with retainHistory it is deferred

@@ -25,17 +25,15 @@ object EraseAudit {
   /**
    * Parallel breadth-first listing of every parquet data file under
    * `root`, skipping subtrees named in `skipDirs` — each directory
-   * LEVEL lists concurrently on a bounded pool (FileSystem handles are
-   * thread-safe), so the audit's metadata round trips overlap instead
-   * of serializing: at millions of files a sequential recursive
-   * `listStatus` walk is hours of driver RPC before the scan starts
-   * (the round-11 judge's listing ask; the
-   * [[TierStore]].perPartition idiom). Result sorted for determinism.
+   * LEVEL lists concurrently on [[Listing]], the store's one
+   * file-system fan-out pool (FileSystem handles are thread-safe), so
+   * the audit's metadata round trips overlap instead of serializing: at
+   * millions of files a sequential recursive `listStatus` walk is hours
+   * of driver RPC before the scan starts. Called from a task already on
+   * that pool (the tier audit's per-partition fan-out), a level lists
+   * inline, so total concurrency stays at the pool's width. Result
+   * sorted for determinism.
    */
-  // the shared bounded pool lives in [[Listing]] (round 13: promoted
-  // store-wide — query planning and pin capture fan through it too);
-  // one JVM-wide pool caps total listing concurrency at its width even
-  // when audits run from inside a 16-way perPartition pool
   private[graft] def walkParquet(fs: org.apache.hadoop.fs.FileSystem,
       root: HPath, skipDirs: Set[String] = Set.empty): Seq[String] = {
     if (!fs.exists(root)) return Nil

@@ -1,22 +1,24 @@
 package graft.store
 
-import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
+import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.SparkSession
 
 /**
- * EXACTLY-ONCE staged append of one streaming micro-batch into an
- * arbitrary parquet directory tree — the [[TierStore.writeRoutedBatch]]
- * commit protocol, generalized so the persisted similarity/dedup
- * indexes ([[graft.functions.Similarity.streamingIvfAppend]],
- * [[graft.functions.Pipeline.streamingIndexedDedup]]) get the same
- * replay idempotence the tier store has, instead of at-least-once
- * appends repaired at the next compaction.
+ * EXACTLY-ONCE staged append of one micro-batch into a parquet
+ * directory tree — the store's one implementation of the ledger-gated
+ * append (Structured Streaming's idempotent, batch-id-keyed sink). The
+ * tier store commits every append through it ([[TierStore.write]],
+ * [[TierStore.writeRouted]], [[TierStore.writeRoutedBatch]]), and so do
+ * the persisted similarity/dedup indexes
+ * ([[graft.functions.Similarity.streamingIvfAppend]],
+ * [[graft.functions.Pipeline.streamingIndexedDedup]]): a crash replay of
+ * a micro-batch is a no-op, never a second copy of its rows.
  *
  * Protocol per batch (all under `destRoot`):
  *
- *  1. already in the [[BatchLedger]] at `destRoot/_batches`? → the
- *     batch fully committed before a crash; skip (drop leftover
- *     staging) and return false;
+ *  1. already in the [[BatchLedger]] (explicit marker or folded
+ *     watermark)? → the batch fully committed before a crash; skip
+ *     (drop leftover staging) and return false;
  *  2. replay cleanup: a previous attempt's `_manifest` lists exactly
  *     the destination files it may have moved — delete them, then
  *     start over (so at any instant each destination name exists at
@@ -27,29 +29,36 @@ import org.apache.spark.sql.SparkSession
  *     to every plain parquet listing;
  *  4. manifest, then move: each staged data file renames to its
  *     DESTINATION under `destRoot`, preserving the staged RELATIVE
- *     path (partition dirs like `list_id=7/` ride along) with a
- *     DETERMINISTIC batch-tagged name (`b-<writer>-<id>-<k>.parquet`,
- *     [[TierLayout.batchFileName]]) — attempt N and a crash replay
- *     produce the same name set;
+ *     path (partition dirs like `tier=…/measurement=…/date=…/` or
+ *     `list_id=7/` ride along) with a DETERMINISTIC batch-tagged name
+ *     (`b-<writer>-<id>-<k>.parquet`, [[TierLayout.batchFileName]],
+ *     `k` the file's ordinal within its partition dir) — attempt N and
+ *     a crash replay produce the same name set, so a file-source tail
+ *     that logged the first attempt's files sees no phantom new ones.
+ *     The renames are independent metadata operations and fan out on
+ *     the [[Listing]] pool; a rename that reports failure fails the
+ *     batch BEFORE its marker (a retry cleans up through the manifest);
  *  5. commit: create the ledger marker — atomic, the batch is done.
  *
- * Since round 11, index readers DO gate on this ledger: the snapshot
- * resolution ([[SnapshotFold.resolve]], reached through
- * `Similarity.readIvfLists` / `Dedup.readIndexTable`) admits a
- * batch-tagged file only once its marker exists — one ledger listing
- * per query, the same cost the tier store pays — so probes observe
- * clean BATCH BOUNDARIES: never a half-moved batch, never a crashed
- * attempt's files, and fold candidates are only ever committed data.
+ * Readers gate on this ledger: [[TierLayout.resolveFiles]] (tier store)
+ * and [[SnapshotFold.resolve]] (indexes) admit a batch-tagged file only
+ * once its marker exists — one ledger listing per query — so they
+ * observe clean BATCH BOUNDARIES: never a half-moved batch, never a
+ * crashed attempt's files, and maintenance folds only committed data.
+ * Cost per batch: the caller's one write job, one rename per file
+ * (metadata-only on HDFS/ABFS; a server-side copy on S3A — the standard
+ * commit-protocol trade without conditional PUT), one marker create.
  *
- * The ledger is per-(destRoot, writer); derive `writer` from the
+ * The ledger is per-(ledger root, writer); derive `writer` from the
  * stream's checkpoint ([[graft.ingest.IngestPipeline.writerId]] idiom)
- * so two queries never share a namespace. [[foldMarkers]] keeps the
+ * so two queries never share a namespace. [[foldAllMarkers]] keeps the
  * ledger listing O(recent batches) over an unbounded stream.
  */
 object StagedBatchAppend {
 
-  /** Test seam, [[TierStore.batchHook]] style: invoked at the phase
-   *  boundaries "staged", "manifested", "moved". */
+  /** Test seam: invoked at the phase boundaries "staged",
+   *  "manifested", "moved" of appends that pass no `phases` of their
+   *  own ([[TierStore]] passes its per-store `batchHook`). */
   private[graft] var hook: String => Unit = _ => ()
 
   private def fsOf(spark: SparkSession, p: HPath): FileSystem =
@@ -76,9 +85,13 @@ object StagedBatchAppend {
    * crash replay of a batch committed BEFORE a rebuild still skips —
    * the rebuilt corpus already contains that batch's rows, and a
    * per-generation ledger would silently re-append them.
+   *
+   * `phases` receives the phase boundaries "staged", "manifested",
+   * "moved" (the crash-injection seam; default [[hook]]).
    */
   def append(spark: SparkSession, destRoot: String, writer: String,
-      batchId: Long, ledgerRoot: Option[String] = None)
+      batchId: Long, ledgerRoot: Option[String] = None,
+      phases: String => Unit = hook)
       (write: String => Unit): Boolean = {
     val rootP = new HPath(destRoot)
     val ledgerP = ledgerRoot.map(new HPath(_)).getOrElse(rootP)
@@ -100,19 +113,21 @@ object StagedBatchAppend {
     fs.delete(staging, true)
 
     write(staging.toString)
-    hook("staged")
+    phases("staged")
 
     def dataFiles(dir: HPath): Seq[HPath] =
-      if (!fs.exists(dir)) Nil
-      else fs.listStatus(dir).toSeq.flatMap { e =>
+      fs.listStatus(dir).toSeq.flatMap { e =>
         val n = e.getPath.getName
         if (e.isDirectory && !n.startsWith("_") && !n.startsWith("."))
           dataFiles(e.getPath)
         else if (TierLayout.isDataFile(e)) Seq(e.getPath)
         else Nil
       }
+    val staged = if (fs.exists(staging)) dataFiles(staging) else Nil
+    // listStatus returns scheme-qualified paths — qualify the prefix the
+    // relative partition path is computed against
     val stagingQ = fs.makeQualified(staging)
-    val relocated = dataFiles(staging).map { src =>
+    val relocated = staged.map { src =>
       val rel = src.toString.stripPrefix(stagingQ.toString).stripPrefix("/")
       require(rel != src.toString, s"staged file $src outside $stagingQ")
       val parent = rel.lastIndexOf('/') match {
@@ -132,13 +147,14 @@ object StagedBatchAppend {
       try out.write(moves.map(_._2.toString).mkString("", "\n", "\n")
         .getBytes("UTF-8"))
       finally out.close()
-      hook("manifested")
-      moves.foreach { case (src, dst) =>
+      phases("manifested")
+      Listing.inParallel(moves) { case (src, dst) =>
         fs.mkdirs(dst.getParent)
-        fs.rename(src, dst)
-      }
+        if (!fs.rename(src, dst))
+          throw new java.io.IOException(s"rename $src -> $dst failed")
+      }: Unit
     }
-    hook("moved")
+    phases("moved")
     fs.mkdirs(marker.getParent)
     val m = fs.create(marker, false); m.close() // the atomic commit
     fs.delete(staging, true)
@@ -147,18 +163,18 @@ object StagedBatchAppend {
     true
   }
 
-  /** Fold contiguous committed markers of `writer` into a watermark —
-   *  [[TierStore.vacuumBatchMarkers]]'s rule on an arbitrary root. */
+  /** Fold contiguous committed markers of `writer` into a watermark
+   *  ([[BatchLedger.foldMarkers]]). */
   def foldMarkers(spark: SparkSession, destRoot: String, writer: String): Unit =
     BatchLedger.foldMarkers(fsOf(spark, new HPath(destRoot)),
       new HPath(destRoot), writer)
 
   /** Fold EVERY writer present in the ledger at `destRoot` — called by
-   *  the index compactions (the single maintainer) so an unbounded
-   *  stream's ledger listing stays O(recent batches) without the
-   *  deployment knowing the set of checkpoints that ever appended.
-   *  Index ledgers carry no as-of pins (only replay-skip answers), so
-   *  folding here loses nothing. */
+   *  the index compactions and [[TierStore.vacuumBatchMarkers]] (the
+   *  single maintainer) so an unbounded stream's ledger listing stays
+   *  O(recent batches) without the deployment knowing the set of
+   *  checkpoints that ever appended. A fold loses nothing: replay skips
+   *  and as-of pins both read the watermark ([[BatchLedger.read]]). */
   def foldAllMarkers(spark: SparkSession, destRoot: String): Unit = {
     val rootP = new HPath(destRoot)
     val fs = fsOf(spark, rootP)

@@ -90,25 +90,17 @@ final class TierStore(spark: SparkSession, val root: String) {
   private[graft] val defaultPublishHook: String => Unit = _ => ()
   private[graft] var publishHook: String => Unit = defaultPublishHook
 
-  /** Run independent per-partition publish/vacuum actions on a bounded
-   *  pool: each acts on its OWN partition directory (disjoint FS
-   *  state, Hadoop FileSystem handles are thread-safe), and a
-   *  maintenance window at 100 TB spans thousands of partitions — a
-   *  sequential loop of per-partition metadata round trips is a pure
+  /** Run independent per-partition publish/vacuum actions on the
+   *  store's [[Listing]] pool: each acts on its OWN partition directory
+   *  (disjoint FS state, Hadoop FileSystem handles are thread-safe),
+   *  and a maintenance window at 100 TB spans thousands of partitions —
+   *  a sequential loop of per-partition metadata round trips is a pure
    *  driver bottleneck. Result order matches input order. Runs SERIAL
    *  whenever a test hook is installed, so crash seams keep firing
    *  deterministically. */
   private def perPartition[A, B](items: Seq[A])(f: A => B): Seq[B] =
-    if ((publishHook ne defaultPublishHook) || items.lengthCompare(1) <= 0)
-      items.map(f)
-    else {
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(16, items.length))
-      try items.map(a => pool.submit(new java.util.concurrent.Callable[B] {
-        def call(): B = f(a)
-      })).map(_.get())
-      finally pool.shutdown()
-    }
+    if (publishHook ne defaultPublishHook) items.map(f)
+    else Listing.inParallel(items)(f)
 
   /**
    * Publish a staged replacement for one partition as the next
@@ -186,11 +178,7 @@ final class TierStore(spark: SparkSession, val root: String) {
       .map(_.getPath.getName)
 
   /** Append points into a tier (S3 batch write sink; process.go:290-337).
-   *  Rows are sorted by time within each written file so parquet
-   *  row-group min/max statistics are tight — the planner's pushed-down
-   *  time predicates then skip whole row groups inside a date partition,
-   *  not just whole partitions. */
-  /** Plain batch appends COMMIT THROUGH THE LEDGER too (writer
+   *  Plain batch appends COMMIT THROUGH THE LEDGER too (writer
    *  namespace "batch", ids allocated from the ledger itself): the
    *  append lands via the same staged protocol as
    *  [[writeRoutedBatch]], so every row this store writes has a ledger
@@ -230,13 +218,9 @@ final class TierStore(spark: SparkSession, val root: String) {
   private def nextPlainBatchId(): Long = {
     val d = BatchLedger.dir(new HPath(root))
     if (!fs.exists(d)) return 0L
-    val names = fs.listStatus(d).map(_.getPath.getName)
-    val idPat = s"^_b_${PlainWriter}_([0-9]+)$$".r
-    val lowPat = s"^_bwm_${PlainWriter}_([0-9]+)$$".r
-    names.collect {
-      case idPat(n) => n.toLong
-      case lowPat(n) => n.toLong
-    }.maxOption.map(_ + 1L).getOrElse(0L)
+    fs.listStatus(d).toSeq.flatMap(e => BatchLedger.entryPos(e.getPath.getName))
+      .collect { case (PlainWriter, n) => n }
+      .maxOption.map(_ + 1L).getOrElse(0L)
   }
 
   /** Test seam for the exactly-once replay spec: invoked between the
@@ -247,42 +231,23 @@ final class TierStore(spark: SparkSession, val root: String) {
    * EXACTLY-ONCE routed append for streaming micro-batches. Structured
    * Streaming's checkpoint gives at-least-once through `foreachBatch`:
    * after a crash between the sink write and the offset commit, the
-   * last batch REPLAYS, and a plain [[writeRouted]] would append its
-   * rows twice. This path makes the replay idempotent with the same two
-   * primitives the snapshot publish uses (`_`-prefixed staging is
-   * invisible to listings; creating one small marker file is atomic):
-   *
-   *  1. already in the [[BatchLedger]]? → the batch fully committed
-   *     before the crash; skip (just drop any leftover staging);
-   *  2. stage: the routed write lands under `<root>/_staging/<writer>/
-   *     b=<id>/` — one Spark job, invisible to every reader;
-   *  3. manifest: the staged files' DESTINATION paths (partition dir +
-   *     `b-<writer>-<id>-<file>` name) are written to a `_manifest`
-   *     inside the staging dir — a replay after a later crash deletes
-   *     exactly these, no tree walk;
-   *  4. move: each staged file renames into its final partition under
-   *     its batch-tagged name. The files are LISTED by plain readers but
-   *     admitted by none: [[TierLayout.resolveFiles]] gates batch-tagged
-   *     names on the ledger;
-   *  5. commit: create `_b_<writer>_<id>` — the batch becomes visible
-   *     everywhere, atomically.
-   *
-   * A crash at ANY point replays into: (1) skip, or (2-4) manifest-led
-   * cleanup + full redo. Readers never see a partial batch; maintenance
-   * never folds or vacuums an uncommitted one ([[rawFiles]] applies the
-   * same gate). Cost per batch: the same single write job, one rename
-   * per file (metadata-only on HDFS/ABFS; a server-side copy on S3A —
-   * the standard commit-protocol trade without conditional PUT), one
-   * marker create. Returns false when the batch was already committed.
+   * last batch REPLAYS. This append commits through
+   * [[StagedBatchAppend.append]] under `writer`'s ledger namespace, so
+   * the replay is a no-op: the routed write is staged invisibly, its
+   * files move to batch-tagged names in their (tier, measurement, date)
+   * partitions, and one ledger marker commits them. Readers never see a
+   * partial batch ([[TierLayout.resolveFiles]] gates batch-tagged names
+   * on the ledger); maintenance never folds or vacuums an uncommitted
+   * one ([[rawFiles]] applies the same gate). Returns false when the
+   * batch was already committed.
    *
    * NOTE the file-source tail boundary: `streamingHop` tails the tier
    * directory with a PLAIN listing and so may read a batch before its
-   * marker lands (at-least-once there, as its scaladoc documents).
-   * Destination names are DETERMINISTIC (partition ordinal — the
-   * repartition puts each (tier, measurement, date) in one task, so
-   * attempt N and a crash-replay produce the same name set), which
-   * keeps that tail from double-counting a replayed batch: the
-   * rewrite lands on names its processed-files log already holds.
+   * marker lands (at-least-once there, as its scaladoc documents). The
+   * DETERMINISTIC destination names (the repartition puts each (tier,
+   * measurement, date) in one task) keep that tail from double-counting
+   * a replayed batch: the rewrite lands on names its processed-files
+   * log already holds.
    */
   def writeRoutedBatch(points: DataFrame, batchId: Long,
       profile: String = Tier.ProfileOptimized,
@@ -292,110 +257,35 @@ final class TierStore(spark: SparkSession, val root: String) {
 
   /** The staged ledger-committed append, parameterized on the tier
    *  routing column — [[writeRoutedBatch]] passes the policy
-   *  classifier, the plain [[write]] a pinned literal. */
+   *  classifier, the plain [[write]] a pinned literal. Rows are sorted
+   *  by time within each written file so parquet row-group statistics
+   *  are tight for the planner's pushed-down time predicates. */
   private def writeBatchWith(points: DataFrame, batchId: Long,
-      tierCol: Column, writer: String): Boolean = {
-    val rootP = new HPath(root)
-    val marker = BatchLedger.markerFile(rootP, writer, batchId)
-    val staging = new HPath(root, s"_staging/$writer/b=$batchId")
-    if (fs.exists(marker)) { rmTree(staging.toString); return false }
-
-    // replay cleanup: a previous attempt's manifest lists exactly the
-    // destinations it may have moved — delete them, then start over
-    val manifest = new HPath(staging, "_manifest")
-    if (fs.exists(manifest)) {
-      val in = fs.open(manifest)
-      val text = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-      text.linesIterator.filter(_.nonEmpty)
-        .foreach(p => fs.delete(new HPath(p), false))
+      tierCol: Column, writer: String): Boolean =
+    StagedBatchAppend.append(spark, root, writer, batchId,
+        phases = p => batchHook(p)) { staging =>
+      points
+        .withColumn("tier", tierCol)
+        .withColumn("date", to_date(col("time")))
+        .repartition(col("tier"), col("measurement"), col("date"))
+        .sortWithinPartitions(col("tier"), col("measurement"), col("date"), col("time"))
+        .write.partitionBy("tier", "measurement", "date")
+        .parquet(staging)
     }
-    rmTree(staging.toString)
 
-    points
-      .withColumn("tier", tierCol)
-      .withColumn("date", to_date(col("time")))
-      .repartition(col("tier"), col("measurement"), col("date"))
-      .sortWithinPartitions(col("tier"), col("measurement"), col("date"), col("time"))
-      .write.partitionBy("tier", "measurement", "date")
-      .parquet(staging.toString)
-    batchHook("staged")
-
-    // enumerate staged data files and their final batch-tagged homes
-    def dataFiles(dir: HPath): Seq[HPath] =
-      fs.listStatus(dir).toSeq.flatMap { e =>
-        if (e.isDirectory) dataFiles(e.getPath)
-        else if (TierLayout.isDataFile(e)) Seq(e.getPath) else Nil
-      }
-    // listStatus returns scheme-qualified paths — qualify the prefix the
-    // relative partition path is computed against
-    val stagingQ = fs.makeQualified(staging)
-    val relocated = dataFiles(staging).map { src =>
-      val rel = src.toString.stripPrefix(stagingQ.toString).stripPrefix("/")
-      require(rel != src.toString, s"staged file $src outside $stagingQ")
-      val parent = rel.lastIndexOf('/') match {
-        case -1 => ""
-        case i => rel.substring(0, i) + "/"
-      }
-      (src, parent)
-    }
-    // DETERMINISTIC destination names (partition ordinal, not the task
-    // UUID Spark put in the staged name): a replay that rewrites the
-    // batch lands on the SAME names, so a concurrent file-source tail
-    // of the tier (streamingHop) that already logged the first
-    // attempt's files does not see the rewrite as new data
-    val moves = relocated.groupBy(_._2).toSeq.flatMap { case (parent, files) =>
-      files.sortBy(_._1.getName).zipWithIndex.map { case ((src, _), k) =>
-        val name = TierLayout.batchFileName(writer, batchId, s"$k.parquet")
-        src -> new HPath(root, parent + name)
-      }
-    }
-    if (moves.nonEmpty) {
-      val out = fs.create(manifest, true)
-      try out.write(moves.map(_._2.toString).mkString("", "\n", "\n").getBytes("UTF-8"))
-      finally out.close()
-      batchHook("manifested")
-      // renames are independent per-file metadata ops — run them on a
-      // small pool: a wide routed batch (many (tier, measurement, date)
-      // partitions) otherwise pays one sequential FS round trip per
-      // file, which dominated the commit at high partition fan-out
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(
-        math.min(16, math.max(1, moves.length)))
-      try {
-        moves.map { case (src, dst) =>
-          pool.submit(new Runnable {
-            def run(): Unit = { fs.mkdirs(dst.getParent); fs.rename(src, dst): Unit }
-          })
-        }.foreach(_.get())
-      } finally pool.shutdown()
-    }
-    batchHook("moved")
-
-    fs.mkdirs(marker.getParent)
-    val m = fs.create(marker, false); m.close() // the atomic commit
-    rmTree(staging.toString)
-    true
-  }
-
-  /**
-   * Fold old batch markers into a per-writer watermark so the ledger
-   * listing stays O(recent batches) over an unbounded stream: markers
-   * below the highest CONTIGUOUS committed id (every id from the current
-   * watermark up to it present) collapse into one `_bwm` watermark file. Gaps
-   * stay as explicit markers — a gap is a batch that never committed,
-   * and the watermark must not claim it. */
+  /** Fold old batch markers of `writer` into its ledger watermark
+   *  ([[BatchLedger.foldMarkers]]: contiguous committed ids collapse,
+   *  gaps stay explicit) so the ledger listing stays O(recent batches)
+   *  over an unbounded stream. */
   def vacuumBatchMarkers(writer: String): Unit =
-    BatchLedger.foldMarkers(fs, new HPath(root), writer)
+    StagedBatchAppend.foldMarkers(spark, root, writer)
 
   /** Fold markers for EVERY writer present in the ledger — maintenance
    *  doesn't need to know the set of streams that ever appended (each
    *  streaming query gets its own ledger namespace via
    *  [[graft.ingest.IngestPipeline.writerId]]). */
-  def vacuumBatchMarkers(): Unit = {
-    val d = BatchLedger.dir(new HPath(root))
-    if (!fs.exists(d)) return
-    BatchLedger.writers(fs.listStatus(d).toSeq.map(_.getPath.getName))
-      .foreach(vacuumBatchMarkers)
-  }
+  def vacuumBatchMarkers(): Unit =
+    StagedBatchAppend.foldAllMarkers(spark, root)
 
   /**
    * Read a tier table (empty DataFrame with points schema if absent or
@@ -1265,10 +1155,18 @@ final class TierStore(spark: SparkSession, val root: String) {
    * commit frontier — some partitions new, the rest still old and
    * complete. The window is one metadata publish per partition, not
    * data-proportional.
+   *
+   * Partitions of a measurement for which `keep` holds are neither
+   * replaced nor retired: the caller does not own them (a rollup hop
+   * passes the measurements ingest writes straight into its target
+   * tier).
    */
   def replaceDatePartitions(tier: Tier, fresh: DataFrame, dates: Seq[String],
-      retainHistory: Boolean = false): Unit = maintenanceLock.synchronized {
+      retainHistory: Boolean = false,
+      keep: String => Boolean = _ => false): Unit = maintenanceLock.synchronized {
     val tierPathS = path(tier.name)
+    def kept(mDir: String): Boolean = keep(org.apache.spark.sql.catalyst.catalog
+      .ExternalCatalogUtils.unescapePathName(mDir.stripPrefix("measurement=")))
     val staging = new HPath(tierPathS, "._restaging")
     rmTree(staging.toString)
     fresh
@@ -1284,6 +1182,7 @@ final class TierStore(spark: SparkSession, val root: String) {
     // MOVES the staged dir, so existence checks after it would lie)
     val staged = (for {
       mDir <- subDirs(staging.toString) if mDir.getName.startsWith("measurement=")
+      if !kept(mDir.getName)
       dDir <- subDirs(mDir.toString) if dDir.getName.startsWith("date=")
     } yield (mDir.getName, dDir.getName)).toSet
     val published = perPartition(staged.toSeq) { case (m, d) =>
@@ -1296,6 +1195,7 @@ final class TierStore(spark: SparkSession, val root: String) {
     val dateSet = dates.toSet
     val retireTargets = for {
       mDir <- subDirs(tierPathS) if mDir.getName.startsWith("measurement=")
+      if !kept(mDir.getName)
       dDir <- subDirs(mDir.toString) if dDir.getName.startsWith("date=")
       if dateSet.contains(dDir.getName.stripPrefix("date="))
       if !staged((mDir.getName, dDir.getName))

@@ -46,6 +46,35 @@ class ExactlyOnceAppendSpec extends SparkSpec {
     assert(values(store, Tier.GenRaw) == Seq(1.0, 2.0, 3.0))
   }
 
+  test("replay after a marker fold is still a no-op: the skip check " +
+    "reads the folded watermark, not just the explicit marker") {
+    val store = new TierStore(spark, tmpDir())
+    assert(store.writeRoutedBatch(pts(("sensor_temp", 1.0), ("sensor_temp", 2.0)), 0L))
+    store.vacuumBatchMarkers() // _b_ingest_0 folds into _bwm_ingest_0
+    assert(!store.writeRoutedBatch(pts(("sensor_temp", 1.0), ("sensor_temp", 2.0)), 0L),
+      "a replay of a folded batch must be skipped, not rewritten")
+    assert(values(store, Tier.GenRaw) == Seq(1.0, 2.0))
+  }
+
+  test("a rename that reports failure fails the batch before its marker; " +
+    "the retry lands it exactly once") {
+    val hconf = spark.sparkContext.hadoopConfiguration
+    hconf.set("fs.failrename.impl", classOf[FailingRenameFileSystem].getName)
+    val root = "failrename://" + tmpDir()
+    val store = new TierStore(spark, root)
+    assert(store.writeRoutedBatch(pts(("sensor_temp", 1.0)), 0L))
+    // two partitions, so two files move in parallel and one of them fails
+    val batch1 = pts(("sensor_temp", 2.0), ("sensor_hum", 3.0))
+    FailingRenameFileSystem.failures.set(1)
+    try intercept[java.io.IOException](store.writeRoutedBatch(batch1, 1L))
+    finally FailingRenameFileSystem.failures.set(0)
+    assert(!graft.store.StagedBatchAppend.committed(spark, root, "ingest", 1L),
+      "a batch whose file never arrived was committed")
+    assert(values(store, Tier.GenRaw) == Seq(1.0))
+    assert(store.writeRoutedBatch(batch1, 1L))
+    assert(values(store, Tier.GenRaw) == Seq(1.0, 2.0, 3.0))
+  }
+
   test("crash after moves, before the marker: invisible, replay lands it once") {
     val root = tmpDir()
     val store = new TierStore(spark, root)

@@ -74,6 +74,25 @@ class PlannerSpec extends SparkSpec {
     assert(resolveWriteTier("app_event", Tier.ProfileOptimized) == Tier.GenDefault)
   }
 
+  test("write routing: the plan form writeTierCol agrees with the driver " +
+    "form resolveWriteTier under both profiles") {
+    import graft.ingest.Transform
+    import org.apache.spark.sql.functions.col
+    val ms = Seq(Transform.MeasPower, Transform.MeasEnergy,
+      Transform.MeasEnergySampled, Transform.MeasPriceInfo,
+      "sensor_presence", "sensor_contact")
+    // a data column, not literals: the plan form is evaluated per row,
+    // as in the routed write, rather than constant-folded
+    val df = spark.createDataFrame(ms.map(Tuple1(_))).toDF("measurement")
+    Seq(Tier.ProfileOptimized, Tier.ProfileSimple).foreach { profile =>
+      val byPlan = df.select(col("measurement"),
+          TierPolicy.writeTierCol(col("measurement"), profile))
+        .collect().map(r => r.getString(0) -> r.getString(1)).toMap
+      val byDriver = ms.map(m => m -> TierPolicy.resolveWriteTier(m, profile).name).toMap
+      assert(byPlan == byDriver, s"routing forms disagree under profile $profile")
+    }
+  }
+
   // --- planner shapes ---
 
   private def plan(req: DataPointsRequest, df: DataFrame) =

@@ -120,6 +120,65 @@ class StoreStreamSpec extends SparkSpec {
     assert(store.read(Tier.GenYear).count() == 2)
   }
 
+  test("rollup maintenance keeps the points ingest routes straight into " +
+    "gen_year (electricity_meter_energy_sampled)") {
+    val store = new TierStore(spark, tmpDir())
+    store.writeRouted(pts(("electricity_meter_energy_sampled", "2024-01-01", 1.5),
+      ("electricity_meter_power", "2024-01-01", 40.0)))
+    def sampled() = store.read(Tier.GenYear)
+      .filter(col("measurement") === "electricity_meter_energy_sampled")
+      .collect().map(_.getAs[Double]("value")).toSeq
+    assert(sampled() == Seq(1.5))
+    val now = Instant.parse("2024-01-03T00:00:00Z")
+    graft.rollup.Downsampler.maintain(store, now, sinceDays = 5)
+    assert(sampled() == Seq(1.5),
+      "the gen_month -> gen_year hop retired an ingest-written partition")
+    // the power point still rolls up beside it
+    assert(store.read(Tier.GenYear).count() == 2)
+    graft.rollup.Downsampler.backfill(store, "2024-01-01", "2024-01-01")
+    assert(sampled() == Seq(1.5))
+    // and the rollup audit does not count it as a stray rollup row
+    val audit = graft.rollup.Downsampler.verifyRollups(store, "2024-01-01",
+      "2024-01-01", hops = Seq(Tier.GenMonth -> Tier.GenYear)).collect()
+    assert(audit.nonEmpty && audit.forall(r =>
+      r.getAs[Long]("n_extra") == 0L && r.getAs[Long]("n_missing") == 0L),
+      audit.mkString("; "))
+  }
+
+  test("under the simple profile, rollup maintenance still carries " +
+    "electricity_meter_energy_sampled into gen_year through the cascade") {
+    import graft.api.Api
+    val store = new TierStore(spark, tmpDir())
+    // the simple profile routes both points to gen_raw; gen_year is
+    // reached only by the cascade, which the energy queries read
+    store.writeRouted(pts(("electricity_meter_energy_sampled", "2024-01-01", 1.5),
+      ("electricity_meter_power", "2024-01-01", 40.0)), Tier.ProfileSimple)
+    assert(store.read(Tier.GenYear).count() == 0)
+    val ctx = Api.Context(spark, store, profile = Tier.ProfileSimple,
+      now = () => Instant.parse("2024-01-03T00:00:00Z"))
+    def sampled() = store.read(Tier.GenYear)
+      .filter(col("measurement") === "electricity_meter_energy_sampled")
+      .collect().map(_.getAs[Double]("value")).toSeq
+    Api.dispatch(ctx, "cmd.tsdb.run_maintenance",
+      Api.MaintenanceRequest(sinceDays = 5)).collect()
+    assert(sampled() == Seq(1.5), "the cascade did not publish the rollup")
+    assert(store.read(Tier.GenYear).count() == 2)
+    // a backfill recomputes the same rollup rather than skipping it
+    store.write(Tier.GenRaw, pts(("electricity_meter_energy_sampled", "2024-01-01", 2.5)))
+    Api.dispatch(ctx, "cmd.tsdb.backfill",
+      Api.BackfillRequest(fromDate = "2024-01-01", toDate = "2024-01-01")).collect()
+    assert(sampled() == Seq(2.0), "backfill did not replace the stale rollup")
+    // and the audit compares the rollup rather than leaving it out
+    val audit = Api.dispatch(ctx, "cmd.tsdb.verify_rollup",
+      Api.VerifyRollupRequest(fromDate = "2024-01-01", toDate = "2024-01-01"))
+      .filter(col("tier") === "gen_year").collect()
+    assert(audit.map(_.getAs[String]("measurement")).toSet ==
+      Set("electricity_meter_energy_sampled", "electricity_meter_power"))
+    assert(audit.forall(r => r.getAs[Long]("n_expected") == 1L &&
+      r.getAs[Long]("n_actual") == 1L && r.getAs[Long]("n_missing") == 0L &&
+      r.getAs[Long]("n_extra") == 0L), audit.mkString("; "))
+  }
+
   test("compaction rewrites many small files into few, same rows") {
     val root = tmpDir()
     val store = new TierStore(spark, root)
