@@ -12,9 +12,10 @@ import org.apache.hadoop.fs.{FileSystem, Path => HPath}
  *    markers/watermarks). Per-writer commit order is monotonic, so
  *    "id ≤ position" is exactly the set committed at capture.
  *  - `seqs`   — per-directory highest committed snapshot version
- *    ([[TierLayout]] `_commit_N` / [[SnapshotFold]]) and per-index
- *    highest committed generation ([[IndexGenerations]], keyed
- *    `<path>#gen`), keyed by the fs-qualified directory path.
+ *    (the `_commit_N` markers of [[SnapshotFold]], which tier
+ *    partitions and index directories share) and per-index highest
+ *    committed generation ([[IndexGenerations]], keyed `<path>#gen`),
+ *    keyed by the fs-qualified directory path.
  *  - `millis` — the max storage-reported mtime observed at capture.
  *    DISPLAY and FOREIGN-FILE FALLBACK ONLY: every file the engine
  *    itself writes is either batch-tagged (ledger-resolved) or inside
@@ -102,8 +103,8 @@ object AsOfPin {
    *    the direct-children data files of each snapDir (the foreign-file
    *    fallback coordinate, and the human-readable capture instant).
    *
-   * One listing per directory — the same metadata cost the old mtime
-   * pin paid.
+   * One listing per directory plus one manifest read per commit
+   * marker (one, once vacuumed).
    */
   def capture(fs: FileSystem, root: HPath, snapDirs: Seq[HPath],
       genPath: Option[String] = None): AsOfPin = {
@@ -134,17 +135,15 @@ object AsOfPin {
       }
     }
     // per-directory version discovery fans through the shared bounded
-    // listing pool (one listing + at most one manifest read per dir;
-    // results merged on the caller)
+    // listing pool (one listing + the manifest reads per dir; results
+    // merged on the caller)
     Listing.inParallel(snapDirs) { d =>
       if (!fs.exists(d)) None
       else {
         val entries = fs.listStatus(d).toSeq
         val maxM = entries.foldLeft(0L)((m, e) =>
           if (e.isFile) math.max(m, e.getModificationTime) else m)
-        val v = entries.flatMap(e => TierLayout.parseCommit(e.getPath.getName))
-          .sorted.reverse
-          .find(v => TierLayout.readManifest(fs, d, v).isDefined)
+        val v = SnapshotFold.commits(fs, d, entries).lastOption.map(_._1)
         Some((dirKey(fs, d), v, maxM))
       }
     }.flatten.foreach { case (key, v, maxM) =>

@@ -61,7 +61,7 @@ object IndexGenerations {
     if (!fs.exists(rootP)) return path
     val pinG = pin.map(_.seqPos(AsOfPin.genKey(fs, path)))
     pinG.foreach { g =>
-      val fl = SnapshotFold.readFloor(fs, rootP)
+      val fl = SnapshotFold.readFloor(fs, rootP).version
       if (fl >= 1 && g <= fl) throw new IllegalStateException(
         s"as-of pin (generation $g) predates the index's vacuumed-" +
           s"generation floor $fl ($path) — re-pin, or rebuild with " +

@@ -40,9 +40,9 @@ import org.apache.spark.sql.SparkSession
  *     batch BEFORE its marker (a retry cleans up through the manifest);
  *  5. commit: create the ledger marker — atomic, the batch is done.
  *
- * Readers gate on this ledger: [[TierLayout.resolveFiles]] (tier store)
- * and [[SnapshotFold.resolve]] (indexes) admit a batch-tagged file only
- * once its marker exists — one ledger listing per query — so they
+ * Readers gate on this ledger: [[SnapshotFold.resolve]] (tier store
+ * and indexes alike) admits a batch-tagged file only once its marker
+ * exists — one ledger listing per query — so readers
  * observe clean BATCH BOUNDARIES: never a half-moved batch, never a
  * crashed attempt's files, and maintenance folds only committed data.
  * Cost per batch: the caller's one write job, one rename per file

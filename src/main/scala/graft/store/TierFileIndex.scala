@@ -9,44 +9,39 @@ import org.apache.spark.sql.types.{DateType, StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /**
- * Manifest-versioned partition layout for the tier store — snapshot
- * publication that is safe on object stores WITHOUT atomic rename
- * (S3A emulates rename by copy+delete; the old two-rename swap's own
- * scaladoc conceded that reopens a visibility window proportional to
- * partition size).
+ * File-name and manifest FORMAT helpers of the store's one snapshot
+ * protocol, [[SnapshotFold]] — the tier partitions and the index
+ * directories share them. Layout inside one directory (a tier store
+ * (measurement, date) partition, or an index table):
  *
- * Layout inside one (measurement, date) partition directory:
+ *   part-*.parquet, b-<w>-<id>-*  raw data files (plain / batch-tagged)
+ *   _v=N/part-*.parquet           snapshot N's data files
+ *   _commit_N                     manifest of snapshot N: the relative
+ *                                 paths it superseded, `ok`-terminated
  *
- *   date=D/part-*.parquet         unversioned data (plain appends)
- *   date=D/_v=N/part-*.parquet    snapshot N's data files
- *   date=D/_commit_N              manifest: snapshot N is committed
+ * Publication needs NO atomic primitive beyond "a small file appears
+ * atomically with its content" (HDFS rename, one S3 PUT):
+ * `_`-prefixed entries are invisible to plain listings, so a snapshot
+ * directory can be staged, renamed, even COPIED file by file into
+ * place, and the commit is the appearance of the manifest
+ * ([[commit]]). Resolution, publication and vacuum are
+ * [[SnapshotFold]]'s.
  *
- * The invariants that make publication race-free with NO atomic
- * primitive beyond "a newly created small file appears atomically"
- * (true of HDFS create+close and of a single S3 PUT):
- *
- *  - `_`-prefixed entries are invisible to plain Hadoop/Spark listings,
- *    so a snapshot directory can be staged, renamed, even COPIED file
- *    by file into place — readers cannot observe it until commit;
- *  - the commit is the creation of the empty `_commit_N` marker — one
- *    small object, never renamed, never overwritten;
- *  - readers resolve each partition to `_v=M` for the LARGEST committed
- *    M (falling back to the unversioned files when no commit exists),
- *    pinning the file list AT PLAN TIME — a query carries one coherent
- *    snapshot per partition end to end, a reader mid-publish sees
- *    either the old complete snapshot or the new complete one;
- *  - stale snapshots are vacuumed only AFTER the new commit lands, so
- *    the only reader a cleanup can affect is one that planned before a
- *    publish and scanned after the vacuum — the same contract as any
- *    snapshot store's vacuum (document retention, or configure
- *    `spark.sql.files.ignoreMissingFiles` for long-running readers).
+ * ON-DISK BREAK: snapshots resolve by the union of every committed
+ * manifest. Tier partitions used to resolve by the newest manifest
+ * alone, and their manifests listed only the raw files a publish
+ * superseded, so a store written that way with RETAINED history (or
+ * with a committed `_v=` dir a crash left behind) would read its
+ * superseded snapshots again next to the current one. Run
+ * `TierStore.vacuumTier` on every tier with the old build before
+ * upgrading; a vacuumed store reads identically.
  *
  * Reference behavior being replaced: the InfluxDB backend's compactions
  * rewrite shards invisibly behind its storage engine
- * (/root/reference/src/integration/tsdb/storage/influxdb_v1.go:271-413
- * gives the engine a database per retention tier and delegates shard
- * publication to InfluxDB); this layout is the Spark-native equivalent
- * of that publication guarantee on a plain file/object store.
+ * (reference storage/influxdb_v1.go:271-413 gives the engine a database
+ * per retention tier and delegates shard publication to InfluxDB); this
+ * layout is the Spark-native equivalent of that publication guarantee
+ * on a plain file/object store.
  */
 object TierLayout {
 
@@ -72,7 +67,9 @@ object TierLayout {
   def versionDir(part: HPath, v: Long): HPath = new HPath(part, f"_v=$v%d")
   def commitFile(part: HPath, v: Long): HPath = new HPath(part, f"$CommitPrefix$v%d")
 
-  private[store] def parseCommit(name: String): Option[Long] =
+  /** The version a `_commit_N` marker name commits (by NAME: the
+   *  manifest may not be completely visible yet — see [[readManifest]]). */
+  def parseCommit(name: String): Option[Long] =
     if (name.startsWith(CommitPrefix))
       name.stripPrefix(CommitPrefix).toLongOption
     else None
@@ -82,28 +79,12 @@ object TierLayout {
     f.isFile && !n.startsWith("_") && !n.startsWith(".")
   }
 
-  /** Largest committed snapshot version in a partition listing, if any
-   *  — by marker NAME only; right for version NUMBERING (an in-flight
-   *  marker must still block its number's reuse). Resolution and vacuum
-   *  must instead use [[latestValidVersion]], which requires the
-   *  manifest content to be completely visible. */
-  def currentVersion(entries: Seq[FileStatus]): Option[Long] =
-    entries.flatMap(e => parseCommit(e.getPath.getName)).maxOption
-
-  /** Largest version whose manifest is COMPLETELY visible — the version
-   *  maintenance may safely vacuum against. */
-  def latestValidVersion(fs: FileSystem, part: HPath,
-      entries: Seq[FileStatus]): Option[Long] =
-    entries.flatMap(e => parseCommit(e.getPath.getName)).sorted.reverse
-      .find(v => readManifest(fs, part, v).isDefined)
-
   /** The manifest of commit `v`, or None when the marker is missing OR
    *  its content is not yet completely visible (no `ok` terminator) —
    *  on a rename-by-copy FileSystem a manifest can appear with partial
    *  content, and trusting it would resolve the snapshot with a short
-   *  folded list (superseded raw files read AGAIN alongside the
-   *  snapshot). An unterminated manifest simply isn't a commit yet;
-   *  readers fall back to the previous version. */
+   *  folded list (superseded files read AGAIN alongside the snapshot).
+   *  An unterminated manifest simply isn't a commit yet. */
   def readManifest(fs: FileSystem, part: HPath, v: Long): Option[Set[String]] = {
     val p = commitFile(part, v)
     // ONLY a missing marker means "not a commit yet" (vacuumed, or not
@@ -121,97 +102,10 @@ object TierLayout {
     }.toSet)
   }
 
-  /** The raw file names a commit FOLDED into its snapshot (excluded
-   *  from reads from that commit on, deletable by vacuum). */
-  def foldedFiles(fs: FileSystem, part: HPath, v: Long): Set[String] =
-    readManifest(fs, part, v).getOrElse(Set.empty)
-
-  /**
-   * Resolve a partition directory to the data files a reader must scan:
-   * with a committed snapshot N, the files of `_v=N` PLUS any raw data
-   * files the commit did not fold (appends that landed after the
-   * publish stay visible — the manifest lists exactly what it
-   * superseded, Delta-style); with no commit, the raw files alone.
-   * `entries` is the partition directory's own listing (reused so the
-   * common unversioned case costs no extra RPC; a versioned partition
-   * pays one snapshot-dir listing + one small manifest read).
-   *
-   * `pin` resolves the partition AS IT WAS at the pin's capture — the
-   * snapshot version the pin recorded for this directory
-   * ([[AsOfPin.seqs]]), plus the raw files whose ledger batch the pin
-   * covers and that version had not folded. History must still be on
-   * disk: maintenance run with `retainHistory = true` keeps superseded
-   * snapshots until an explicit [[TierStore.vacuumTier]], exactly the
-   * commit/vacuum separation snapshot stores use — and a pin that
-   * reaches past what survives FAILS LOUDLY (the pinned version's
-   * marker gone, or a newer commit's folded raw files vacuumed), never
-   * resolves partially.
-   */
-  def resolveFiles(fs: FileSystem, part: HPath, entries: Seq[FileStatus],
-      batchCommitted: (String, Long) => Boolean = (_, _) => true,
-      pin: Option[AsOfPin] = None): Seq[FileStatus] = {
-    // the exactly-once gate: a batch-tagged append is data only once its
-    // ledger marker landed; an uncommitted batch's files are invisible
-    // (and therefore never folded or vacuumed by maintenance either).
-    // As-of admission is split by provenance: a LEDGERED file resolves
-    // through the ledger alone (the caller passes a pin-aware
-    // `batchCommitted` — see BatchLedger.read); only a PLAIN unledgered
-    // file — a foreign import, the one thing with no logical commit
-    // record — falls back to the pin's capture-time mtime.
-    def admitted(f: FileStatus): Boolean = isDataFile(f) &&
-      (batchIdOf(f.getPath.getName) match {
-        case Some((w, id)) => batchCommitted(w, id)
-        case None => pin.forall(f.getModificationTime <= _.millis)
-      })
-    // snapshot admission: the pin's recorded version for THIS directory
-    // (logical — no marker mtime anywhere); unpinned reads take the
-    // newest complete manifest
-    val pinV = pin.map(_.seqPos(AsOfPin.dirKey(fs, part)))
-    val visible = entries.flatMap(e => parseCommit(e.getPath.getName)).sorted.reverse
-    val candidates = visible.filter(v => pinV.forall(v <= _))
-    // pin exactness guards (pinned reads only): the pinned version's own
-    // marker must still be visible, and every NEWER commit's folded raw
-    // files — data the pinned view still needs — must still exist
-    pinV.foreach { pv =>
-      if (pv >= 0 && !visible.contains(pv))
-        throw new IllegalStateException(
-          s"as-of pin (version $pv) predates the vacuum of $part — re-pin, " +
-            "or run maintenance with retainHistory and vacuum only after " +
-            "no live pin needs the history")
-    }
-    val resolvedHead =
-      candidates.view.flatMap(v => readManifest(fs, part, v).map((v, _))).headOption
-    pinV.foreach { pv =>
-      val pinnedFolded = resolvedHead.map(_._2).getOrElse(Set.empty[String])
-      visible.filter(_ > pv).foreach { v =>
-        (foldedFiles(fs, part, v) -- pinnedFolded).foreach { n =>
-          // a ledgered name the pin does not cover landed after capture —
-          // its absence is harmless; anything else the pinned view needs
-          val needed = batchIdOf(n) match {
-            case Some((w, id)) => batchCommitted(w, id)
-            case None => true // plain: cannot date it without the file
-          }
-          if (needed && !fs.exists(new HPath(part, n)))
-            throw new IllegalStateException(
-              s"as-of pin predates the vacuum of $part/$n (folded by " +
-                s"_commit_$v) — re-pin, or run maintenance with " +
-                "retainHistory and vacuum only after no live pin needs it")
-        }
-      }
-    }
-    resolvedHead match {
-      case Some((v, folded)) =>
-        val dir = versionDir(part, v)
-        val snap = if (fs.exists(dir)) fs.listStatus(dir).toSeq.filter(isDataFile) else Nil
-        snap ++ entries.filter(e => admitted(e) && !folded(e.getPath.getName))
-      case None => entries.filter(admitted)
-    }
-  }
-
   /** Commit snapshot `v`: publish the `_commit_v` manifest. The
-   *  manifest records the raw files this snapshot SUPERSEDES — readers
-   *  exclude them, vacuum deletes them, and raw files absent from the
-   *  list (concurrent/later appends) remain first-class data.
+   *  manifest records the relative paths this snapshot SUPERSEDES —
+   *  readers exclude them, vacuum deletes them, and data files absent
+   *  from the list (concurrent/later appends) remain first-class data.
    *
    *  The marker's EXISTENCE is the commit signal, so it must appear
    *  WITH its content: a plain `create → write → close` exposes the
@@ -235,27 +129,6 @@ object TierLayout {
       fs.delete(staged, false)
       if (!already)
         throw new java.io.IOException(s"commit rename failed for $part _v=$v")
-    }
-  }
-
-  /** Drop every snapshot and manifest OLDER than `keep`, plus the raw
-   *  files the `keep` commit folded — called only after that commit is
-   *  durably visible (vacuum semantics: never touches unfolded files,
-   *  so appends racing the publish survive). */
-  def vacuum(fs: FileSystem, part: HPath, keep: Long): Unit = {
-    val folded = foldedFiles(fs, part, keep)
-    fs.listStatus(part).toSeq.foreach { e =>
-      val n = e.getPath.getName
-      parseCommit(n) match {
-        case Some(v) if v < keep => fs.delete(e.getPath, false)
-        case Some(_) => ()
-        case None =>
-          if (n.startsWith("_v=") && n.stripPrefix("_v=").toLongOption.exists(_ < keep))
-            fs.delete(e.getPath, true)
-          else if (isDataFile(e) && folded(n)) fs.delete(e.getPath, false)
-          else if (n.startsWith("._commit_staging_"))
-            fs.delete(e.getPath, false) // orphan of a commit that crashed pre-rename
-      }
     }
   }
 }
@@ -396,14 +269,15 @@ object BatchLedger {
 /**
  * Delta-style [[FileIndex]] over one tier of the store: lists the
  * (measurement, date) partition tree, resolves each partition through
- * its [[TierLayout]] manifest, and hands Spark the pinned file list —
+ * [[SnapshotFold.resolve]], and hands Spark the pinned file list —
  * ONE scan node, partition pruning intact (partition filters are
  * evaluated here, before any file of a pruned partition is even
  * listed), and snapshot isolation for free because the resolution
  * happened at plan time.
  *
  * Scale shape: one listing per measurement directory + one per live
- * partition (+1 for versioned partitions) — the same RPC count Spark's
+ * partition (+1 listing and 1 manifest read per commit of a versioned
+ * partition — one commit once vacuumed) — the same RPC count Spark's
  * own InMemoryFileIndex pays to discover the tree, issued from the
  * driver. Pruned partitions cost their parent listing only.
  */
@@ -464,7 +338,7 @@ final class TierFileIndex(spark: SparkSession, tierRoot: HPath,
         .map { days =>
           val entries = fs.listStatus(dir).toSeq
           (m, days, dir,
-            TierLayout.resolveFiles(fs, dir, entries, committed, asOf))
+            SnapshotFold.resolve(fs, dir, entries, committed, asOf))
         }
     }.flatten
   }

@@ -43,7 +43,7 @@ final class TierStore(spark: SparkSession, val root: String) {
   // the store works unchanged on HDFS/S3A/GCS — the 100 TB deployment
   // target — as well as file:// in tests. Partition-drop semantics are
   // identical to a local-FS walk.
-  import org.apache.hadoop.fs.{FileSystem, Path => HPath}
+  import org.apache.hadoop.fs.{FileStatus, FileSystem, Path => HPath}
   private def fs: FileSystem =
     new HPath(root).getFileSystem(spark.sparkContext.hadoopConfiguration)
   private def exists(p: String): Boolean = fs.exists(new HPath(p))
@@ -103,79 +103,49 @@ final class TierStore(spark: SparkSession, val root: String) {
     else Listing.inParallel(items)(f)
 
   /**
-   * Publish a staged replacement for one partition as the next
-   * [[TierLayout]] snapshot: move the staged directory to `_v=N+1`
-   * (INVISIBLE to readers — underscore-prefixed, uncommitted — so this
-   * "rename" may be a slow object-store copy+delete without opening any
-   * window), then commit with the atomic creation of the `_commit_N+1`
-   * marker. Readers resolve the largest committed snapshot at plan
-   * time, so they see the old complete snapshot or the new complete one
-   * — never a partial partition, on ANY FileSystem contract. This
-   * replaced the round-5 two-rename swap, whose own scaladoc conceded
-   * that S3A's copy+delete rename reopened a window proportional to
-   * partition size. Returns the committed version; the caller vacuums
-   * superseded snapshots AFTER all commits of the maintenance pass.
-   *
-   * The new manifest CARRIES FORWARD every folded name of the superseded
-   * commit that is still present in the partition dir: a crash between a
-   * commit and its vacuum leaves those raw files on disk, and a successor
-   * manifest built only from the current resolution (which excludes them)
-   * would resurrect their rows as unfolded appends. The carry is filtered
-   * against the listing already in hand, so the steady state (vacuum ran,
-   * nothing left behind) carries nothing and pays no extra RPC.
+   * Publish `staged` as the next [[SnapshotFold]] snapshot of `part`,
+   * superseding `live` — the partition's currently-live files, raw
+   * appends and `_v=` members alike, so the manifest lists everything
+   * the new snapshot replaces. The move into `_v=N` is INVISIBLE to
+   * readers (underscore-prefixed, uncommitted), so it may be a slow
+   * object-store copy+delete without opening any window; the commit is
+   * the atomic appearance of the `_commit_N` manifest. Readers resolve
+   * at plan time, so they see the old complete partition or the new
+   * complete one — never a partial partition, on ANY FileSystem
+   * contract. A `staged` dir that does not exist commits an EMPTY
+   * snapshot (a retired or fully-erased partition). The caller vacuums
+   * AFTER all commits of the maintenance pass.
    */
-  private def publishPartition(part: HPath, staged: Option[HPath],
-      folded: Seq[String]): Long = {
+  private def publishPartition(part: HPath, staged: HPath,
+      live: Seq[FileStatus]): Unit = {
     fs.mkdirs(part)
-    val entries = fs.listStatus(part).toSeq
-    val prev = TierLayout.currentVersion(entries)
-    // The next version must clear BOTH the committed version and any
-    // UNCOMMITTED `_v=` leftover of a publish that crashed between its
-    // rename and its commit: renaming the new staged dir onto that
-    // leftover's name would either fail or nest into it (FileSystem
-    // rename-to-existing-dir semantics), and the commit that follows
-    // would then manifest a snapshot whose directory holds the crashed
-    // attempt's stale rows — losing every row that landed since. The
-    // orphan itself stays invisible (no commit marker) and is deleted by
-    // the next vacuum pass (it is < the version committed here).
-    val leftoverVersions = entries.map(_.getPath.getName)
-      .filter(_.startsWith("_v=")).flatMap(_.stripPrefix("_v=").toLongOption)
-    val v = (prev.toSeq ++ leftoverVersions).maxOption.getOrElse(0L) + 1
-    val dir = TierLayout.versionDir(part, v)
-    staged match {
-      case Some(s) => require(fs.rename(s, dir), s"rename $s -> $dir failed")
-      case None => fs.mkdirs(dir) // retire: commit an empty snapshot
-    }
-    publishHook("renamed") // crash seam: snapshot dir present, uncommitted
-    val present = entries.map(_.getPath.getName).toSet
-    // Carry from the latest VALID manifest, not the name-largest marker:
-    // a half-visible marker (crashed mid-copy on a rename-by-copy store)
-    // has an unreadable folded list, and carrying its empty set would
-    // drop still-present superseded files from the new manifest —
-    // readers would then re-admit them as appends and double-count.
-    // Each valid commit carries its predecessor's folded-but-present
-    // names, so the latest valid one holds the complete set.
-    val carried = TierLayout.latestValidVersion(fs, part, entries)
-      .map(TierLayout.foldedFiles(fs, part, _))
-      .getOrElse(Set.empty[String]).filter(present)
-    TierLayout.commit(fs, part, v, (folded ++ carried).distinct)
-    v
+    fs.mkdirs(staged) // no-op when staged; else the empty snapshot
+    val plan = SnapshotFold.planVersion(fs, part, live)
+    SnapshotFold.publish(fs, part, plan.version, staged, plan.foldedRels,
+      phases = (p, _) => if (p == "staged") publishHook("renamed"))
   }
 
-  /** Every COMMITTED raw data file currently in a partition — the folded
-   *  list for REPLACEMENT publishes (the fresh rollup supersedes
-   *  everything present; appends landing after this listing stay
-   *  visible). Uncommitted batch-gated files are excluded: they are not
-   *  data yet, so folding them — and then vacuuming them — would destroy
-   *  a batch that commits later. */
-  private def rawFiles(part: HPath,
-      committed: (String, Long) => Boolean): Seq[String] =
-    if (!fs.exists(part)) Nil
-    else fs.listStatus(part).toSeq
-      .filter(f => TierLayout.isDataFile(f) &&
-        TierLayout.batchIdOf(f.getPath.getName)
-          .forall { case (w, id) => committed(w, id) })
-      .map(_.getPath.getName)
+  /** A retired partition (vacuumed down to an EMPTY snapshot, no raw
+   *  data) is logically gone: drop OUR metadata — the snapshot dirs and
+   *  markers the vacuum left (`meta`), the floor record — then the dir
+   *  itself only-if-empty, so a concurrent append landing in the window
+   *  keeps it alive and resolves as plain raw data (see removeIfEmpty). */
+  private def dropRetired(part: HPath, meta: Seq[HPath]): Unit = {
+    meta.foreach(fs.delete(_, true))
+    fs.delete(SnapshotFold.floorFile(part), false)
+    removeIfEmpty(part)
+  }
+
+  /** Predicate admitting exactly the given (measurement, date)
+   *  partitions: ONE `isin` over a `date/measurement` key (the
+   *  fixed-width date first keeps the key unambiguous for any
+   *  measurement name), which [[TierFileIndex]] evaluates as a
+   *  partition filter, so the scan prunes to these partitions. A
+   *  per-partition `||` chain recursed once per link in Spark's tree
+   *  walks and overflowed the stack at about 2000 partitions. */
+  private def inPartitions(parts: Seq[(String, String)]): Column =
+    concat(col("date").cast("string"), lit("/"), col("measurement"))
+      .isin(parts.map { case (m, d) => s"$d/$m" }: _*)
 
   /** Append points into a tier (S3 batch write sink; process.go:290-337).
    *  Plain batch appends COMMIT THROUGH THE LEDGER too (writer
@@ -236,10 +206,10 @@ final class TierStore(spark: SparkSession, val root: String) {
    * the replay is a no-op: the routed write is staged invisibly, its
    * files move to batch-tagged names in their (tier, measurement, date)
    * partitions, and one ledger marker commits them. Readers never see a
-   * partial batch ([[TierLayout.resolveFiles]] gates batch-tagged names
-   * on the ledger); maintenance never folds or vacuums an uncommitted
-   * one ([[rawFiles]] applies the same gate). Returns false when the
-   * batch was already committed.
+   * partial batch ([[SnapshotFold.resolve]] gates batch-tagged names
+   * on the ledger); maintenance folds only what that resolution returns,
+   * so it never folds or vacuums an uncommitted one. Returns false when
+   * the batch was already committed.
    *
    * NOTE the file-source tail boundary: `streamingHop` tails the tier
    * directory with a PLAIN listing and so may read a batch before its
@@ -292,12 +262,12 @@ final class TierStore(spark: SparkSession, val root: String) {
    * fully expired — an empty partition tree has no schema to infer).
    *
    * Reads go through [[TierFileIndex]]: each (measurement, date)
-   * partition resolves to its largest committed [[TierLayout]] snapshot
-   * (or its plain appended files) AT PLAN TIME, so a query holds one
-   * coherent snapshot per partition for its whole lifetime even while a
-   * compaction publishes underneath it. Still ONE FileSourceScan node —
-   * measurement/date partition pruning is evaluated inside the index,
-   * before pruned partitions are listed.
+   * partition resolves through [[SnapshotFold.resolve]] (its committed
+   * snapshot plus the appends no commit folded) AT PLAN TIME, so a
+   * query holds one coherent snapshot per partition for its whole
+   * lifetime even while a compaction publishes underneath it. Still ONE
+   * FileSourceScan node — measurement/date partition pruning is
+   * evaluated inside the index, before pruned partitions are listed.
    */
   def read(tier: Tier): DataFrame =
     indexedRead(new TierFileIndex(spark, new HPath(path(tier.name))))
@@ -323,37 +293,33 @@ final class TierStore(spark: SparkSession, val root: String) {
       .getOrElse(emptyPoints)
 
   /**
-   * TIME-TRAVEL read: the tier as it was at `asOfMillis` — the snapshot
-   * each partition had committed by then plus the raw appends that had
-   * landed by then. The reproducibility contract a training run needs:
-   * record `System.currentTimeMillis` when the run starts and every
+   * TIME-TRAVEL read: the tier as it was when `pin` was captured
+   * ([[pinNow]]) — the snapshot each partition had committed by then
+   * plus the appends committed by then. The reproducibility contract a
+   * training run needs: take `pinNow()` when the run starts and every
    * re-read of its corpus resolves the identical file set, regardless of
    * compactions, rollup maintenance, or later appends. Requires history
    * to still be on disk: run maintenance with `retainHistory = true` and
    * reclaim space explicitly with [[vacuumTier]] once no run needs the
    * old snapshots (the standard commit/vacuum separation — vacuuming
-   * bounds how far back reads can travel).
-   *
-   * Boundary precision: EVERY append this store makes — streaming
-   * micro-batches ([[writeRoutedBatch]]) AND plain batch [[write]]/
-   * [[writeRouted]] calls — resolves through the batch ledger's own
-   * commit times (marker/watermark file mtimes, which no data-file
-   * rewrite ever refreshes — see [[BatchLedger.read]]), so the as-of
-   * boundary is the batch-commit instant and survives rename-by-copy
-   * carry-forwards that re-date the data files themselves. The
-   * data-file-mtime fallback remains ONLY for foreign files an
-   * external tool dropped directly into a partition directory; such
-   * files have no commit record, keep the documented mtime caveats,
-   * and never originate from this store.
+   * bounds how far back reads can travel, and a pin past it fails with
+   * IllegalStateException instead of resolving partially).
    *
    * Pin contract: the pin is a LOGICAL position in the store's own
    * commit sequences ([[AsOfPin]] — per-writer ledger batch ids,
-   * per-partition snapshot versions), captured by [[pinNow]] from the
-   * store's own records. No wall clock appears in any comparison, so
-   * the read is exact on second-granularity, server-assigned,
-   * rename-refreshed object-store mtimes — two commits inside one
-   * clock tick still pin distinctly, because they occupy distinct
-   * sequence positions.
+   * per-partition snapshot versions), and resolution compares positions
+   * only: EVERY append this store makes — streaming micro-batches
+   * ([[writeRoutedBatch]]) AND plain [[write]]/[[writeRouted]] calls —
+   * is admitted by its batch id against the pin's per-writer position
+   * ([[BatchLedger.read]]), every snapshot by its version against the
+   * pin's per-partition position. No file time appears in any
+   * comparison, so the read is exact on second-granularity,
+   * server-assigned, rename-refreshed object-store mtimes — two commits
+   * inside one clock tick still pin distinctly, and a rename-by-copy
+   * restage that re-dates the data files moves nothing. Only FOREIGN
+   * files an external tool dropped directly into a partition directory
+   * have no commit record; they alone are admitted by the pin's
+   * capture-time mtime, with the usual mtime caveats.
    */
   def readAsOf(tier: Tier, pin: AsOfPin): DataFrame =
     indexedRead(new TierFileIndex(spark, new HPath(path(tier.name)),
@@ -828,9 +794,8 @@ final class TierStore(spark: SparkSession, val root: String) {
     // snapshot — an append landing mid-compaction is in none of them
     // and therefore stays visible and un-vacuumed afterwards.
     val index = new TierFileIndex(spark, new HPath(path(tier.name)))
-    val parts = index.resolvedPartitions.flatMap { case (m, d, dir, files) =>
-      val pq = files.filter(_.getPath.getName.endsWith(".parquet"))
-      if (pq.length >= minFiles) Some((m, d, dir, pq)) else None
+    val parts = index.resolvedPartitions.filter { case (_, _, _, files) =>
+      files.count(_.getPath.getName.endsWith(".parquet")) >= minFiles
     }
     if (parts.isEmpty) return 0
 
@@ -846,10 +811,8 @@ final class TierStore(spark: SparkSession, val root: String) {
     // explicit partition predicate so the scan prunes to the qualifying
     // partitions inside TierFileIndex (a join alone would only filter
     // after listing every partition)
-    val qualifying = parts.map { case (m, d, _, _) =>
-      col("measurement") === m && col("date").cast("string") === d
-    }.reduce(_ || _)
-    val base = indexedRead(index).get.filter(qualifying)
+    val base = indexedRead(index).get
+      .filter(inPartitions(parts.map { case (m, d, _, _) => (m, d) }))
     // Clustered/zorder rewrites pin the shuffle to the planned bucket
     // count: repartition-by-number is exempt from AQE partition
     // coalescing, which would otherwise merge small buckets back into
@@ -906,19 +869,17 @@ final class TierStore(spark: SparkSession, val root: String) {
     val published = perPartition(parts) { case (m, d, dir, files) =>
       val fresh = new HPath(staging, s"measurement=${escape(m)}/date=$d")
       if (fs.exists(fresh)) {
-        // fold exactly the RAW inputs of this pass (snapshot inputs are
-        // superseded by version ordering; anything newer is untouched)
-        val folded = files.filter(_.getPath.getParent == dir).map(_.getPath.getName)
-        Some(dir -> publishPartition(dir, Some(fresh), folded))
+        // supersede exactly the files the staging scan read; anything
+        // appended since is in no manifest and stays live
+        publishPartition(dir, fresh, files)
+        Some(dir)
       } else None
     }.flatten
     publishHook("swapped")
     // vacuum superseded snapshots + folded raw files after ALL commits —
     // unless the caller retains history for time-travel reads
     // ([[readAsOf]]); then [[vacuumTier]] reclaims the space later
-    if (!retainHistory)
-      perPartition(published) { case (dir, v) =>
-        TierLayout.vacuum(fs, dir, v) }: Unit
+    if (!retainHistory) perPartition(published)(SnapshotFold.vacuumDir(fs, _)): Unit
     rmTree(staging.toString)
     published.size
   }
@@ -963,10 +924,7 @@ final class TierStore(spark: SparkSession, val root: String) {
 
     val staging = new HPath(path(tier.name), "._erasing") // hidden from scans
     rmTree(staging.toString)
-    val hitPred = parts.map { case (m, d, _, _) =>
-      col("measurement") === m && col("date").cast("string") === d
-    }.reduce(_ || _)
-    base.filter(hitPred)
+    base.filter(inPartitions(parts.map { case (m, d, _, _) => (m, d) }))
       .filter(!coalesce(predicate, lit(false)))
       .repartition(col("measurement"), col("date"))
       .sortWithinPartitions(col("measurement"), col("date"), col("time"))
@@ -975,23 +933,22 @@ final class TierStore(spark: SparkSession, val root: String) {
     publishHook("staged")
     val escape = org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils.escapePathName _
     val published = perPartition(parts) { case (m, d, dir, files) =>
-      val fresh = new HPath(staging, s"measurement=${escape(m)}/date=$d")
-      val folded = files.filter(_.getPath.getParent == dir).map(_.getPath.getName)
       // every-row-matched partitions have no staged dir → EMPTY snapshot
-      dir -> publishPartition(dir,
-        if (fs.exists(fresh)) Some(fresh) else None, folded)
+      publishPartition(dir,
+        new HPath(staging, s"measurement=${escape(m)}/date=$d"), files)
+      dir
     }
     publishHook("swapped")
-    perPartition(published) { case (dir, v) =>
-      TierLayout.vacuum(fs, dir, v) }: Unit
+    perPartition(published)(SnapshotFold.vacuumDir(fs, _)): Unit
     rmTree(staging.toString)
     published.size
   }
 
   /**
    * Does this tier's RETAINED HISTORY — data readable only through
-   * [[readAsOf]], i.e. superseded `_v=` snapshots plus raw files the
-   * current commit folded — still contain rows matching `predicate`?
+   * [[readAsOf]], i.e. the committed files on disk that the current
+   * resolution no longer reads ([[SnapshotFold.history]]) — still
+   * contain rows matching `predicate`?
    * The erasure command's gate: a [[deleteWhere]] that rewrote nothing
    * proves the CURRENT snapshot is clean, but an earlier maintenance
    * rebuild may have replaced the matching rows while `retainHistory`
@@ -1011,17 +968,8 @@ final class TierStore(spark: SparkSession, val root: String) {
         .unescapePathName(mDir.getName.stripPrefix("measurement="))
       dDir <- subDirs(mDir.toString) if dDir.getName.startsWith("date=")
       d = dDir.getName.stripPrefix("date=")
-      entries = fs.listStatus(dDir).toSeq
-      cur <- TierLayout.latestValidVersion(fs, dDir, entries).toSeq
-      folded = TierLayout.foldedFiles(fs, dDir, cur)
-      oldSnaps = entries.filter { e =>
-        val n = e.getPath.getName
-        e.isDirectory && n.startsWith("_v=") &&
-          n.stripPrefix("_v=").toLongOption.exists(_ < cur)
-      }.flatMap(e => fs.listStatus(e.getPath).toSeq.filter(TierLayout.isDataFile))
-      foldedRaw = entries.filter(e =>
-        TierLayout.isDataFile(e) && folded(e.getPath.getName))
-      files = (oldSnaps ++ foldedRaw).map(_.getPath.toString)
+      files = SnapshotFold.history(fs, dDir, fs.listStatus(dDir).toSeq)
+        .map(_.getPath.toString)
       if files.nonEmpty
     } yield (m, d, files)
     if (histParts.isEmpty) return false
@@ -1096,43 +1044,22 @@ final class TierStore(spark: SparkSession, val root: String) {
 
   /**
    * Reclaim history a `retainHistory` maintenance pass kept for
-   * [[readAsOf]]: every partition drops snapshots and folded raw files
-   * older than its CURRENT commit. After the vacuum, as-of reads can no
-   * longer travel behind the surviving snapshots — run it once no
-   * training run still pins an old corpus timestamp. Returns the number
-   * of partitions vacuumed.
+   * [[readAsOf]]: every partition drops what its commits superseded
+   * ([[SnapshotFold.vacuumDir]]) and keeps its CURRENT snapshot. After
+   * the vacuum, as-of reads can no longer travel behind the surviving
+   * snapshots — run it once no training run still pins an old corpus.
+   * Returns the number of partitions vacuumed (those with a commit).
    */
   def vacuumTier(tier: Tier): Int = maintenanceLock.synchronized {
     val index = new TierFileIndex(spark, new HPath(path(tier.name)))
     val parts = index.resolvedPartitions.map(_._3).distinct
     val n = perPartition(parts) { dir =>
-      // vacuum only against a commit whose manifest is fully visible —
-      // an in-flight marker has an empty effective folded list, and
-      // vacuuming "against" it would delete the older snapshots readers
-      // are still falling back to
-      TierLayout.latestValidVersion(fs, dir, fs.listStatus(dir).toSeq) match {
-        case Some(v) =>
-          TierLayout.vacuum(fs, dir, v)
-          // complete the cleanup a retainHistory pass deferred: a
-          // partition whose current snapshot is EMPTY and that holds no
-          // raw data (a retired rollup window) is logically gone.
-          // Remove OUR metadata (the empty snapshot dir + markers),
-          // then the dir itself only-if-empty — a concurrent append
-          // landing in the window keeps the dir alive and resolves as
-          // plain raw data (the partition is simply live again).
-          val after = fs.listStatus(dir).toSeq
-          val snapDir = TierLayout.versionDir(dir, v)
-          val snapEmpty = !fs.exists(snapDir) ||
-            fs.listStatus(snapDir).forall(!TierLayout.isDataFile(_))
-          if (snapEmpty && !after.exists(TierLayout.isDataFile)) {
-            if (fs.exists(snapDir)) fs.delete(snapDir, true)
-            after.filter(_.getPath.getName.startsWith("_commit_"))
-              .foreach(e => fs.delete(e.getPath, false))
-            removeIfEmpty(dir)
-          }
-          true
-        case None => false
-      }
+      val left = SnapshotFold.vacuumLeft(fs, dir)
+      // complete the cleanup a retainHistory pass deferred: a partition
+      // whose snapshot is EMPTY and that holds no raw data (a retired
+      // rollup window) is logically gone
+      if (left.versions.nonEmpty && !left.hasData) dropRetired(dir, left.meta)
+      left.versions.nonEmpty
     }.count(identity)
     pruneEmptyMeasurementDirs(path(tier.name))
     n
@@ -1143,7 +1070,7 @@ final class TierStore(spark: SparkSession, val root: String) {
    * incremental-maintenance commit; [[graft.rollup.Downsampler.maintain]]).
    * The fresh window is STAGED as a complete parquet dataset first, then
    * each affected (measurement, date) partition is published as its next
-   * [[TierLayout]] snapshot via [[publishPartition]]; live partitions
+   * [[SnapshotFold]] snapshot via [[publishPartition]]; live partitions
    * inside the window that got no staged replacement are retired by
    * committing an EMPTY snapshot (they no longer exist in the recomputed
    * rollup). Superseded snapshots are vacuumed, and fully-retired
@@ -1175,8 +1102,8 @@ final class TierStore(spark: SparkSession, val root: String) {
       .sortWithinPartitions(col("measurement"), col("date"), col("time"))
       .write.partitionBy("measurement", "date").parquet(staging.toString)
     publishHook("staged")
-    // one ledger read gates every fold of this pass (uncommitted batch
-    // files must never be folded — see rawFiles)
+    // one ledger read gates every resolution of this pass (an uncommitted
+    // batch's files are not live, so no publish supersedes them)
     val committed = BatchLedger.read(fs, new HPath(root))
     // snapshot the staged partition set BEFORE publishing (a publish
     // MOVES the staged dir, so existence checks after it would lie)
@@ -1185,23 +1112,25 @@ final class TierStore(spark: SparkSession, val root: String) {
       if !kept(mDir.getName)
       dDir <- subDirs(mDir.toString) if dDir.getName.startsWith("date=")
     } yield (mDir.getName, dDir.getName)).toSet
-    val published = perPartition(staged.toSeq) { case (m, d) =>
-      val part = new HPath(s"$tierPathS/$m/$d")
-      // replacement semantics: the fresh rollup supersedes every raw
-      // file present NOW — fold them all
-      part -> publishPartition(part, Some(new HPath(staging, s"$m/$d")),
-        rawFiles(part, committed))
-    }
+    // replacement semantics: the fresh rollup supersedes the partition's
+    // whole live set; a partition with no staged replacement commits an
+    // EMPTY snapshot (it is retired)
+    def publishWindow(parts: Seq[(String, String)]): Seq[HPath] =
+      perPartition(parts) { case (m, d) =>
+        val part = new HPath(s"$tierPathS/$m/$d")
+        publishPartition(part, new HPath(staging, s"$m/$d"),
+          SnapshotFold.resolve(fs, part, committed))
+        part
+      }
+    val published = publishWindow(staged.toSeq)
     val dateSet = dates.toSet
-    val retireTargets = for {
+    val retired = publishWindow(for {
       mDir <- subDirs(tierPathS) if mDir.getName.startsWith("measurement=")
       if !kept(mDir.getName)
       dDir <- subDirs(mDir.toString) if dDir.getName.startsWith("date=")
       if dateSet.contains(dDir.getName.stripPrefix("date="))
       if !staged((mDir.getName, dDir.getName))
-    } yield dDir
-    val retired = perPartition(retireTargets)(dDir =>
-      dDir -> publishPartition(dDir, None, rawFiles(dDir, committed)))
+    } yield (mDir.getName, dDir.getName))
     publishHook("swapped")
     // cleanup phase — every commit is visible, so plan-time resolution
     // cannot land on anything being deleted below. With retainHistory
@@ -1209,19 +1138,9 @@ final class TierStore(spark: SparkSession, val root: String) {
     // behind their committed EMPTY snapshot) stay on disk for
     // [[readAsOf]]; [[vacuumTier]] reclaims them later.
     if (!retainHistory) {
-      perPartition(published) { case (part, v) =>
-        TierLayout.vacuum(fs, part, v) }: Unit
-      perPartition(retired) { case (part, v) =>
-        TierLayout.vacuum(fs, part, v)
-        // logically empty: drop our metadata, then the dir only-if-empty
-        // (a concurrent append landing here must survive — see
-        // removeIfEmpty)
-        val snapDir = TierLayout.versionDir(part, v)
-        if (fs.exists(snapDir)) fs.delete(snapDir, true)
-        fs.listStatus(part).filter(_.getPath.getName.startsWith("_commit_"))
-          .foreach(e => fs.delete(e.getPath, false))
-        removeIfEmpty(part)
-      }: Unit
+      perPartition(published)(SnapshotFold.vacuumDir(fs, _)): Unit
+      perPartition(retired)(part =>
+        dropRetired(part, SnapshotFold.vacuumLeft(fs, part).meta)): Unit
       pruneEmptyMeasurementDirs(tierPathS)
     }
     rmTree(staging.toString)

@@ -190,7 +190,7 @@ class StoreStreamSpec extends SparkSpec {
       val part = new org.apache.hadoop.fs.Path(
         s"$root/tier=gen_raw/measurement=sensor_temp/date=2024-01-01")
       val fs = part.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      graft.store.TierLayout.resolveFiles(fs, part, fs.listStatus(part).toSeq)
+      graft.store.SnapshotFold.resolve(fs, part)
         .count(_.getPath.getName.endsWith(".parquet"))
     }
     assert(parquetFiles() >= 6)
@@ -226,7 +226,7 @@ class StoreStreamSpec extends SparkSpec {
     for (m <- Seq("m_a", "m_b", "m_c"); day <- Seq("2024-01-01", "2024-01-02")) {
       val part = new org.apache.hadoop.fs.Path(s"$root/tier=gen_raw/measurement=$m/date=$day")
       val fs = part.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      assert(graft.store.TierLayout.resolveFiles(fs, part, fs.listStatus(part).toSeq)
+      assert(graft.store.SnapshotFold.resolve(fs, part)
         .count(_.getPath.getName.endsWith(".parquet")) == 1)
     }
     val after = store.read(Tier.GenRaw).collect()
