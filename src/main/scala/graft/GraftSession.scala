@@ -37,9 +37,28 @@ import org.apache.spark.sql.SparkSession
  *    filter buys nothing on these shapes (neutral on the dedup posting
  *    explodes, measured);
  *  - the engine's custom SQL functions registered, so the raw-SQL
- *    command surface (S7) can reach them immediately.
+ *    command surface (S7) can reach them immediately;
+ *  - the `file://` scheme served by [[store.NioLocalFileSystem]] and
+ *    [[store.NioLocalFs]] ([[localFsConf]]): without libhadoop, Hadoop's
+ *    stock local file system forks a `chmod` per created file and
+ *    directory and a `readlink` per `FileContext` rename, a fixed cost
+ *    of every store write, streaming checkpoint and state-store commit.
+ *    Hadoop caches FileSystem instances by scheme, not by configuration,
+ *    so the first `file://` FileSystem the JVM creates is the one every
+ *    later caller gets: a deployment that does not build its session
+ *    through this builder must set both keys (`fs.file.impl` and
+ *    `fs.AbstractFileSystem.file.impl`, `spark.hadoop.`-prefixed in a
+ *    SparkConf) before its first `file://` access.
  */
 object GraftSession {
+
+  /** The two Hadoop keys that put `file://` on the in-JVM local file
+   *  system ([[store.NioLocalFileSystem]] for `FileSystem`,
+   *  [[store.NioLocalFs]] for `FileContext`). */
+  val localFsConf: Map[String, String] = Map(
+    "spark.hadoop.fs.file.impl" -> classOf[store.NioLocalFileSystem].getName,
+    "spark.hadoop.fs.AbstractFileSystem.file.impl" ->
+      classOf[store.NioLocalFs].getName)
 
   def builder(shufflePartitions: Int = 32,
       maxPartitionBytes: String = "256m"): SparkSession.Builder =
@@ -83,6 +102,7 @@ object GraftSession {
       // lower it per session)
       .config("spark.sql.streaming.stateStore.maintenanceInterval", "600s")
       .config("spark.sql.extensions", classOf[GraftExtensions].getName)
+      .config(localFsConf)
 
   /** Build (or reuse) the session and register the engine's SQL functions. */
   def getOrCreate(master: String = "", shufflePartitions: Int = 32,

@@ -70,9 +70,10 @@ object SustainedSoak {
     // tree: underscore/dot-prefixed dirs (_staging, _batches, Hadoop's
     // _temporary) are skipped — the writer is LIVE during sampling, and
     // listing its in-flight task-attempt dirs races with their deletion
-    // (RawLocalFileSystem shells out for permissions and throws on a
-    // path that vanished mid-walk). Transient disappearance of anything
-    // else is tolerated as an empty subtree for the same reason.
+    // (a dir that vanishes between `exists` and `listStatus` throws
+    // FileNotFoundException; file creation and mkdir no longer shell
+    // out, see store.NioRawLocalFileSystem). Transient disappearance of
+    // anything else is tolerated as an empty subtree for the same reason.
     def countFiles(dir: HPath, pred: String => Boolean): Long =
       try {
         if (!fs.exists(dir)) 0L

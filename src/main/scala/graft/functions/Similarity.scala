@@ -163,11 +163,9 @@ object Similarity {
    *  subexpression elimination computes the score array once per row.
    *  Tie-break ≡ the old window's (score desc, id asc): `array_max`
    *  picks the greatest score and `array_position` its FIRST holder,
-   *  which in ascending-id order is the smallest id. (Knife-edge
-   *  divergence from `Double.compare` ordering exists only when +0.0
-   *  and -0.0 cosines coexist in one row's candidates — impossible for
-   *  the guard's zero-norm 0.0s and not producible by `round(_, 6)`,
-   *  which returns unsigned-zero BigDecimal zeros.) */
+   *  which in ascending-id order is the smallest id. Both use Spark's
+   *  SQL double order (NaN greatest, -0.0 equal to 0.0), which
+   *  [[expressions.CentroidTopK]] shares. */
   private def argmaxCentroid(vec: Column, norm: Column,
       cents: Seq[CentroidLit], portable: Boolean): (Column, Column) = {
     if (useTopKExpr(cents)) {
@@ -574,9 +572,11 @@ object Similarity {
     val centDir = new org.apache.hadoop.fs.Path(
       s"${currentGenRoot(fs0, path)}/centroids")
     def footerRows(st: org.apache.hadoop.fs.FileStatus): Long = {
-      val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+      val r = try org.apache.parquet.hadoop.ParquetFileReader.open(
         org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st,
           spark.sparkContext.hadoopConfiguration))
+      catch { case e: Exception => throw new IllegalStateException(
+        s"unreadable centroids file ${st.getPath} in IVF index $path", e) }
       try r.getRecordCount finally r.close()
     }
     require(fs0.exists(centDir) &&

@@ -4,7 +4,7 @@ import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
-import org.apache.spark.sql.catalyst.util.ArrayData
+import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.GraftBridge
 import org.apache.spark.sql.types._
@@ -776,10 +776,12 @@ case class CentroidTopK(vec: Expression, norm: Expression,
       if (roundScores)
         s = java.math.BigDecimal.valueOf(s)
           .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-      // stable insertion: strict > keeps the earlier (smaller-pos) entry
-      // ahead on ties — the (s desc, pos asc) order
+      // stable insertion in array_max's order (Spark's SQL double order:
+      // NaN greatest, -0.0 equal to 0.0); only a strictly greater score
+      // moves ahead, so ties keep the earlier (smaller-pos) entry first —
+      // the (s desc, pos asc) order
       var j = filled
-      while (j > 0 && s > bs(j - 1)) j -= 1
+      while (j > 0 && SQLOrderingUtil.compareDoubles(s, bs(j - 1)) > 0) j -= 1
       if (j < m) {
         var t = math.min(filled, m - 1)
         while (t > j) { bs(t) = bs(t - 1); bp(t) = bp(t - 1); t -= 1 }

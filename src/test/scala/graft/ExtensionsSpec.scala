@@ -25,6 +25,9 @@ class ExtensionsSpec extends AnyFunSuite {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.extensions", classOf[GraftExtensions].getName)
+      // not under test here, but a session without it could be the
+      // one that creates (and caches) the JVM's `file://` FileSystem
+      .config(GraftSession.localFsConf)
       .getOrCreate()
     try {
       val r = s.sql(

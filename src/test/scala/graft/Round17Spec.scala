@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -12,7 +14,9 @@ import org.apache.spark.sql.types._
  *    tie-breaks (duplicate centroids, zero norms, zero vectors);
  *  - streamingIvfAppend refuses a degenerate index whose centroids
  *    parquet exists but holds zero rows (ADVICE-r16: a length-only FS
- *    check would accept it and silently drop every streamed vector).
+ *    check would accept it and silently drop every streamed vector),
+ *    and names the file when a centroids parquet is unreadable;
+ *  - CentroidTopK ranks NaN and signed-zero scores in array_max's order.
  */
 class Round17Spec extends SparkSpec {
 
@@ -110,5 +114,62 @@ class Round17Spec extends SparkSpec {
         s"$work/idx", s"$work/ckpt")
     }
     assert(e.getMessage.contains("no IVF index"))
+  }
+
+  test("streamingIvfAppend names the file and the index when a centroids " +
+    "parquet is corrupt") {
+    val work = graft.Fixtures.newDir("graft_r17corrupt").toFile.getAbsolutePath
+    graft.functions.Similarity.buildIvfIndex(vecs(10, 4, 0), s"$work/idx",
+      nLists = 2, trainIters = 1)
+    val cents = java.nio.file.Files.walk(java.nio.file.Paths.get(s"$work/idx"))
+      .iterator().asScala.filter(p => p.getParent.getFileName.toString == "centroids")
+      .toSeq
+    val parquet = cents.filter(_.getFileName.toString.endsWith(".parquet"))
+    assert(parquet.nonEmpty)
+    // truncated past its footer; the stale checksums go too, so the
+    // parquet reader (not the checksum check) is what fails
+    cents.filter(_.getFileName.toString.endsWith(".crc"))
+      .foreach(java.nio.file.Files.delete)
+    parquet.foreach(p => java.nio.file.Files.write(p,
+      java.util.Arrays.copyOf(java.nio.file.Files.readAllBytes(p), 16)))
+    val incoming = vecs(5, 4, 1)
+    incoming.write.parquet(s"$work/in")
+    val e = intercept[IllegalStateException] {
+      graft.functions.Similarity.streamingIvfAppend(
+        spark.readStream.schema(incoming.schema).parquet(s"$work/in"),
+        s"$work/idx", s"$work/ckpt")
+    }
+    assert(parquet.exists(p => e.getMessage.contains(p.getFileName.toString)))
+    assert(e.getMessage.contains(s"$work/idx"))
+  }
+
+  test("CentroidTopK ranks NaN and signed zeros as array_max does, " +
+    "ties by smaller position") {
+    import org.apache.spark.sql.catalyst.expressions.{ArrayMax, ArrayPosition, Literal}
+    import graft.functions.expressions.CentroidTopK
+    // one dim, query [1.0] of norm 1: scores -0.0 (an underflowing dot),
+    // 0.0 (a zero-norm centroid), NaN and 0.5 at positions 1..4
+    val cents = Array(-Double.MinPositiveValue, 1.0, Double.NaN, 0.5)
+    val norms = Array(4.0, 0.0, 1.0, 1.0)
+    def topK(k: Int, n: Int): Seq[(Int, Double)] = {
+      val out = CentroidTopK(Literal.create(Array(1.0), ArrayType(DoubleType)),
+        Literal(1.0), cents.take(k), norms.take(k), dims = 1, n = n,
+        roundScores = false).eval()
+        .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
+      (0 until out.numElements()).map { i =>
+        val r = out.getStruct(i, 2); (r.getInt(0), r.getDouble(1))
+      }
+    }
+    val all = topK(4, 4)
+    assert(all.map(_._1) == Seq(3, 4, 1, 2))
+    assert(1.0 / all(2)._2 == Double.NegativeInfinity && all(3)._2 == 0.0 &&
+      1.0 / all(3)._2 == Double.PositiveInfinity)
+    def firstMax(scores: Seq[Double]): Long = {
+      val a = Literal.create(scores.toArray, ArrayType(DoubleType))
+      ArrayPosition(a, ArrayMax(a)).eval().asInstanceOf[Long]
+    }
+    val scores = Seq(-0.0, 0.0, Double.NaN, 0.5)
+    for (k <- Seq(2, 4))
+      assert(topK(k, 1).head._1 == firstMax(scores.take(k)))
   }
 }

@@ -15,6 +15,7 @@ trait SparkSpec extends AnyFunSuite {
     // pruning need the same setting the engine recommends
     .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     .config("spark.ui.enabled", "false")
+    .config(GraftSession.localFsConf)
     .getOrCreate()
 
   /** Run a ScalaCheck property and fail the test on falsification. */
