@@ -72,9 +72,10 @@ object Similarity {
    *  probe against the same generation — at scale each of those jobs
    *  is a driver round-trip (VERDICT-r16 ask #9). This caches INPUT
    *  METADATA within one JVM, never operator output: a fresh run
-   *  builds its index under a fresh path and collects once. */
-  private val centroidLitCache =
-    new java.util.concurrent.ConcurrentHashMap[String, Seq[CentroidLit]]()
+   *  builds its index under a fresh path and collects once. Bounded
+   *  least-recently-used, so a generation that live streams keep
+   *  reading stays cached however many others pass through. */
+  private val centroidLitCache = new LruCache[String, Seq[CentroidLit]](64)
 
   private def cachedCentroidLits(spark: org.apache.spark.sql.SparkSession,
       dir: String): Seq[CentroidLit] = {
@@ -85,8 +86,7 @@ object Similarity {
       .sortBy(_.getPath.getName)
       .map(f => s"${f.getPath.getName}:${f.getLen}:${f.getModificationTime}")
       .mkString(s"$dir|", ",", "")
-    if (centroidLitCache.size > 64) centroidLitCache.clear() // bound it
-    centroidLitCache.computeIfAbsent(sig, _ =>
+    centroidLitCache.getOrElseUpdate(sig)(
       collectCentroidLits(spark.read.parquet(dir),
         "list_id", "centroid", "ncent"))
   }
@@ -1313,4 +1313,24 @@ object Similarity {
       v.select(col("vec_id"), bestId.as("centroid_id"), bestSim.as("sim"))
     }
   }
+}
+
+/** A map of at most `capacity` entries that evicts the least recently
+ *  used one. Thread-safe. A miss computes outside the lock, so a slow
+ *  computation (a Spark job) never blocks readers of other keys; two
+ *  racing misses on one key may both compute, and the later put wins. */
+private[graft] final class LruCache[K, V <: AnyRef](capacity: Int) {
+  private val entries = new java.util.LinkedHashMap[K, V](16, 0.75f, true) {
+    override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean = size > capacity
+  }
+
+  def get(k: K): Option[V] = entries.synchronized(Option(entries.get(k)))
+
+  def getOrElseUpdate(k: K)(compute: => V): V = get(k).getOrElse {
+    val v = compute
+    entries.synchronized(entries.put(k, v))
+    v
+  }
+
+  def size: Int = entries.synchronized(entries.size)
 }

@@ -1,5 +1,6 @@
 package graft.sources
 
+import graft.functions.expressions.{FimpDecode, FimpExpressions}
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
@@ -14,18 +15,16 @@ import org.apache.spark.sql.types._
  * event time. Batch and live ingest share the transform pipeline (the
  * core Spark advantage: this is the same DataFrame code path).
  *
- * All parsing is codegen'd builtins (regexp_extract / conv / from_json) —
- * a 100 TB replay is a pure map stage over text splits.
+ * The line split is codegen'd builtins (regexp_extract / conv); the FIMP
+ * payload is decoded once per frame by the compiled
+ * [[graft.functions.expressions.FimpDecode]], so a 100 TB replay is one
+ * whole-stage-compiled map stage over text splits.
  */
 object LogReplay {
 
-  /** FIMP JSON envelope schema (payload side). */
-  val fimpSchema: StructType = StructType(Seq(
-    StructField("serv", StringType),
-    StructField("type", StringType),
-    StructField("val_t", StringType),
-    StructField("props", MapType(StringType, StringType)),
-    StructField("src", StringType)))
+  /** FIMP JSON envelope schema (payload side), `val` aside: the fields
+   *  `from_json(payload, fimpSchema)` would read. */
+  val fimpSchema: StructType = StructType(FimpDecode.schema.filterNot(_.name == "val"))
 
   /** tai64n label (`@` + 16 hex sec + 8 hex nanos, seconds offset 2^62)
    *  → timestamp. */
@@ -54,22 +53,29 @@ object LogReplay {
 
   /** Raw envelopes → the canonical rawEvent shape (`Schemas.rawEvent`):
    *  topic, serv, msg_type, val_t, val_json, props, src, domain, time.
-   *  Shared by batch replay and every streaming source. */
-  def decodeEnvelope(env: DataFrame): DataFrame = {
-    val payload = col("payload")
-    val parsed = from_json(payload, fimpSchema)
-    env.select(
-      col("topic"),
-      parsed.getField("serv").as("serv"),
-      parsed.getField("type").as("msg_type"),
-      parsed.getField("val_t").as("val_t"),
-      get_json_object(payload, "$.val").as("val_json"),
-      parsed.getField("props").as("props"),
-      parsed.getField("src").as("src"),
-      // domain = address global prefix (process.go:216 addr.GlobalPrefix)
-      regexp_extract(col("topic"), "^pt:([^/]+)", 1).as("domain"),
-      col("time"))
-  }
+   *  Shared by batch replay and every streaming source.
+   *
+   *  One [[graft.functions.expressions.FimpDecode]] pass per payload
+   *  yields the `fimpSchema` fields (as `from_json` would) and `val_json`
+   *  (as `get_json_object(payload, '$.val')` would). It runs inside a
+   *  one-row `inline`: a filter on the decoded columns (the filter chain's
+   *  `serv <> 'ecollector'`) cannot be pushed below a generator's output,
+   *  whereas below a projection Catalyst would copy the decode into the
+   *  filter and parse every frame twice. */
+  def decodeEnvelope(env: DataFrame): DataFrame =
+    env.select(col("topic"), col("time"),
+        inline(array(FimpExpressions.decode(col("payload")))))
+      .select(
+        col("topic"),
+        col("serv"),
+        col("type").as("msg_type"),
+        col("val_t"),
+        col("val").as("val_json"),
+        col("props"),
+        col("src"),
+        // domain = address global prefix (process.go:216 addr.GlobalPrefix)
+        regexp_extract(col("topic"), "^pt:([^/]+)", 1).as("domain"),
+        col("time"))
 
   /**
    * Parse raw log lines into the canonical rawEvent shape — the batch
@@ -90,8 +96,8 @@ object LogReplay {
       to_json(struct(col("serv").as("serv"), col("msg_type").as("type"),
         col("val_t").as("val_t"), col("val_json").as("val"),
         col("props").as("props"), col("src").as("src"))))
-    // NB `val` is emitted as a JSON string; parse()'s get_json_object
-    // unescapes it back to the raw literal, so the round-trip is lossless
-    // for scalar and structured values alike.
+    // NB `val` is emitted as a JSON string; parse() reads `val` as
+    // get_json_object does, unescaping it back to the raw literal, so the
+    // round-trip is lossless for scalar and structured values alike.
   }
 }

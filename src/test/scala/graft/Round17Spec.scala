@@ -16,7 +16,8 @@ import org.apache.spark.sql.types._
  *    parquet exists but holds zero rows (ADVICE-r16: a length-only FS
  *    check would accept it and silently drop every streamed vector),
  *    and names the file when a centroids parquet is unreadable;
- *  - CentroidTopK ranks NaN and signed-zero scores in array_max's order.
+ *  - CentroidTopK ranks NaN and signed-zero scores in array_max's order;
+ *  - the centroid literal cache is a bounded LRU, not a clear-at-64 map.
  */
 class Round17Spec extends SparkSpec {
 
@@ -171,5 +172,20 @@ class Round17Spec extends SparkSpec {
     val scores = Seq(-0.0, 0.0, Double.NaN, 0.5)
     for (k <- Seq(2, 4))
       assert(topK(k, 1).head._1 == firstMax(scores.take(k)))
+  }
+
+  test("the centroid literal cache keeps a hot entry through 65 further inserts") {
+    // the bound centroidLitCache uses; it used to clear() itself once it
+    // held more than 64 entries, dropping the generations live streams
+    // re-read every micro-batch
+    val cache = new graft.functions.LruCache[String, String](64)
+    var computed = 0
+    def read(k: String): String = cache.getOrElseUpdate(k) { computed += 1; k.toUpperCase }
+    read("hot")
+    (1 to 65).foreach { i => read(s"cold$i"); assert(read("hot") == "HOT") }
+    assert(computed == 66) // "hot" was collected once
+    assert(cache.size == 64)
+    assert(cache.get("cold1").isEmpty && cache.get("cold2").isEmpty) // the oldest went
+    assert(cache.get("cold65").contains("COLD65"))
   }
 }
