@@ -42,7 +42,7 @@ object Similarity {
    *  exact stored float/double array), its precomputed norm, and the
    *  raw vector widened to double (exact for float sources — feeds the
    *  [[expressions.CentroidTopK]] matrix on the large-k path). */
-  private final case class CentroidLit(id: Column, vec: Column, norm: Double,
+  private[graft] final case class CentroidLit(id: Column, vec: Column, norm: Double,
       raw: Array[Double])
 
   /** k-threshold between the two shuffle-free argmax formulations
@@ -73,9 +73,25 @@ object Similarity {
    *  is a driver round-trip (VERDICT-r16 ask #9). This caches INPUT
    *  METADATA within one JVM, never operator output: a fresh run
    *  builds its index under a fresh path and collects once. Bounded
-   *  least-recently-used, so a generation that live streams keep
-   *  reading stays cached however many others pass through. */
-  private val centroidLitCache = new LruCache[String, Seq[CentroidLit]](64)
+   *  least-recently-used (64 entries), so a generation that live
+   *  streams keep reading stays cached however many others pass
+   *  through. */
+  private val centroidLitCache =
+    new java.util.LinkedHashMap[String, Seq[CentroidLit]](16, 0.75f, true) {
+      override def removeEldestEntry(
+          e: java.util.Map.Entry[String, Seq[CentroidLit]]): Boolean = size > 64
+    }
+
+  /** The cached literals under `sig`, collecting them on a miss. The
+   *  collect runs outside the lock, so a slow one never blocks probes of
+   *  other generations; two racing misses on one signature may both
+   *  collect, and the later put wins. */
+  private[graft] def centroidLits(sig: String)(collect: => Seq[CentroidLit]): Seq[CentroidLit] =
+    Option(centroidLitCache.synchronized(centroidLitCache.get(sig))).getOrElse {
+      val lits = collect
+      centroidLitCache.synchronized(centroidLitCache.put(sig, lits))
+      lits
+    }
 
   private def cachedCentroidLits(spark: org.apache.spark.sql.SparkSession,
       dir: String): Seq[CentroidLit] = {
@@ -86,7 +102,7 @@ object Similarity {
       .sortBy(_.getPath.getName)
       .map(f => s"${f.getPath.getName}:${f.getLen}:${f.getModificationTime}")
       .mkString(s"$dir|", ",", "")
-    centroidLitCache.getOrElseUpdate(sig)(
+    centroidLits(sig)(
       collectCentroidLits(spark.read.parquet(dir),
         "list_id", "centroid", "ncent"))
   }
@@ -1313,24 +1329,4 @@ object Similarity {
       v.select(col("vec_id"), bestId.as("centroid_id"), bestSim.as("sim"))
     }
   }
-}
-
-/** A map of at most `capacity` entries that evicts the least recently
- *  used one. Thread-safe. A miss computes outside the lock, so a slow
- *  computation (a Spark job) never blocks readers of other keys; two
- *  racing misses on one key may both compute, and the later put wins. */
-private[graft] final class LruCache[K, V <: AnyRef](capacity: Int) {
-  private val entries = new java.util.LinkedHashMap[K, V](16, 0.75f, true) {
-    override def removeEldestEntry(e: java.util.Map.Entry[K, V]): Boolean = size > capacity
-  }
-
-  def get(k: K): Option[V] = entries.synchronized(Option(entries.get(k)))
-
-  def getOrElseUpdate(k: K)(compute: => V): V = get(k).getOrElse {
-    val v = compute
-    entries.synchronized(entries.put(k, v))
-    v
-  }
-
-  def size: Int = entries.synchronized(entries.size)
 }

@@ -1,13 +1,11 @@
 package graft.functions.expressions
 
-import java.io.{ByteArrayInputStream, ByteArrayOutputStream, InputStreamReader}
-import java.nio.charset.StandardCharsets.UTF_8
+import java.io.ByteArrayOutputStream
 
 import scala.collection.mutable.ArrayBuffer
 
 import com.fasterxml.jackson.core.{JsonEncoding, JsonFactory, JsonFactoryBuilder,
-  JsonGenerationException, JsonParser, JsonToken}
-import com.fasterxml.jackson.core.JsonParser.NumberType
+  JsonGenerationException, JsonGenerator, JsonParser, JsonToken}
 import com.fasterxml.jackson.core.json.JsonReadFeature
 import org.apache.spark.sql.{Column, GraftBridge}
 import org.apache.spark.sql.catalyst.InternalRow
@@ -15,7 +13,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, GenericInternalRow, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
-import org.apache.spark.sql.catalyst.json.JSONOptions
+import org.apache.spark.sql.catalyst.json.{CreateJacksonParser, JSONOptions}
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
@@ -66,19 +64,9 @@ object FimpExpressions {
     .enable(JsonReadFeature.ALLOW_SINGLE_QUOTES)
     .build()
 
-  /** A parser over `s`. The builtins read through a UTF-8 `Reader`; the
-   *  byte parser reads the same characters faster, except where its
-   *  encoding detection could differ (invalid UTF-8, a leading NUL or BOM
-   *  lead byte), which falls back to the `Reader`. */
-  private[expressions] def open(f: JsonFactory, s: UTF8String): JsonParser = {
-    val bb = s.getByteBuffer
-    val a = bb.array
-    val off = bb.arrayOffset + bb.position
-    val n = bb.remaining
-    if (s.isValid && (n < 2 || (a(off) != 0 && a(off) != 0xEF.toByte && a(off + 1) != 0)))
-      f.createParser(a, off, n)
-    else f.createParser(new InputStreamReader(new ByteArrayInputStream(a, off, n), UTF_8))
-  }
+  /** A parser over `s`, made as the builtins make theirs. */
+  private[expressions] def open(f: JsonFactory, s: UTF8String): JsonParser =
+    CreateJacksonParser.utf8String(f, s)
 
   /** The text `from_json`'s string converter yields for the current
    *  value token: null, the string itself, or the value re-rendered. */
@@ -94,45 +82,19 @@ object FimpExpressions {
    *  null where its generator rejects the text (an unpaired surrogate). */
   private[expressions] def pathText(f: JsonFactory, p: JsonParser): UTF8String =
     if (p.currentToken != JsonToken.VALUE_STRING) rendered(f, p)
-    else {
-      val s = p.getText
-      if (!hasSurrogate(s)) UTF8String.fromString(s)
-      else try {
-        val out = new ByteArrayOutputStream(s.length * 3)
-        val g = f.createGenerator(out, JsonEncoding.UTF8)
-        g.writeRaw(s.toCharArray, 0, s.length)
-        g.close()
-        UTF8String.fromBytes(out.toByteArray)
-      } catch { case _: JsonGenerationException => null }
-    }
+    else try generated(f)(_.writeRaw(p.getText))
+    catch { case _: JsonGenerationException => null }
 
-  private def hasSurrogate(s: String): Boolean = {
-    var i = 0
-    while (i < s.length) { if (Character.isSurrogate(s.charAt(i))) return true; i += 1 }
-    false
-  }
+  /** The current value as `JsonGenerator.copyCurrentStructure` writes it. */
+  private def rendered(f: JsonFactory, p: JsonParser): UTF8String =
+    generated(f)(_.copyCurrentStructure(p))
 
-  /** The current value as `JsonGenerator.copyCurrentStructure` writes it.
-   *  Finite numbers and booleans take the generator's own formatting
-   *  (`Integer`/`Long`/`BigInteger`/`Double.toString`) without building
-   *  one; everything else goes through a generator. */
-  private def rendered(f: JsonFactory, p: JsonParser): UTF8String = p.currentToken match {
-    case JsonToken.VALUE_TRUE => UTF8String.fromString("true")
-    case JsonToken.VALUE_FALSE => UTF8String.fromString("false")
-    case JsonToken.VALUE_NUMBER_INT => UTF8String.fromString(p.getNumberType match {
-      case NumberType.INT => Integer.toString(p.getIntValue)
-      case NumberType.LONG => java.lang.Long.toString(p.getLongValue)
-      case _ => p.getBigIntegerValue.toString
-    })
-    case JsonToken.VALUE_NUMBER_FLOAT if p.getNumberType == NumberType.DOUBLE &&
-        java.lang.Double.isFinite(p.getDoubleValue) =>
-      UTF8String.fromString(java.lang.Double.toString(p.getDoubleValue))
-    case _ =>
-      val out = new ByteArrayOutputStream(64)
-      val g = f.createGenerator(out, JsonEncoding.UTF8)
-      g.copyCurrentStructure(p)
-      g.close()
-      UTF8String.fromBytes(out.toByteArray)
+  private def generated(f: JsonFactory)(write: JsonGenerator => Unit): UTF8String = {
+    val out = new ByteArrayOutputStream(64)
+    val g = f.createGenerator(out, JsonEncoding.UTF8)
+    write(g)
+    g.close()
+    UTF8String.fromBytes(out.toByteArray)
   }
 }
 
@@ -167,8 +129,10 @@ sealed trait FimpParse extends UnaryExpression {
  * in one streaming pass. `serv`, `type`, `val_t`, `props` and `src` follow
  * `from_json(payload, LogReplay.fimpSchema)`: the last occurrence of a key
  * wins, a non-string value is re-rendered as JSON text, a `props` that is
- * not an object leaves the field as it was, and a syntax error anywhere
- * before the root object closes makes every field null. `val` follows
+ * not an object leaves the field as it was. A syntax error anywhere
+ * before the root object closes makes every field null (`from_json` may
+ * keep the fields converted before an error inside a field's value; see
+ * `Transform`'s divergence note). `val` follows
  * `get_json_object(payload, '$.val')`: the first non-null occurrence,
  * a string unquoted, anything else as JSON text. A null payload, or one
  * whose root is not an object, yields all fields null; the struct itself

@@ -46,6 +46,11 @@ import org.apache.spark.sql.types._
  * (e_import/e_export/p_import/p_export) drop the message. On malformed or
  * non-standard JSON the one-pass decode also departs from the builtin
  * parsers it replaced (each pinned in `FimpDecodeSpec`):
+ *  - a syntax error inside the value of an envelope field `from_json`
+ *    converts (`serv`, `type`, `val_t`, `props`, `src`) now nulls every
+ *    field, so the filter drops the frame; `from_json` could keep the
+ *    fields it had converted before the error (Spark's partial results),
+ *    and whether it did depended on the plan around it;
  *  - an envelope with a raw control character inside a string now
  *    decodes to all-null fields, `val` included; `get_json_object` used
  *    to accept it for `val` alone (`from_json` rejected it, so `serv` was

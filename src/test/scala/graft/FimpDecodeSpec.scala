@@ -193,19 +193,13 @@ class FimpDecodeSpec extends SparkSpec {
       """{"serv":"a","val":1""", """{"serv":"a","val":1,}""", """{"serv":"a"} garbage""",
       """{"serv":"a"}}""", """{serv:"a","val":1}""", """{'serv':'a','val':'b'}""",
       """{"serv":"a",/*c*/"val":1}""", """[{"serv":"a","val":1}]""", "", "   ", "5", "null",
-      """{"serv":"a","val":"x""", """{"serv":"a","props":{"k":}}""", """{"serv":"a","val":01}""",
-      """{"serv":"a","val":1e}""", "\uFEFF{\"serv\":\"a\",\"val\":1}", """{"serv":"a","val":tru}""",
-      """{"serv":"a","val":"\x"}""", "{\"serv\":\"a\",\"val\":\"\\ud83d\"}")
-    val withBytes = agree.toDF("payload").union(Seq(
-      "7b2273657276223a2261ff62222c2276616c223a317d", // invalid UTF-8 inside serv
-      "007b2273657276223a2261227d", // leading NUL
-      "7b00", // NUL second byte
-      "efbbbf7b2273657276223a2261227d" // UTF-8 BOM
-    ).toDF("h").select(unhex(col("h")).cast("string").as("payload")))
-    val bad = mismatches(envelopeSides(withBytes), "payload")
+      """{"serv":"a","val":"x""", """{"serv":"a","val":01}""",
+      """{"serv":"a","val":1e}""", """{"serv":"a","val":tru}""",
+      """{"serv":"a","val":"\x"}""", "{\"serv\":\"a\",\"val\":\"\\ud83d\"}").toDF("payload")
+    val bad = mismatches(envelopeSides(agree), "payload")
     assert(bad.isEmpty, bad.mkString("\n"))
     val vbad = mismatches(valueSides(Seq("""[{"total":1}""", """[{"total":1},]""", """{"temp":1""",
-      """{"temp":}""", "\uFEFF{\"temp\":1}", """{"temp":1}}""").toDF("v")), "v")
+      """{"temp":}""", """{"temp":1}}""").toDF("v")), "v")
     assert(vbad.isEmpty, vbad.mkString("\n"))
   }
 
@@ -217,6 +211,16 @@ class FimpDecodeSpec extends SparkSpec {
       FimpExpressions.decode(col("p")).getField("serv"),
       FimpExpressions.decode(col("p")).getField("val")).head()
     assert(r == Row(null, "c\td", null, null))
+  }
+
+  test("divergence: a syntax error inside an envelope field's value nulls every field") {
+    // from_json keeps the fields it converted before the error (Spark's
+    // partial results) in this plan; the decoder gives up on the frame
+    val r = Seq("""{"serv":"a","props":{"k":}}""", """{"serv":"a","src":{"k":}}""").toDF("p")
+      .select(from_json(col("p"), LogReplay.fimpSchema).getField("serv"),
+        FimpExpressions.decode(col("p")).getField("serv"))
+      .collect().toSeq
+    assert(r == Seq(Row("a", null), Row("a", null)))
   }
 
   test("divergence: a NaN token as val is read as from_json reads it") {

@@ -175,17 +175,18 @@ class Round17Spec extends SparkSpec {
   }
 
   test("the centroid literal cache keeps a hot entry through 65 further inserts") {
-    // the bound centroidLitCache uses; it used to clear() itself once it
-    // held more than 64 entries, dropping the generations live streams
-    // re-read every micro-batch
-    val cache = new graft.functions.LruCache[String, String](64)
-    var computed = 0
-    def read(k: String): String = cache.getOrElseUpdate(k) { computed += 1; k.toUpperCase }
-    read("hot")
-    (1 to 65).foreach { i => read(s"cold$i"); assert(read("hot") == "HOT") }
-    assert(computed == 66) // "hot" was collected once
-    assert(cache.size == 64)
-    assert(cache.get("cold1").isEmpty && cache.get("cold2").isEmpty) // the oldest went
-    assert(cache.get("cold65").contains("COLD65"))
+    // centroidLitCache used to clear() itself once it held more than 64
+    // entries, dropping the generations live streams re-read every
+    // micro-batch
+    val collected = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
+    def read(sig: String): Unit = graft.functions.Similarity.centroidLits(sig) {
+      collected(sig) += 1; Seq.empty
+    }
+    read("lru-hot")
+    (1 to 65).foreach { i => read(s"lru-cold$i"); read("lru-hot") }
+    assert(collected("lru-hot") == 1)
+    read("lru-cold65") // the newest stayed
+    read("lru-cold1") // the oldest went
+    assert(collected("lru-cold65") == 1 && collected("lru-cold1") == 2)
   }
 }
