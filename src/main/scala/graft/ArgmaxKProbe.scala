@@ -9,9 +9,9 @@ import org.apache.spark.sql.functions._
  * [[graft.functions.expressions.CentroidTopK]] matrix expression at
  * REALISTIC k (up to 4096 lists × 256 dims), separating PLAN cost
  * (analysis + codegen — the part that grows with k in the literal
- * shape) from per-row EXECUTION cost. The measured crossover sets
- * `Similarity.argmaxLiteralMaxK`'s default; the probe record is
- * committed as plans/r17/argmax_k_probe.txt.
+ * shape) from per-row EXECUTION cost. Its crossover would set
+ * `Similarity.argmaxLiteralMaxK`'s default; it has not been run yet,
+ * so that default (128) is unmeasured.
  *
  * Usage: runMain graft.ArgmaxKProbe [rows] [dims] [k,k,...]
  * Paths are switched per-case via the `graft.argmax.literal.maxk`

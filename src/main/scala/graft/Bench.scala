@@ -35,6 +35,12 @@ import org.apache.spark.sql.SparkSession
  *    the stdout line carries `history_line` — the 1-based line of this
  *    sweep's record in that file — so consumers can always diff the
  *    FULL map, never just the printed slowest subset.
+ *
+ * A crashed query must never masquerade as a fast one: an entry whose
+ * run throws is not timed further. It reads `"FAILED"` in the
+ * `queries` map, its exception class lands in the `failed` map (stdout
+ * and BENCH_LAST.json), the sweep is not appended to the history, and
+ * the process exits 1.
  */
 object Bench {
   private val Runs = 3
@@ -43,7 +49,7 @@ object Bench {
    *  measured value for the reference 32-thread container (see
    *  BENCH_NOTES.md "calibration"); on other hardware re-measure with
    *  `runMain graft.CalibProbe` and export SPARK_GRAFT_CALIB_QUIET —
-   *  like every other Bench knob, it must be settable without a
+   *  it depends on the hardware, so it must be settable without a
    *  recompile or the flag is systematically wrong off-reference. A run
    *  whose probe exceeds [[CalibBandFactor]]× this is marked
    *  `"calib_flagged":true` — its query times are load-inflated and
@@ -63,8 +69,7 @@ object Bench {
    *  with zero code delta had a 5.2 s spread on a 13 s median — this
    *  flag makes that attributable ON the record instead of arguable
    *  after it). */
-  private val SpreadBandFactor =
-    sys.env.get("SPARK_GRAFT_SPREAD_BAND").map(_.toDouble).getOrElse(0.35)
+  private val SpreadBandFactor = 0.35
   private val SpreadFloorSec = 0.5
   private def spreadFlagged(median: Double, spread: Double): Boolean =
     spread > math.max(SpreadBandFactor * median, SpreadFloorSec)
@@ -81,8 +86,7 @@ object Bench {
    *  `QuietBandFactor` is deliberately tighter than the 2× flag band:
    *  1.3× quiet is the level below which entry medians have matched
    *  idle-box reruns all rounds (BENCH_NOTES "calibration"). */
-  private val QuietBandFactor =
-    sys.env.get("SPARK_GRAFT_QUIET_BAND").map(_.toDouble).getOrElse(1.3)
+  private val QuietBandFactor = 1.3
   /** Bounded quiet-wait: probe, and while loaded sleep-and-reprobe up
    *  to `maxWaitSec`. Returns (last probe value, read-quiet?). */
   private def awaitQuiet(probe: () => Double, maxWaitSec: Int,
@@ -97,6 +101,18 @@ object Bench {
     }
     (p, p <= CalibQuietSec * QuietBandFactor)
   }
+
+  /** One run of `run`: its wall-clock seconds, or the simple class name
+   *  of what it threw. */
+  private[graft] def timeOnce(run: () => Unit): Either[String, Double] = {
+    val t0 = System.nanoTime()
+    try { run(); Right((System.nanoTime() - t0) / 1e9) }
+    catch { case e: Throwable => Left(e.getClass.getSimpleName) }
+  }
+
+  /** Ends an entry's measurement at its first failed run. */
+  private final case class EntryFailed(exception: String)
+    extends Exception(exception, null, false, false)
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -203,15 +219,14 @@ object Bench {
       .filter { case (name, _) => only.isEmpty || only(name) }
       .map { case (name, fn) =>
       def once(): Double = {
-        val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => }
-        val t = (System.nanoTime() - t0) / 1e9
+        val t = timeOnce(() => fn(spark, sfDir).count())
         // Free blocks a query left behind (localCheckpoint stages persist
         // on executors and outlive the run) so run N+1 isn't measured
         // under run N's storage pressure.
         spark.sparkContext.getPersistentRDDs.values.foreach(_.unpersist(false))
-        t
+        t.fold(e => throw EntryFailed(e), identity)
       }
+      try {
       // ADAPTIVE warm-up (round-13 ask #4): the stateful-streaming
       // entries JIT-warm over ~4 runs (measured: addBatch decays
       // 5.9 → 1.6 s across runs with the batch count pinned at 2 and
@@ -305,7 +320,15 @@ object Bench {
       name -> QueryStat(med(runs), spr(runs),
         stillFlagged, runs.length, requieted,
         loadFlagged = stillFlagged && !quietStillSpread)
+      } catch {
+        case EntryFailed(e) =>
+          System.err.println(s"[bench] $name FAILED ($e)")
+          org.apache.spark.sql.graft.StateStoreHygiene.unloadAll()
+          name -> QueryStat(0.0, 0.0, false, 0, false, false, failed = Some(e))
+      }
     }
+    val failedJson = results.collect { case (k, s) if s.failed.isDefined =>
+      "\"" + k + "\":\"" + s.failed.get + "\"" }.mkString(""""failed":{""", ",", "}")
     // The stdout report must survive a harness that keeps only the last
     // ~2000 chars of output, and the harness keeps the END — so the LAST
     // line printed must be the complete parse target and fit the window
@@ -319,8 +342,9 @@ object Bench {
       String.format(prec, Double.box(v))
         .replaceAll("0+$", "").replaceAll("\\.$", "")
     def jmap(prec: String)(f: ((String, QueryStat)) => Double) =
-      results.map { case kv @ (k, _) => "\"" + k + "\":" + jnum(prec, f(kv)) }
-        .mkString("{", ",", "}")
+      results.map { case kv @ (k, s) =>
+        "\"" + k + "\":" + (if (s.failed.isDefined) "\"FAILED\"" else jnum(prec, f(kv)))
+      }.mkString("{", ",", "}")
     val calibEnd = calibrate()
     val loadEnd = loadAvg()
     val flagged = math.max(calibStart, calibEnd) > CalibQuietSec * CalibBandFactor
@@ -330,14 +354,16 @@ object Bench {
     // never got a quiet probe, or a calibration probe loaded at either
     // end of the sweep. Flags that survived a quiet re-measurement are
     // real variance and do NOT poison the record.
-    val unusable = flagged || results.values.exists(_.loadFlagged)
+    val anyFailed = results.values.exists(_.failed.isDefined)
+    val unusable = flagged || anyFailed || results.values.exists(_.loadFlagged)
     val calibJson =
       f""""calib_sec":[$calibStart%.3f,$calibEnd%.3f],""" +
         f""""load_avg":[$loadStart%.2f,$loadEnd%.2f],""" +
         s""""calib_quiet_sec":$CalibQuietSec,"calib_flagged":$flagged,""" +
         s""""unusable":$unusable"""
     val total = results.values.map(_.median).sum
-    val slowestFirst = results.toSeq.sortBy { case (k, s) => (-s.median, k) }
+    val slowestFirst = results.toSeq.filter(_._2.failed.isEmpty)
+      .sortBy { case (k, s) => (-s.median, k) }
       .map { case (k, s) => "\"" + k + "\":" + jnum("%.3f", s.median) }
     def diagJson(m: Map[String, Long]): String =
       m.map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
@@ -377,7 +403,7 @@ object Bench {
       f"""{"metric":"total","value":$total%.3f,"unit":"sec","runs":$Runs,""" +
         s""""epoch_sec":${System.currentTimeMillis() / 1000},$calibJson,""" +
         s""""queries":${jmap("%.3f")(_._2.median)},"spread":${jmap("%.3f")(_._2.spread)},""" +
-        s""""spread_flagged":$flaggedArr,""" +
+        s""""spread_flagged":$flaggedArr,$failedJson,""" +
         s""""requiet":${requietAll.mkString("[", ",", "]")},"runs_n":$runsN,""" +
         s""""stream_diag":$allDiags,"sf":"$sfDir"}"""
     try java.nio.file.Files.write(java.nio.file.Paths.get("BENCH_LAST.json"),
@@ -406,7 +432,7 @@ object Bench {
     // slowest entries) has a deterministic pointer to the complete map
     // and never has to diff just the printed subset.
     val (historyN, historyLine): (Int, Int) =
-      if (only.nonEmpty) (-1, -1)
+      if (only.nonEmpty || anyFailed) (-1, -1)
       else try {
         val hp = java.nio.file.Paths.get("BENCH_HISTORY.jsonl")
         java.nio.file.Files.write(hp, (full + "\n").getBytes("UTF-8"),
@@ -427,7 +453,7 @@ object Bench {
     val head =
       f"""{"metric":"total","value":$total%.3f,"unit":"sec","runs":$Runs,""" +
         s""""history_n":$historyN,"history_line":$historyLine,""" +
-        s"""$calibJson,$spreadJson$requietJson${a9Diag}"queries":{"""
+        s"""$calibJson,$failedJson,$spreadJson$requietJson${a9Diag}"queries":{"""
     val tail = s"""},"omitted_fast":OMIT,"sf":"$sfDir"}"""
     val kept = scala.collection.mutable.ArrayBuffer.empty[String]
     var len = head.length + tail.length + 4
@@ -435,8 +461,12 @@ object Bench {
       if (len + e.length + 1 <= budget) { kept += e; len += e.length + 1 }
     }
     println(head + kept.mkString(",") +
-      tail.replace("OMIT", (results.size - kept.size).toString))
+      tail.replace("OMIT", (slowestFirst.size - kept.size).toString))
     spark.stop()
+    if (anyFailed) {
+      System.err.println("[bench] some entries FAILED; the sweep is not comparable")
+      sys.exit(1)
+    }
   }
 
   /** One query's sweep verdict: median and spread over its timed runs,
@@ -446,8 +476,9 @@ object Bench {
    *  the quiet one; the noisy batch was load, not code), and whether a
    *  standing flag was never re-measured under a quiet probe
    *  (`loadFlagged` — any such entry marks the whole record
-   *  `"unusable":true`). */
+   *  `"unusable":true`), or the exception class of a run that threw
+   *  (`failed` — the other fields then carry no measurement). */
   private final case class QueryStat(median: Double, spread: Double,
       flagged: Boolean, runsN: Int, requieted: Boolean,
-      loadFlagged: Boolean)
+      loadFlagged: Boolean, failed: Option[String] = None)
 }

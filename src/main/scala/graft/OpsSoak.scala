@@ -11,8 +11,8 @@ import org.apache.spark.sql.functions._
  * OPS-CONCURRENCY soak (VERDICT r9 ask #4): the round-9 maintenance
  * surface — `verifyRollups`, `backfill`, `vacuumTier`, `readAsOf`
  * pins — exercised AGAINST live exactly-once ingest and concurrent
- * `Downsampler.maintain` passes, [[SustainedSoak]]-style (hundreds of
- * micro-batches), instead of each op alone on a quiet store.
+ * `Downsampler.maintain` passes over hundreds of micro-batches,
+ * instead of each op alone on a quiet store.
  *
  * One streaming ingest query commits `batches` micro-batches into the
  * store while an ops thread, every `opsEvery` batches, runs a full

@@ -2,17 +2,13 @@ package graft
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.StreamingQueryListener
 
 /**
- * Shared plumbing for the soak mains ([[StreamingSoak]],
- * [[SustainedSoak]]): ordered chunk-file generation for the file
- * source, the file-source reader, and the per-batch progress listener.
+ * Shared plumbing for the soak mains ([[OpsSoak]],
+ * [[IndexMaintenanceSoak]]) and the streaming specs: ordered chunk-file
+ * generation for the file source, and the one-file-per-batch reader.
  */
 object SoakUtil {
-
-  final case class BatchStat(phase: String, runId: String, batchId: Long,
-      inputRows: Long, procMs: Long, stateRows: Long, stateBytes: Long)
 
   /** Split `df` into `n` sequential chunk files under `dir` with
    *  strictly increasing mtimes so the file source replays them in
@@ -49,42 +45,4 @@ object SoakUtil {
   def streamDir(spark: SparkSession, dir: String,
       schema: org.apache.spark.sql.types.StructType): DataFrame =
     spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(dir)
-
-  /** Register a listener that appends one [[BatchStat]] per non-empty
-   *  micro-batch. The `phase()` tag is a best-effort LABEL read at
-   *  delivery time — listener events ride an async bus, so a finished
-   *  query's last events can be delivered after the driver thread has
-   *  already moved `phase` on. Every stat therefore also carries the
-   *  query's runId; assertions and per-phase reports must attribute by
-   *  runId (the soak mains record each started query's runId against
-   *  its phase), never by the label alone. */
-  def addProgressListener(spark: SparkSession, phase: () => String,
-      stats: java.util.concurrent.ConcurrentLinkedQueue[BatchStat]): Unit =
-    spark.streams.addListener(new StreamingQueryListener {
-      override def onQueryStarted(e: StreamingQueryListener.QueryStartedEvent): Unit = ()
-      override def onQueryTerminated(e: StreamingQueryListener.QueryTerminatedEvent): Unit = ()
-      override def onQueryProgress(e: StreamingQueryListener.QueryProgressEvent): Unit = {
-        val p = e.progress
-        if (p.numInputRows > 0) {
-          val (sr, sb) = Option(p.stateOperators).filter(_.nonEmpty)
-            .map(ops => (ops.map(_.numRowsTotal).sum, ops.map(_.memoryUsedBytes).sum))
-            .getOrElse((0L, 0L))
-          stats.add(BatchStat(phase(), p.runId.toString, p.batchId, p.numInputRows,
-            Option(p.durationMs.get("triggerExecution")).map(_.longValue).getOrElse(0L),
-            sr, sb))
-        }
-      }
-    })
-
-  /** Thread-safe phase → started-query runIds registry for runId-based
-   *  stat attribution (see [[addProgressListener]]'s scaladoc). */
-  final class RunRegistry {
-    private val m = scala.collection.mutable.Map.empty[String, Set[String]]
-    def add(phase: String, q: org.apache.spark.sql.streaming.StreamingQuery): Unit =
-      synchronized { m(phase) = m.getOrElse(phase, Set.empty) + q.runId.toString }
-    def ids(phase: String): Set[String] = synchronized { m.getOrElse(phase, Set.empty) }
-    /** The phase that started runId (for progress-dump labeling). */
-    def phaseOf(runId: String): Option[String] =
-      synchronized { m.collectFirst { case (p, ids) if ids(runId) => p } }
-  }
 }

@@ -140,7 +140,7 @@ object SparkEntry {
 
   /** FIMP envelope binding for the ingest operators (transform/filter/
    *  topic-match): event_type picks the service branch. `private[graft]`
-   *  so the StreamingSoak main drives the identical envelope shape. */
+   *  so the OpsSoak main drives the identical envelope shape. */
   private[graft] def fimp(spark: SparkSession, dir: String): DataFrame = {
     val e = events(spark, dir)
     val serv = when(col("event_type") === "purchase", "meter_elec")
@@ -172,23 +172,6 @@ object SparkEntry {
       valJson.as("val_json"),
       map(lit("unit"), unit).as("props"),
       lit("app").as("src"), lit("x").as("domain"))
-  }
-
-  /** Per-series StreamIn binding for the StreamingSoak's stateful-agg
-   *  phase: agg_func keyed by user so every series carries exactly one
-   *  function, covering all six streaming arms incl. `difference`. */
-  private[graft] def soakPoints(spark: SparkSession,
-      dir: String): org.apache.spark.sql.Dataset[Aggregator.StreamIn] = {
-    import spark.implicits._
-    events(spark, dir).select(
-      concat(col("event_type"), lit(";"), col("user_id").cast("string")).as("series_id"),
-      col("event_type").as("measurement"),
-      element_at(
-        array(lit("mean"), lit("min"), lit("max"), lit("sum"), lit("last"), lit("difference")),
-        (pmod(col("user_id"), lit(6)) + 1).cast("int")).as("agg_func"),
-      col("ts").as("time"), col("value"),
-      when(col("user_id") % 7 === 0, "meter.main_elec").otherwise("sensor").as("dev_type"))
-      .as[Aggregator.StreamIn]
   }
 
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */

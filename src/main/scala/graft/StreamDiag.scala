@@ -29,12 +29,12 @@ import org.apache.spark.sql.streaming.StreamingQueryListener
  * `wall − startup − trigger − idle` ≈ the harness's batch (non-stream)
  * portion. Attribution is by wall-clock interval, not query id: the
  * bench runs queries sequentially, so everything delivered between two
- * `drain()` calls belongs to the bench query in between (the same
- * async-bus caveat as [[SoakUtil.addProgressListener]] — `drain()`
- * waits for the listener bus to quiesce via
- * `spark.sparkContext.listenerBus.waitUntilEmpty()` equivalent:
- * StreamingQueryListener rides its own bus, so we wait a short bounded
- * settle instead).
+ * `drain()` calls belongs to the bench query in between. Listener
+ * events ride an async bus, so a finished query's last events can
+ * arrive after the next query has started; `drain()` therefore waits for
+ * the bus to quiesce. StreamingQueryListener rides its own bus (no
+ * `listenerBus.waitUntilEmpty()` equivalent), so the wait is a short
+ * bounded settle.
  */
 final class StreamDiag(spark: SparkSession) {
   import scala.jdk.CollectionConverters._

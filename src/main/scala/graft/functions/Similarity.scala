@@ -52,8 +52,9 @@ object Similarity {
    *  into ONE [[expressions.CentroidTopK]] node whose per-row cost is a
    *  tight JVM loop — the unrolled plan's analysis/codegen cost grows
    *  linearly in k and falls off a cliff near the Janino 64KB/constant-
-   *  pool limits (measured in plans/r17/argmax_k_probe.txt; the
-   *  crossover sits well below the cliff). Env/sysprop-tunable so a
+   *  pool limits. The crossover has not been measured: the default of
+   *  128 is a guess below the cliff, and `graft.ArgmaxKProbe` is the
+   *  tool that would measure it. Env/sysprop-tunable so a
    *  deployment can move it and the equivalence suite can force either
    *  path; results are bit-identical by construction on both sides. */
   private[graft] def argmaxLiteralMaxK: Int =

@@ -372,8 +372,8 @@ object Aggregator {
    * series. Beyond that set
    * `spark.sql.streaming.stateStore.providerClass` to Spark's
    * RocksDBStateStoreProvider (bounded memory, local-disk spill); the
-   * operator is provider-agnostic and the soak asserts row-identical
-   * output under both ([[graft.StreamingSoak]] "agg_rocksdb").
+   * operator is provider-agnostic: StoreStreamSpec "every agg_func arm
+   * emits the same rows under the RocksDB state store" asserts it.
    */
   def streaming(points: Dataset[StreamIn], samplingMinutes: Int = 10,
       stateTimeout: GroupStateTimeout = GroupStateTimeout.NoTimeout)

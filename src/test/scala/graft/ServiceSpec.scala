@@ -83,6 +83,8 @@ class ServiceSpec extends SparkSpec {
         svc.store.read(Tier.GenDay)
           .filter(col("measurement").startsWith("sensor_temp")).count() >= 1L
       }
+      // and the scheduler keeps firing, not just once
+      await("a second maintenance cycle")(svc.cyclesDone >= 2)
 
       // --- a malformed command still answers on the wire ---
       val bad = issue("003", """{"type":"cmd.tsdb.nonexistent","val":{}}""")

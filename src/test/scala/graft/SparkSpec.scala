@@ -3,19 +3,14 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local session per suite. */
+/** Shared local session per suite: the production session
+ *  ([[GraftSession.builder]]: optimizer rules, storage contract, local
+ *  file system) with only the test-scale settings on top. */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
+  lazy val spark: SparkSession = GraftSession.builder(shufflePartitions = 4)
     .master("local[4]")
     .appName(getClass.getSimpleName)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    // the GraftSession storage contract (INT96 writes no row-group
-    // stats — see GraftSession's scaladoc); specs that assert scan
-    // pruning need the same setting the engine recommends
-    .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     .config("spark.ui.enabled", "false")
-    .config(GraftSession.localFsConf)
     .getOrCreate()
 
   /** Run a ScalaCheck property and fail the test on falsification. */

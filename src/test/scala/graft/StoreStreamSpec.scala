@@ -258,6 +258,39 @@ class StoreStreamSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("streaming hop emits the batch downsample of every window its " +
+    "watermark sealed") {
+    import graft.rollup.Downsampler
+    val store = new TierStore(spark, tmpDir())
+    val target = new TierStore(spark, tmpDir())
+    def raw(day: String, n: Int) = {
+      val rs = (0 until n).map { i =>
+        Row(if (i % 2 == 0) "sensor_temp" else "sensor_hum",
+          Timestamp.valueOf(f"$day 10:${i / 3}%02d:${i * 7 % 60}%02d"),
+          i * 1.5, s"d${i % 3}")
+      }
+      spark.createDataFrame(spark.sparkContext.parallelize(rs), schema)
+    }
+    store.write(Tier.GenRaw, raw("2024-01-01", 90))
+    val q = Downsampler.streamingHop(store, Tier.GenRaw, Tier.GenDay,
+      tmpDir(), watermark = "0 seconds", target = Some(target))
+    try {
+      q.processAllAvailable()
+      store.write(Tier.GenRaw, raw("2024-01-02", 3)) // seals all of day one
+      q.processAllAvailable()
+    } finally q.stop()
+    def byKey(df: org.apache.spark.sql.DataFrame) =
+      df.select("measurement", "time", "dev_id", "value").collect()
+        .map(r => (r.getString(0), r.getTimestamp(1), r.getString(2)) -> r.getDouble(3))
+        .toMap
+    val want = byKey(Downsampler.downsample(store.read(Tier.GenRaw).drop("date"), 1)
+      .filter(col("time") < Timestamp.valueOf("2024-01-02 00:00:00")))
+    val got = byKey(target.read(Tier.GenDay))
+    assert(want.size >= 30)
+    assert(got.keySet == want.keySet)
+    got.foreach { case (k, v) => assert(math.abs(v - want(k)) <= 1e-6, k) }
+  }
+
   test("streaming hop with a separate target store keeps hop output apart from routed rows") {
     import graft.rollup.Downsampler
     val store = new TierStore(spark, tmpDir())
@@ -320,6 +353,58 @@ class StoreStreamSpec extends SparkSpec {
       assert(out.map(_.value).toSeq == Seq(15.0))
       assert(out.head.series_id == "s1")
     } finally q.stop()
+  }
+
+  test("streaming aggregator: every agg_func arm emits the same rows under " +
+    "the RocksDB state store, replays identically, and keeps one state row " +
+    "per series") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val base = 1704067200L // on a 10-minute tick, so `difference` emits
+    val funcs = Seq("mean", "min", "max", "sum", "last", "difference")
+    val series = funcs.map(f => (s"s_$f", f, "sensor")) :+
+      (("s_hourly", "difference", Aggregator.HourlyProfileDevType))
+    val batches = (0 until 3).map { b =>
+      val tick = base + b * 600L
+      series.flatMap { case (id, f, dev) =>
+        Seq(tick - 60, tick).zipWithIndex.map { case (sec, i) =>
+          Aggregator.StreamIn(id, "m", f, new Timestamp(sec * 1000),
+            100.0 + 3 * b * b + i * (b + 1), dev)
+        }
+      }
+    }
+    // one fresh checkpoint per run: (sorted output rows, state rows per batch)
+    def run(tag: String): (Seq[Aggregator.StreamOut], Seq[Long]) = {
+      val input = MemoryStream[Aggregator.StreamIn]
+      val q = Aggregator.streaming(input.toDS())
+        .writeStream.format("memory").queryName(s"agg_parity_$tag")
+        .option("checkpointLocation", tmpDir()).outputMode("append").start()
+      try batches.foreach { b => input.addData(b); q.processAllAvailable() }
+      finally q.stop()
+      val out = spark.table(s"agg_parity_$tag").as[Aggregator.StreamOut]
+        .collect().toSeq.sortBy(o => (o.series_id, o.time.getTime, o.value))
+      (out, q.recentProgress.toSeq.flatMap(_.stateOperators.map(_.numRowsTotal)))
+    }
+    val provider = "spark.sql.streaming.stateStore.providerClass"
+    val (hdfs, hdfsState) = run("hdfs")
+    spark.conf.set(provider,
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val (rocks, rocksState) =
+      try run("rocks")
+      finally {
+        spark.conf.unset(provider)
+        org.apache.spark.sql.graft.StateStoreHygiene.unloadAll()
+      }
+    val (replay, replayState) = run("replay")
+
+    assert(hdfs.map(_.agg_func).toSet == funcs.toSet, hdfs)
+    assert(hdfs.exists(_.series_id == "s_hourly"), hdfs)
+    assert(rocks == hdfs)
+    assert(replay == hdfs)
+    Seq(hdfsState, rocksState, replayState).foreach { st =>
+      assert(st.length == batches.length, st)
+      assert(st.max <= series.length && st.last == st.max, st)
+    }
   }
 
   test("watermarked streaming window aggregation (A1 windowed form)") {
