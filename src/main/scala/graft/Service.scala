@@ -20,8 +20,11 @@ import org.apache.spark.sql.SparkSession
  *
  *  - boot: a properties file ([[Service.loadConfig]]) → SparkSession →
  *    [[Api.ProcessRegistry]] with one autostarted default process;
- *  - ingest: a refreshable streaming pipeline
- *    ([[IngestPipeline.runFromSource]]) tailing `frames.dir` for FIMP
+ *  - ingest: a streaming pipeline ([[IngestPipeline.runFromSource]] →
+ *    [[IngestPipeline.runStream]], whose metadata dimension is fixed
+ *    when the query starts — the service passes none; the refreshable
+ *    form, [[IngestPipeline.runStreamRefreshable]], is not used here)
+ *    tailing `frames.dir` for FIMP
  *    envelope log files (the [[StreamSource.LogFiles]] arm of the S1
  *    front door; the live-broker arm stays the documented environment
  *    boundary, KAFKA_CONNECTOR.md — swap the source, nothing else

@@ -754,28 +754,13 @@ object Dedup {
       // million-doc batch writes 16×-oversized bucket files that cap
       // every later index-scan's parallelism.
       def nFiles(n: Long) = math.max(1, math.ceil(n / 200000.0).toInt)
-      concurrentActions(sc,
+      graft.store.Concurrent.eval(sc, Seq(
         () => banded(cached, k, bands).coalesce(nFiles(rows * bands))
           .write.mode(mode).parquet(bucketsPath),
         () => cached.select(col("id"), col("sh")).coalesce(nFiles(rows))
-          .write.mode(mode).parquet(shinglesPath))
+          .write.mode(mode).parquet(shinglesPath)))
     } finally cached.unpersist()
   }
-
-  /**
-   * Run independent Spark actions concurrently on the calling session,
-   * awaiting ALL before propagating any failure — bailing on the first
-   * would leave siblings in flight while the caller already handles the
-   * error (a retry would then race a half-done commit). Futures run on
-   * EC threads, OUTSIDE the caller's job group — a
-   * `StreamingQuery.stop()` (which cancels by job group) would otherwise
-   * leave the writes running as zombies that race the restarted query's
-   * replay — so the caller thread's job-group properties are copied onto
-   * each action thread, letting cancellation reach them.
-   */
-  private[functions] def concurrentActions(sc: org.apache.spark.SparkContext,
-      actions: (() => Unit)*): Unit =
-    graft.store.Concurrent.eval(sc, actions): Unit
 
   // Signatures built with different (n, k, bands) never collide the way
   // the banding scheme promises — a parameter-mismatched append or query
@@ -1087,7 +1072,7 @@ object Dedup {
     // hit scans overlap and the rewrites overlap, halving the pass's
     // serial action chain on a pool that each job alone underfills
     @volatile var erased = 0L
-    concurrentActions(spark.sparkContext,
+    graft.store.Concurrent.eval(spark.sparkContext,
       Seq("buckets", "shingles").map { t => () =>
         val live = new org.apache.hadoop.fs.Path(s"$genRoot/$t")
         // the shared erase core: hit scan (IdFilter — literal IN-list for
@@ -1103,7 +1088,7 @@ object Dedup {
         if (t == "shingles") erased = rows
         // UNCONDITIONAL vacuum — superseded files still carry the rows
         graft.store.SnapshotFold.vacuumDir(fs, live)
-      }: _*)
+      })
     fs.delete(new org.apache.hadoop.fs.Path(s"$path/.erase"), true)
     graft.store.IndexGenerations.vacuumOld(fs, path, genRoot,
       legacyDirs = Seq("buckets", "shingles", "_index_meta"))

@@ -901,21 +901,29 @@ object InfluxQL {
    *  matching the reference's default query horizon. */
   def dataPoints(sel: Select, resolve: Tier => DataFrame,
       tierByName: String => Option[Tier], now: Instant,
-      sliceResolve: Option[(Tier, String, Long, Long) => DataFrame] = None): DataFrame = {
+      sliceResolve: Option[(Tier, String, Long, Long) => DataFrame] = None): DataFrame =
+    planPinned(sel.req, sel.retentionPolicy, resolve, tierByName, now,
+      sliceResolve)(Planner.dataPoints(_, _, now, _))
+
+  /** The statement-level contract both SELECT forms share: close an
+   *  open-ended absolute range at `now`, and let an explicit retention
+   *  policy PIN the tier — the slice reader must then read that tier
+   *  too, whatever tier the planner's policy would have picked. */
+  private def planPinned(req0: DataPointsRequest, retentionPolicy: Option[String],
+      resolve: Tier => DataFrame, tierByName: String => Option[Tier], now: Instant,
+      sliceResolve: Option[(Tier, String, Long, Long) => DataFrame])(
+      plan: (DataPointsRequest, Tier => DataFrame,
+        Option[(Tier, String, Long, Long) => DataFrame]) => DataFrame): DataFrame = {
     val req =
-      if (sel.req.fromTime.nonEmpty && sel.req.toTime.isEmpty)
-        sel.req.copy(toTime = now.toString)
-      else sel.req
-    sel.retentionPolicy match {
+      if (req0.fromTime.nonEmpty && req0.toTime.isEmpty) req0.copy(toTime = now.toString)
+      else req0
+    retentionPolicy match {
       case Some(name) =>
         val t = tierByName(name).getOrElse(
           throw new IllegalArgumentException(s"unknown retention policy: $name"))
-        // the rp PINS the tier: the slice reader must read t, whatever
-        // tier the planner's policy would have picked
-        Planner.dataPoints(req, _ => resolve(t), now,
-          sliceResolve.map(f =>
-            (_: Tier, m: String, a: Long, b: Long) => f(t, m, a, b)))
-      case None => Planner.dataPoints(req, resolve, now, sliceResolve)
+        plan(req, _ => resolve(t), sliceResolve.map(f =>
+          (_: Tier, m: String, a: Long, b: Long) => f(t, m, a, b)))
+      case None => plan(req, resolve, sliceResolve)
     }
   }
 
@@ -1046,26 +1054,15 @@ object InfluxQL {
     }
   }
 
-  /** Plan a multi-item SELECT — the same rp-pins-the-tier contract as
-   *  the single-select overload, planned by [[Planner.dataPointsMulti]]
-   *  (one scan + one shuffle for the whole list). */
+  /** Plan a multi-item SELECT — the same statement contract as the
+   *  single-select overload ([[planPinned]]), planned by
+   *  [[Planner.dataPointsMulti]] (one scan + one shuffle for the whole
+   *  list). */
   def dataPoints(ms: MultiSelect, resolve: Tier => DataFrame,
       tierByName: String => Option[Tier], now: Instant,
-      sliceResolve: Option[(Tier, String, Long, Long) => DataFrame]): DataFrame = {
-    val req =
-      if (ms.req.fromTime.nonEmpty && ms.req.toTime.isEmpty)
-        ms.req.copy(toTime = now.toString)
-      else ms.req
-    ms.retentionPolicy match {
-      case Some(name) =>
-        val t = tierByName(name).getOrElse(
-          throw new IllegalArgumentException(s"unknown retention policy: $name"))
-        Planner.dataPointsMulti(ms.items, req, _ => resolve(t), now,
-          sliceResolve.map(f =>
-            (_: Tier, m: String, a: Long, b: Long) => f(t, m, a, b)))
-      case None => Planner.dataPointsMulti(ms.items, req, resolve, now, sliceResolve)
-    }
-  }
+      sliceResolve: Option[(Tier, String, Long, Long) => DataFrame]): DataFrame =
+    planPinned(ms.req, ms.retentionPolicy, resolve, tierByName, now,
+      sliceResolve)(Planner.dataPointsMulti(ms.items, _, _, now, _))
 
   /**
    * Plan a regex-measurement SELECT: match the pattern (unanchored, the

@@ -224,42 +224,6 @@ object Planner {
         pv + (nv - pv) * (col("time") - pt) / (nt - pt))
   }
 
-  private def interpolated: Column =
-    interpolatedAt(col("value"), col("_p"), col("_n"))
-
-  /** FILL(linear) with no group key: the same blocked prefix scan as
-   *  blockedDifference, run in both directions — a forward carry of the
-   *  last non-null (value, time) and a backward carry of the next one —
-   *  so no unpartitioned window appears in the plan. */
-  private def blockedLinear(joined: DataFrame, bucketSec: Long): DataFrame = {
-    val span = blockSpanSec(bucketSec)
-    val withBlk = joined.withColumn("_blk", floor(col("time") / span))
-    val mark = when(col("value").isNotNull, struct(col("value"), col("time")))
-    val wP = Window.partitionBy(col("_blk")).orderBy(col("time"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wN = Window.partitionBy(col("_blk")).orderBy(col("time"))
-      .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    val inBlk = withBlk
-      .withColumn("_pin", last(mark, ignoreNulls = true).over(wP))
-      .withColumn("_nin", first(mark, ignoreNulls = true).over(wN))
-    // cross-block carries over the tiny per-block summaries
-    val prev = blockCarry(
-      withBlk.groupBy(col("_blk"))
-        .agg(max_by(mark, when(col("value").isNotNull, col("time"))).as("_blast")),
-      updateOnNonNullOnly = true, "_pout")
-    val nxt = blockCarry(
-      withBlk.groupBy(col("_blk"))
-        .agg(min_by(mark, when(col("value").isNotNull, col("time"))).as("_blast")),
-      updateOnNonNullOnly = true, "_nout", ascending = false)
-    inBlk
-      .join(broadcast(prev), Seq("_blk"), "left")
-      .join(broadcast(nxt), Seq("_blk"), "left")
-      .withColumn("_p", coalesce(col("_pin"), col("_pout")))
-      .withColumn("_n", coalesce(col("_nin"), col("_nout")))
-      .withColumn("value", interpolated)
-      .drop("_blk", "_pin", "_nin", "_pout", "_nout", "_p", "_n")
-  }
-
   /** Blocked `value - lag(value) OVER (ORDER BY time)` with no group key. */
   private def blockedDifference(df: DataFrame, bucketSec: Long): DataFrame = {
     val span = blockSpanSec(bucketSec)
@@ -296,17 +260,13 @@ object Planner {
       .drop("_blk", "_lagm", "_prevm", "_m")
   }
 
-  /** Accumulating twin of `blockCarry`: for each block, the SUM of all
-   *  strictly-earlier blocks' `_blast` (0.0 for the first block; nulls
-   *  contribute nothing). Same repartition(1) streaming fold over the
-   *  rows/4096-sized summary — never the data stream. */
-  private def blockCarrySum(summary: DataFrame, outName: String): DataFrame =
-    blockCarrySums(summary, Seq("_blast" -> outName))
-
-  /** Multi-quantity twin: all of a transform step's carried sums ride ONE
-   *  repartition(1) fold and come back as ONE broadcast-join side, so a
-   *  step needing k boundary quantities pays one boundary shuffle, not k
-   *  (blockedMovingAverage formerly paid three). */
+  /** Accumulating twin of `blockCarry`: for each block and each
+   *  (in, out) pair, the SUM of all strictly-earlier blocks' `in` (0.0
+   *  for the first block; nulls contribute nothing). Same repartition(1)
+   *  streaming fold over the rows/4096-sized summary — never the data
+   *  stream. All of a transform step's carried sums ride ONE fold and
+   *  come back as ONE broadcast-join side, so a step needing k boundary
+   *  quantities pays one boundary shuffle, not k. */
   private def blockCarrySums(summary: DataFrame,
       colsOut: Seq[(String, String)]): DataFrame = {
     import org.apache.spark.sql.{Encoders, Row}
@@ -341,8 +301,8 @@ object Planner {
     val wIn = Window.partitionBy(col("_blk")).orderBy(col("time"))
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val inBlk = withBlk.withColumn("_ps", sum(col("value")).over(wIn))
-    val carry = blockCarrySum(
-      withBlk.groupBy(col("_blk")).agg(sum(col("value")).as("_blast")), "_acc")
+    val carry = blockCarrySums(
+      withBlk.groupBy(col("_blk")).agg(sum(col("value")).as("_s")), Seq("_s" -> "_acc"))
     inBlk.join(broadcast(carry), Seq("_blk"), "left")
       .withColumn("value",
         when(col("value").isNotNull, col("_ps") + coalesce(col("_acc"), lit(0.0))))
@@ -524,8 +484,7 @@ object Planner {
       .agg(count(lit(1)).as("_cnt"))
     val pick = max_by(col("value"), struct(col("_cnt"), negate(col("value")))).as("value")
     val outKeys = bucket.map(_ => col("time")).toSeq ++ keys.map(col)
-    if (outKeys.isEmpty) counted.agg(pick)
-    else counted.groupBy(outKeys: _*).agg(pick)
+    counted.groupBy(outKeys: _*).agg(pick)
   }
 
   /** InfluxQL INTEGRAL(unit): area under the curve by the trapezoid rule
@@ -569,8 +528,7 @@ object Planner {
    *  receive fabricated values nor dilute the n-point window. */
   private def transformWrap(fn: String, df: DataFrame, partCols: Seq[String],
       bucketSec: Long, mayHaveNulls: Boolean = true): DataFrame =
-    fn.split(",").map(_.trim).filter(_.nonEmpty)
-      .foldLeft(df)((d, f) =>
+    links(fn).foldLeft(df)((d, f) =>
         transformOne(f, d, partCols, bucketSec, mayHaveNulls))
 
   private def transformOne(fn: String, df: DataFrame, partCols: Seq[String],
@@ -643,11 +601,11 @@ object Planner {
   }
 
   /** Pointwise scalar math (the InfluxQL transform namespace) as a pure
-   *  column rewrite — shared by the single-select chain (which rewrites
-   *  the canonical `value` column) and the multi-select per-item chains
-   *  (which rewrite each item's own output column). ceil/floor keep the
-   *  double value-column type. None = not a scalar transform (the
-   *  sequential ones need row order, not just the cell). */
+   *  column rewrite — shared by [[transformWrap]] (which rewrites the
+   *  canonical `value` column) and the inline per-item chains of a
+   *  multi-item select (which rewrite each item's own output column).
+   *  ceil/floor keep the double value-column type. None = not a scalar
+   *  transform (the sequential ones need row order, not just the cell). */
   def scalarTransform(fn: String, c: Column): Option[Column] = fn match {
     case "abs" => Some(abs(c))
     case "ceil" => Some(ceil(c).cast("double"))
@@ -727,20 +685,10 @@ object Planner {
     c
   }
 
-  /**
-   * Plan a data-points request over the tier tables.
-   *
-   * @param resolve tier → its points DataFrame (columns: measurement,
-   *                time: timestamp, value: double, plus tag columns)
-   * @param now     query-time "now" for relative windows (injected for
-   *                determinism; the reference uses wall clock)
-   * @return columns: `time` (epoch seconds, when time-visible), `value`,
-   *         plus the group-by tag column when requested.
-   */
   /** The shared scan→filter frame every select shape starts from:
    *  tier-resolved, measurement/time/tag-filtered, partition-pruned —
-   *  WITHOUT a value-column binding (single-select binds its one field,
-   *  multi-select reads each item's field by name). `tierFn` is the
+   *  WITHOUT a value-column binding (each item reads its field by
+   *  name). `tierFn` is the
    *  data function offered to the tier policy (rollup tiers only serve
    *  `mean`). Returns (filtered frame, fromSec, toSec).
    *
@@ -884,98 +832,37 @@ object Planner {
     }
   }
 
-  /** `sliceResolve`, when given, replaces `resolve` with a reader that
-   *  receives (tier, measurement, fromSec, toSec) — the exact planned
-   *  range — so a STORE-backed resolver can prune its partition LISTING
-   *  to the touched window ([[graft.store.TierStore.readSlice]]); the
-   *  planner's own filters still apply on top, unchanged. */
+  /**
+   * Plan a single-field data-points request over the tier tables: the
+   * reference's defaults (influxdb_v1.go:102-114) — field `value`, `mean`
+   * when tag- or time-grouped — applied to ONE select item named
+   * `value`, planned by [[dataPointsMulti]].
+   *
+   * @param resolve tier → its points DataFrame (columns: measurement,
+   *                time: timestamp, value: double, plus tag columns)
+   * @param now     query-time "now" for relative windows (injected for
+   *                determinism; the reference uses wall clock)
+   * @param sliceResolve when given, replaces `resolve` with a reader that
+   *                receives (tier, measurement, fromSec, toSec) — the exact
+   *                planned range — so a STORE-backed resolver can prune its
+   *                partition LISTING to the touched window
+   *                ([[graft.store.TierStore.readSlice]]); the planner's own
+   *                filters still apply on top, unchanged.
+   * @return columns: `time` (epoch seconds, when time-visible), `value`,
+   *         plus the group-by tag columns when requested.
+   */
   def dataPoints(req: DataPointsRequest, resolve: Tier => DataFrame,
       now: Instant,
       sliceResolve: Option[(Tier, String, Long, Long) => DataFrame] = None): DataFrame = {
-    // defaults (influxdb_v1.go:102-114)
-    val groupByTime = if (req.groupByTime == "auto") "" else req.groupByTime
-    val fieldName = if (req.fieldName.isEmpty) "value" else req.fieldName
-    val dataFunction =
-      if ((req.groupByTag.nonEmpty || groupByTime.nonEmpty) && req.dataFunction.isEmpty) "mean"
-      else req.dataFunction
-    val fillType = if (req.fillType.isEmpty) "null" else req.fillType
-
-    val (scanned, fromSec, toSec) =
-      scanFrame(req, resolve, now, sliceResolve, dataFunction, groupByTime)
-    val filtered0 = scanned.withColumn("value", col(fieldName))
-
-    val bucketSec = TierPolicy.relativeToMinutes(groupByTime) * 60
-    // one tag through the reference API; the raw-passthrough multi-tag
-    // form `GROUP BY time(X), tag1, tag2` arrives comma-joined and every
-    // shape below is Seq-keyed already (groupBy/gap-fill/modifiers)
-    val tagKeys = req.groupByTagKeys
-    // absent tag ≡ '' holds for GROUPING too: a NULL tag groups (and
-    // echoes) under the empty value, one group with genuinely-empty
-    // tags — not a separate NULL group (same model as the predicate
-    // paths; applied after the scan filter so pushdown is unaffected)
-    val filtered = tagKeys.foldLeft(filtered0)((d, k) =>
-      d.withColumn(k, coalesce(col(k), lit(""))))
-
-    val shaped: DataFrame =
-      if (groupByTime.isEmpty && tagKeys.nonEmpty) {
-        // GROUP BY tag only: raw points echoed per tag (influxdb_v1.go:160-162)
-        filtered.select(unix_timestamp(col("time")).as("time") +:
-          col("value") +: tagKeys.map(col): _*)
-      } else if (groupByTime.nonEmpty) {
-        // GROUP BY time(X) [, tags] (influxdb_v1.go:163-171). The multi-row
-        // selectors (TOP/BOTTOM, DISTINCT) and multi-pass aggregates
-        // (MODE, INTEGRAL) route to their own plans; everything else is a
-        // single aggregate expression per bucket.
-        val bucketCol = floor(unix_timestamp(col("time")) / bucketSec) * bucketSec
-        val keyNames = tagKeys
-        dataFunction match {
-          case TopBottomFn(largest, n) =>
-            selectorExtremes(filtered, Some(bucketCol), keyNames, n, largest)
-          case "distinct" =>
-            // InfluxQL DISTINCT: the distinct values per bucket (multi-row;
-            // fill does not apply)
-            filtered.select(bucketCol.as("time") +: keyNames.map(col) :+ col("value"): _*)
-              .distinct()
-          case "mode" =>
-            gapFill(modeAgg(filtered, Some(bucketCol), keyNames),
-              keyNames, bucketSec, fromSec, toSec, fillType)
-          case IntegralFn(unitSec) =>
-            gapFill(integralAgg(filtered, Some(bucketCol), keyNames, unitSec, bucketSec),
-              keyNames, bucketSec, fromSec, toSec, fillType)
-          case _ =>
-            val agged = filtered
-              .groupBy(bucketCol.as("time") +: keyNames.map(col): _*)
-              .agg(aggColumn(dataFunction, col("value"), col("time")).as("value"))
-            gapFill(agged, keyNames, bucketSec, fromSec, toSec, fillType)
-        }
-      } else if (dataFunction.nonEmpty) {
-        // plain aggregate over the range (influxdb_v1.go:173-177)
-        dataFunction match {
-          case TopBottomFn(largest, n) =>
-            selectorExtremes(filtered, None, Nil, n, largest)
-          case "distinct" => filtered.select(col("value")).distinct()
-          case "mode" => modeAgg(filtered, None, Nil)
-          case IntegralFn(unitSec) =>
-            integralAgg(filtered, None, Nil, unitSec, bucketSec)
-          case _ =>
-            filtered.agg(aggColumn(dataFunction, col("value"), col("time")).as("value"))
-        }
-      } else {
-        // raw points (influxdb_v1.go:178-183)
-        filtered.select(unix_timestamp(col("time")).as("time"), col("value"))
-      }
-
-    // nulls reach the transforms ONLY from gap fill: FILL(null) and the
-    // edge rows of previous/linear. FILL(none) drops empty buckets and a
-    // numeric fill coalesces them, so bucketed shapes under those fills
-    // are provably null-free and the real-point split can be elided.
-    // (The raw and tag-echo shapes keep the split: a foreign table's
-    // value column may carry nulls of its own.)
-    val nullFree = groupByTime.nonEmpty &&
-      (fillType == "none" || fillType.toDoubleOption.isDefined)
-    val wrapped = transformWrap(req.transformFunction, shaped,
-      tagKeys, bucketSec, mayHaveNulls = !nullFree)
-    applySelectModifiers(wrapped, req, tagKeys)
+    val grouped = req.groupByTag.nonEmpty ||
+      (req.groupByTime.nonEmpty && req.groupByTime != "auto")
+    val item = SelectItem(
+      fieldName = if (req.fieldName.isEmpty) "value" else req.fieldName,
+      dataFunction =
+        if (grouped && req.dataFunction.isEmpty) "mean" else req.dataFunction,
+      transformFunction = req.transformFunction,
+      alias = "value")
+    dataPointsMulti(Seq(item), req, resolve, now, sliceResolve)
   }
 
   /** The InfluxDB output-column name of one select item: the `AS` alias
@@ -990,7 +877,7 @@ object Planner {
     val base = items.map { it =>
       if (it.alias.nonEmpty) it.alias
       else {
-        val chain = it.transformFunction.split(",").map(_.trim).filter(_.nonEmpty)
+        val chain = links(it.transformFunction)
         if (chain.nonEmpty) fnName(chain.last)
         else if (it.dataFunction.nonEmpty) fnName(it.dataFunction)
         else it.fieldName
@@ -1011,14 +898,12 @@ object Planner {
    *  default. ONE normalization shared by the planner and by consumers
    *  deriving the planned column names (INTO), so they cannot drift.
    *
-   *  TAG-ONLY grouping intentionally takes no default here, and the
-   *  result AGREES with the single-item path: the single path's default
-   *  does fire on `GROUP BY <tag>` alone (the dataFunction reaches tier
-   *  policy — rollup tiers serve mean), but its tag-only output shape is
-   *  the raw per-series echo regardless (influxdb_v1.go:160-162, the
-   *  branch ignores the function) — exactly what a bare multi list with
-   *  tag-only grouping produces. Both paths answer `GROUP BY tag` with
-   *  the echo; the mean default is a TIME-grouped behavior. */
+   *  TAG-ONLY grouping intentionally takes no default here: a bare list
+   *  grouped by tag alone is the raw per-series echo — the same echo a
+   *  one-item select grouped by tag alone answers whatever its function
+   *  (influxdb_v1.go:160-162, the branch ignores the function; the
+   *  single-field default still offers `mean` to the tier policy). The
+   *  mean default is a TIME-grouped behavior. */
   private def normalizedMultiItems(items: Seq[SelectItem],
       req: DataPointsRequest): Seq[SelectItem] = {
     val groupByTime = if (req.groupByTime == "auto") "" else req.groupByTime
@@ -1034,10 +919,10 @@ object Planner {
       req: DataPointsRequest): Seq[String] =
     itemAliases(normalizedMultiItems(items, req))
 
-  /** Aggregates the multi-select path cannot express at all: the
-   *  multi-row selectors (TOP/BOTTOM, DISTINCT) change the output
+  /** Aggregates a select of two or more items cannot express at all:
+   *  the multi-row selectors (TOP/BOTTOM, DISTINCT) change the output
    *  cardinality, so their rows cannot share a frame with one-row-per-
-   *  bucket columns. They remain available as single-item selects. */
+   *  bucket columns. They remain available as one-item selects. */
   private def multiPassFn(fn: String): Boolean = fn match {
     case TopBottomFn(_, _) => true
     case "distinct" => true
@@ -1063,46 +948,61 @@ object Planner {
   /** Is any link of this transform chain sequential (needs row order —
    *  lag/carry/window — rather than a pointwise cell rewrite)? */
   private def hasSequential(chain: String): Boolean =
-    chain.split(",").map(_.trim).filter(_.nonEmpty)
-      .exists(f => scalarTransform(f, lit(0)).isEmpty)
+    links(chain).exists(f => scalarTransform(f, lit(0)).isEmpty)
+
+  /** The links of a comma-chained transform, inner to outer. */
+  private def links(chain: String): Seq[String] =
+    chain.split(",").map(_.trim).filter(_.nonEmpty).toSeq
 
   /**
-   * Plan a multi-item SELECT — InfluxQL
+   * Plan a SELECT of one or more items — InfluxQL
    * `SELECT mean("v") AS a, max("w") AS b, ... FROM m` (the multi-series
-   * Grafana panel shape) — as ONE scan and ONE shuffle for the whole
-   * list: every aggregate is an expression in the same `groupBy` (each
-   * gets its own map-side partial), the gap-fill spine joins once
-   * against the multi-column frame, and per-item transform chains
-   * rewrite their own columns afterwards (scalar chains inline; a chain
-   * with sequential links runs through [[transformWrap]] on a projection
-   * of the already-aggregated, bucket-count-sized frame and joins back
-   * on the (time, tag) key — never a second scan of the data).
+   * Grafana panel shape), and every single-field request through
+   * [[dataPoints]] — as ONE scan and ONE shuffle for the whole list:
+   * every aggregate is an expression in the same `groupBy` (each gets
+   * its own map-side partial), the gap-fill spine joins once against the
+   * multi-column frame, and per-item transform chains rewrite their own
+   * columns afterwards (scalar chains inline; a chain with sequential
+   * links runs through [[transformWrap]] on a projection of the
+   * already-aggregated, bucket-count-sized frame and joins back on the
+   * (time, tag) key — never a second scan of the data).
    *
    * InfluxDB's mixing rule applies: items are either ALL aggregated or
    * ALL bare field projections ("mixing aggregate and non-aggregate
-   * queries is not supported"). Shapes, mirroring [[dataPoints]]:
+   * queries is not supported"). Shapes:
    *  - GROUP BY time(X) [, tag] → one row per bucket (per tag), a value
    *    column per item, gap-filled (FILL null/none/<number>/previous/
-   *    linear — linear interpolates each value column independently,
-   *    tagged and untagged, via [[gapFillMulti]]);
+   *    linear — each value column independently, tagged and untagged,
+   *    via [[gapFillMulti]]);
    *  - no grouping, aggregated → one row (whole-range aggregates);
+   *  - GROUP BY tag, aggregated → one row per tag value;
    *  - GROUP BY tag, bare items → the raw per-tag echo;
    *  - no grouping, bare items → raw points, one column per field.
    *
+   * A ONE-item select keeps the single-field shapes the list form
+   * refuses or plans differently: GROUP BY tag alone echoes raw points
+   * even with a function (influxdb_v1.go:160-162); TOP/BOTTOM and
+   * DISTINCT emit their own rows, and MODE/INTEGRAL over the whole range
+   * their own one-row plans; and the item's transform chain — sequential
+   * links on raw points included — runs through [[transformWrap]] over
+   * the whole shaped frame, with no join-back.
+   *
    * `req.fieldName/dataFunction/transformFunction` are ignored — the
-   * items carry them. Output columns: `time` (when time-visible), then
-   * one column per item in list order ([[itemAliases]] naming), then the
-   * group-by tag. The SELECT modifiers apply unchanged (they act on the
-   * time/tag axes only).
+   * items carry them. A list's output columns: `time` (when
+   * time-visible), then one column per item in list order
+   * ([[itemAliases]] naming), then the group-by tags; one item keeps its
+   * shape's own column order. The SELECT modifiers apply unchanged (they
+   * act on the time/tag axes only).
    */
   def dataPointsMulti(items: Seq[SelectItem], req: DataPointsRequest,
       resolve: Tier => DataFrame, now: Instant,
       sliceResolve: Option[(Tier, String, Long, Long) => DataFrame] = None): DataFrame = {
-    require(items.size >= 2, "a multi-select needs at least two items")
+    require(items.nonEmpty, "a select needs at least one item")
     val groupByTime = if (req.groupByTime == "auto") "" else req.groupByTime
     val fillType = if (req.fillType.isEmpty) "null" else req.fillType
     val its = normalizedMultiItems(items, req)
-    its.foreach { it =>
+    val one = its.size == 1
+    if (!one) its.foreach { it =>
       if (multiPassFn(it.dataFunction)) throw new IllegalArgumentException(
         s"${it.dataFunction} is not supported in a multi-field SELECT " +
           "(multi-row selector changes the output cardinality); select it " +
@@ -1138,39 +1038,67 @@ object Planner {
     val tierFn = if (its.forall(_.dataFunction == "mean")) "mean" else ""
     val (filtered0, fromSec, toSec) =
       scanFrame(req, resolve, now, sliceResolve, tierFn, groupByTime)
-    // absent tag ≡ '' for grouping/echo — same normalization as the
-    // single-item plan (see dataPoints)
+    // absent tag ≡ '' holds for GROUPING too: a NULL tag groups (and
+    // echoes) under the empty value, one group with genuinely-empty
+    // tags — not a separate NULL group (same model as the predicate
+    // paths; applied after the scan filter so pushdown is unaffected)
     val filtered = keyNames.foldLeft(filtered0)((d, k) =>
       d.withColumn(k, coalesce(col(k), lit(""))))
     val bucketSec = TierPolicy.relativeToMinutes(groupByTime) * 60
+    val bucket =
+      if (groupByTime.isEmpty) None
+      else Some(floor(unix_timestamp(col("time")) / bucketSec) * bucketSec)
+    val tagEcho = groupByTime.isEmpty && keyNames.nonEmpty && (one || !aggregated)
+
+    // the one-item shapes with their own plans (see above); each binds
+    // the item's field as `value`
+    val ownPlan: Option[DataFrame] =
+      if (!one || tagEcho) None
+      else {
+        val f = filtered.withColumn("value", col(its.head.fieldName))
+        (its.head.dataFunction match {
+          case TopBottomFn(largest, n) =>
+            Some(selectorExtremes(f, bucket, keyNames, n, largest))
+          case "distinct" =>
+            // InfluxQL DISTINCT: the distinct values per bucket (multi-row;
+            // fill does not apply)
+            Some(f.select(bucket.map(_.as("time")).toSeq ++ keyNames.map(col) :+
+              col("value"): _*).distinct())
+          case "mode" if bucket.isEmpty => Some(modeAgg(f, None, Nil))
+          case IntegralFn(unitSec) if bucket.isEmpty =>
+            Some(integralAgg(f, None, Nil, unitSec, bucketSec))
+          case _ => None
+        }).map(_.withColumnRenamed("value", aliases.head))
+      }
 
     def aggExprs(pairs: Seq[(SelectItem, String)]): Seq[Column] =
       pairs.map { case (it, a) =>
         aggColumn(it.dataFunction, col(it.fieldName), col("time")).as(a)
       }
-    val shaped: DataFrame =
-      if (!aggregated) {
+    val shaped: DataFrame = ownPlan.getOrElse {
+      if (!aggregated || tagEcho) {
         if (groupByTime.nonEmpty) throw new IllegalArgumentException(
           "GROUP BY time(...) over bare (non-aggregated) select items " +
             "needs an aggregate per item")
-        // raw multi-field echo (scalar chains rewrite inline; the
-        // sequential-needs-aggregate rule above already refused the rest)
+        // raw echo (influxdb_v1.go:160-162, 178-183); a list's scalar
+        // chains rewrite inline (the sequential-needs-aggregate rule above
+        // already refused the rest), one item's chain runs below
         val cols = its.zip(aliases).map { case (it, a) =>
-          it.transformFunction.split(",").map(_.trim).filter(_.nonEmpty)
-            .foldLeft(col(it.fieldName))((c, f) => scalarTransform(f, c).get)
+          val chain = if (one) Nil else links(it.transformFunction)
+          chain.foldLeft(col(it.fieldName))((c, f) => scalarTransform(f, c).get)
             .as(a)
         }
         filtered.select(
           unix_timestamp(col("time")).as("time") +: cols ++: keyNames.map(col): _*)
-      } else if (groupByTime.nonEmpty) {
-        val bucketCol = floor(unix_timestamp(col("time")) / bucketSec) * bucketSec
+      } else if (bucket.nonEmpty) {
+        val bucketCol = bucket.get
         // every simple aggregate is one expression in ONE shared groupBy;
         // each heavy item (mode/integral) aggregates its own subtree over
         // the same pruned window (an extra pass of the pushed-down
         // columnar scan per heavy item — see heavyAggFn) and
         // full-outer-joins back on the bucket key (all joined sides are
         // bucket-count-sized, and a bucket empty for one column but not
-        // another keeps its row with a null cell)
+        // another keeps its row with a null cell). One item joins nothing.
         val (heavyPairs, simplePairs) =
           its.zip(aliases).partition(p => heavyAggFn(p._1.dataFunction))
         val simpleFrame =
@@ -1183,9 +1111,9 @@ object Planner {
         val heavyFrames = heavyPairs.map { case (it, a) =>
           val f2 = filtered.withColumn("value", col(it.fieldName))
           val d = it.dataFunction match {
-            case "mode" => modeAgg(f2, Some(bucketCol), keyNames)
+            case "mode" => modeAgg(f2, bucket, keyNames)
             case IntegralFn(unitSec) =>
-              integralAgg(f2, Some(bucketCol), keyNames, unitSec, bucketSec)
+              integralAgg(f2, bucket, keyNames, unitSec, bucketSec)
             case other => throw new IllegalArgumentException(
               s"unsupported data_function: $other")
           }
@@ -1193,54 +1121,74 @@ object Planner {
         }
         // null-SAFE key equality: a USING full_outer never matches a null
         // tag value to itself, which would split the null-tag series into
-        // one row per joined frame — the single-item plans (one groupBy,
-        // no join) keep null groups whole, and the multi plan must agree
+        // one row per joined frame — one groupBy keeps null groups whole,
+        // and the joined form must agree
         val agged = (simpleFrame ++ heavyFrames)
           .reduce(joinKeysNullSafe(_, _, "time" +: keyNames, "full_outer"))
         gapFillMulti(agged, keyNames, aliases, bucketSec, fromSec, toSec, fillType)
-      } else if (keyNames.nonEmpty) {
-        // aggregated, tag-only: one row per tag value (no time axis)
+      } else {
+        // plain aggregate over the range (influxdb_v1.go:173-177) — one
+        // row, or one row per tag value when a list is grouped by tag only
         val es = aggExprs(its.zip(aliases))
         filtered.groupBy(keyNames.map(col): _*).agg(es.head, es.tail: _*)
-      } else {
-        val es = aggExprs(its.zip(aliases))
-        filtered.agg(es.head, es.tail: _*)
-      }
-
-    // per-item transform chains over the shaped frame
-    val nullFree = groupByTime.nonEmpty &&
-      (fillType == "none" || fillType.toDoubleOption.isDefined)
-    val transformed = its.zip(aliases).foldLeft(shaped) { case (acc, (it, a)) =>
-      val chain = it.transformFunction
-      if (chain.isEmpty || !aggregated) acc
-      else if (!hasSequential(chain))
-        chain.split(",").map(_.trim).filter(_.nonEmpty)
-          .foldLeft(acc)((d, f) => d.withColumn(a, scalarTransform(f, col(a)).get))
-      else {
-        // one item's chain over its own column: project (time, tag, value),
-        // reuse the full single-select transform machinery (blocked scans
-        // included), join the rewritten column back on the unique row key.
-        // Both sides are the bucket-count-sized aggregated frame.
-        val one = acc.select(("time" +: keyNames).map(col) :+ col(a).as("value"): _*)
-        val t = transformWrap(chain, one, keyNames, bucketSec,
-          mayHaveNulls = !nullFree)
-        joinKeysNullSafe(acc.drop(a), t.withColumnRenamed("value", a),
-          "time" +: keyNames, "left")
       }
     }
-    val outCols =
-      (if (transformed.columns.contains("time")) Seq("time") else Nil) ++
-        aliases ++ keyNames
-    applySelectModifiers(transformed.select(outCols.map(col): _*), req, keyNames)
+
+    // nulls reach the transforms ONLY from gap fill: FILL(null) and the
+    // edge rows of previous/linear. FILL(none) drops empty buckets and a
+    // numeric fill coalesces them, so bucketed shapes under those fills
+    // are provably null-free and the real-point split can be elided.
+    // (The raw and tag-echo shapes keep the split: a foreign table's
+    // value column may carry nulls of its own.)
+    val nullFree = groupByTime.nonEmpty &&
+      (fillType == "none" || fillType.toDoubleOption.isDefined)
+    val transformed =
+      if (one) {
+        val a = aliases.head
+        transformWrap(its.head.transformFunction, shaped.withColumnRenamed(a, "value"),
+          keyNames, bucketSec, mayHaveNulls = !nullFree)
+          .withColumnRenamed("value", a)
+      } else its.zip(aliases).foldLeft(shaped) { case (acc, (it, a)) =>
+        val chain = it.transformFunction
+        if (chain.isEmpty || !aggregated) acc
+        else if (!hasSequential(chain))
+          links(chain).foldLeft(acc)((d, f) => d.withColumn(a, scalarTransform(f, col(a)).get))
+        else {
+          // one item's chain over its own column: project (time, tag,
+          // value), reuse the full transform machinery (blocked scans
+          // included), join the rewritten column back on the unique row
+          // key. Both sides are the bucket-count-sized aggregated frame.
+          val proj = acc.select(("time" +: keyNames).map(col) :+ col(a).as("value"): _*)
+          val t = transformWrap(chain, proj, keyNames, bucketSec,
+            mayHaveNulls = !nullFree)
+          joinKeysNullSafe(acc.drop(a), t.withColumnRenamed("value", a),
+            "time" +: keyNames, "left")
+        }
+      }
+    // a list's columns: time, the items in list order, the tags. One
+    // item keeps its shape's own column order, as single-field results
+    // always have: the wire renders a raw query's tags as plain columns
+    // in frame order (tags before the value when bucketed, after it when
+    // echoed)
+    val out =
+      if (one) transformed
+      else transformed.select(((if (transformed.columns.contains("time")) Seq("time")
+        else Nil) ++ aliases ++ keyNames).map(col): _*)
+    applySelectModifiers(out, req, keyNames)
   }
 
-  /** Gap fill for the multi-column aggregated frame: the spine join is
-   *  [[gapFill]]'s (exploded per distinct group key, never a crossJoin);
-   *  the fill applies per value column — null/number/previous as column
-   *  rewrites over one spine pass, linear through the single-column
-   *  interpolation machinery joined back per column on the unique
-   *  (time, tag) row key (spine-sized frames on every side). */
-  private def gapFillMulti(agged: DataFrame, tagCols: Seq[String],
+  /**
+   * Gap fill over epoch-aligned buckets (InfluxQL FILL; influxdb_v1.go
+   * query templates; SURVEY.md A8) for an aggregated frame of one or
+   * more value columns. The spine is exploded per distinct group key —
+   * never a crossJoin; the expensive (fact) side is already aggregated
+   * down to one row per (bucket, key) before the join. The fill applies
+   * per value column: null/number as column rewrites, previous/linear
+   * as window carries that share one window pass across columns (keyed
+   * by tag, or — untagged — the blocked prefix scan with broadcast
+   * block-count-sized carries; never an unpartitioned window).
+   */
+  private[graft] def gapFillMulti(agged: DataFrame, tagCols: Seq[String],
       valueCols: Seq[String], bucketSec: Long, fromSec: Long, toSec: Long,
       fillType: String): DataFrame = {
     if (fillType == "none")
@@ -1253,15 +1201,20 @@ object Planner {
         agged.select(tagCols.map(col): _*).distinct().select(col("*"), spineCol)
       else
         agged.sparkSession.range(1).select(spineCol)
-    // null-safe like gapFill's: a null tag value is a series of its own
+    // null-safe: a null TAG VALUE is a series of its own (the distinct
+    // spine carries its row), and a plain USING join would never match
+    // it back to its aggregates
     val joined = joinKeysNullSafe(spine, agged, tagCols :+ "time", "left")
+    // linear's bracket marks: (value, time) of a non-null cell
+    def mark(c: String) = when(col(c).isNotNull,
+      struct(col(c).as("value"), col("time").as("time")))
     fillType match {
       case "null" => joined
       case "previous" if tagCols.isEmpty =>
-        // untagged carry-forward per column: ONE in-block window pass
-        // fills every column, then each column joins its own
-        // block-count-sized carry (broadcast) — the blocked idiom of
-        // [[gapFill]], widened to k columns with a single data pass
+        // untagged carry-forward: the blocked two-pass prefix scan (see
+        // blockedDifference) — ONE in-block window pass fills every
+        // column, then each column joins the last non-null value of every
+        // STRICTLY EARLIER block (a block-count-sized carry, broadcast)
         val span = blockSpanSec(bucketSec)
         val withBlk = joined.withColumn("_blk", floor(col("time") / span))
         val wIn = Window.partitionBy(col("_blk")).orderBy(col("time"))
@@ -1294,8 +1247,6 @@ object Planner {
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         val wN = Window.partitionBy(tagCols.map(col): _*).orderBy(col("time"))
           .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-        def mark(c: String) = when(col(c).isNotNull,
-          struct(col(c).as("value"), col("time").as("time")))
         val carried = valueCols.foldLeft(joined)((d, c) => d
           .withColumn(s"_p_$c", last(mark(c), ignoreNulls = true).over(wP))
           .withColumn(s"_n_$c", first(mark(c), ignoreNulls = true).over(wN)))
@@ -1303,18 +1254,17 @@ object Planner {
           .withColumn(c, interpolatedAt(col(c), col(s"_p_$c"), col(s"_n_$c")))
           .drop(s"_p_$c", s"_n_$c"))
       case "linear" =>
-        // untagged: the blocked two-pass prefix scan of [[blockedLinear]]
-        // widened to k columns — ONE in-block window pass carries every
-        // column's brackets, then each column joins its two
-        // block-count-sized carry frames (broadcast)
+        // untagged: the blocked two-pass prefix scan run in both
+        // directions — ONE in-block window pass carries every column's
+        // brackets, then each column joins a forward carry of the last
+        // non-null (value, time) and a backward carry of the next one
+        // (block-count-sized, broadcast)
         val span = blockSpanSec(bucketSec)
         val withBlk = joined.withColumn("_blk", floor(col("time") / span))
         val wP = Window.partitionBy(col("_blk")).orderBy(col("time"))
           .rowsBetween(Window.unboundedPreceding, Window.currentRow)
         val wN = Window.partitionBy(col("_blk")).orderBy(col("time"))
           .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-        def mark(c: String) = when(col(c).isNotNull,
-          struct(col(c).as("value"), col("time").as("time")))
         val inBlk = valueCols.foldLeft(withBlk)((d, c) => d
           .withColumn(s"_pin_$c", last(mark(c), ignoreNulls = true).over(wP))
           .withColumn(s"_nin_$c", first(mark(c), ignoreNulls = true).over(wN)))
@@ -1335,7 +1285,7 @@ object Planner {
             .drop(s"_pin_$c", s"_nin_$c", s"_pout_$c", s"_nout_$c")
         }.drop("_blk")
       case other => throw new IllegalArgumentException(
-        s"unsupported fill type with a multi-field SELECT: $other")
+        s"unsupported fill type: $other")
     }
   }
 
@@ -1399,78 +1349,6 @@ object Planner {
         .filter(col("_rn") > req.offset)
         .drop("_rn")
     }
-  }
-
-  /**
-   * Gap fill over epoch-aligned buckets (InfluxQL FILL; influxdb_v1.go
-   * query templates; SURVEY.md A8). The spine is exploded per distinct
-   * group key — the expensive (fact) side is already aggregated down to
-   * one row per (bucket, key) before the join.
-   */
-  def gapFill(agged: DataFrame, tagCols: Seq[String], bucketSec: Long,
-      fromSec: Long, toSec: Long, fillType: String): DataFrame = {
-    if (fillType == "none") return agged.orderBy((tagCols :+ "time").map(col): _*)
-    val lo = Math.floorDiv(fromSec, bucketSec) * bucketSec
-    val hi = Math.floorDiv(toSec, bucketSec) * bucketSec
-    val spineCol = explode(sequence(lit(lo), lit(hi), lit(bucketSec))).as("time")
-    val spine =
-      if (tagCols.nonEmpty)
-        agged.select(tagCols.map(col): _*).distinct().select(col("*"), spineCol)
-      else
-        agged.sparkSession.range(1).select(spineCol)
-    // null-safe: a null TAG VALUE is a series of its own (the distinct
-    // spine carries its row), and a plain USING join would never match
-    // it back to its aggregates
-    val joined = joinKeysNullSafe(spine, agged, tagCols :+ "time", "left")
-    val filled = fillType match {
-      case "null" => joined
-      case "previous" if tagCols.isEmpty =>
-        // untagged carry-forward: blocked two-pass prefix scan (see
-        // blockedDifference) instead of a single global window
-        val span = blockSpanSec(bucketSec)
-        val withBlk = joined.withColumn("_blk", floor(col("time") / span))
-        val wIn = Window.partitionBy(col("_blk")).orderBy(col("time"))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        val inBlk = withBlk.withColumn("_fill",
-          last(col("value"), ignoreNulls = true).over(wIn))
-        // last non-null value of every STRICTLY EARLIER block (tiny table)
-        val prev = blockCarry(
-          withBlk.groupBy(col("_blk"))
-            .agg(max_by(col("value"), when(col("value").isNotNull, col("time"))).as("_blast")),
-          updateOnNonNullOnly = true, "_prev_fill")
-        inBlk.join(broadcast(prev), Seq("_blk"), "left")
-          .withColumn("value", coalesce(col("_fill"), col("_prev_fill")))
-          .drop("_blk", "_fill", "_prev_fill")
-      case "previous" =>
-        val w = Window.partitionBy(tagCols.map(col): _*).orderBy(col("time"))
-          .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        joined.withColumn("value", last(col("value"), ignoreNulls = true).over(w))
-      case "linear" if tagCols.isEmpty => blockedLinear(joined, bucketSec)
-      case "linear" => keyedLinear(joined, tagCols)
-      case lit_ =>
-        val v = try lit_.toDouble catch {
-          case _: NumberFormatException =>
-            throw new IllegalArgumentException(s"unsupported fill type: $lit_")
-        }
-        joined.withColumn("value", coalesce(col("value"), lit(v)))
-    }
-    filled.select((tagCols :+ "time" :+ "value").map(col): _*)
-  }
-
-  /** InfluxQL FILL(linear), tag-keyed: interpolate between the
-   *  neighboring non-null points per series; rows before the first /
-   *  after the last stay null. */
-  private def keyedLinear(joined: DataFrame, tagCols: Seq[String]): DataFrame = {
-    val wP = Window.partitionBy(tagCols.map(col): _*).orderBy(col("time"))
-      .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val wN = Window.partitionBy(tagCols.map(col): _*).orderBy(col("time"))
-      .rowsBetween(Window.currentRow, Window.unboundedFollowing)
-    val mark = when(col("value").isNotNull, struct(col("value"), col("time")))
-    joined
-      .withColumn("_p", last(mark, ignoreNulls = true).over(wP))
-      .withColumn("_n", first(mark, ignoreNulls = true).over(wN))
-      .withColumn("value", interpolated)
-      .drop("_p", "_n")
   }
 
   /** Join on `keys` with NULL-SAFE equality (`<=>`), keys coalesced back

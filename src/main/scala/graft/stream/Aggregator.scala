@@ -160,22 +160,7 @@ object Aggregator {
    * per series — process.go:158-162; the previous implementation read it
    * from the last row, equivalent for constant dev_type).
    */
-  def difference(points: DataFrame, samplingMinutes: Int = 10,
-      hourlyAsPlan: Boolean = false): DataFrame = {
-    if (!hourlyAsPlan) foldDifference(points, samplingMinutes)
-    else {
-      // Skew knob: hourly-profile series (the reference's main electricity
-      // meters — its one known hot key) have stateless suppression, so
-      // they can run through the fully parallel time-block-salted plan;
-      // everything else keeps the sequential fold.
-      val devType = coalesce(col("dev_type"), lit(""))
-      hourlyDifferencePlan(points.filter(devType === HourlyProfileDevType), samplingMinutes)
-        .unionByName(foldDifference(
-          points.filter(devType =!= HourlyProfileDevType), samplingMinutes))
-    }
-  }
-
-  private def foldDifference(points: DataFrame, samplingMinutes: Int): DataFrame = {
+  def difference(points: DataFrame, samplingMinutes: Int = 10): DataFrame = {
     val spark = points.sparkSession
     import spark.implicits._
     val sampleSec = samplingMinutes * 60L
@@ -189,62 +174,6 @@ object Aggregator {
       .sortWithinPartitions(col("series_id"), col("time"))
       .mapPartitions(it => foldSortedPartition(it, sampleSec))
       .toDF()
-  }
-
-  /**
-   * The hourly-profile difference branch as a declarative, skew-resilient
-   * plan. The fold's only cross-window state on this branch is the seed
-   * carry and the staleness wipe (suppression is result ≠ 0 — stateless),
-   * which reduces to per-pair semantics: each consecutive pair (p, c) of
-   * a series contributes max(c − p, 0) to c's sampling bucket unless the
-   * bucket start is more than 120 min past p (the boundary flush that
-   * empties the buffer). That makes the whole computation a window-lag +
-   * hash aggregation — and the series_id shuffle can be SALTED BY TIME
-   * BLOCK: the lag runs per (series, 4096-bucket block) in parallel, and
-   * only a tiny per-block summary (one row per non-empty block) crosses
-   * blocks through a per-series window, so one chatty meter spreads over
-   * many partitions instead of funnelling into one. Equality with the
-   * fold is spec-asserted (AggregatorSpec) and oracle-verified (a3).
-   */
-  def hourlyDifferencePlan(points: DataFrame, samplingMinutes: Int = 10,
-      blockFactor: Int = 4096): DataFrame = {
-    val sec = samplingMinutes * 60L
-    val span = sec * blockFactor
-    val base = points.filter(col("agg_func") === "difference")
-      .select(col("series_id"), col("measurement"),
-        unix_timestamp(col("time")).as("tsec"),
-        col("value").cast("double").as("value"))
-      .withColumn("_blk", floor(col("tsec") / span))
-    val wIn = Window.partitionBy(col("series_id"), col("_blk")).orderBy(col("tsec"))
-    val inBlk = base
-      .withColumn("_pv", lag(col("value"), 1).over(wIn))
-      .withColumn("_pt", lag(col("tsec"), 1).over(wIn))
-    // last (value, time) of each non-empty block, shifted one block down —
-    // one row per (series, block): tiny, and partitioned by series
-    val wS = Window.partitionBy(col("series_id")).orderBy(col("_blk"))
-    val prev = base.groupBy(col("series_id"), col("_blk"))
-      .agg(max_by(col("value"), col("tsec")).as("_lv"), max(col("tsec")).as("_lt"))
-      .select(col("series_id"), col("_blk"),
-        lag(col("_lv"), 1).over(wS).as("_prev_v"),
-        lag(col("_lt"), 1).over(wS).as("_prev_t"))
-    val res = inBlk.join(prev, Seq("series_id", "_blk"), "left")
-      .withColumn("_ppv", coalesce(col("_pv"), col("_prev_v")))
-      .withColumn("_ppt", coalesce(col("_pt"), col("_prev_t")))
-      .withColumn("_bkt", floor(col("tsec") / sec) * sec)
-      .withColumn("_c",
-        when(col("_ppt").isNull, 0.0)
-          .when(col("_bkt") - col("_ppt") > StaleCutoffMinutes * 60, 0.0)
-          .when(col("value") >= col("_ppv"), col("value") - col("_ppv"))
-          .otherwise(0.0))
-      .groupBy(col("series_id"), col("measurement"), col("_bkt"))
-      .agg(sum(col("_c")).as("value"))
-      .filter(col("value") =!= 0.0 && col("value") <= MaxHourlyEnergy)
-    // emit at adjustTimeByOneHour(bucket + sec) — previous hour at :59.
-    // NOTE Java remainder (Column %), not pmod: adjustTimeByOneHour uses
-    // `t % 3600` with dividend sign, which differs for pre-epoch times.
-    val x = col("_bkt") + sec - 3600
-    res.select(col("series_id"), col("measurement"),
-      timestamp_seconds(x - (x % 3600) + 3540).as("time"), col("value"))
   }
 
   /** Fold a (series_id, time)-sorted partition iterator, streaming one

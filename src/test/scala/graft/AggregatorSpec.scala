@@ -151,48 +151,13 @@ class AggregatorSpec extends SparkSpec {
     checkProp(Prop.forAll(gen) { case (from, to, bucket) =>
       val empty = spark.range(0).select(col("id").as("time"),
         col("id").cast("double").as("value"))
-      val filled = graft.query.Planner.gapFill(empty, Nil, bucket, from, to, "null")
+      val filled = graft.query.Planner.gapFillMulti(empty, Nil, Seq("value"), bucket,
+        from, to, "null")
       val times = filled.collect().map(_.getAs[Long]("time"))
       val lo = Math.floorDiv(from, bucket) * bucket
       val hi = Math.floorDiv(to, bucket) * bucket
       times.toSeq == (lo to hi by bucket).toSeq
     }, minTests = 20)
-  }
-
-  test("hourly difference plan (salted) ≡ sequential fold, incl. block edges") {
-    // meter.main_elec data with resets, a stale gap, and a tiny block
-    // factor (2 → 1200 s blocks) so pairs cross block boundaries
-    val rng = new scala.util.Random(7)
-    val rows = for {
-      s <- Seq("h1", "h2")
-      i <- 0 until 60
-    } yield {
-      // irregular spacing incl. one >2h gap per series; growing w/ resets
-      val sec = i * 400L + (if (i > 40) 9000L else 0L) + rng.nextInt(60)
-      val v = (i % 17) * 2.5
-      Row(s, "m", "difference", new Timestamp(sec * 1000), v, "meter.main_elec")
-    }
-    val df = spark.createDataFrame(spark.sparkContext.parallelize(rows), ptsSchema)
-    def norm(out: Array[Row]) = out.map(r => (r.getAs[String]("series_id"),
-      r.getAs[Timestamp]("time").getTime / 1000,
-      math.rint(r.getAs[Double]("value") * 1e6) / 1e6)).toSet
-    val fold = norm(Aggregator.difference(df, 10).collect())
-    val plan = norm(Aggregator.hourlyDifferencePlan(df, 10, blockFactor = 2).collect())
-    assert(plan == fold, s"plan=$plan\nfold=$fold")
-    // and the dispatch knob routes hourly series through the plan
-    val knob = norm(Aggregator.difference(df, 10, hourlyAsPlan = true).collect())
-    assert(knob == fold)
-  }
-
-  test("hourly plan knob keeps sensor series on the fold path") {
-    val df = mkPoints(
-      ("s1", "difference", 0, 10.0), ("s1", "difference", 100, 12.0),
-      ("s1", "difference", 200, 10.0), ("s1", "difference", 300, 20.0),
-      ("s1", "difference", 400, 30.0), ("s1", "difference", 700, 35.0))
-    def norm(out: Array[Row]) = out.map(r =>
-      (r.getAs[Timestamp]("time").getTime / 1000, r.getAs[Double]("value"))).toSet
-    assert(norm(Aggregator.difference(df, 10, hourlyAsPlan = true).collect()) ==
-      norm(Aggregator.difference(df, 10).collect()))
   }
 
   test("windowed difference (query-side A2) sums positive deltas per bucket") {

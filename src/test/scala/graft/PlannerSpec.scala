@@ -134,6 +134,16 @@ class PlannerSpec extends SparkSpec {
     assert(out.count() == 2)
   }
 
+  test("single-field results keep their column order per shape (a raw query's wire columns)") {
+    val base = pts(("m", now.getEpochSecond - 100, 5.0, "d1"))
+    def cols(groupByTime: String, fill: String) =
+      plan(DataPointsRequest("m", relativeTime = "3h", groupByTime = groupByTime,
+        groupByTag = "dev_id", fillType = fill), base).columns.toSeq
+    assert(cols("1h", "null") == Seq("dev_id", "time", "value"))
+    assert(cols("1h", "none") == Seq("time", "dev_id", "value"))
+    assert(cols("", "") == Seq("time", "value", "dev_id"))
+  }
+
   test("tag/device filters (F5) and aggregate-only shape") {
     val base = pts(
       ("m", now.getEpochSecond - 100, 5.0, "d1"),
@@ -250,6 +260,44 @@ class PlannerSpec extends SparkSpec {
     val edges = plan(DataPointsRequest("m", relativeTime = "3h", groupByTime = "1h",
       fillType = "linear"), mid).collect().sortBy(_.getAs[Long]("time"))
     assert(edges.count(r => r.isNullAt(r.fieldIndex("value"))) == 3) // only its own bucket non-null
+  }
+
+  test("one-item select plan-shape budget: Join and Exchange counts per fill × grouping × function") {
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    import org.apache.spark.sql.execution.exchange.Exchange
+    val base = pts(
+      ("m", now.getEpochSecond - 3 * 3600 + 10, 10.0, "d1"),
+      ("m", now.getEpochSecond - 3600, 16.0, "d2"),
+      ("m", now.getEpochSecond - 60, 22.0, "d1"))
+    // (Join in the optimized logical plan, Exchange in the physical
+    // plan with AQE off — under AQE the exchanges hide in the adaptive
+    // root), recorded at commit 7995edd32, where single-field selects
+    // still had their own planner and fill functions
+    //                    untagged: mean  mode    integral  tagged: mean  mode    integral
+    val recorded = Map(
+      "null" ->     Seq((1, 3), (1, 4), (1, 3), (1, 4), (1, 5), (1, 4)),
+      "none" ->     Seq((0, 2), (0, 3), (0, 2), (0, 2), (0, 3), (0, 2)),
+      "previous" -> Seq((3, 7), (3, 8), (3, 7), (1, 5), (1, 6), (1, 5)),
+      "0" ->        Seq((1, 3), (1, 4), (1, 3), (1, 4), (1, 5), (1, 4)),
+      "linear" ->   Seq((5, 10), (5, 11), (5, 10), (1, 5), (1, 6), (1, 5)))
+    val shapes = for (tagged <- Seq(false, true); fn <- Seq("mean", "mode", "integral"))
+      yield (tagged, fn)
+    val budget = recorded.flatMap { case (fill, counts) =>
+      shapes.zip(counts).map { case ((tagged, fn), c) => (fill, tagged, fn) -> c }
+    }
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled", "true")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    val got = try {
+      for (fill <- recorded.keys.toSeq; (tagged, fn) <- shapes) yield {
+        val qe = plan(DataPointsRequest("m", relativeTime = "3h", groupByTime = "1h",
+          dataFunction = fn, fillType = fill,
+          groupByTag = if (tagged) "dev_id" else ""), base).queryExecution
+        (fill, tagged, fn) -> (
+          qe.optimizedPlan.collect { case j: Join => j }.size,
+          qe.executedPlan.collect { case e: Exchange => e }.size)
+      }
+    } finally spark.conf.set("spark.sql.adaptive.enabled", aqe)
+    assert(got.toMap == budget, got.mkString("\n"))
   }
 
   test("asof join: latest right row at-or-before each left row, per key") {
