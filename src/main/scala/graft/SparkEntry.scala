@@ -29,7 +29,6 @@ object SparkEntry {
   /** Deterministic "now" for relative-time queries: just past the end of
    *  the events table (2024-01-30), so relative windows cover it. */
   val Now: Instant = Instant.parse("2024-02-01T00:00:00Z")
-  val NowSec: Long = Now.getEpochSecond // 1706745600
 
   private def table(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")

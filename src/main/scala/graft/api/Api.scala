@@ -722,9 +722,6 @@ object Api {
         InfluxQL.dataPoints(sub, t => ctx.store.read(t),
           ctx.store.tierByName(_), ctx.now(),
           sliceResolve = Some(slicedRead(ctx, "")))
-      case ms: InfluxQL.MultiSelect =>
-        InfluxQL.dataPoints(ms, t => ctx.store.read(t),
-          ctx.store.tierByName(_), ctx.now(), Some(slicedRead(ctx, "")))
       case rs: InfluxQL.RegexSelect =>
         // the regex matches against the store CATALOG (a listing, not a
         // data scan), across every retention tier the store carries
@@ -755,50 +752,34 @@ object Api {
    *  multi-field selects over partial points. */
   private def selectInto(ctx: Context,
       si: graft.query.InfluxQL.SelectInto): DataFrame = {
-    import graft.query.{InfluxQL, Planner}
-    // ONE match pairs the plan with the PLANNED value-column names (a
-    // single select's fixed `value`; a multi list's aliases as planned —
-    // incl. the grouped bare-list mean default — via plannedMultiAliases;
-    // a subquery's outer side, whichever form it takes), so the two can
-    // never drift
-    // a single-item source plans its column as `value`, but InfluxDB
-    // stores the written field under the AS alias when one was given
-    // (`... AS foo INTO t` → field `foo`); rename at the write boundary
-    val singleCol = si.fieldAlias.getOrElse("value")
-    def renamed(df: DataFrame): DataFrame =
-      if (singleCol == "value") df
-      else {
-        // reserved-name guard, mirroring the multi-item path's planned-
-        // alias check: `AS "time"` (or a group-by tag's name) would
-        // produce a duplicate column and a raw AnalysisException later
-        if (singleCol == "measurement" || df.columns.contains(singleCol))
-          throw new IllegalArgumentException(
-            s"SELECT INTO field alias collides with a result column: $singleCol")
-        df.withColumnRenamed("value", singleCol)
-      }
-    def planWithCols(st: InfluxQL.Statement): (DataFrame, Seq[String]) = st match {
+    import graft.query.InfluxQL
+    // ONE match pairs the plan with the value-column names its select
+    // list names (Select.valueColumns: the planned list aliases, or a
+    // one-item source's AS name), so the two can never drift
+    val (source, valueCols) = si.inner match {
       case s: InfluxQL.Select =>
-        (renamed(InfluxQL.dataPoints(s, t => ctx.store.read(t),
-          ctx.store.tierByName(_),
-          ctx.now(), sliceResolve = Some(slicedRead(ctx, "")))), Seq(singleCol))
-      case ms: InfluxQL.MultiSelect =>
-        (InfluxQL.dataPoints(ms, t => ctx.store.read(t), ctx.store.tierByName(_),
-          ctx.now(), Some(slicedRead(ctx, ""))),
-          Planner.plannedMultiAliases(ms.items, ms.req))
+        (InfluxQL.dataPoints(s, t => ctx.store.read(t), ctx.store.tierByName(_),
+          ctx.now(), Some(slicedRead(ctx, ""))), s.valueColumns)
       case sub: InfluxQL.Subquery =>
-        val df = InfluxQL.dataPoints(sub, t => ctx.store.read(t),
-          ctx.store.tierByName(_), ctx.now(), Some(slicedRead(ctx, "")))
-        sub.outer match {
-          case _: InfluxQL.Select => (renamed(df), Seq(singleCol))
-          case ms: InfluxQL.MultiSelect =>
-            (df, Planner.plannedMultiAliases(ms.items, ms.req))
-          case other => throw new IllegalArgumentException(
-            s"unsupported SELECT INTO source: $other")
-        }
+        (InfluxQL.dataPoints(sub, t => ctx.store.read(t), ctx.store.tierByName(_),
+          ctx.now(), Some(slicedRead(ctx, ""))), sub.outer.valueColumns)
       case other => throw new IllegalArgumentException(
         s"unsupported SELECT INTO source: $other")
     }
-    val (planned, valueCols) = planWithCols(si.inner)
+    // a one-item source plans its column as `value`, but InfluxDB stores
+    // the written field under the AS alias when one was given
+    // (`... AS foo INTO t` → field `foo`); rename at the write boundary
+    val planned = valueCols match {
+      case Seq(alias) if alias != "value" =>
+        // reserved-name guard, mirroring the list's planned-alias check:
+        // `AS "time"` (or a group-by tag's name) would produce a
+        // duplicate column and a raw AnalysisException later
+        if (alias == "measurement" || source.columns.contains(alias))
+          throw new IllegalArgumentException(
+            s"SELECT INTO field alias collides with a result column: $alias")
+        source.withColumnRenamed("value", alias)
+      case _ => source
+    }
     if (!planned.columns.contains("time"))
       throw new IllegalArgumentException(
         "SELECT INTO needs a time axis (GROUP BY time(...) or raw " +
@@ -1012,13 +993,44 @@ object Api {
    * query returns the Series-shaped JSON, a failing one the error
    * envelope instead of a thrown exception (admin.go:165-175 logs and
    * returns the storage error inside the report payload).
+   *
+   * A raw InfluxQL select through `cmd.tsdb.query` that names neither
+   * `measurement` nor `groupByTag` is shaped by its own FROM measurement
+   * (a subquery's innermost) and GROUP BY tag keys: one Series per tag
+   * tuple, named by the measurement, as InfluxDB answers.
    */
   def dispatchShaped(ctx: Context, command: String, payload: Any,
       measurement: String = "", groupByTag: String = "",
       maxRows: Int = 100000, afterTimeSec: Long = Long.MinValue): String =
-    try shapeResponse(dispatch(ctx, command, payload), measurement, groupByTag,
-      maxRows, afterTimeSec)
-    catch { case e: Exception => shapeError(e) }
+    try {
+      val df = dispatch(ctx, command, payload)
+      val (m, g) =
+        if (command != "cmd.tsdb.query" || measurement.nonEmpty ||
+            groupByTag.nonEmpty) (measurement, groupByTag)
+        else rawSeriesKey(payload)
+      shapeResponse(df, m, g, maxRows, afterTimeSec)
+    } catch { case e: Exception => shapeError(e) }
+
+  /** The (measurement, group-by tags) a raw InfluxQL select names; empty
+   *  for SELECT INTO, the SHOW forms and Spark SQL. */
+  private def rawSeriesKey(payload: Any): (String, String) = {
+    import graft.query.InfluxQL._
+    def innermost(st: Statement): String = st match {
+      case sub: Subquery => innermost(sub.inner)
+      case s: Select => s.req.measurement
+      case _ => ""
+    }
+    payload match {
+      case (_: Int, sql: String) => rawSeriesKey(sql)
+      case sql: String if looksLike(sql) => parse(sql) match {
+        case s: Select => (s.req.measurement, s.req.groupByTag)
+        case rs: RegexSelect => (rs.sel.req.measurement, rs.sel.req.groupByTag)
+        case sub: Subquery => (innermost(sub), sub.outer.req.groupByTag)
+        case _ => ("", "")
+      }
+      case _ => ("", "")
+    }
+  }
 
   /**
    * The reference's complete WIRE shape: the Series payload wrapped in

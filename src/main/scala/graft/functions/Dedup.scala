@@ -682,18 +682,6 @@ object Dedup {
       k, bands, mode)
   }
 
-  /** Append a pre-computed (id, sh, sig) table to the index at `path`
-   *  (meta must already be written/validated by the caller). */
-  private[functions] def appendShingledToIndex(sh: DataFrame, path: String,
-      n: Int, k: Int, bands: Int): Unit = {
-    repairMinhashIndex(sh.sparkSession, path) // writer context: safe to heal
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(sh.sparkSession.sparkContext.hadoopConfiguration)
-    val genRoot = currentGenRoot(fs, path)
-    checkIndexParams(sh.sparkSession, genRoot, n, k, bands)
-    writeShingledToIndex(sh, genRoot, k, bands, SaveMode.Append)
-  }
-
   /** EXACTLY-ONCE streaming append of a pre-computed (id, sh, sig)
    *  table: the batch's two table writes stage under the index root and
    *  commit through [[graft.store.StagedBatchAppend]]'s ledger, so a

@@ -41,11 +41,6 @@ object Multimodal {
     StructField("duration_ms", LongType),
     StructField("sample_rate", IntegerType)))
 
-  val mediaSchema: StructType = StructType(Seq(
-    StructField("media_id", LongType),
-    StructField("payload", BinaryType),
-    StructField("meta", mediaMetaSchema)))
-
   final case class MediaMeta(media_type: String, format: String, width: Int,
       height: Int, duration_ms: Long, sample_rate: Int)
   final case class MediaRow(media_id: Long, payload: Array[Byte], meta: MediaMeta)

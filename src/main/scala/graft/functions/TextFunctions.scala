@@ -72,16 +72,6 @@ object TextFunctions {
 
   // --- quality scoring ---
 
-  /** Ratio of stopword tokens (any language) to all tokens. */
-  def stopwordRatio(text: Column): Column = {
-    val all = stopwords.values.flatten.toSeq.distinct
-    val toks = tokens(text)
-    when(size(toks) > 0,
-      size(filter(toks, t => t.isin(all.map(lit): _*).cast("boolean")))
-        .cast("double") / size(toks))
-      .otherwise(lit(0.0))
-  }
-
   /** Punctuation characters per character. */
   def punctRatio(text: Column): Column =
     when(length(text) > 0,

@@ -69,11 +69,6 @@ object MetadataStore {
     }
   }
 
-  /** File-store-backed provider (file_store.go periodic variant). */
-  def fileProvider(spark: SparkSession, path: String,
-      refreshIntervalMs: Long = 30000): Provider =
-    new Provider(() => load(spark, path), refreshIntervalMs)
-
   // ------------------------------------------------------------------
   // Transport payload shapes. The reference's other two metadata stores
   // differ from the file store only in TRANSPORT (an MQTT
@@ -137,11 +132,6 @@ object MetadataStore {
         col("container_id").cast("int").as("device_id"),
         col("location_id").cast("int").as("location_id"),
         lit(null).cast("string").as("device_type"))
-
-  /** Vinculum-shape provider with the reference's 30 s site-cache reload. */
-  def vincProvider(spark: SparkSession, path: String,
-      refreshIntervalMs: Long = 30000): Provider =
-    new Provider(() => loadVincSite(spark, path), refreshIntervalMs)
 
   /** Tpflow-registry-shape provider. */
   def tpProvider(spark: SparkSession, path: String,

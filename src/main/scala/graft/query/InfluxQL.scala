@@ -86,55 +86,63 @@ import org.apache.spark.sql.DataFrame
  *
  * A FROM-clause retention policy pins the tier (the InfluxQL contract);
  * without one the planner's tier policy picks, as the structured command
- * does. A SINGLE-item select keeps the engine's fixed (time, value)
- * column shape regardless of its alias — `Api.shapeResponse` emits
- * ["time","value"] columns exactly like the reference's response
- * fixtures (docs/api:26-176). A multi-item select's columns carry their
+ * does. Every select list, one item or many, parses into ONE statement
+ * type, [[Select]]. A one-item select keeps the engine's fixed
+ * (time, value) column shape whatever its alias — `Api.shapeResponse`
+ * emits ["time","value"] columns exactly like the reference's response
+ * fixtures (docs/api:26-176); only INTO and an outer subquery read its
+ * alias ([[Select.valueColumns]]). A list's columns carry their
  * alias/function names ([[Planner.itemAliases]]), and a regex FROM
  * emits one Series per matched measurement — the shaper renders both.
  */
 object InfluxQL {
 
   sealed trait Statement
-  final case class Select(req: DataPointsRequest, retentionPolicy: Option[String])
-      extends Statement
+  /** A select list over one measurement — `SELECT mean("v") AS a ...`
+   *  or `SELECT mean("v") AS a, max("v") AS b ...` (the multi-series
+   *  Grafana panel shape). `req` carries the shared frame (measurement,
+   *  WHERE, GROUP BY, FILL, modifiers) with its per-item fields empty;
+   *  each item carries its field/function/transform/alias. One item
+   *  plans through the single-field defaults of [[Planner.dataPoints]]
+   *  (field `value` when empty, `mean` when tag- or time-grouped) and
+   *  names its planned column `value`; a list plans as ONE scan + ONE
+   *  shuffle ([[Planner.dataPointsMulti]]). */
+  final case class Select(items: Seq[SelectItem], req: DataPointsRequest,
+      retentionPolicy: Option[String]) extends Statement {
+    /** The value-column names this select's consumers see: one item's
+     *  `AS` alias, `value` without one (INTO writes the field under it,
+     *  an outer subquery references it); a list's names as planned,
+     *  incl. the grouped bare-list mean default
+     *  ([[Planner.plannedMultiAliases]]). */
+    def valueColumns: Seq[String] = items match {
+      case Seq(it) => Seq(if (it.alias.nonEmpty) it.alias else "value")
+      case _ => Planner.plannedMultiAliases(items, req)
+    }
+  }
   /** Subquery — `SELECT <agg> FROM (SELECT <inner> ...)`, the
    *  Grafana-era max-of-mean idiom, nesting to ANY depth (`inner` may
-   *  itself be a [[Subquery]]; the chain plans innermost-first). The
-   *  outer side is a single- or multi-item SELECT; `innerAliases` are
-   *  the inner's output column names (the columns the outer
-   *  references) — a single-shaped inner's `AS` name defaulting to
-   *  "value", a multi inner's planned [[Planner.plannedMultiAliases]]
-   *  list. */
-  final case class Subquery(outer: Statement, inner: Statement,
+   *  itself be a [[Subquery]]; the chain plans innermost-first).
+   *  `innerAliases` are the inner's output column names (the columns
+   *  the outer references): the [[Select.valueColumns]] of the inner's
+   *  outermost select list. */
+  final case class Subquery(outer: Select, inner: Statement,
       innerAliases: Seq[String]) extends Statement
-  /** Multi-item select list — `SELECT mean("v") AS a, max("v") AS b ...`
-   *  (the multi-series Grafana panel shape). `req` carries the shared
-   *  frame (measurement, WHERE, GROUP BY, FILL, modifiers) with its
-   *  per-item fields empty; the items carry field/function/transform/
-   *  alias. Planned as ONE scan + ONE shuffle
-   *  ([[Planner.dataPointsMulti]]). */
-  final case class MultiSelect(items: Seq[SelectItem], req: DataPointsRequest,
-      retentionPolicy: Option[String]) extends Statement
   /** Regex measurement — `FROM /pattern/` (Go-RE2-style unanchored
    *  match, the Grafana multi-measurement panel form). `sel` carries
-   *  the whole statement — a single- or multi-item SELECT — with a
-   *  placeholder measurement; planning matches the pattern against the
-   *  store catalog and unions the per-measurement plans, each tagged
-   *  with a `measurement` column. */
-  final case class RegexSelect(sel: Statement, pattern: String) extends Statement
+   *  the whole statement with a placeholder measurement; planning
+   *  matches the pattern against the store catalog and unions the
+   *  per-measurement plans, each tagged with a `measurement` column. */
+  final case class RegexSelect(sel: Select, pattern: String) extends Statement
   /** `SELECT <agg> INTO ["rp".]"target" FROM ...` — materialize a query
    *  result as stored points under a new measurement (the InfluxDB
    *  manual-downsample idiom). The write happens at the Api layer (the
    *  shim stays store-free); the result is InfluxDB's
-   *  `(time=0, written=N)` row. `fieldAlias` is a SINGLE-item source's
-   *  `AS` name — InfluxDB stores the written field under the alias
-   *  (`SELECT mean("v") AS foo INTO t ...` writes field `foo`); the
-   *  single-select DTO itself carries no alias (its planned column is
-   *  always `value`), so the INTO parse preserves it here. Multi-item
-   *  sources carry aliases on their [[SelectItem]]s instead. */
+   *  `(time=0, written=N)` row. The written fields are the source's
+   *  [[Select.valueColumns]]: a one-item source writes its field under
+   *  its `AS` alias (`SELECT mean("v") AS foo INTO t ...` writes field
+   *  `foo`). */
   final case class SelectInto(inner: Statement, retentionPolicy: Option[String],
-      target: String, fieldAlias: Option[String] = None) extends Statement
+      target: String) extends Statement
   /** `SHOW MEASUREMENTS [ON db] [WITH MEASUREMENT =~ /re/]` — the
    *  Grafana template-variable catalog form; `pattern` filters the
    *  measurement CATALOG (a listing, never a data scan) with a
@@ -413,17 +421,8 @@ object InfluxQL {
       val selPart = q.substring(m.start(1), m.end(1))
       val fromPart = q.substring(m.start(3), m.end(3))
       val inner = parse(s"$selPart $fromPart", depth + 1)
-      // a single-item source's AS name: the Select DTO plans its column
-      // as `value` regardless of alias, but InfluxDB stores the written
-      // field UNDER the alias — preserve it from the raw list here
-      val selectList = selPart.replaceFirst("(?is)^SELECT\\s+", "")
-      val singleAlias =
-        if (splitTopLevelCommas(selectList).length != 1) None
-        else "(?is)\\s+AS\\s+(\"[^\"]+\"|\\w+)\\s*$".r
-          .findFirstMatchIn(selectList).map(mm => unquote(mm.group(1)))
       inner match {
-        case _: Select | _: MultiSelect | _: Subquery =>
-          return SelectInto(inner, rp, target, singleAlias)
+        case _: Select | _: Subquery => return SelectInto(inner, rp, target)
         case _ => throw new IllegalArgumentException(
           "SELECT INTO supports a single- or multi-item SELECT " +
             s"(optionally over a subquery), not a regex FROM: $raw")
@@ -441,7 +440,7 @@ object InfluxQL {
         s"FROM ${q.substring(m.start(1), m.end(1))}$RegexMeasurement" +
         q.substring(m.end)
       parse(spliced, depth + 1) match {
-        case sel @ (_: Select | _: MultiSelect) => return RegexSelect(sel, pattern)
+        case sel: Select => return RegexSelect(sel, pattern)
         case _ => throw new IllegalArgumentException(
           "a regex measurement supports a plain (single- or multi-item) " +
             s"SELECT, not a subquery: $raw")
@@ -483,10 +482,9 @@ object InfluxQL {
       offset = modifier(g(10), "OFFSET"),
       sLimit = modifier(g(11), "SLIMIT"),
       sOffset = modifier(g(12), "SOFFSET"))
-    val selItems = splitTopLevelCommas(g(1))
-    if (selItems.length > 1)
-      return MultiSelect(selItems.map(parseSelectItem), baseReq, rp)
-    val (fieldName, dataFunction, transformFunction) = parseSelectList(g(1))
+    val items = splitTopLevelCommas(g(1)).map(parseSelectItem)
+    if (items.isEmpty)
+      throw new IllegalArgumentException(s"unsupported select list: ${g(1)}")
     // sequential transforms (difference / derivative / elapsed /
     // cumulative_sum / moving_average and variants) need a time axis to
     // run ALONG: raw rows carry their own `time`, and GROUP BY time(..)
@@ -495,21 +493,21 @@ object InfluxQL {
     // no GROUP BY time has nothing to order by. Refuse it here so the
     // unsupported shape surfaces through the grammar's documented
     // IllegalArgumentException envelope instead of an opaque analysis
-    // error downstream.
+    // error downstream. (A list refuses this shape in the planner.)
     def sequential(t: String): Boolean =
       t == "difference" || t == "non_negative_difference" ||
         t == "cumulative_sum" || t.startsWith("derivative_") ||
         t == "derivative" || t.startsWith("non_negative_derivative") ||
         t.startsWith("elapsed") || t.startsWith("moving_average_") ||
         t.startsWith("exponential_moving_average_")
-    if (transformFunction.split(",").exists(sequential) &&
-        dataFunction.nonEmpty && groupByTime.isEmpty)
-      throw new IllegalArgumentException(
-        "a sequential transform over an aggregate requires GROUP BY time(...): " +
-          s"nothing provides a time axis in: $raw")
-    Select(baseReq.copy(
-      fieldName = if (fieldName == "value") "" else fieldName,
-      dataFunction = dataFunction, transformFunction = transformFunction), rp)
+    items match {
+      case Seq(it) if it.transformFunction.split(",").exists(sequential) &&
+          it.dataFunction.nonEmpty && groupByTime.isEmpty =>
+        throw new IllegalArgumentException(
+          "a sequential transform over an aggregate requires GROUP BY time(...): " +
+            s"nothing provides a time axis in: $raw")
+      case _ => Select(items, baseReq, rp)
+    }
   }
 
   /** A LIMIT/OFFSET/SLIMIT/SOFFSET operand as Int — an
@@ -594,52 +592,30 @@ object InfluxQL {
   }
 
   /** Parse one nesting level: outer over a parenthesized inner SELECT.
-   *  The inner's output column names (a single item's `AS` alias, a
-   *  multi item list's planned function-named columns, a nested
-   *  subquery's own top-level names) are the columns the outer
-   *  references (InfluxDB's contract). Nesting recurses to ANY depth —
-   *  the inner text re-enters [[parse]], and a nested inner contributes
-   *  the aliases of ITS outermost select list (the columns its planned
-   *  frame actually carries). */
+   *  The inner's output column names — the [[Select.valueColumns]] of
+   *  its outermost select list — are the columns the outer references
+   *  (InfluxDB's contract). Nesting recurses to ANY depth: the inner
+   *  text re-enters [[parse]]. */
   private def parseSubquery(raw: String, pre: String, innerText: String,
       post: String, depth: Int): Statement = {
     if (!innerText.toLowerCase.startsWith("select"))
       throw new IllegalArgumentException(
         s"unsupported parenthesized FROM clause (expected a SELECT): $raw")
-    val inner = parse(innerText, depth + 1) match {
-      case s @ (_: Select | _: MultiSelect | _: Subquery) => s
+    // the columns the inner frame actually carries: those of its
+    // outermost select list, as planned (a bare `SELECT "a","b" ... GROUP
+    // BY time(1h)` inner plans columns `mean`/`mean_1`, not `a`/`b`) —
+    // same contract as SELECT INTO's field names
+    val (inner, innerAliases) = parse(innerText, depth + 1) match {
+      case s: Select => (s, s.valueColumns)
+      case s: Subquery => (s, s.outer.valueColumns)
       case _ => throw new IllegalArgumentException(
         s"subquery inner statement must be a SELECT: $raw")
     }
-    // the single-select AS name of a statement text's TOP-LEVEL select
-    // list (for a nested subquery this is its outer list — exactly the
-    // columns its planned frame carries), defaulting to InfluxDB's
-    // `value`
-    def asAlias(text: String): Seq[String] =
-      Seq("(?is)\\s+AS\\s+\"?([\\w\\-]+)\"?\\s*$".r
-        .findFirstMatchIn(
-          "(?is)^SELECT\\s+(.+?)\\s+FROM\\b".r.findFirstMatchIn(text)
-            .map(_.group(1)).getOrElse(""))
-        .map(_.group(1)).getOrElse("value"))
-    // PLANNED aliases, not raw-item aliases: the planner applies the
-    // grouped bare-list mean default (a bare `SELECT "a","b" ... GROUP
-    // BY time(1h)` inner plans columns `mean`/`mean_1`, not `a`/`b`),
-    // and the outer must reference the columns the inner frame
-    // actually carries — same contract as SELECT INTO's field names
-    val innerAliases = inner match {
-      case ms: MultiSelect => Planner.plannedMultiAliases(ms.items, ms.req)
-      case sub: Subquery => sub.outer match {
-        case ms: MultiSelect => Planner.plannedMultiAliases(ms.items, ms.req)
-        case _ => asAlias(innerText)
-      }
-      case _ => asAlias(innerText)
-    }
-    val outer = parse(s"$pre FROM $SubMeasurement$post", depth + 1) match {
-      case s @ (_: Select | _: MultiSelect) => s
+    parse(s"$pre FROM $SubMeasurement$post", depth + 1) match {
+      case outer: Select => Subquery(outer, inner, innerAliases)
       case _ => throw new IllegalArgumentException(
         s"unsupported outer SELECT over a subquery: $raw")
     }
-    Subquery(outer, inner, innerAliases)
   }
 
   /** The last comma at paren depth 0 — splits a parameterized call's
@@ -901,31 +877,36 @@ object InfluxQL {
    *  matching the reference's default query horizon. */
   def dataPoints(sel: Select, resolve: Tier => DataFrame,
       tierByName: String => Option[Tier], now: Instant,
-      sliceResolve: Option[(Tier, String, Long, Long) => DataFrame] = None): DataFrame =
-    planPinned(sel.req, sel.retentionPolicy, resolve, tierByName, now,
-      sliceResolve)(Planner.dataPoints(_, _, now, _))
-
-  /** The statement-level contract both SELECT forms share: close an
-   *  open-ended absolute range at `now`, and let an explicit retention
-   *  policy PIN the tier — the slice reader must then read that tier
-   *  too, whatever tier the planner's policy would have picked. */
-  private def planPinned(req0: DataPointsRequest, retentionPolicy: Option[String],
-      resolve: Tier => DataFrame, tierByName: String => Option[Tier], now: Instant,
-      sliceResolve: Option[(Tier, String, Long, Long) => DataFrame])(
-      plan: (DataPointsRequest, Tier => DataFrame,
-        Option[(Tier, String, Long, Long) => DataFrame]) => DataFrame): DataFrame = {
-    val req =
-      if (req0.fromTime.nonEmpty && req0.toTime.isEmpty) req0.copy(toTime = now.toString)
-      else req0
-    retentionPolicy match {
+      sliceResolve: Option[(Tier, String, Long, Long) => DataFrame] = None): DataFrame = {
+    val req = sel.req
+    val closed =
+      if (req.fromTime.nonEmpty && req.toTime.isEmpty)
+        sel.copy(req = req.copy(toTime = now.toString))
+      else sel
+    // an explicit retention policy PINS the tier — the slice reader
+    // must then read that tier too, whatever tier the planner's policy
+    // would have picked
+    sel.retentionPolicy match {
       case Some(name) =>
         val t = tierByName(name).getOrElse(
           throw new IllegalArgumentException(s"unknown retention policy: $name"))
-        plan(req, _ => resolve(t), sliceResolve.map(f =>
+        planPinned(closed, _ => resolve(t), now, sliceResolve.map(f =>
           (_: Tier, m: String, a: Long, b: Long) => f(t, m, a, b)))
-      case None => plan(req, resolve, sliceResolve)
+      case None => planPinned(closed, resolve, now, sliceResolve)
     }
   }
+
+  /** Plan a select over already-pinned readers: one item through the
+   *  single-field defaults ([[Planner.dataPoints]]), a list as one scan
+   *  and one shuffle ([[Planner.dataPointsMulti]]). */
+  private def planPinned(sel: Select, resolve: Tier => DataFrame, now: Instant,
+      sliceResolve: Option[(Tier, String, Long, Long) => DataFrame]): DataFrame =
+    sel.items match {
+      case Seq(it) => Planner.dataPoints(sel.req.copy(fieldName = it.fieldName,
+        dataFunction = it.dataFunction, transformFunction = it.transformFunction),
+        resolve, now, sliceResolve)
+      case items => Planner.dataPointsMulti(items, sel.req, resolve, now, sliceResolve)
+    }
 
   /**
    * Plan a subquery (any nesting depth): the inner plans as usual —
@@ -947,13 +928,6 @@ object InfluxQL {
       // Select overload keeps its None default, callers here pass one
       sliceResolve: Option[(Tier, String, Long, Long) => DataFrame]): DataFrame = {
     import org.apache.spark.sql.functions.{col, lit, timestamp_seconds}
-    def reqOf(st: Statement): DataPointsRequest = st match {
-      case s: Select => s.req
-      case ms: MultiSelect => ms.req
-      case s2: Subquery => reqOf(s2.outer)
-      case other => throw new IllegalArgumentException(
-        s"unsupported subquery side: $other")
-    }
     // the INNER reads the store (slice applies); the outer runs over
     // the inner's in-memory points frame (nothing to slice). A nested
     // inner recurses — each level re-enters the planner over the level
@@ -961,7 +935,6 @@ object InfluxQL {
     // INNERMOST level ever scans data
     val innerDf = sub.inner match {
       case s: Select => dataPoints(s, resolve, tierByName, queryNow, sliceResolve)
-      case ms: MultiSelect => dataPoints(ms, resolve, tierByName, queryNow, sliceResolve)
       case s2: Subquery => dataPoints(s2, resolve, tierByName, queryNow, sliceResolve)
       case other => throw new IllegalArgumentException(
         s"unsupported subquery inner: $other")
@@ -971,21 +944,12 @@ object InfluxQL {
         "a subquery's inner SELECT must carry a time axis (GROUP BY " +
           "time(...) or raw points); a whole-range aggregate leaves the " +
           "outer query nothing to select over")
-    // a single inner's value column takes its AS name; a multi inner's
-    // columns already carry their itemAliases names; a nested inner is
-    // named by ITS outer's shape (a Select outer plans `value`)
+    // a one-item inner (or a nested inner whose outer has one item)
+    // plans its column as `value` and takes its AS name here; a list's
+    // columns already carry their itemAliases names
     val valueCols = sub.innerAliases
-    def singleShaped(st: Statement): Boolean = st match {
-      case _: Select => true
-      case s2: Subquery => s2.outer match {
-        case _: Select => true
-        case _ => false
-      }
-      case _ => false
-    }
     val named =
-      if (singleShaped(sub.inner))
-        innerDf.withColumnRenamed("value", valueCols.head)
+      if (valueCols.size == 1) innerDf.withColumnRenamed("value", valueCols.head)
       else innerDf
     val tagCols = named.columns.toSeq.filterNot((valueCols :+ "time").toSet)
     // gap-fill rows where EVERY value column is null are not points; a
@@ -996,7 +960,7 @@ object InfluxQL {
       .select(Seq(lit(SubMeasurement).as("measurement"),
         timestamp_seconds(col("time")).as("time")) ++
         valueCols.map(col) ++ tagCols.map(col): _*)
-    val o = reqOf(sub.outer)
+    val o = sub.outer.req
     def boundsOf(r: DataPointsRequest): (Long, Long) =
       if (r.fromTime.nonEmpty)
         (Instant.parse(r.fromTime).getEpochSecond,
@@ -1017,15 +981,16 @@ object InfluxQL {
     // bucket, so the recursion reaches the innermost explicit WHERE
     def resultRange(st: Statement): (Long, Long) = st match {
       case s2: Subquery =>
-        val o2 = reqOf(s2.outer)
+        val o2 = s2.outer.req
         val (f, t) =
           if (o2.relativeTime.nonEmpty || o2.fromTime.nonEmpty) boundsOf(o2)
           else resultRange(s2.inner)
         (f - bucketOf(o2), t)
-      case st2 =>
-        val r = reqOf(st2)
-        val (f, t) = boundsOf(r)
-        (f - bucketOf(r), t)
+      case s: Select =>
+        val (f, t) = boundsOf(s.req)
+        (f - bucketOf(s.req), t)
+      case other => throw new IllegalArgumentException(
+        s"unsupported subquery inner: $other")
     }
     val outerReq =
       if (o.relativeTime.nonEmpty || o.fromTime.nonEmpty) o
@@ -1035,34 +1000,22 @@ object InfluxQL {
         o.copy(fromTime = Instant.ofEpochSecond(fromSec).toString,
           toTime = Instant.ofEpochSecond(toSec).toString)
       }
-    sub.outer match {
-      case s: Select =>
-        // an outer with no explicit field selects the single inner
-        // column; over a multi-column inner it must name one
+    // a one-item outer that names no field other than the default
+    // `value` selects the single inner column; over a multi-column inner
+    // it must name one
+    val items = sub.outer.items match {
+      case Seq(it) if it.fieldName.isEmpty || it.fieldName == "value" =>
         val fld =
-          if (s.req.fieldName.nonEmpty) s.req.fieldName
-          else if (valueCols.size == 1) valueCols.head
+          if (valueCols.size == 1) valueCols.head
           else if (valueCols.contains("value")) "value"
           else throw new IllegalArgumentException(
             "the outer SELECT over a multi-column subquery must name " +
               s"the inner column it selects (one of: ${valueCols.mkString(", ")})")
-        Planner.dataPoints(outerReq.copy(fieldName = fld), _ => pts, queryNow)
-      case ms: MultiSelect =>
-        Planner.dataPointsMulti(ms.items, outerReq, _ => pts, queryNow)
-      case other => throw new IllegalArgumentException(
-        s"unsupported subquery outer: $other")
+        Seq(it.copy(fieldName = fld))
+      case its => its
     }
+    planPinned(Select(items, outerReq, None), _ => pts, queryNow, None)
   }
-
-  /** Plan a multi-item SELECT — the same statement contract as the
-   *  single-select overload ([[planPinned]]), planned by
-   *  [[Planner.dataPointsMulti]] (one scan + one shuffle for the whole
-   *  list). */
-  def dataPoints(ms: MultiSelect, resolve: Tier => DataFrame,
-      tierByName: String => Option[Tier], now: Instant,
-      sliceResolve: Option[(Tier, String, Long, Long) => DataFrame]): DataFrame =
-    planPinned(ms.req, ms.retentionPolicy, resolve, tierByName, now,
-      sliceResolve)(Planner.dataPointsMulti(ms.items, _, _, now, _))
 
   /**
    * Plan a regex-measurement SELECT: match the pattern (unanchored, the
@@ -1080,31 +1033,16 @@ object InfluxQL {
       sliceResolve: Option[(Tier, String, Long, Long) => DataFrame],
       measurements: () => Seq[String]): DataFrame = {
     import org.apache.spark.sql.functions.lit
-    val sharedReq = rs.sel match {
-      case s: Select => s.req
-      case ms: MultiSelect => ms.req
-      case other => throw new IllegalArgumentException(
-        s"regex measurement over an unsupported statement: $other")
-    }
-    if (sharedReq.sLimit > 0 || sharedReq.sOffset > 0)
+    if (rs.sel.req.sLimit > 0 || rs.sel.req.sOffset > 0)
       throw new IllegalArgumentException(
         "SLIMIT/SOFFSET with a regex measurement is not supported " +
           "(the series cut would order across measurements)")
     val p = java.util.regex.Pattern.compile(rs.pattern)
-    def planFor(m: String): DataFrame = rs.sel match {
-      case s: Select =>
-        dataPoints(s.copy(req = s.req.copy(measurement = m)),
-          resolve, tierByName, now, sliceResolve)
-      case ms: MultiSelect =>
-        dataPoints(ms.copy(req = ms.req.copy(measurement = m)),
-          resolve, tierByName, now, sliceResolve)
-      case other => throw new IllegalArgumentException(
-        s"regex measurement over an unsupported statement: $other")
-    }
     // the per-measurement plans gain a `measurement` result column — a
     // select alias or group tag of that name would be silently replaced
     def tagged(m: String, label: String): DataFrame = {
-      val d = planFor(m)
+      val d = dataPoints(rs.sel.copy(req = rs.sel.req.copy(measurement = m)),
+        resolve, tierByName, now, sliceResolve)
       require(!d.columns.contains("measurement"),
         "a regex-measurement select cannot also name a column `measurement`")
       d.withColumn("measurement", lit(label))
@@ -1132,7 +1070,6 @@ object InfluxQL {
     parse(sql) match {
       case sel: Select => dataPoints(sel, resolve, tierByName, now)
       case sub: Subquery => dataPoints(sub, resolve, tierByName, now, None)
-      case ms: MultiSelect => dataPoints(ms, resolve, tierByName, now, None)
       case rs: RegexSelect =>
         dataPoints(rs, resolve, tierByName, now, None, measurements)
       case other => throw new IllegalArgumentException(

@@ -34,9 +34,6 @@ object IndexGenerations {
     text.endsWith("ok\n")
   }
 
-  /** Is `name` a generation marker file name? (pin derivation) */
-  def isMarkerName(name: String): Boolean = Marker.matches(name)
-
   /** The committed generation number a root-listing entry attests:
    *  a completely-visible (`ok`-terminated) generation marker. The
    *  [[AsOfPin.capture]] hook for the generation sequence. */

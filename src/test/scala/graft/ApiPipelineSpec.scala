@@ -332,6 +332,52 @@ class ApiPipelineSpec extends SparkSpec {
         """"uid":"u1"}""", cat)
   }
 
+  test("a raw InfluxQL select on the wire answers one Series per tag " +
+    "tuple, named by its measurement (single-tag, multi-tag, regex FROM, " +
+    "subquery)") {
+    val store = new TierStore(spark, tmpDir())
+    store.write(Tier.GenRaw, Seq(
+      ("sensor_temp", "2024-01-01 10:05:00", 20.0, "d1", "1"),
+      ("sensor_temp", "2024-01-01 10:15:00", 22.0, "d2", "1"),
+      ("sensor_temp", "2024-01-01 10:25:00", 24.0, "d2", "2"),
+      ("sensor_hum", "2024-01-01 10:05:00", 50.0, "d1", "1"))
+      .map { case (m, t, v, d, l) => (m, Timestamp.valueOf(t), v, d, l, "sensor") }
+      .toDF("measurement", "time", "value", "dev_id", "location_id", "dev_type"))
+    val ctx = Api.Context(spark, store,
+      now = () => Instant.parse("2024-01-01T12:00:00Z"))
+    def series(q: String): String = {
+      val wire = Api.dispatchFimp(ctx, "cmd.tsdb.query", q,
+        corid = "c", uid = "u", ctime = "2024-01-01T12:00:00.000+00:00")
+      wire.substring(wire.indexOf(""""val":""") + 6, wire.indexOf(""","tags":null"""))
+    }
+    def s(name: String, tags: String, values: String): String =
+      s"""{"name":"$name","tags":{$tags},"columns":["time","value"],""" +
+        s""""values":[$values]}"""
+    def results(ss: String*): String = ss.mkString("""{"Results":[{"Series":[""", ",", "]}]}")
+    val byDev = results(
+      s("sensor_temp", """"dev_id":"d1"""", "[1704103200,20.0]"),
+      s("sensor_temp", """"dev_id":"d2"""", "[1704103200,24.0]"))
+    assert(series("""SELECT max("value") FROM "sensor_temp" WHERE time > now()-3h """ +
+      """GROUP BY time(1h), "dev_id" FILL(none)""") == byDev)
+    assert(series("""SELECT max("value") FROM "sensor_temp" WHERE time > now()-3h """ +
+      """GROUP BY time(1h), "dev_id", "location_id" FILL(none)""") == results(
+      s("sensor_temp", """"dev_id":"d1","location_id":"1"""", "[1704103200,20.0]"),
+      s("sensor_temp", """"dev_id":"d2","location_id":"1"""", "[1704103200,22.0]"),
+      s("sensor_temp", """"dev_id":"d2","location_id":"2"""", "[1704103200,24.0]")))
+    assert(series("""SELECT max("value") FROM /^sensor_/ WHERE time > now()-3h """ +
+      """GROUP BY time(1h), "dev_id" FILL(none)""") == results(
+      s("sensor_hum", """"dev_id":"d1"""", "[1704103200,50.0]"),
+      s("sensor_temp", """"dev_id":"d1"""", "[1704103200,20.0]"),
+      s("sensor_temp", """"dev_id":"d2"""", "[1704103200,24.0]")))
+    // a subquery is named by its innermost FROM measurement
+    assert(series("""SELECT max("m") FROM (SELECT max("value") AS "m" FROM """ +
+      """"sensor_temp" WHERE time > now()-3h GROUP BY time(10m), "dev_id") """ +
+      """GROUP BY time(1h), "dev_id" FILL(none)""") == byDev)
+    // an untagged select is one Series under its measurement
+    assert(series("""SELECT max("value") FROM "sensor_temp" WHERE time > now()-3h""") ==
+      results(s("sensor_temp", "", "[0,24.0]")))
+  }
+
   test("shapeResponse bounds the driver collect and pages via the next marker") {
     import spark.implicits._
     val df = spark.range(50).select(

@@ -4,7 +4,7 @@ import java.sql.Timestamp
 import java.time.Instant
 
 import graft.api.Api
-import graft.model.{DataPointsFilter, DataPointsRequest, Tier}
+import graft.model.{DataPointsFilter, DataPointsRequest, SelectItem, Tier}
 import graft.query.{InfluxQL, Planner}
 import graft.store.TierStore
 import org.apache.spark.sql.{DataFrame, Row}
@@ -30,36 +30,42 @@ class InfluxQLSpec extends SparkSpec {
   test("parses the documented query shapes (docs/api:9,194,251, docs/queries:1)") {
     // docs/queries:1 — adapter restarts
     val s1 = InfluxQL.parse("""SELECT count("value") as "mean_value" FROM "default_20w"."zwave-ad.evt.state.report" WHERE time > now()-5h GROUP BY time(1m) fill(null)""")
-    assert(s1 == InfluxQL.Select(DataPointsRequest(
-      measurement = "zwave-ad.evt.state.report", dataFunction = "count",
-      relativeTime = "5h", groupByTime = "1m", fillType = "null"),
+    assert(s1 == InfluxQL.Select(
+      Seq(SelectItem("value", "count", alias = "mean_value")),
+      DataPointsRequest(measurement = "zwave-ad.evt.state.report",
+        relativeTime = "5h", groupByTime = "1m", fillType = "null"),
       Some("default_20w")))
     // docs/api:9 — presence count with a topic tag filter
     val s2 = InfluxQL.parse("""SELECT count("value") AS "count_value" FROM "gen_default"."sensor_presence.evt.presence.report" WHERE  topic='pt:j1/mt:evt/rt:dev/rn:zw/ad:1/sv:sensor_presence/ad:9_0' GROUP BY time(30m) FILL(null)""")
-    assert(s2 == InfluxQL.Select(DataPointsRequest(
-      measurement = "sensor_presence.evt.presence.report", dataFunction = "count",
+    assert(s2 == InfluxQL.Select(
+      Seq(SelectItem("value", "count", alias = "count_value")),
+      DataPointsRequest(measurement = "sensor_presence.evt.presence.report",
       groupByTime = "30m", fillType = "null",
       filters = DataPointsFilter(tags = Map(
         "topic" -> "pt:j1/mt:evt/rt:dev/rn:zw/ad:1/sv:sensor_presence/ad:9_0"))),
       Some("gen_default")))
     // docs/api:194 — recent power for one device, raw aggregate, no grouping
     val s3 = InfluxQL.parse("""SELECT mean("value") AS "mean_value" FROM "gen_raw"."electricity_meter_power" WHERE time > now()-10m AND "dev_id"='100'""")
-    assert(s3 == InfluxQL.Select(DataPointsRequest(
-      measurement = "electricity_meter_power", dataFunction = "mean",
+    assert(s3 == InfluxQL.Select(
+      Seq(SelectItem("value", "mean", alias = "mean_value")),
+      DataPointsRequest(measurement = "electricity_meter_power",
       relativeTime = "10m",
       filters = DataPointsFilter(tags = Map("dev_id" -> "100"))),
       Some("gen_raw")))
     // docs/api:251 — last per location, tag grouping only
     val s4 = InfluxQL.parse("""SELECT last(value) AS count_value FROM "gen_default"."sensor_presence.evt.presence.report" GROUP BY location_id  FILL(null)""")
-    assert(s4 == InfluxQL.Select(DataPointsRequest(
-      measurement = "sensor_presence.evt.presence.report", dataFunction = "last",
-      groupByTag = "location_id", fillType = "null"), Some("gen_default")))
+    assert(s4 == InfluxQL.Select(
+      Seq(SelectItem("value", "last", alias = "count_value")),
+      DataPointsRequest(measurement = "sensor_presence.evt.presence.report",
+        groupByTag = "location_id", fillType = "null"), Some("gen_default")))
     // transform wrap + percentile + absolute range + SHOW forms
     val s5 = InfluxQL.parse("""SELECT difference(mean("value")) FROM "m" WHERE time >= '2024-01-01T00:00:00Z' AND time <= '2024-01-02T00:00:00Z' GROUP BY time(1h) FILL(previous)""")
-    assert(s5.asInstanceOf[InfluxQL.Select].req.transformFunction == "difference")
+    assert(s5.asInstanceOf[InfluxQL.Select].items ==
+      Seq(SelectItem("value", "mean", "difference")))
     assert(s5.asInstanceOf[InfluxQL.Select].req.fromTime == "2024-01-01T00:00:00Z")
     val s6 = InfluxQL.parse("""SELECT percentile("value", 95) FROM "m" GROUP BY time(1h)""")
-    assert(s6.asInstanceOf[InfluxQL.Select].req.dataFunction == "percentile_95")
+    assert(s6.asInstanceOf[InfluxQL.Select].items ==
+      Seq(SelectItem("value", "percentile_95")))
     assert(InfluxQL.parse("SHOW MEASUREMENTS") == InfluxQL.ShowMeasurements())
     assert(InfluxQL.parse("show retention policies;") == InfluxQL.ShowRetentionPolicies)
     assert(InfluxQL.parse("SHOW CONTINUOUS QUERIES") == InfluxQL.ShowContinuousQueries)
@@ -99,12 +105,13 @@ class InfluxQLSpec extends SparkSpec {
     val s229 = InfluxQL.parse(corpus(4)._2).asInstanceOf[InfluxQL.Select]
     assert(s229.retentionPolicy.contains("gen_raw")) // db "historian" ignored
     assert(s229.req.measurement == "electricity_meter_energy")
-    assert(s229.req.dataFunction == "max")
-    assert(s229.req.transformFunction == "difference,abs") // application order
+    // application order
+    assert(s229.items == Seq(SelectItem("value", "max", "difference,abs", "value")))
     assert(s229.req.groupByTime == "1h" && s229.req.groupByTag == "dev_id")
     val s233 = InfluxQL.parse(corpus(5)._2).asInstanceOf[InfluxQL.Select]
     assert(s233.retentionPolicy.contains("gen_year"))
-    assert(s233.req.dataFunction == "sum" && s233.req.groupByTag == "dev_id")
+    assert(s233.items == Seq(SelectItem("value", "sum", alias = "value")) &&
+      s233.req.groupByTag == "dev_id")
 
     // unsupported shapes: the UNSUBSTITUTED grafana template (the
     // :dashboardTime: placeholder never reaches a server) and the
@@ -243,7 +250,9 @@ class InfluxQLSpec extends SparkSpec {
         (if (where.nonEmpty) s" WHERE ${where.mkString(" AND ")}" else "") +
         grp + fill + mods
       val want = fM(fF(fG(fT(fW(fSel(DataPointsRequest(measurement = m)))))))
-      (sql, InfluxQL.Select(want, rp))
+      (sql, InfluxQL.Select(
+        Seq(SelectItem("value", want.dataFunction, want.transformFunction)),
+        want.copy(dataFunction = "", transformFunction = ""), rp))
     }
     checkProp(Prop.forAll(stmtG) { case (sql, want) =>
       // a sequential transform over an aggregate with no GROUP BY time
@@ -254,8 +263,9 @@ class InfluxQLSpec extends SparkSpec {
           t.startsWith("non_negative_derivative") ||
           t.startsWith("elapsed") || t.startsWith("moving_average_") ||
           t.startsWith("exponential_moving_average_")
-      val refused = want.req.transformFunction.split(",").exists(sequential) &&
-        want.req.dataFunction.nonEmpty && want.req.groupByTime.isEmpty
+      val it = want.items.head
+      val refused = it.transformFunction.split(",").exists(sequential) &&
+        it.dataFunction.nonEmpty && want.req.groupByTime.isEmpty
       if (refused)
         try { InfluxQL.parse(sql); false }
         catch { case _: IllegalArgumentException => true }
@@ -280,11 +290,12 @@ class InfluxQLSpec extends SparkSpec {
         s"""FROM "m" WHERE time > now()-$w GROUP BY time($b))""" +
         ob.map(x => s" GROUP BY time($x)").getOrElse("")
       val want = InfluxQL.Subquery(
-        InfluxQL.Select(DataPointsRequest(measurement = "__subquery__",
-          fieldName = if (alias == "value") "" else alias,
-          dataFunction = oa, groupByTime = ob.getOrElse("")), None),
-        InfluxQL.Select(DataPointsRequest(measurement = "m",
-          dataFunction = ia, relativeTime = w, groupByTime = b), None),
+        InfluxQL.Select(Seq(SelectItem(alias, oa)),
+          DataPointsRequest(measurement = "__subquery__",
+            groupByTime = ob.getOrElse("")), None),
+        InfluxQL.Select(Seq(SelectItem("value", ia, alias = al.getOrElse(""))),
+          DataPointsRequest(measurement = "m", relativeTime = w,
+            groupByTime = b), None),
         Seq(alias))
       (sql, want)
     }
@@ -295,7 +306,6 @@ class InfluxQLSpec extends SparkSpec {
   test("property: multi-select / regex-FROM / INTO statements round-trip " +
     "through the grammar (the round-13 dialect tail)") {
     import org.scalacheck.{Gen, Prop}
-    import graft.model.SelectItem
     val itemG: Gen[(String, SelectItem)] = Gen.oneOf(
       Gen.oneOf("value", "power").map(f => (s""""$f"""", SelectItem(f))),
       for {
@@ -332,7 +342,7 @@ class InfluxQLSpec extends SparkSpec {
     } yield {
       val from = rp.map(r => s""""$r".""").getOrElse("") + "\"m\""
       val sql = s"SELECT ${items.map(_._1).mkString(", ")} FROM $from$frame"
-      (sql, InfluxQL.MultiSelect(items.map(_._2),
+      (sql, InfluxQL.Select(items.map(_._2),
         fR(DataPointsRequest(measurement = "m")), rp))
     }
     checkProp(Prop.forAll(multiG) { case (sql, want) =>
@@ -346,8 +356,7 @@ class InfluxQLSpec extends SparkSpec {
     checkProp(Prop.forAll(regexG) { case (sql, pat) =>
       InfluxQL.parse(sql) match {
         case rs: InfluxQL.RegexSelect =>
-          rs.pattern == pat &&
-            rs.sel.asInstanceOf[InfluxQL.Select].req.measurement == "__regex__"
+          rs.pattern == pat && rs.sel.req.measurement == "__regex__"
         case _ => false
       }
     })
@@ -379,50 +388,57 @@ class InfluxQLSpec extends SparkSpec {
     }
     // raw rows carry their own time column — still supported
     val raw = InfluxQL.parse("""SELECT difference("value") FROM "m" WHERE time > now()-1h""")
-    assert(raw.asInstanceOf[InfluxQL.Select].req.transformFunction == "difference")
+    assert(raw.asInstanceOf[InfluxQL.Select].items ==
+      Seq(SelectItem("value", "", "difference")))
     // and a time bucket provides the axis for the aggregate form
     val bucketed = InfluxQL.parse(
       """SELECT difference(max("value")) FROM "m" GROUP BY time(1h)""")
-    assert(bucketed.asInstanceOf[InfluxQL.Select].req.dataFunction == "max")
+    assert(bucketed.asInstanceOf[InfluxQL.Select].items ==
+      Seq(SelectItem("value", "max", "difference")))
   }
 
   test("widened function namespace parses to the engine spellings (round 12)") {
     def sel(q: String): DataPointsRequest =
       InfluxQL.parse(q).asInstanceOf[InfluxQL.Select].req
+    def item(q: String): SelectItem =
+      InfluxQL.parse(q).asInstanceOf[InfluxQL.Select].items match {
+        case Seq(it) => it
+        case its => fail(s"expected one item, got: $its")
+      }
     // parameterized transforms carry their trailing arg
-    val d = sel("""SELECT derivative(mean("value"), 1h) FROM "m" GROUP BY time(10m)""")
+    val d = item("""SELECT derivative(mean("value"), 1h) FROM "m" GROUP BY time(10m)""")
     assert(d.dataFunction == "mean" && d.transformFunction == "derivative_1h")
-    val nn = sel("""SELECT non_negative_derivative(mean("value")) FROM "m" GROUP BY time(1h)""")
+    val nn = item("""SELECT non_negative_derivative(mean("value")) FROM "m" GROUP BY time(1h)""")
     assert(nn.transformFunction == "non_negative_derivative")
-    val ma = sel("""SELECT moving_average(mean("value"), 5) FROM "m" GROUP BY time(1h)""")
+    val ma = item("""SELECT moving_average(mean("value"), 5) FROM "m" GROUP BY time(1h)""")
     assert(ma.transformFunction == "moving_average_5")
-    val ema = sel("""SELECT exponential_moving_average(mean("value"), 3) FROM "m" GROUP BY time(1h)""")
+    val ema = item("""SELECT exponential_moving_average(mean("value"), 3) FROM "m" GROUP BY time(1h)""")
     assert(ema.transformFunction == "exponential_moving_average_3")
-    val ch = sel("""SELECT abs(derivative(mean("value"), 1m)) FROM "m" GROUP BY time(1h)""")
+    val ch = item("""SELECT abs(derivative(mean("value"), 1m)) FROM "m" GROUP BY time(1h)""")
     assert(ch.transformFunction == "derivative_1m,abs")
-    val cs = sel("""SELECT cumulative_sum(sum("value")) FROM "m" GROUP BY time(1d)""")
+    val cs = item("""SELECT cumulative_sum(sum("value")) FROM "m" GROUP BY time(1d)""")
     assert(cs.dataFunction == "sum" && cs.transformFunction == "cumulative_sum")
-    val el = sel("""SELECT elapsed("value", 1m) FROM "m" WHERE time > now()-1h""")
+    val el = item("""SELECT elapsed("value", 1m) FROM "m" WHERE time > now()-1h""")
     assert(el.dataFunction == "" && el.transformFunction == "elapsed_1m")
     // selectors / multi-pass aggregates
-    assert(sel("""SELECT top("value", 3) FROM "m" GROUP BY time(1d)""")
+    assert(item("""SELECT top("value", 3) FROM "m" GROUP BY time(1d)""")
       .dataFunction == "top_3")
-    assert(sel("""SELECT bottom("value", 2) FROM "m" GROUP BY time(1d)""")
+    assert(item("""SELECT bottom("value", 2) FROM "m" GROUP BY time(1d)""")
       .dataFunction == "bottom_2")
-    assert(sel("""SELECT integral("value", 1h) FROM "m" GROUP BY time(6h)""")
+    assert(item("""SELECT integral("value", 1h) FROM "m" GROUP BY time(6h)""")
       .dataFunction == "integral_1h")
-    assert(sel("""SELECT integral("value") FROM "m" GROUP BY time(6h)""")
+    assert(item("""SELECT integral("value") FROM "m" GROUP BY time(6h)""")
       .dataFunction == "integral")
-    assert(sel("""SELECT count(distinct("value")) FROM "m" GROUP BY time(1d)""")
+    assert(item("""SELECT count(distinct("value")) FROM "m" GROUP BY time(1d)""")
       .dataFunction == "count_distinct")
-    assert(sel("""SELECT mode("value") FROM "m" GROUP BY time(1d)""")
+    assert(item("""SELECT mode("value") FROM "m" GROUP BY time(1d)""")
       .dataFunction == "mode")
-    assert(sel("""SELECT distinct("value") FROM "m" GROUP BY time(1d)""")
+    assert(item("""SELECT distinct("value") FROM "m" GROUP BY time(1d)""")
       .dataFunction == "distinct")
     // scalar math wraps chain like abs does
-    assert(sel("""SELECT ceil(log10(sqrt(mean("value")))) FROM "m" GROUP BY time(6h)""")
+    assert(item("""SELECT ceil(log10(sqrt(mean("value")))) FROM "m" GROUP BY time(6h)""")
       .transformFunction == "sqrt,log10,ceil")
-    assert(sel("""SELECT pow(mean("value"), 2) FROM "m" GROUP BY time(6h)""")
+    assert(item("""SELECT pow(mean("value"), 2) FROM "m" GROUP BY time(6h)""")
       .transformFunction == "pow_2")
     // SELECT modifiers: the dashboard last-value idiom
     val lv = sel("""SELECT last("value") FROM "m" WHERE time > now()-1h GROUP BY time(1m) ORDER BY time DESC LIMIT 1""")
@@ -569,11 +585,10 @@ class InfluxQLSpec extends SparkSpec {
   }
 
   test("multi-field select list parses to items with InfluxDB column naming") {
-    import graft.model.SelectItem
     val ms = InfluxQL.parse(
       """SELECT mean("value") AS "m", max("value"), percentile("value", 95) """ +
         """FROM "x" WHERE time > now()-1h GROUP BY time(10m) FILL(none)""")
-      .asInstanceOf[InfluxQL.MultiSelect]
+      .asInstanceOf[InfluxQL.Select]
     assert(ms.items == Seq(
       SelectItem("value", "mean", alias = "m"),
       SelectItem("value", "max"),
@@ -588,7 +603,7 @@ class InfluxQLSpec extends SparkSpec {
       Seq("mean", "mean_1", "moving_average"))
     // a comma inside parens stays with its item; bare multi-field lists parse
     val bare = InfluxQL.parse("""SELECT "a", "b" FROM "x" LIMIT 5""")
-      .asInstanceOf[InfluxQL.MultiSelect]
+      .asInstanceOf[InfluxQL.Select]
     assert(bare.items == Seq(SelectItem("a"), SelectItem("b")) &&
       bare.req.limit == 5)
   }
@@ -705,8 +720,7 @@ class InfluxQLSpec extends SparkSpec {
     val rs = InfluxQL.parse(
       """SELECT mean("value") FROM /^sensor_/ WHERE time > now()-2h """ +
         """GROUP BY time(1h) FILL(none)""").asInstanceOf[InfluxQL.RegexSelect]
-    assert(rs.pattern == "^sensor_" &&
-      rs.sel.asInstanceOf[InfluxQL.Select].req.measurement == "__regex__")
+    assert(rs.pattern == "^sensor_" && rs.sel.req.measurement == "__regex__")
     val got = InfluxQL.dataPoints(
       """SELECT mean("value") FROM /^sensor_/ WHERE time > now()-2h """ +
         """GROUP BY time(1h) FILL(none)""",
