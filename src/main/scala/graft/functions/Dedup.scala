@@ -673,10 +673,8 @@ object Dedup {
     // appends land in the CURRENT generation; a fresh build writes the
     // legacy (generation-0) layout at the root
     val genRoot = if (append) currentGenRoot(fs, path) else path
-    if (append) { // writer context: heal a crashed compaction swap first
-      repairMinhashIndex(spark, path)
-      checkIndexParams(spark, genRoot, n, k, bands)
-    } else writeIndexMeta(spark, genRoot, n, k, bands)
+    if (append) checkIndexParams(spark, genRoot, n, k, bands)
+    else writeIndexMeta(spark, genRoot, n, k, bands)
     val mode = if (append) SaveMode.Append else SaveMode.Overwrite
     writeShingledToIndex(shingledDocs(docs, n, k, idCol, textCol), genRoot,
       k, bands, mode)
@@ -692,7 +690,6 @@ object Dedup {
   private[graft] def appendShingledToIndexBatch(sh: DataFrame, path: String,
       n: Int, k: Int, bands: Int, batchId: Long,
       writer: String = "dedup"): Boolean = {
-    repairMinhashIndex(sh.sparkSession, path) // writer context: safe to heal
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(sh.sparkSession.sparkContext.hadoopConfiguration)
     // resolved per batch: a rebuild between micro-batches moves the
@@ -785,87 +782,17 @@ object Dedup {
         s"got n=$n, k=$k, bands=$bands")
   }
 
-  /**
-   * Near-dup pairs between a new batch and the indexed corpus:
-   * (id_new, id_idx, jaccard ≥ threshold). The batch's banded rows join
-   * the bucket table (AQE broadcasts the batch side — the index streams
-   * through map-side, no index shuffle); surviving candidates verify
-   * with exact Jaccard against the stored shingle sets. Parameters must
-   * match the ones the index was built with.
-   */
-  /** True when an index has been built (or appended) at `path`. BOTH
-   *  table dirs must be live: a compaction crash inside either table's
-   *  swap window leaves that dir missing (its `.old` sibling holds the
-   *  data), and the read-path contract is that pure readers see such an
-   *  index as ABSENT — they must not repair (see [[repairMinhashIndex]])
-   *  and must not crash on the half-swapped layout. Checking only
-   *  `buckets/` would pass a crashed shingles swap straight into the
-   *  query's `shingles/` scan. */
+  /** True when an index has been built (or appended) at `path`: BOTH
+   *  table dirs of its current generation exist. Checking only
+   *  `buckets/` (the generation's presence witness) would pass an index
+   *  missing its `shingles/` table straight into the query's
+   *  `shingles/` scan. */
   def indexExists(spark: SparkSession, path: String): Boolean = {
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val genRoot = currentGenRoot(fs, path)
     Seq("buckets", "shingles").forall(t =>
       fs.exists(new org.apache.hadoop.fs.Path(s"$genRoot/$t")))
-  }
-
-  /**
-   * Self-heal after a [[compactMinhashIndex]] crash: a table whose live
-   * dir is missing but whose `.old` sibling survives is restored by
-   * renaming the sibling back (the swap's only non-atomic window — see
-   * the compaction scaladoc). MAINTAINER-ONLY, like the compaction
-   * itself: it mutates the layout, so it must never run from a read
-   * path — a reader repairing concurrently with the maintainer's swap
-   * would recreate the live dir between the swap's two renames and make
-   * the staged rename nest into it. The write paths
-   * ([[buildMinhashIndex]] append, the streaming micro-batch,
-   * [[compactMinhashIndex]]) call it on entry; pure readers see a
-   * crashed-swap index as absent until the maintainer's next call
-   * heals it. Two fs.exists when the index is healthy.
-   */
-  def repairMinhashIndex(spark: SparkSession, path: String): Unit =
-    repairIndex(new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration), path)
-
-  private def repairIndex(fs: org.apache.hadoop.fs.FileSystem, path: String): Unit =
-    Seq("buckets", "shingles").foreach { t =>
-      // legacy whole-table swap heal (indexes compacted by the pre-fold
-      // protocol): restore a live dir from its `.old` sibling
-      val live = new org.apache.hadoop.fs.Path(s"$path/$t")
-      val old = new org.apache.hadoop.fs.Path(s"$path/.$t.old")
-      if (!fs.exists(live) && fs.exists(old)) fs.rename(old, live)
-      healFold(fs, path, t)
-    }
-
-  private def foldManifest(path: String, t: String) =
-    new org.apache.hadoop.fs.Path(s"$path/._fold_$t")
-
-  /** Complete (or discard) a crashed [[compactMinhashIndex]] fold: the
-   *  fold's manifest is ROLL-FORWARD — written complete (ok-terminated)
-   *  BEFORE any file moves, it lists exactly the staged→live renames
-   *  and the folded source deletions, each idempotent, so replaying
-   *  them finishes the fold no matter where the crash hit. An
-   *  unterminated manifest means nothing moved yet: discard it and the
-   *  staging. Maintainer-only, called from [[repairIndex]]. */
-  private def healFold(fs: org.apache.hadoop.fs.FileSystem, path: String,
-      t: String): Unit = {
-    val mp = foldManifest(path, t)
-    if (!fs.exists(mp)) return
-    val in = fs.open(mp)
-    val text = try new String(in.readAllBytes(), "UTF-8") finally in.close()
-    if (text.endsWith("ok\n")) text.linesIterator.foreach { l =>
-      if (l.startsWith("mv\t")) {
-        val Array(_, s, d) = l.split("\t", 3)
-        val sp = new org.apache.hadoop.fs.Path(s)
-        val dp = new org.apache.hadoop.fs.Path(d)
-        if (fs.exists(sp)) {
-          if (fs.exists(dp)) fs.delete(sp, false) else fs.rename(sp, dp)
-        }
-      } else if (l.startsWith("rm\t"))
-        fs.delete(new org.apache.hadoop.fs.Path(l.split("\t", 2)(1)), false)
-    }
-    fs.delete(mp, false)
-    fs.delete(new org.apache.hadoop.fs.Path(s"$path/.compact/$t"), true)
   }
 
   /** The generation root a reader (at `asOf`, or now) must serve —
@@ -984,7 +911,6 @@ object Dedup {
       minFiles: Int = 4, retainHistory: Boolean = false): (Int, Int) = {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    repairIndex(fs, path) // legacy pre-manifest layouts only
     val genRoot = currentGenRoot(fs, path)
     require(fs.exists(new org.apache.hadoop.fs.Path(s"$genRoot/buckets")),
       s"no MinHash index at $path")
@@ -1048,7 +974,6 @@ object Dedup {
     require(ids.nonEmpty, "empty erase set")
     val rootP = new org.apache.hadoop.fs.Path(path)
     val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    repairIndex(fs, path) // legacy pre-manifest layouts only
     // erasure destroys as-of history by CONTRACT: fold the ledger now
     graft.store.StagedBatchAppend.foldAllMarkers(spark, path)
     val committed = graft.store.BatchLedger.read(fs, rootP)
@@ -1146,6 +1071,14 @@ object Dedup {
       legacyDirs = Seq("buckets", "shingles", "_index_meta"))
   }
 
+  /**
+   * Near-dup pairs between a new batch and the indexed corpus:
+   * (id_new, id_idx, jaccard ≥ threshold). The batch's banded rows join
+   * the bucket table (AQE broadcasts the batch side — the index streams
+   * through map-side, no index shuffle); surviving candidates verify
+   * with exact Jaccard against the stored shingle sets. Parameters must
+   * match the ones the index was built with.
+   */
   def queryMinhashIndex(spark: SparkSession, newDocs: DataFrame, path: String,
       n: Int = 3, k: Int = 64, bands: Int = 16, threshold: Double = 0.8,
       idCol: String = "doc_id", textCol: String = "text",

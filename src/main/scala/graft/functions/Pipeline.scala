@@ -262,11 +262,6 @@ object Pipeline {
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
         val spark = batch.sparkSession
-        // This stream is the index's single maintainer: heal a crashed
-        // compaction swap BEFORE querying, so a restart that interrupted
-        // compactEvery's rename pair still dedups this batch against the
-        // full history (readers outside the maintainer never repair).
-        Dedup.repairMinhashIndex(spark, indexPath)
         // Shingles+signatures are the batch's dominant derived cost:
         // compute them ONCE (Dedup.shingledDocs), persist, and share the
         // result across all three consumers — intra-batch pair

@@ -38,64 +38,50 @@ object Similarity {
     when(na > 0 && nb > 0, expressions.VectorExpressions.dot(va, vb) / (na * nb))
       .otherwise(lit(0.0))
 
-  /** One collected centroid: id literal, vector as a plan literal (the
-   *  exact stored float/double array), its precomputed norm, and the
-   *  raw vector widened to double (exact for float sources — feeds the
-   *  [[expressions.CentroidTopK]] matrix on the large-k path). */
-  private[graft] final case class CentroidLit(id: Column, vec: Column, norm: Double,
-      raw: Array[Double])
+  /** A collected centroid table, in ascending-id order: the ids as one
+   *  typed array literal, the vectors widened to double (exact for float
+   *  sources) and laid end to end in `flat`, centroid i spanning
+   *  `offsets(i) until offsets(i + 1)`, and the precomputed norms. */
+  private[graft] final case class Centroids(ids: Column, flat: Array[Double],
+      offsets: Array[Int], norms: Array[Double]) {
+    def isEmpty: Boolean = norms.isEmpty
+    /** The centroid id at 1-based position `pos` (a CentroidTopK `pos`). */
+    def idAt(pos: Column): Column = element_at(ids, pos)
+  }
 
-  /** k-threshold between the two shuffle-free argmax formulations
-   *  (VERDICT-r16 ask #3): at or below it, the score array is unrolled
-   *  into k literal subtrees (fixture-scale winner — zero indirection,
-   *  fully codegen'd per pair); above it, the centroid matrix moves
-   *  into ONE [[expressions.CentroidTopK]] node whose per-row cost is a
-   *  tight JVM loop — the unrolled plan's analysis/codegen cost grows
-   *  linearly in k and falls off a cliff near the Janino 64KB/constant-
-   *  pool limits. The crossover has not been measured: the default of
-   *  128 is a guess below the cliff, and `graft.ArgmaxKProbe` is the
-   *  tool that would measure it. Env/sysprop-tunable so a
-   *  deployment can move it and the equivalence suite can force either
-   *  path; results are bit-identical by construction on both sides. */
-  private[graft] def argmaxLiteralMaxK: Int =
-    sys.props.get("graft.argmax.literal.maxk")
-      .orElse(sys.env.get("SPARK_GRAFT_ARGMAX_LITERAL_MAX_K"))
-      .map(_.toInt).getOrElse(128)
-
-  /** Per-JVM cache of collected centroid literal sets for PERSISTED
-   *  indexes, keyed by the centroids directory's content signature
-   *  (path + sorted data-file (name, length, mtime) triples — an FS
-   *  listing, no Spark job). The centroid table of a live index is
-   *  IMMUTABLE between generations (appends never touch it; a rebuild
-   *  publishes a NEW generation dir; an in-place re-build rewrites the
-   *  files, changing the signature), so the streaming append and the
-   *  query paths stop paying one collect job per micro-batch / per
-   *  probe against the same generation — at scale each of those jobs
-   *  is a driver round-trip (VERDICT-r16 ask #9). This caches INPUT
-   *  METADATA within one JVM, never operator output: a fresh run
-   *  builds its index under a fresh path and collects once. Bounded
-   *  least-recently-used (64 entries), so a generation that live
+  /** Per-JVM cache of collected centroid tables for PERSISTED indexes,
+   *  keyed by the centroids directory's content signature (path +
+   *  sorted data-file (name, length, mtime) triples — an FS listing, no
+   *  Spark job). The centroid table of a live index is IMMUTABLE between
+   *  generations (appends never touch it; a rebuild publishes a NEW
+   *  generation dir; an in-place re-build rewrites the files, changing
+   *  the signature), so the streaming append and the query paths stop
+   *  paying one collect job per micro-batch / per probe against the same
+   *  generation — at scale each of those jobs is a driver round-trip.
+   *  This caches INPUT METADATA within one JVM, never operator output: a
+   *  fresh run builds its index under a fresh path and collects once.
+   *  Bounded least-recently-used (64 entries), so a generation that live
    *  streams keep reading stays cached however many others pass
    *  through. */
-  private val centroidLitCache =
-    new java.util.LinkedHashMap[String, Seq[CentroidLit]](16, 0.75f, true) {
+  private val centroidCache =
+    new java.util.LinkedHashMap[String, Centroids](16, 0.75f, true) {
       override def removeEldestEntry(
-          e: java.util.Map.Entry[String, Seq[CentroidLit]]): Boolean = size > 64
+          e: java.util.Map.Entry[String, Centroids]): Boolean = size > 64
     }
 
-  /** The cached literals under `sig`, collecting them on a miss. The
-   *  collect runs outside the lock, so a slow one never blocks probes of
-   *  other generations; two racing misses on one signature may both
-   *  collect, and the later put wins. */
-  private[graft] def centroidLits(sig: String)(collect: => Seq[CentroidLit]): Seq[CentroidLit] =
-    Option(centroidLitCache.synchronized(centroidLitCache.get(sig))).getOrElse {
-      val lits = collect
-      centroidLitCache.synchronized(centroidLitCache.put(sig, lits))
-      lits
+  /** The cached table under `sig`, collecting it on a miss. The collect
+   *  runs outside the lock, so a slow one never blocks probes of other
+   *  generations; two racing misses on one signature may both collect,
+   *  and the later put wins. */
+  private[graft] def cachedCentroids(sig: String)(collect: => Centroids): Centroids =
+    Option(centroidCache.synchronized(centroidCache.get(sig))).getOrElse {
+      val cents = collect
+      centroidCache.synchronized(centroidCache.put(sig, cents))
+      cents
     }
 
-  private def cachedCentroidLits(spark: org.apache.spark.sql.SparkSession,
-      dir: String): Seq[CentroidLit] = {
+  private def indexCentroids(spark: org.apache.spark.sql.SparkSession,
+      dir: String): Centroids = {
     val p = new org.apache.hadoop.fs.Path(dir)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val sig = fs.listStatus(p).toSeq
@@ -103,133 +89,65 @@ object Similarity {
       .sortBy(_.getPath.getName)
       .map(f => s"${f.getPath.getName}:${f.getLen}:${f.getModificationTime}")
       .mkString(s"$dir|", ",", "")
-    centroidLits(sig)(
-      collectCentroidLits(spark.read.parquet(dir),
-        "list_id", "centroid", "ncent"))
-  }
-
-  /** The large-k path needs one flat matrix — usable only when every
-   *  centroid vector has the same length (always true for real indexes;
-   *  a ragged table falls back to the literal path, which handles
-   *  per-pair lengths). */
-  private def uniformDims(cents: Seq[CentroidLit]): Boolean =
-    cents.nonEmpty && cents.forall(_.raw.length == cents.head.raw.length)
-
-  private def useTopKExpr(cents: Seq[CentroidLit]): Boolean =
-    cents.size > argmaxLiteralMaxK && uniformDims(cents)
-
-  private def topKExpr(vec: Column, norm: Column, cents: Seq[CentroidLit],
-      n: Int, portable: Boolean): Column = {
-    val dims = cents.head.raw.length
-    val flat = new Array[Double](cents.size * dims)
-    val norms = new Array[Double](cents.size)
-    cents.zipWithIndex.foreach { case (c, i) =>
-      System.arraycopy(c.raw, 0, flat, i * dims, dims)
-      norms(i) = c.norm
-    }
-    expressions.VectorExpressions.centroidTopK(vec, norm, flat, norms,
-      dims, n, roundScores = portable)
+    cachedCentroids(sig)(
+      collectCentroids(spark.read.parquet(dir), "list_id", "centroid", "ncent"))
   }
 
   /** Collect a centroid table (k rows — tiny by construction) to the
-   *  driver in ascending-id order. The nearest-centroid argmax and the
-   *  probe routing unroll these into per-row literal projections, so
-   *  the corpus/query side is never crossJoin-multiplied ×k and never
-   *  shuffled through a `Window.partitionBy(id)` rank — the Exchange +
-   *  Sort the old formulation paid per assignment is REMOVED, not
-   *  resized (optimization guide §2.4). The collect is metadata-bounded
+   *  driver in ascending-id order, as the matrix one
+   *  [[expressions.CentroidTopK]] node holds. The nearest-centroid argmax
+   *  and the probe routing then run per row, so the corpus/query side is
+   *  never crossJoin-multiplied ×k and never shuffled through a
+   *  `Window.partitionBy(id)` rank. The collect is metadata-bounded
    *  (k rows), the same class as [[queryIvfIndex]]'s probed-list
-   *  collect; ascending-id order makes first-max ties resolve to the
-   *  smallest id exactly like the old `row_number` over
-   *  (score desc, id asc). */
-  private def collectCentroidLits(centroids: DataFrame, idCol: String,
-      vecCol: String, normCol: String): Seq[CentroidLit] = {
+   *  collect; ascending-id order makes ties resolve to the smallest id
+   *  exactly like the old `row_number` over (score desc, id asc). */
+  private def collectCentroids(centroids: DataFrame, idCol: String,
+      vecCol: String, normCol: String): Centroids = {
     import org.apache.spark.sql.catalyst.expressions.{Literal => CatLit}
+    import org.apache.spark.sql.types.ArrayType
     val projected = centroids.select(col(idCol), col(vecCol),
       col(normCol).cast("double")).orderBy(col(idCol))
-    val idType = projected.schema.head.dataType
-    val vecType = projected.schema(1).dataType
-    projected.collect().toSeq.map { r =>
-      CentroidLit(
-        org.apache.spark.sql.GraftBridge.column(CatLit.create(r.get(0), idType)),
-        org.apache.spark.sql.GraftBridge.column(CatLit.create(r.get(1), vecType)),
-        r.getDouble(2),
-        // widened-to-double copy (exact for floats) for the large-k
-        // matrix path; k rows × dims doubles, same order as the literal
-        r.getSeq[Any](1).map {
-          case f: java.lang.Float => f.toDouble
-          case d: java.lang.Double => d.doubleValue
-          case x: Number => x.doubleValue
-        }.toArray)
-    }
+    val rows = projected.collect().toSeq
+    val ids = rows.map(_.get(0))
+    val vecs = rows.map(_.getSeq[Any](1).map {
+      case f: java.lang.Float => f.toDouble
+      case d: java.lang.Double => d.doubleValue
+      case x: Number => x.doubleValue
+    })
+    Centroids(
+      org.apache.spark.sql.GraftBridge.column(CatLit.create(ids,
+        ArrayType(projected.schema.head.dataType, ids.contains(null)))),
+      vecs.flatten.toArray, vecs.scanLeft(0)(_ + _.length).toArray,
+      rows.map(_.getDouble(2)).toArray)
   }
 
-  /** scores[i] = cosine(row vector, centroid i), the SAME per-pair
-   *  arithmetic as the crossJoin formulation (native dot over
-   *  precomputed norms, 0.0 on a zero norm; `portable` rounds to 6 dp
-   *  before the argmax). One codegen'd array projection per row. */
-  private def centroidScores(vec: Column, norm: Column,
-      cents: Seq[CentroidLit], portable: Boolean): Column =
-    array(cents.map { c =>
-      val raw = cosineWithNorms(vec, c.vec, norm, lit(c.norm))
-      if (portable) round(raw, 6) else raw
-    }: _*)
+  /** The `n` nearest centroids of each row: array<struct<pos, s>> in
+   *  (s desc, pos asc) order, from one [[expressions.CentroidTopK]]
+   *  node. Scores are the crossJoin formulation's per-pair cosine
+   *  (native dot over precomputed norms, 0.0 on a zero norm);
+   *  `portable` rounds them to 6 dp before the selection. */
+  private def topK(vec: Column, norm: Column, cents: Centroids, n: Int,
+      portable: Boolean): Column =
+    expressions.VectorExpressions.centroidTopK(vec, norm, cents.flat,
+      cents.offsets, cents.norms, n, roundScores = portable)
 
-  /** (nearest centroid id, its score) as two pure projections:
-   *  first-position argmax over the literal score array. Runtime
-   *  subexpression elimination computes the score array once per row.
-   *  Tie-break ≡ the old window's (score desc, id asc): `array_max`
-   *  picks the greatest score and `array_position` its FIRST holder,
-   *  which in ascending-id order is the smallest id. Both use Spark's
-   *  SQL double order (NaN greatest, -0.0 equal to 0.0), which
-   *  [[expressions.CentroidTopK]] shares. */
-  private def argmaxCentroid(vec: Column, norm: Column,
-      cents: Seq[CentroidLit], portable: Boolean): (Column, Column) = {
-    if (useTopKExpr(cents)) {
-      // large k: the matrix lives in ONE CentroidTopK node; the id
-      // recovery stays a (constant-folded) literal-array lookup
-      val top1 = element_at(topKExpr(vec, norm, cents, 1, portable), 1)
-      (element_at(array(cents.map(_.id): _*), top1.getField("pos")),
-        top1.getField("s"))
-    } else {
-      val scores = centroidScores(vec, norm, cents, portable)
-      val pos = array_position(scores, array_max(scores)).cast("int")
-      (element_at(array(cents.map(_.id): _*), pos), element_at(scores, pos))
-    }
-  }
+  /** The nearest centroid of each row as struct<pos, s>; its id is
+   *  `cents.idAt(pos)`. Tie-break ≡ the old window's (score desc,
+   *  id asc). */
+  private def argmaxCentroid(vec: Column, norm: Column, cents: Centroids,
+      portable: Boolean): Column =
+    element_at(topK(vec, norm, cents, 1, portable), 1)
 
   /** Explode each (query_id, qv, nq) row into its `nProbes` nearest
-   *  lists — the routing previously paid a ×k crossJoin plus an
-   *  Exchange + Sort (`row_number` over query_id); now a per-row sorted
-   *  slice of the k-element literal score array, no shuffle at all.
-   *  Comparator order ≡ the old window's (score desc, list_id asc). */
-  private def probeRoutes(q: DataFrame, cents: Seq[CentroidLit],
-      nProbes: Int): DataFrame = {
-    if (useTopKExpr(cents)) {
-      // large k: one CentroidTopK node does the score+select pass (s
-      // desc, pos asc ≡ id asc — the collect is ascending-id) instead
-      // of a k-struct literal array_sort per row
-      q.withColumn("_probe",
-          explode(topKExpr(col("qv"), col("nq"), cents, nProbes,
-            portable = false)))
-        .select(element_at(array(cents.map(_.id): _*),
-          col("_probe.pos")).as("list_id"), col("query_id"),
-          col("qv"), col("nq"))
-    } else {
-      val scored = array(cents.map(c =>
-        struct(cosineWithNorms(col("qv"), c.vec, col("nq"), lit(c.norm)).as("s"),
-          c.id.as("id"))): _*)
-      val cmp = (l: Column, r: Column) =>
-        when(l.getField("s") > r.getField("s"), -1)
-          .when(l.getField("s") < r.getField("s"), 1)
-          .when(l.getField("id") < r.getField("id"), -1)
-          .when(l.getField("id") > r.getField("id"), 1)
-          .otherwise(0)
-      q.withColumn("_probe", explode(slice(array_sort(scored, cmp), 1, nProbes)))
-        .select(col("_probe.id").as("list_id"), col("query_id"),
-          col("qv"), col("nq"))
-    }
-  }
+   *  lists, in the old window's (score desc, list_id asc) order, with no
+   *  shuffle. An empty centroid table routes no query. */
+  private def probeRoutes(q: DataFrame, cents: Centroids,
+      nProbes: Int): DataFrame =
+    q.withColumn("_probe",
+        explode(topK(col("qv"), col("nq"), cents, nProbes, portable = false)))
+      .select(cents.idAt(col("_probe.pos")).as("list_id"), col("query_id"),
+        col("qv"), col("nq"))
 
   /**
    * Exact near-duplicate pairs above a cosine threshold (brute force) —
@@ -383,10 +301,10 @@ object Similarity {
   private def assignToLists(corpusNormed: DataFrame, centroids: DataFrame,
       portable: Boolean = false): DataFrame =
     assignWithCents(corpusNormed,
-      collectCentroidLits(centroids, "list_id", "centroid", "ncent"), portable)
+      collectCentroids(centroids, "list_id", "centroid", "ncent"), portable)
 
   private def assignWithCents(corpusNormed: DataFrame,
-      cents: Seq[CentroidLit], portable: Boolean): DataFrame = {
+      cents: Centroids, portable: Boolean): DataFrame = {
     val extra = corpusNormed.columns.filterNot(Set("vec_id", "cv", "nc")).toSeq
     val outCols = (Seq("list_id", "vec_id", "cv", "nc") ++ extra).map(col)
     // portable: 6-dp-rounded argmax (ties by list_id), the
@@ -397,7 +315,8 @@ object Similarity {
         .filter(lit(false)).select(outCols: _*)
     else
       corpusNormed.withColumn("list_id",
-          argmaxCentroid(col("cv"), col("nc"), cents, portable)._1)
+          cents.idAt(argmaxCentroid(col("cv"), col("nc"), cents, portable)
+            .getField("pos")))
         .select(outCols: _*)
   }
 
@@ -407,7 +326,7 @@ object Similarity {
     // ONE plan-time collect serves the assignment argmax and the probe
     // routing (the table is k rows by construction; it was previously
     // broadcast-joined twice)
-    val cents = collectCentroidLits(centroidTable, "list_id", "centroid", "ncent")
+    val cents = collectCentroids(centroidTable, "list_id", "centroid", "ncent")
     val assigned = assignWithCents(corpusNormed, cents, portable = false)
     // route each query to its nProbes nearest lists
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
@@ -434,7 +353,7 @@ object Similarity {
    * k × dims longs, not rows × dims exploded tuples — and the micro-unit
    * sum makes the trained centroids independent of partition layout).
    * Each round's k-row centroid state is COLLECTED to the driver and
-   * re-enters the next assignment as plan literals ([[argmaxCentroid]]),
+   * re-enters the next assignment as the [[argmaxCentroid]] matrix,
    * so the iteration boundary is the collect itself: the plan never
    * deepens with `iters`, the per-round state has no executor lineage to
    * lose, and the old per-round localCheckpoint jobs are gone. Only the
@@ -465,17 +384,18 @@ object Similarity {
       .orderBy(col("_h"), col("vec_id")).limit(k)
       .select(col("vec_id").as("list_id"), col("cv").as("centroid"), col("nc").as("ncent"))
     for (_ <- 0 until iters) {
-      // assignment is the literal-centroid argmax projection — a pure
+      // assignment is the nearest-centroid argmax projection — a pure
       // map stage; the old crossJoin + row_number window shuffled and
       // sorted corpus×k rows per iteration (guide §2.4). The collect is
-      // the round boundary: k rows to the driver, literals back out.
-      val cents = collectCentroidLits(centroids, "list_id", "centroid", "ncent")
+      // the round boundary: k rows to the driver, one matrix back out.
+      val cents = collectCentroids(centroids, "list_id", "centroid", "ncent")
       val assigned = // cents empty (k collapsed to 0): stays empty, as before
         if (cents.isEmpty) c.filter(lit(false))
           .withColumn("list_id", lit(null).cast("long"))
           .select(col("list_id"), col("cv"))
         else c.withColumn("list_id",
-            argmaxCentroid(col("cv"), col("nc"), cents, portable)._1)
+            cents.idAt(argmaxCentroid(col("cv"), col("nc"), cents, portable)
+              .getField("pos")))
           .select(col("list_id"), col("cv"))
       centroids = assigned
         .groupBy(col("list_id"))
@@ -605,9 +525,6 @@ object Similarity {
     stream.writeStream.outputMode("append")
       .option("checkpointLocation", checkpoint)
       .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        // this stream is the index's single maintainer: heal a crashed
-        // compaction swap before touching the layout
-        healIvfLists(batch.sparkSession, path)
         if (!batch.isEmpty)
           appendIvfBatch(batch, path, batchId, writer, idCol, vecCol): Unit
         if (compactEvery > 0 && (batchId + 1) % compactEvery == 0)
@@ -636,9 +553,9 @@ object Similarity {
       // frozen-centroid collect cached per generation signature: the
       // old per-batch read+collect was one fixed Spark job per
       // micro-batch against a table that cannot change under this
-      // stream (see [[cachedCentroidLits]])
+      // stream (see [[indexCentroids]])
       assignWithCents(indexRows(batch, idCol, vecCol),
-        cachedCentroidLits(batch.sparkSession, s"$genRoot/centroids"),
+        indexCentroids(batch.sparkSession, s"$genRoot/centroids"),
         portable)
         .repartition(col("list_id"))
         .write.partitionBy("list_id").parquet(s"$staging/lists")
@@ -698,29 +615,6 @@ object Similarity {
     graft.store.IndexGenerations.publish(fs, path, nextG, staging)
     if (!retainOld) graft.store.IndexGenerations.vacuumOld(fs, path,
       s"$path/_gen_$nextG", legacyDirs = Seq("lists", "centroids"))
-  }
-
-  /** Heal a [[compactIvfLists]] crash: a list partition whose live dir
-   *  is missing but whose `.old_lists/` sibling survives is restored;
-   *  a superseded `.old_lists/` entry whose live dir exists is deleted
-   *  (the swap completed, only the cleanup crashed). MAINTAINER-ONLY,
-   *  like [[Dedup.repairMinhashIndex]]: write paths call it on entry;
-   *  pure readers just see the momentarily absent list as empty. */
-  def healIvfLists(spark: org.apache.spark.sql.SparkSession, path: String): Unit = {
-    val oldRoot = new org.apache.hadoop.fs.Path(s"$path/.old_lists")
-    val fs = oldRoot.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(oldRoot)) return
-    fs.listStatus(oldRoot).foreach { e =>
-      val live = new org.apache.hadoop.fs.Path(s"$path/lists/${e.getPath.getName}")
-      // a restore rename that FAILS (returns false rather than throwing
-      // on some FileSystems) must abort the heal — the final delete of
-      // .old_lists below would otherwise destroy the only surviving
-      // copy of this list's rows
-      if (!fs.exists(live))
-        require(fs.rename(e.getPath, live), s"heal restore ${e.getPath} -> $live failed")
-      else fs.delete(e.getPath, true)
-    }
-    fs.delete(oldRoot, true)
   }
 
   // ----- index GENERATIONS (atomic rebuild, [[rebuildIvfIndex]]) ----- //
@@ -927,7 +821,6 @@ object Similarity {
     val genRoot = currentGenRoot(fs, path)
     val live = new org.apache.hadoop.fs.Path(s"$genRoot/lists")
     require(fs.exists(live), s"no IVF index at $path")
-    healIvfLists(spark, path) // legacy pre-manifest layouts only
     // maintainer context: keep the append ledger O(recent) too — unless
     // history is being retained for as-of pins (a marker fold would make
     // pins older than it fail, exactly what retainHistory defers)
@@ -1006,7 +899,6 @@ object Similarity {
     require(ids.nonEmpty, "empty erase set")
     val rootP = new org.apache.hadoop.fs.Path(path)
     val fs = rootP.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    healIvfLists(spark, path) // legacy pre-manifest layouts only
     // erasure destroys as-of history by CONTRACT: fold the ledger now —
     // committed batch files must stop being pin-resolvable raw history
     graft.store.StagedBatchAppend.foldAllMarkers(spark, path)
@@ -1053,7 +945,7 @@ object Similarity {
       asOf: Option[graft.store.AsOfPin] = None): DataFrame = {
     val genRoot = currentGenRoot(new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration), path, asOf)
-    val cents = cachedCentroidLits(spark, s"$genRoot/centroids")
+    val cents = indexCentroids(spark, s"$genRoot/centroids")
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
       .withColumn("nq", expressions.VectorExpressions.l2norm(col("qv")))
     val probes = probeRoutes(q, cents, nProbes)
@@ -1094,7 +986,7 @@ object Similarity {
       asOf: Option[graft.store.AsOfPin] = None): DataFrame = {
     val genRoot = currentGenRoot(new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration), path, asOf)
-    val cents = cachedCentroidLits(spark, s"$genRoot/centroids")
+    val cents = indexCentroids(spark, s"$genRoot/centroids")
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"))
       .withColumn("nq", expressions.VectorExpressions.l2norm(col("qv")))
     val probes = probeRoutes(q, cents, nProbes)
@@ -1312,22 +1204,19 @@ object Similarity {
       .withColumn("nv", expressions.VectorExpressions.l2norm(col("v")))
     val c = centroids.select(col(centIdCol).as("_cid"), col(centVecCol).as("_cv"))
       .withColumn("nc", expressions.VectorExpressions.l2norm(col("_cv")))
-    // the doc's "per-row argmax, the corpus never shuffles" promise,
-    // now literally true in the plan: the (small by construction)
-    // centroid table is collected once and unrolled into the
-    // [[argmaxCentroid]] projection — the old formulation crossJoined
-    // ×k and shuffled every row through a Window.partitionBy(vec_id)
-    // rank (guide §2.4); 6-dp rounding before the argmax and
-    // ascending-id tie-break are unchanged
-    val cents = collectCentroidLits(c, "_cid", "_cv", "nc")
+    // the (small by construction) centroid table is collected once into
+    // the [[argmaxCentroid]] projection, so the corpus is neither
+    // crossJoined ×k nor shuffled through a Window.partitionBy(vec_id)
+    // rank; 6-dp rounding before the argmax, ties to the smaller id
+    val cents = collectCentroids(c, "_cid", "_cv", "nc")
     if (cents.isEmpty)
       v.filter(lit(false)).select(col("vec_id"),
         lit(null).cast(centroids.schema(centIdCol).dataType).as("centroid_id"),
         lit(null).cast("double").as("sim"))
-    else {
-      val (bestId, bestSim) =
-        argmaxCentroid(col("v"), col("nv"), cents, portable = true)
-      v.select(col("vec_id"), bestId.as("centroid_id"), bestSim.as("sim"))
-    }
+    else // `_top` is its own projection, so the argmax runs once per row
+      v.withColumn("_top", argmaxCentroid(col("v"), col("nv"), cents,
+          portable = true))
+        .select(col("vec_id"), cents.idAt(col("_top.pos")).as("centroid_id"),
+          col("_top.s").as("sim"))
   }
 }

@@ -3,7 +3,8 @@ package graft.functions.expressions
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
-import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, CodegenFallback, ExprCode, FalseLiteral}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.{ArrayData, SQLOrderingUtil}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.GraftBridge
@@ -40,9 +41,10 @@ object VectorExpressions {
   def nfcNormalize(s: Column): Column =
     GraftBridge.column(NfcNormalize(GraftBridge.expression(s)))
   def centroidTopK(vec: Column, norm: Column, cents: Array[Double],
-      norms: Array[Double], dims: Int, n: Int, roundScores: Boolean): Column =
+      offsets: Array[Int], norms: Array[Double], n: Int,
+      roundScores: Boolean): Column =
     GraftBridge.column(CentroidTopK(GraftBridge.expression(vec),
-      GraftBridge.expression(norm), cents, norms, dims, n, roundScores))
+      GraftBridge.expression(norm), cents, offsets, norms, n, roundScores))
   def tokenStats(tokens: Column, stopwords: Seq[String]): Column =
     GraftBridge.column(TokenStats(GraftBridge.expression(tokens), stopwords))
   def repetitionStats(text: Column): Column =
@@ -694,43 +696,44 @@ case class MinHashSignature(child: Expression, k: Int)
 }
 
 /**
- * Top-`n` nearest centroids of a vector — ONE expression node holding
- * the centroid matrix as instance state, the LARGE-k twin of the
- * unrolled literal score-array formulation in
- * [[graft.functions.Similarity]]: that shape embeds k centroid vectors
- * as k separate literal subtrees (k DotProduct nodes per row), which is
- * the round's fastest plan at fixture k (≤ a few hundred) but grows the
- * generated code and the plan itself linearly in k — past ~10³ lists
- * the projection risks codegen method/constant-pool limits and plan
- * (de)serialization starts to price per centroid. Here the matrix is a
- * flat `Array[Double]` serialized once with this node, the per-row work
- * is one tight JVM loop (k·dims multiply-adds + an n-slot insertion),
- * and codegen stays whole-stage via the [[TokenStats]] instance-call
- * idiom.
+ * Top-`n` nearest centroids of a vector: the one nearest-centroid kernel
+ * of [[graft.functions.Similarity]] (the IVF assignment and probe
+ * routing, k-means training, `assignToCentroids`), at every k. The
+ * centroid matrix is instance state: a flat `Array[Double]`, centroid c
+ * spanning `offsets(c) until offsets(c + 1)`, serialized once with this
+ * node and never in generated source. The per-row work is one tight
+ * JVM loop (k·dims multiply-adds + an n-slot insertion), and codegen
+ * stays whole-stage via the [[TokenStats]] instance-call idiom, so the
+ * generated method is the same size at every k. The unrolled
+ * per-centroid literal projection this replaced grew its largest
+ * generated method by about 240 bytes per centroid, past HotSpot's
+ * 8000-byte JIT limit (above which a method is never compiled) from
+ * about k = 33, and was slower at every k measured
+ * (plans/r17/argmax_k_probe.txt).
  *
  * Output: array<struct<pos int, s double>> of the min(n, k) best
  * centroids ordered by (s desc, pos asc), `pos` 1-BASED so
- * `element_at(idLiteralArray, pos)` recovers the centroid id directly.
- * Scoring is BIT-IDENTICAL to the literal path: each element widens to
- * double before multiplying (the [[DotProduct]] contract), the dot
- * runs over min(|vec|, dims) elements, zero norms score 0.0, and
- * `roundScores` applies the exact `round(_, 6)` HALF_UP arithmetic of
- * the portable mode BEFORE selection. Ties keep the earlier (smaller
- * pos ≡ smaller centroid id — the matrix is collected in ascending id
- * order) entry, matching both the literal argmax's first-max rule and
- * the probe-route comparator's (s desc, id asc).
+ * `element_at(idArray, pos)` recovers the centroid id directly.
+ * Scoring is the pairwise cosine over precomputed norms, bit for bit:
+ * each element widens to double before multiplying (the [[DotProduct]]
+ * contract), the dot runs over min(|vec|, |centroid|) elements, a zero
+ * (or null) norm and a null vector score 0.0, and `roundScores` applies
+ * the exact `round(_, 6)` HALF_UP arithmetic of the portable mode
+ * BEFORE selection. Ties keep the earlier (smaller pos ≡ smaller
+ * centroid id — the matrix is collected in ascending id order) entry,
+ * the crossJoin formulation's (score desc, id asc) `row_number` order.
  */
 case class CentroidTopK(vec: Expression, norm: Expression,
-    cents: Array[Double], norms: Array[Double], dims: Int,
+    cents: Array[Double], offsets: Array[Int], norms: Array[Double],
     n: Int, roundScores: Boolean) extends BinaryExpression {
   require(n >= 1, "n must be >= 1")
-  require(norms.length * dims == cents.length,
-    s"centroid matrix shape mismatch: ${cents.length} values for " +
-      s"${norms.length} centroids x $dims dims")
+  require(offsets.length == norms.length + 1 && offsets.last == cents.length,
+    s"centroid matrix shape mismatch: ${cents.length} values, " +
+      s"${offsets.length} offsets for ${norms.length} centroids")
 
   override def left: Expression = vec
   override def right: Expression = norm
-  override def nullIntolerant: Boolean = true
+  override def nullable: Boolean = false
   override def dataType: DataType = ArrayType(StructType(Seq(
     StructField("pos", IntegerType, nullable = false),
     StructField("s", DoubleType, nullable = false))), containsNull = false)
@@ -744,18 +747,21 @@ case class CentroidTopK(vec: Expression, norm: Expression,
     }
 
   private val k = norms.length
+  private val maxDims = (0 until k).map(c => offsets(c + 1) - offsets(c))
+    .foldLeft(0)(math.max)
   @transient private lazy val isFloat = vec.dataType match {
     case ArrayType(FloatType, _) => true
     case _ => false
   }
 
+  /** `v` may be null: it then scores 0.0 everywhere, as a zero norm does
+   *  (callers pass `nv` = 0.0 for it). */
   def compute(v: ArrayData, nv: Double): ArrayData = {
-    val d = math.min(dims, v.numElements())
     val m = math.min(n, k)
     // the query vector widened ONCE (not once per centroid)
-    val q = new Array[Double](d)
+    val q = new Array[Double](if (v == null) 0 else math.min(maxDims, v.numElements()))
     var i = 0
-    while (i < d) {
+    while (i < q.length) {
       q(i) = if (isFloat) v.getFloat(i).toDouble else v.getDouble(i)
       i += 1
     }
@@ -768,7 +774,8 @@ case class CentroidTopK(vec: Expression, norm: Expression,
       var s = 0.0
       if (nv > 0 && cn > 0) {
         var dot = 0.0
-        val off = c * dims
+        val off = offsets(c)
+        val d = math.min(q.length, offsets(c + 1) - off)
         i = 0
         while (i < d) { dot += q(i) * cents(off + i); i += 1 }
         s = dot / (nv * cn)
@@ -796,8 +803,11 @@ case class CentroidTopK(vec: Expression, norm: Expression,
     new org.apache.spark.sql.catalyst.util.GenericArrayData(out)
   }
 
-  override def nullSafeEval(l: Any, r: Any): Any =
-    compute(l.asInstanceOf[ArrayData], r.asInstanceOf[Double])
+  override def eval(input: InternalRow): Any = {
+    val v = vec.eval(input).asInstanceOf[ArrayData]
+    val nv = norm.eval(input)
+    compute(v, if (v == null || nv == null) 0.0 else nv.asInstanceOf[Double])
+  }
 
   // codegen via an instance call (the TokenStats idiom): the stage stays
   // whole-stage-compiled and the matrix lives in ONE referenced object,
@@ -805,7 +815,14 @@ case class CentroidTopK(vec: Expression, norm: Expression,
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
     val ref = ctx.addReferenceObj("centroidTopK", this,
       classOf[CentroidTopK].getName)
-    nullSafeCodeGen(ctx, ev, (v, nv) => s"${ev.value} = $ref.compute($v, $nv);")
+    val v = vec.genCode(ctx)
+    val nv = norm.genCode(ctx)
+    ev.copy(code = code"""
+      ${v.code}
+      ${nv.code}
+      ArrayData ${ev.value} = $ref.compute(${v.isNull} ? null : ${v.value},
+        ${v.isNull} || ${nv.isNull} ? 0.0 : ${nv.value});""",
+      isNull = FalseLiteral)
   }
 
   override protected def withNewChildrenInternal(l: Expression, r: Expression): Expression =

@@ -70,14 +70,13 @@ object IngestPipeline {
    * [[TierStore.writeRoutedBatch]], whose ledger-gated batch files make
    * the post-crash replay of the last uncommitted batch idempotent —
    * strictly better than both at-least-once appends and the reference's
-   * drop-on-error batches (SURVEY.md §2.8). The ledger namespace
-   * defaults to [[writerId]] of the checkpoint; pass `writer` to pin it
-   * explicitly (it must then be unique per checkpoint within the store).
+   * drop-on-error batches (SURVEY.md §2.8). The ledger namespace is
+   * [[writerId]] of the checkpoint.
    */
   def runStream(events: DataFrame, config: ProcessConfig,
       metadata: Option[DataFrame], store: TierStore,
-      checkpoint: String, writer: String = ""): StreamingQuery = {
-    val w = if (writer.nonEmpty) writer else writerId(checkpoint)
+      checkpoint: String): StreamingQuery = {
+    val w = writerId(checkpoint)
     transform(events, config, metadata)
       .writeStream
       .outputMode("append")
@@ -95,11 +94,12 @@ object IngestPipeline {
    * in the standing streaming plan; enrichment + transform run per
    * micro-batch inside foreachBatch against `provider.current()`, so
    * metadata edits land on the next batch without restarting the query.
+   * The ledger namespace is [[writerId]] of the checkpoint.
    */
   def runStreamRefreshable(events: DataFrame, config: ProcessConfig,
       provider: MetadataStore.Provider, store: TierStore,
-      checkpoint: String, writer: String = ""): StreamingQuery = {
-    val w = if (writer.nonEmpty) writer else writerId(checkpoint)
+      checkpoint: String): StreamingQuery = {
+    val w = writerId(checkpoint)
     selectAndFilter(events, config)
       .writeStream
       .outputMode("append")

@@ -2,22 +2,27 @@ package graft
 
 import scala.jdk.CollectionConverters._
 
+import graft.functions.Similarity
+import graft.functions.expressions.{VectorAggregates, VectorExpressions}
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /**
  * Round-17 optimization pins:
- *  - the literal-centroid argmax and the large-k [[graft.functions
- *    .expressions.CentroidTopK]] matrix path are BIT-IDENTICAL — same
- *    assignments, same scores (portable rounding included), same
- *    tie-breaks (duplicate centroids, zero norms, zero vectors);
+ *  - the one nearest-centroid kernel ([[graft.functions.expressions
+ *    .CentroidTopK]]) answers exactly what the original crossJoin +
+ *    `row_number` formulation answers — same assignments, same scores
+ *    (portable rounding included), same tie-breaks (duplicate centroids,
+ *    zero norms, zero and null vectors), over ragged and empty centroid
+ *    tables and at k = 64;
  *  - streamingIvfAppend refuses a degenerate index whose centroids
  *    parquet exists but holds zero rows (ADVICE-r16: a length-only FS
  *    check would accept it and silently drop every streamed vector),
  *    and names the file when a centroids parquet is unreadable;
  *  - CentroidTopK ranks NaN and signed-zero scores in array_max's order;
- *  - the centroid literal cache is a bounded LRU, not a clear-at-64 map.
+ *  - the collected-centroid cache is a bounded LRU, not a clear-at-64 map.
  */
 class Round17Spec extends SparkSpec {
 
@@ -56,49 +61,141 @@ class Round17Spec extends SparkSpec {
           nullable = false))))
   }
 
-  private def withMaxK[T](k: Int)(body: => T): T = {
-    val old = sys.props.get("graft.argmax.literal.maxk")
-    sys.props("graft.argmax.literal.maxk") = k.toString
-    try body finally old match {
-      case Some(v) => sys.props("graft.argmax.literal.maxk") = v
-      case None => sys.props -= "graft.argmax.literal.maxk": Unit
-    }
-  }
-
   private def sortedRows(df: DataFrame): Seq[String] =
     df.collect().toSeq.map(_.toString).sorted
 
-  test("assignToCentroids: CentroidTopK path ≡ literal path " +
-    "(portable rounding, duplicate-centroid ties, zero norms)") {
-    // 40 generic vectors plus one EXACTLY equal to the duplicated
-    // centroid vector — its cosine against ids 1 and 4 is identical by
-    // construction, forcing the tie-break on both paths
-    val tieRow = Seq(Row(99L, mk(8, 2)))
-    val v = vecs(40, 8, 0).unionAll(spark.createDataFrame(
-      spark.sparkContext.parallelize(tieRow, 1), vecs(1, 8, 0).schema))
-    val c = tieCents(8)
-    def run() = sortedRows(graft.functions.Similarity.assignToCentroids(
-      v, c, centIdCol = "group", centVecCol = "centroid"))
-    val literal = withMaxK(1000)(run())
-    val exprPath = withMaxK(0)(run())
-    assert(literal == exprPath)
-    // the tie: no assignment may land on id 4 — id 1 holds the SAME
-    // vector and must win every tie on both paths; vec 99 IS that
-    // vector, so the tie is provably exercised
-    assert(exprPath.forall(_.split(",")(1) != "4"))
-    assert(exprPath.exists(r => r.startsWith("[99,") &&
-      r.split(",")(1) == "1"))
+  /** The original nearest-centroid search: every row of `rows`
+   *  (rid, v) crossJoined with every centroid of `cents` (cid, c), ranked
+   *  per row by (score desc, cid asc); the first `n` survive as
+   *  (rid, cid, score). `portable` rounds the cosine to 6 dp before the
+   *  ranking. */
+  private def refNearest(rows: DataFrame, cents: DataFrame, n: Int,
+      portable: Boolean): DataFrame = {
+    val cos = Similarity.cosine(col("v"), col("c"))
+    val w = Window.partitionBy(col("rid")).orderBy(col("score").desc, col("cid").asc)
+    rows.crossJoin(cents)
+      .withColumn("score", if (portable) round(cos, 6) else cos)
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= n).select("rid", "cid", "score")
   }
 
-  test("ivfTopKTrained: CentroidTopK path ≡ literal path " +
+  private def asRows(df: DataFrame): DataFrame =
+    df.select(col("vec_id").as("rid"), col("embedding").as("v"))
+
+  private def asCents(df: DataFrame): DataFrame =
+    df.select(col("group").as("cid"), col("centroid").as("c"))
+
+  /** assignToCentroids over the reference search. */
+  private def refAssign(v: DataFrame, c: DataFrame): DataFrame =
+    refNearest(asRows(v), asCents(c), 1, portable = true)
+      .select(col("rid").as("vec_id"), col("cid").as("centroid_id"),
+        col("score").as("sim"))
+
+  /** trainCentroids (default mode) over the reference search, as (cid, c). */
+  private def refTrain(corpus: DataFrame, k: Int, iters: Int): DataFrame = {
+    val c = asRows(corpus)
+    var cents = c.orderBy(xxhash64(col("rid")), col("rid")).limit(k)
+      .select(col("rid").as("cid"), col("v").as("c"))
+    for (_ <- 0 until iters)
+      cents = refNearest(c, cents, 1, portable = false).join(c, "rid")
+        .groupBy(col("cid"))
+        .agg(VectorAggregates.vecSumQ6(col("v")).as("_s"), count(lit(1)).as("_n"))
+        .select(col("cid"), transform(col("_s"), x =>
+          x.cast("double") / lit(1e6) / col("_n")).as("c"))
+    cents
+  }
+
+  /** ivfTopKWith over the reference search, for centroids (cid, c). */
+  private def refIvf(corpus: DataFrame, cents: DataFrame, queries: DataFrame,
+      k: Int, nProbes: Int): DataFrame = {
+    val c = asRows(corpus)
+    val q = asRows(queries)
+    val assigned = refNearest(c, cents, 1, portable = false).join(c, "rid")
+      .select(col("cid"), col("rid").as("vec_id"), col("v").as("cv"))
+    val probes = refNearest(q, cents, nProbes, portable = false).join(q, "rid")
+      .select(col("cid"), col("rid").as("query_id"), col("v").as("qv"))
+    val w = Window.partitionBy(col("query_id"))
+      .orderBy(col("score").desc, col("vec_id").asc)
+    assigned.join(probes, "cid").filter(col("vec_id") =!= col("query_id"))
+      .withColumn("score", round(Similarity.cosine(col("qv"), col("cv")), 6))
+      .withColumn("rank", row_number().over(w))
+      .filter(col("rank") <= k)
+      .select(col("query_id"), col("vec_id"), col("score"), col("rank"))
+  }
+
+  private def normed(df: DataFrame): DataFrame =
+    df.select(col("vec_id"), col("embedding").as("cv"))
+      .withColumn("nc", VectorExpressions.l2norm(col("cv")))
+
+  private def listTable(cents: DataFrame): DataFrame =
+    cents.select(col("group").as("list_id"), col("centroid"),
+      VectorExpressions.l2norm(col("centroid")).as("ncent"))
+
+  test("assignToCentroids ≡ the crossJoin + row_number reference " +
+    "(portable rounding, duplicate-centroid ties, zero norms, null vector)") {
+    // 40 generic vectors, one EXACTLY equal to the duplicated centroid
+    // vector — its cosine against ids 1 and 4 is identical by
+    // construction, forcing the tie-break — and one null vector
+    val nullable = StructType(vecs(1, 8, 0).schema.map(_.copy(nullable = true)))
+    val v = vecs(40, 8, 0).unionAll(spark.createDataFrame(
+      spark.sparkContext.parallelize(Seq(Row(99L, mk(8, 2)), Row(98L, null)), 1),
+      nullable))
+    val c = tieCents(8)
+    val got = sortedRows(Similarity.assignToCentroids(v, c,
+      centIdCol = "group", centVecCol = "centroid"))
+    assert(got == sortedRows(refAssign(v, c)))
+    // the tie: no assignment may land on id 4 — id 1 holds the SAME
+    // vector and must win every tie; vec 99 IS that vector, so the tie
+    // is provably exercised
+    assert(got.forall(_.split(",")(1) != "4"))
+    assert(got.contains("[99,1,1.0]"))
+    // a null vector scores 0.0 everywhere: the smallest id, as the
+    // zero-norm guard of the pairwise cosine answers
+    assert(got.contains("[98,0,0.0]"))
+  }
+
+  test("ivfTopKTrained ≡ the crossJoin + row_number reference " +
     "(trainCentroids + probe routing + assignment end to end)") {
     val corpus = vecs(60, 8, 2)
     val queries = vecs(5, 8, 7)
-    def run() = sortedRows(graft.functions.Similarity.ivfTopKTrained(
+    val got = sortedRows(Similarity.ivfTopKTrained(
       corpus, queries, k = 3, nLists = 5, nProbes = 2, trainIters = 2))
-    val literal = withMaxK(1000)(run())
-    val exprPath = withMaxK(0)(run())
-    assert(literal.nonEmpty && literal == exprPath)
+    assert(got.nonEmpty && got == sortedRows(refIvf(corpus,
+      refTrain(corpus, k = 5, iters = 2), queries, k = 3, nProbes = 2)))
+  }
+
+  test("a ragged centroid table scores over min(|v|, |c|), as the " +
+    "pairwise cosine does") {
+    val c = spark.createDataFrame(spark.sparkContext.parallelize(
+      Seq(5, 8, 12, 3, 8).zipWithIndex.map { case (d, i) => Row(i.toLong, mk(d, i + 1)) }, 2),
+      tieCents(8).schema)
+    // vectors of 8 and of 6 dims against centroids of 3 to 12
+    val v = vecs(30, 8, 1).unionAll(vecs(10, 6, 3).withColumn("vec_id", col("vec_id") + 100))
+    assert(sortedRows(Similarity.assignToCentroids(v, c,
+      centIdCol = "group", centVecCol = "centroid")) == sortedRows(refAssign(v, c)))
+    assert(sortedRows(Similarity.ivfTopKWith(normed(v), listTable(c), v,
+      k = 3, nProbes = 2)) == sortedRows(refIvf(v, asCents(c), v, k = 3, nProbes = 2)))
+  }
+
+  test("an empty centroid table answers no rows") {
+    val c = tieCents(8).filter(col("group") < 0)
+    val v = vecs(10, 8, 0)
+    val assigned = Similarity.assignToCentroids(v, c,
+      centIdCol = "group", centVecCol = "centroid")
+    assert(assigned.schema.map(f => (f.name, f.dataType)) == Seq(
+      ("vec_id", LongType), ("centroid_id", LongType), ("sim", DoubleType)))
+    assert(assigned.isEmpty)
+    assert(Similarity.ivfTopKWith(normed(v), listTable(c), v, k = 3, nProbes = 2).isEmpty)
+  }
+
+  test("at k = 64, assignToCentroids and ivfTopKWith ≡ the reference") {
+    val c = vecs(64, 8, 5).select(col("vec_id").as("group"), col("embedding").as("centroid"))
+    val v = vecs(200, 8, 0)
+    assert(sortedRows(Similarity.assignToCentroids(v, c)) == sortedRows(refAssign(v, c)))
+    val queries = vecs(8, 8, 9)
+    val got = sortedRows(Similarity.ivfTopKWith(normed(v), listTable(c), queries,
+      k = 3, nProbes = 4))
+    assert(got.nonEmpty && got == sortedRows(refIvf(v, asCents(c), queries, k = 3, nProbes = 4)))
   }
 
   test("streamingIvfAppend refuses an index whose centroids parquet " +
@@ -154,7 +251,7 @@ class Round17Spec extends SparkSpec {
     val norms = Array(4.0, 0.0, 1.0, 1.0)
     def topK(k: Int, n: Int): Seq[(Int, Double)] = {
       val out = CentroidTopK(Literal.create(Array(1.0), ArrayType(DoubleType)),
-        Literal(1.0), cents.take(k), norms.take(k), dims = 1, n = n,
+        Literal(1.0), cents.take(k), (0 to k).toArray, norms.take(k), n = n,
         roundScores = false).eval()
         .asInstanceOf[org.apache.spark.sql.catalyst.util.ArrayData]
       (0 until out.numElements()).map { i =>
@@ -175,12 +272,13 @@ class Round17Spec extends SparkSpec {
   }
 
   test("the centroid literal cache keeps a hot entry through 65 further inserts") {
-    // centroidLitCache used to clear() itself once it held more than 64
-    // entries, dropping the generations live streams re-read every
+    // the centroid cache used to clear() itself once it held more than
+    // 64 entries, dropping the generations live streams re-read every
     // micro-batch
     val collected = scala.collection.mutable.Map.empty[String, Int].withDefaultValue(0)
-    def read(sig: String): Unit = graft.functions.Similarity.centroidLits(sig) {
-      collected(sig) += 1; Seq.empty
+    def read(sig: String): Unit = Similarity.cachedCentroids(sig) {
+      collected(sig) += 1
+      Similarity.Centroids(lit(null), Array.empty, Array(0), Array.empty)
     }
     read("lru-hot")
     (1 to 65).foreach { i => read(s"lru-cold$i"); read("lru-hot") }
