@@ -1,5 +1,6 @@
 package graft
 
+import graft.api.Cmd
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -211,20 +212,20 @@ object LargeScaleProbe {
       // (b) fixed 1-hour window at the span's end, full Api → planner →
       // listing-sliced store chain; cost must track the WINDOW
       val (bRows, bSec) = timed {
-        graft.api.Api.dispatch(ctx, "cmd.tsdb.get_data_points",
-          graft.api.Api.GetDataPointsRequest(measurementName = "app_click",
+        graft.api.Api.dispatch(ctx,
+          Cmd.GetDataPoints(Cmd.GetDataPointsRequest(measurementName = "app_click",
             dataFunction = "mean", relativeTime = "1h", groupByTime = "1m",
-            fillType = "none")).count()
+            fillType = "none"))).count()
       }
       report("tsdb_query_1h", n, bSec, s""","result_rows":$bRows""")
       // (c) full-span daily count — touches every date partition of the
       // measurement: the linear yardstick
       val (cRows, cSec) = timed {
-        graft.api.Api.dispatch(ctx, "cmd.tsdb.get_data_points",
-          graft.api.Api.GetDataPointsRequest(measurementName = "app_click",
+        graft.api.Api.dispatch(ctx,
+          Cmd.GetDataPoints(Cmd.GetDataPointsRequest(measurementName = "app_click",
             dataFunction = "count", fromTime = "2024-01-01T00:00:00Z",
             toTime = spanEnd.toString, groupByTime = "1d",
-            fillType = "none")).count()
+            fillType = "none"))).count()
       }
       report("tsdb_query_full", n, cSec, s""","result_rows":$cRows""")
     }

@@ -2,7 +2,7 @@ package graft
 
 import java.util.concurrent.CountDownLatch
 
-import graft.api.{Api, CommandCodec}
+import graft.api.{Api, Cmd, CommandCodec}
 import graft.ingest.IngestPipeline
 import graft.model.{ProcessConfig, Selector}
 import graft.sources.StreamSource
@@ -128,11 +128,10 @@ final class Service(val spark: SparkSession, conf: Service.Config) {
    *  manual `cmd.tsdb.run_maintenance` would do — plus the transport's
    *  own housekeeping ([[sweepCommandDir]]). */
   def maintenanceCycle(): Unit = dispatchLock.synchronized {
-    Api.dispatch(ctx, "cmd.tsdb.run_maintenance",
-      Api.MaintenanceRequest(procId = conf.procId,
-        sinceDays = conf.maintenanceSinceDays,
-        retainHistory = conf.retainHistory)).collect(): Unit
-    Api.dispatch(ctx, "cmd.ecprocess.check_storage", null).collect(): Unit
+    Api.dispatch(ctx, Cmd.MaintenanceRequest(procId = conf.procId,
+      sinceDays = conf.maintenanceSinceDays,
+      retainHistory = conf.retainHistory)).collect(): Unit
+    Api.dispatch(ctx, Cmd.CheckStorage).collect(): Unit
     reconcileIngest() // a disk alarm flips statuses — act on it now
     sweepCommandDir()
     cyclesDone += 1
@@ -181,33 +180,29 @@ final class Service(val spark: SparkSession, conf: Service.Config) {
       while (running && System.currentTimeMillis() < next) Thread.sleep(50)
     }
 
-  /** Commands whose result is a data-point Series (the reference's
-   *  Results document); everything else answers its rows as a JSON
-   *  array in an `evt.<command>_report` envelope. */
-  private val seriesShaped = Set("cmd.tsdb.get_data_points",
-    "cmd.tsdb.get_energy_data_points", "cmd.tsdb.query")
-
   /** Execute one command-envelope JSON and return the FIMP report the
-   *  transport writes back — also the in-process entry for tests. */
+   *  transport writes back — also the in-process entry for tests. A
+   *  [[Cmd.SeriesShaped]] command answers the reference's Results
+   *  document; everything else answers its rows as a JSON array in an
+   *  `evt.<command>_report` envelope. */
   def execute(json: String): String = dispatchLock.synchronized {
     val ctime = java.time.Instant.now().toString
     val uid = java.util.UUID.randomUUID().toString
     try {
       val cmd = CommandCodec.decode(json)
-      if (seriesShaped(cmd.msgType))
-        Api.dispatchFimp(ctx, cmd.msgType, cmd.payload, corid = cmd.uid,
-          uid = uid, ctime = ctime,
-          measurement = cmd.measurement, groupByTag = cmd.groupByTag)
-      else {
-        val reportType = cmd.msgType.replaceFirst("^cmd\\.", "evt.") + "_report"
-        val body =
-          try Api.dispatch(ctx, cmd.msgType, cmd.payload)
-            .toJSON.collect().mkString("[", ",", "]")
-          catch { case e: Exception =>
-            s"""{"error":${CommandCodec.q(e.getMessage)}}"""
-          }
-        Api.shapeFimpReport(body, corid = cmd.uid, uid = uid, ctime = ctime,
-          msgType = reportType)
+      cmd.payload match {
+        case series: Cmd.SeriesShaped =>
+          Api.dispatchFimp(ctx, series, corid = cmd.uid, uid = uid, ctime = ctime,
+            measurement = cmd.measurement, groupByTag = cmd.groupByTag)
+        case c =>
+          val reportType = c.wireType.replaceFirst("^cmd\\.", "evt.") + "_report"
+          val body =
+            try Api.dispatch(ctx, c).toJSON.collect().mkString("[", ",", "]")
+            catch { case e: Exception =>
+              s"""{"error":${CommandCodec.q(e.getMessage)}}"""
+            }
+          Api.shapeFimpReport(body, corid = cmd.uid, uid = uid, ctime = ctime,
+            msgType = reportType)
       }
     } catch { case e: Exception =>
       // a malformed envelope still answers on the wire (admin.go logs

@@ -2,6 +2,7 @@ package graft
 
 import java.time.Instant
 
+import graft.api.Cmd
 import graft.functions.{Dedup, Similarity, TextFunctions}
 import graft.ingest.{FilterCompiler, TopicMatch, Transform}
 import graft.meta.MetadataStore
@@ -493,17 +494,17 @@ object SparkEntry {
       val store = new graft.store.TierStore(s, root)
       store.writeRouted(points(s, dir, "app_"))
       val ctx = graft.api.Api.Context(s, store, now = () => Now)
-      graft.api.Api.dispatch(ctx, "cmd.tsdb.query",
-        """SELECT mean("value") INTO "gen_default"."click_hourly" FROM "app_click" """ +
+      graft.api.Api.dispatch(ctx,
+        Cmd.Query("""SELECT mean("value") INTO "gen_default"."click_hourly" FROM "app_click" """ +
           """WHERE time >= '2024-01-01T00:00:00Z' AND time <= '2024-01-31T00:00:00Z' """ +
-          """GROUP BY time(1h) FILL(none)""").collect()
+          """GROUP BY time(1h) FILL(none)""")).collect()
       // the +5e-10 nudge shifts the round-6 tie boundary identically in
       // both engines: replica-structured fixtures (sf1) produce means
       // landing EXACTLY on x.xxxxxx5, where the engines' last-ULP
       // summation differences would otherwise round to opposite sides
-      graft.api.Api.dispatch(ctx, "cmd.tsdb.query",
-        """SELECT "value" FROM "gen_default"."click_hourly" """ +
-          """WHERE time >= '2024-01-01T00:00:00Z' AND time <= '2024-01-31T00:00:00Z'""")
+      graft.api.Api.dispatch(ctx,
+        Cmd.Query("""SELECT "value" FROM "gen_default"."click_hourly" """ +
+          """WHERE time >= '2024-01-01T00:00:00Z' AND time <= '2024-01-31T00:00:00Z'"""))
         .select(col("time"), round(col("value") + 5e-10, 6).as("value"))
     }),
 
@@ -526,18 +527,18 @@ object SparkEntry {
         .select(col("measurement"), col("time"), col("value"),
           col("dev_id"), col("location_id"))
         .collect().toSeq.map { r =>
-          graft.api.Api.WritePoint(r.getAs[String]("measurement"),
+          Cmd.WritePoint(r.getAs[String]("measurement"),
             Map("dev_id" -> r.getAs[String]("dev_id"),
               "location_id" -> r.getAs[String]("location_id"),
               "dev_type" -> "sensor", "topic" -> "api:write"),
             Map("value" -> r.getAs[Double]("value")),
             r.getAs[java.sql.Timestamp]("time"))
         }
-      graft.api.Api.dispatch(ctx, "cmd.tsdb.write_data_points", pts)
-      graft.api.Api.dispatch(ctx, "cmd.tsdb.get_data_points",
-        graft.api.Api.GetDataPointsRequest(measurementName = "app_click",
+      graft.api.Api.dispatch(ctx, Cmd.WriteDataPointsRequest(dp = pts))
+      graft.api.Api.dispatch(ctx,
+        Cmd.GetDataPoints(Cmd.GetDataPointsRequest(measurementName = "app_click",
           dataFunction = "sum", relativeTime = "5w", groupByTime = "1h",
-          fillType = "none"))
+          fillType = "none")))
         .select(col("time"), round(col("value"), 6).as("value"))
     }),
 
@@ -554,7 +555,7 @@ object SparkEntry {
       val store = new graft.store.TierStore(s, root)
       store.writeRouted(points(s, dir, "sensor_").unionAll(points(s, dir, "app_")))
       graft.api.Api.dispatch(graft.api.Api.Context(s, store, now = () => Now),
-        "cmd.tsdb.get_measurements", null)
+        Cmd.GetMeasurements)
     }),
 
     // --- the Grafana template-variable catalog forms (round 12): SHOW
@@ -572,8 +573,7 @@ object SparkEntry {
       val store = new graft.store.TierStore(s, root)
       store.writeRouted(points(s, dir, "sensor_").unionAll(points(s, dir, "app_")))
       graft.api.Api.dispatch(graft.api.Api.Context(s, store, now = () => Now),
-        "cmd.tsdb.query",
-        "SHOW MEASUREMENTS WITH MEASUREMENT =~ /^sensor_(click|view)$/")
+        Cmd.Query("SHOW MEASUREMENTS WITH MEASUREMENT =~ /^sensor_(click|view)$/"))
     }),
 
     "s12_show_keys" -> ((s, dir) => {
@@ -582,11 +582,11 @@ object SparkEntry {
       val store = new graft.store.TierStore(s, root)
       store.write(graft.model.Tier.GenDefault, points(s, dir, "app_"))
       val ctx = graft.api.Api.Context(s, store, now = () => Now)
-      val tk = graft.api.Api.dispatch(ctx, "cmd.tsdb.query",
-        """SHOW TAG KEYS FROM "app_view"""")
+      val tk = graft.api.Api.dispatch(ctx,
+        Cmd.Query("""SHOW TAG KEYS FROM "app_view""""))
         .select(lit("tag").as("kind"), col("tag_key").as("k"),
           col("measurement").as("v"))
-      val fk = graft.api.Api.dispatch(ctx, "cmd.tsdb.query", "SHOW FIELD KEYS")
+      val fk = graft.api.Api.dispatch(ctx, Cmd.Query("SHOW FIELD KEYS"))
         .select(lit("field").as("kind"), col("field_key").as("k"),
           col("field_type").as("v"))
       tk.unionAll(fk)
@@ -598,8 +598,7 @@ object SparkEntry {
       val store = new graft.store.TierStore(s, root)
       store.write(graft.model.Tier.GenDefault, points(s, dir, "app_"))
       graft.api.Api.dispatch(graft.api.Api.Context(s, store, now = () => Now),
-        "cmd.tsdb.query",
-        """SHOW TAG VALUES FROM "app_view" WITH KEY = "location_id"""")
+        Cmd.Query("""SHOW TAG VALUES FROM "app_view" WITH KEY = "location_id""""))
     }),
 
     "s12_show_series" -> ((s, dir) => {
@@ -608,7 +607,7 @@ object SparkEntry {
       val store = new graft.store.TierStore(s, root)
       store.write(graft.model.Tier.GenDefault, points(s, dir, "app_"))
       graft.api.Api.dispatch(graft.api.Api.Context(s, store, now = () => Now),
-        "cmd.tsdb.query", """SHOW SERIES FROM "app_click"""")
+        Cmd.Query("""SHOW SERIES FROM "app_click""""))
     }),
 
     // --- ingest: sources / filters / topic match / enrichment / transform ---
@@ -1613,14 +1612,14 @@ object SparkEntry {
       store.write(graft.model.Tier.GenRaw, points(s, dir, "sensor_")
         .filter(col("measurement") === "sensor_click"))
       val ctx = graft.api.Api.Context(s, store, now = () => Now)
-      graft.api.Api.dispatch(ctx, "cmd.tsdb.delete_data_points",
-        graft.api.Api.GetDataPointsRequest(filters =
-          graft.model.DataPointsFilter(devices = Seq("3")))): Unit
+      graft.api.Api.dispatch(ctx,
+        Cmd.DeleteDataPoints(Cmd.GetDataPointsRequest(filters =
+          graft.model.DataPointsFilter(devices = Seq("3"))))): Unit
       val audit = graft.api.CommandCodec.decode(
         """{"type":"cmd.tsdb.verify_tier_erasure","serv":"ecollector",
           |"uid":"ta-1","val_t":"object","val":{
           |"filters":{"devices":["3"]}}}""".stripMargin)
-      graft.api.Api.dispatch(ctx, audit.msgType, audit.payload)
+      graft.api.Api.dispatch(ctx, audit.payload)
         .select(col("tier"), col("rows_scanned"), col("rows_found"))
     }),
 
@@ -1657,16 +1656,16 @@ object SparkEntry {
         .select("doc_id").collect().map(_.getLong(0)).toSeq
       // two erase passes over DISJOINT index sets — overlap them too
       graft.store.Concurrent.eval(s.sparkContext, Seq(
-        () => graft.api.Api.dispatch(ctx, "cmd.tsdb.erase_index_ids",
-          graft.api.Api.EraseIndexIdsRequest(ids = vecIds,
-            ivf = Seq(s"$work/idx"))),
-        () => graft.api.Api.dispatch(ctx, "cmd.tsdb.erase_index_ids",
-          graft.api.Api.EraseIndexIdsRequest(ids = docIds,
-            minhash = Seq(s"$work/mh"), bm25 = Seq(s"$work/bm"))))): Unit
-      val audit = graft.api.Api.dispatch(ctx, "cmd.tsdb.verify_erasure",
-        graft.api.Api.EraseIndexIdsRequest(ids = (vecIds ++ docIds).distinct,
+        () => graft.api.Api.dispatch(ctx,
+          Cmd.EraseIndexIds(Cmd.EraseIndexIdsRequest(ids = vecIds,
+            ivf = Seq(s"$work/idx")))),
+        () => graft.api.Api.dispatch(ctx,
+          Cmd.EraseIndexIds(Cmd.EraseIndexIdsRequest(ids = docIds,
+            minhash = Seq(s"$work/mh"), bm25 = Seq(s"$work/bm")))))): Unit
+      val audit = graft.api.Api.dispatch(ctx,
+        Cmd.VerifyErasure(Cmd.EraseIndexIdsRequest(ids = (vecIds ++ docIds).distinct,
           ivf = Seq(s"$work/idx"), minhash = Seq(s"$work/mh"),
-          bm25 = Seq(s"$work/bm")))
+          bm25 = Seq(s"$work/bm"))))
       audit.select(split(col("index"), ":").getItem(0).as("store"),
         col("rows_scanned"), col("rows_found"))
     }),
@@ -2395,7 +2394,7 @@ object SparkEntry {
           |"uid":"q-1","val_t":"object","val":{"measurementName":"app_click",
           |"dataFunction":"mean","groupByTime":"1h","relativeTime":"5w",
           |"fillType":"none"}}""".stripMargin)
-      graft.api.Api.dispatch(ctx, cmd.msgType, cmd.payload)
+      graft.api.Api.dispatch(ctx, cmd.payload)
         .select(col("time"), round(col("value"), 6).as("value"))
     }),
 

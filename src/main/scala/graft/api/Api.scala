@@ -2,6 +2,7 @@ package graft.api
 
 import java.time.Instant
 
+import graft.api.CommandCodec.q
 import graft.model._
 import graft.query.Planner
 import graft.store.TierStore
@@ -15,107 +16,6 @@ import org.apache.spark.sql.functions._
  * capability — the command set is (SURVEY.md §7 step 9).
  */
 object Api {
-
-  /** cmd.tsdb.get_data_points DTO (types.go:8-21). `asOfPin` is an
-   *  extension over the reference surface: when non-empty, the encoded
-   *  logical pin ([[graft.store.AsOfPin.encoded]], from `pinNow`) pins
-   *  the query to that committed store state ([[TierStore.readAsOf]] —
-   *  reproducible reads across maintenance, exact on coarse-mtime
-   *  object stores). */
-  final case class GetDataPointsRequest(
-      procId: Int = 1, fieldName: String = "", dataFunction: String = "",
-      transformFunction: String = "", measurementName: String = "",
-      relativeTime: String = "", fromTime: String = "", toTime: String = "",
-      groupByTime: String = "", groupByTag: String = "", fillType: String = "",
-      filters: DataPointsFilter = DataPointsFilter(), asOfPin: String = "") {
-    def toRequest: DataPointsRequest = DataPointsRequest(
-      measurement = measurementName, fieldName = fieldName,
-      dataFunction = dataFunction, transformFunction = transformFunction,
-      relativeTime = relativeTime, fromTime = fromTime, toTime = toTime,
-      groupByTime = groupByTime, groupByTag = groupByTag, fillType = fillType,
-      filters = filters)
-  }
-
-  /** cmd.tsdb.write_data_points DTO (types.go:23-34, admin.go:179-204). */
-  final case class WritePoint(name: String, tags: Map[String, String],
-      fields: Map[String, Double], ts: java.sql.Timestamp)
-
-  /** The full write request (types.go:30-34): `bucket` pins the target
-   *  retention policy directly — the reference's `WriteDirect(rpName)`,
-   *  process.go:313-337 — and empty means "auto calculate based on
-   *  measurement name" (the routed path). Divergence kept from round 2:
-   *  the reference stamps every point with ITS OWN wall clock and
-   *  ignores the submitted `ts` (admin.go:197-198); we honor the
-   *  submitted timestamp — a historical import would otherwise be
-   *  impossible. */
-  final case class WriteDataPointsRequest(procId: Int = 1,
-      bucket: String = "", dp: Seq[WritePoint])
-
-  /** cmd.tsdb.compact DTO — ops parity for the round-8 layout surface
-   *  (EXTENSION; the reference delegates compaction to InfluxDB's
-   *  storage engine, influxdb_v1.go:271-413). Empty `tier` = every
-   *  retention tier. `clusterBy`/`zorder` select the device-clustered /
-   *  Z-order layouts ([[TierStore.compact]] documents when each wins);
-   *  `retainHistory` keeps superseded snapshots for [[TierStore.readAsOf]]
-   *  pins until an explicit cmd.tsdb.vacuum. */
-  final case class CompactRequest(procId: Int = 1, tier: String = "",
-      targetFileBytes: Long = 128L * 1024 * 1024, minFiles: Int = 4,
-      clusterBy: Seq[String] = Nil, zorder: Boolean = false,
-      retainHistory: Boolean = false)
-
-  /** cmd.tsdb.vacuum DTO (EXTENSION): reclaim history kept by
-   *  retainHistory maintenance — after it, as-of reads can no longer
-   *  travel behind the surviving snapshots (pins that reach further
-   *  fail loudly). `foldBatchMarkers` also compacts the streaming batch
-   *  ledger; marker folds are PIN-SAFE — a watermark still attests
-   *  every id it covers, so logical pins keep resolving exactly
-   *  ([[graft.store.BatchLedger.read]]). */
-  final case class VacuumRequest(procId: Int = 1, tier: String = "",
-      foldBatchMarkers: Boolean = true)
-
-  /** cmd.tsdb.backfill DTO (EXTENSION): rebuild the rollup cascade for
-   *  an explicit historical [fromDate, toDate] window (inclusive,
-   *  yyyy-MM-dd) — the repair the recent-window maintenance trigger
-   *  cannot reach ([[graft.rollup.Downsampler.backfill]]). */
-  final case class BackfillRequest(procId: Int = 1, fromDate: String,
-      toDate: String, retainHistory: Boolean = false)
-
-  /** cmd.tsdb.verify_rollup DTO (EXTENSION): the rollup consistency
-   *  audit over a date window — per (tier, measurement, date) row-level
-   *  expected/actual/missing/extra/value-mismatch counts
-   *  ([[graft.rollup.Downsampler.verifyRollups]]); repair findings with
-   *  cmd.tsdb.backfill. */
-  final case class VerifyRollupRequest(procId: Int = 1, fromDate: String,
-      toDate: String, tolerance: Double = 1e-6)
-
-  /** cmd.tsdb.diff_data_points DTO (EXTENSION): row-level corpus diff
-   *  between two as-of pins of one tier ([[TierStore.diffAsOf]]) —
-   *  requires the older pin's history to be retained. */
-  final case class DiffRequest(procId: Int = 1, tier: String,
-      fromPin: String, toPin: String)
-
-  /** cmd.tsdb.erase_index_ids DTO (EXTENSION): right-to-be-forgotten
-   *  through the DERIVED stores — the IVF index physically retains
-   *  erased embeddings and the MinHash index the erased documents'
-   *  shingle sets, so a compliance run must purge them alongside the
-   *  tiers (cmd.tsdb.delete_data_points). `ids` is the bounded
-   *  compliance batch; each named index path erases reader-atomically
-   *  with UNCONDITIONAL history reclamation
-   *  ([[graft.functions.Similarity.eraseFromIvfIndex]],
-   *  [[graft.functions.Dedup.eraseFromMinhashIndex]],
-   *  [[graft.functions.Retrieval.eraseFromBm25Index]]). */
-  final case class EraseIndexIdsRequest(procId: Int = 1,
-      ids: Seq[Long] = Nil, ivf: Seq[String] = Nil,
-      minhash: Seq[String] = Nil, bm25: Seq[String] = Nil)
-
-  /** cmd.tsdb.run_maintenance DTO (EXTENSION): the periodic maintenance
-   *  trigger the reference gets from InfluxDB continuous queries + its
-   *  own retention ticker (influxdb_v1.go:72-78,300-331) — incremental
-   *  rollup rebuild, retention expiry, compaction. `retainHistory`
-   *  defers every history-destroying step so readAsOf pins survive the
-   *  pass (reclaim later with cmd.tsdb.vacuum). */
-  final case class MaintenanceRequest(procId: Int = 1, sinceDays: Int = 3,
-      retainHistory: Boolean = false)
 
   /** The pin-aware tier resolver shared by the query commands: a
    *  non-empty encoded pin resolves that snapshot ([[TierStore.readAsOf]]). */
@@ -172,12 +72,6 @@ object Api {
       @volatile var status: String = "LOADED"
     }
     private val procs = scala.collection.mutable.LinkedHashMap.empty[Int, Handle]
-    // Latched by checkStorageQuota on breach, cleared when a tick passes
-    // again — the reference stops ALL ingestion on disk alarm
-    // (integration.go:296-301), including writes not addressed to any
-    // process, so the default-context write path checks this too.
-    @volatile private var _alarm = false
-    def alarmActive: Boolean = _alarm
     defaults.foreach(initProcess)
 
     private def initProcess(c: ProcessConfig): Handle = synchronized {
@@ -269,12 +163,11 @@ object Api {
           val overPct = pct.exists(_ > q.usedPercentLimit)
           if (overBytes || overPct) {
             procs.values.foreach(_.status = "STOPPED") // integration.go:296-301
-            _alarm = true
             val what =
               if (overBytes) s"store size $used B over budget ${q.maxBytes} B"
               else f"disk usage ${pct.get}%.1f%% over limit ${q.usedPercentLimit}%.1f%%"
             ("alarm", s"DISK LOW SPACE: $what; all processes stopped")
-          } else { _alarm = false; ("ok", "") }
+          } else ("ok", "")
       }
     }
   }
@@ -311,402 +204,332 @@ object Api {
   }
 
   /**
-   * Dispatch a command by name — the admin.go onCommand switch. Returns a
-   * response DataFrame (query commands) or Unit-like empty frame (admin
-   * commands). Raw SQL (S7) goes straight to Spark SQL.
+   * Run one command — the admin.go onCommand switch. Returns a response
+   * DataFrame (query commands) or Unit-like empty frame (admin commands).
+   * Raw SQL (S7) goes straight to Spark SQL.
    */
-  def dispatch(ctx: Context, command: String, payload: Any): DataFrame = command match {
-    case "cmd.tsdb.get_data_points" => // admin.go:206-226
-      val req = payload.asInstanceOf[GetDataPointsRequest]
-      val c = procCtx(ctx, req.procId)
-      Planner.dataPoints(req.toRequest, pinnedRead(c, req.asOfPin), c.now(),
-        sliceResolve = Some(slicedRead(c, req.asOfPin)))
-    case "cmd.tsdb.get_energy_data_points" => // admin.go:229-247
-      val req = payload.asInstanceOf[GetDataPointsRequest]
-      val c = procCtx(ctx, req.procId)
-      Planner.energyDataPoints(req.relativeTime, req.fromTime, req.toTime,
-        req.groupByTime, req.groupByTag, req.filters,
-        pinnedRead(c, req.asOfPin), c.now())
-    case "cmd.tsdb.delete_data_points" =>
-      // EXTENSION over the reference surface (which delegates deletion
-      // to InfluxDB retention): targeted erasure via TierStore
-      // .deleteWhere's partition-scoped snapshot rewrite. UNBOUNDED in
-      // time (the right-to-be-forgotten shape) it runs on EVERY
-      // retention tier — rollups keep the tag columns, so the device's
-      // aggregated contributions go too. TIME-BOUNDED it corrects the
-      // RAW tiers only: rollup rows are bucket-start-stamped aggregates
-      // spanning the boundary, so row deletion there either leaves the
-      // range's contributions (bucket starts before `from`) or destroys
-      // aggregates outside it — rollups are DERIVED data; rebuild the
-      // affected window from the corrected raw with Downsampler
-      // .maintain. Refuses an unbounded wipe, and refuses half-given
-      // time bounds rather than silently erasing full history. Routes
-      // through the same single-maintainer assumption as compact — the
-      // store serializes maintenance in-process; across processes,
-      // deploy the command on the maintenance owner.
-      val req = payload.asInstanceOf[GetDataPointsRequest]
-      val c = procCtx(ctx, req.procId)
-      val f = req.filters
-      if (req.measurementName.isEmpty && f.tags.isEmpty && f.devices.isEmpty &&
-        f.locations.isEmpty && f.devTypes.isEmpty)
-        throw new IllegalArgumentException(
-          "refusing an unbounded erasure: give a measurement or tag filters " +
-            "(drop whole measurements/retention windows via DDL instead)")
-      if (req.relativeTime.nonEmpty ||
-        (req.fromTime.nonEmpty != req.toTime.nonEmpty))
-        throw new IllegalArgumentException(
-          "erasure time bounds must be BOTH absolute fromTime and toTime " +
-            "(or neither) — a half-given or relative bound would silently " +
-            "erase the full history")
-      val bounded = req.fromTime.nonEmpty
-      var pred = Planner.filterColumn(f)
-      if (req.measurementName.nonEmpty)
-        pred = pred && col("measurement") === req.measurementName
-      if (bounded)
-        pred = pred && Planner.absoluteTimePredicate(
-          Instant.parse(req.fromTime).getEpochSecond,
-          Instant.parse(req.toTime).getEpochSecond)
-      val rollups = Tier.cascade.map(_._2.name).toSet
-      val targets = c.store.retentionPolicies
-        .filter(t => !bounded || !rollups(t.name))
-      import ctx.spark.implicits._
-      // the erasure surface itself guarantees the rows are GONE, not
-      // merely absent from the current snapshot: rows surviving only in
-      // retainHistory snapshots (e.g. a rollup window maintain rebuilt
-      // without the device — the new version has no matches for
-      // deleteWhere to find) would stay readable via readAsOf, so a
-      // targeted tier is also vacuumed — but ONLY when the predicate
-      // actually touched it (rows rewritten now, or retained history
-      // still holding matches). A predicate that never matched anything
-      // (a typo'd device id) must not destroy every as-of pin
-      // tier-wide; history_vacuumed > 0 in the response is the signal
-      // that pins into that tier's past are now invalid.
-      targets.map { t =>
-        val rewrote = c.store.deleteWhere(t, pred).toLong
-        val vacuumed =
-          if (rewrote > 0 || c.store.retainedHistoryMatches(t, pred))
-            c.store.vacuumTier(t).toLong
-          else 0L
-        (t.name, rewrote, vacuumed)
-      }.toDF("tier", "partitions_rewritten", "history_vacuumed")
+  def dispatch(ctx: Context, cmd: Cmd): DataFrame = {
+    import ctx.spark.implicits._
+    cmd match {
+      case Cmd.GetDataPoints(req) => // admin.go:206-226
+        val c = procCtx(ctx, req.procId)
+        Planner.dataPoints(req.toRequest, pinnedRead(c, req.asOfPin), c.now(),
+          sliceResolve = Some(slicedRead(c, req.asOfPin)))
+      case Cmd.GetEnergyDataPoints(req) => // admin.go:229-247
+        val c = procCtx(ctx, req.procId)
+        Planner.energyDataPoints(req.relativeTime, req.fromTime, req.toTime,
+          req.groupByTime, req.groupByTag, req.filters,
+          pinnedRead(c, req.asOfPin), c.now())
+      case Cmd.DeleteDataPoints(req) =>
+        // EXTENSION over the reference surface (which delegates deletion
+        // to InfluxDB retention): targeted erasure via TierStore
+        // .deleteWhere's partition-scoped snapshot rewrite. UNBOUNDED in
+        // time (the right-to-be-forgotten shape) it runs on EVERY
+        // retention tier — rollups keep the tag columns, so the device's
+        // aggregated contributions go too. TIME-BOUNDED it corrects the
+        // RAW tiers only: rollup rows are bucket-start-stamped aggregates
+        // spanning the boundary, so row deletion there either leaves the
+        // range's contributions (bucket starts before `from`) or destroys
+        // aggregates outside it — rollups are DERIVED data; rebuild the
+        // affected window from the corrected raw with Downsampler
+        // .maintain. Refuses an unbounded wipe, and refuses half-given
+        // time bounds rather than silently erasing full history. Routes
+        // through the same single-maintainer assumption as compact — the
+        // store serializes maintenance in-process; across processes,
+        // deploy the command on the maintenance owner.
+        val c = procCtx(ctx, req.procId)
+        var pred = erasurePredicate(req, "refusing an unbounded erasure: give a " +
+          "measurement or tag filters (drop whole measurements/retention windows " +
+          "via DDL instead)")
+        if (req.relativeTime.nonEmpty ||
+          (req.fromTime.nonEmpty != req.toTime.nonEmpty))
+          throw new IllegalArgumentException(
+            "erasure time bounds must be BOTH absolute fromTime and toTime " +
+              "(or neither) — a half-given or relative bound would silently " +
+              "erase the full history")
+        val bounded = req.fromTime.nonEmpty
+        if (bounded)
+          pred = pred && Planner.absoluteTimePredicate(
+            Instant.parse(req.fromTime).getEpochSecond,
+            Instant.parse(req.toTime).getEpochSecond)
+        val rollups = Tier.cascade.map(_._2.name).toSet
+        val targets = c.store.retentionPolicies
+          .filter(t => !bounded || !rollups(t.name))
+        // the erasure surface itself guarantees the rows are GONE, not
+        // merely absent from the current snapshot: rows surviving only in
+        // retainHistory snapshots (e.g. a rollup window maintain rebuilt
+        // without the device — the new version has no matches for
+        // deleteWhere to find) would stay readable via readAsOf, so a
+        // targeted tier is also vacuumed — but ONLY when the predicate
+        // actually touched it (rows rewritten now, or retained history
+        // still holding matches). A predicate that never matched anything
+        // (a typo'd device id) must not destroy every as-of pin
+        // tier-wide; history_vacuumed > 0 in the response is the signal
+        // that pins into that tier's past are now invalid.
+        targets.map { t =>
+          val rewrote = c.store.deleteWhere(t, pred).toLong
+          val vacuumed =
+            if (rewrote > 0 || c.store.retainedHistoryMatches(t, pred))
+              c.store.vacuumTier(t).toLong
+            else 0L
+          (t.name, rewrote, vacuumed)
+        }.toDF("tier", "partitions_rewritten", "history_vacuumed")
 
-    case "cmd.tsdb.erase_index_ids" =>
-      // EXTENSION: the delete_data_points stance carried to the DERIVED
-      // stores — refuses an empty request instead of silently attesting
-      // a no-op compliance pass; each index erases reader-atomically
-      // (manifest folds, no quiesce) and reclaims history
-      // unconditionally, so the response's rows_erased is the number of
-      // physical index rows that are now GONE, not merely hidden
-      val req = payload.asInstanceOf[EraseIndexIdsRequest]
-      if (req.ids.isEmpty) throw new IllegalArgumentException(
-        "refusing an empty erasure: give the ids to erase")
-      if (req.ivf.isEmpty && req.minhash.isEmpty && req.bm25.isEmpty)
-        throw new IllegalArgumentException(
-          "refusing an index-less erasure: name the ivf/minhash/bm25 index " +
-            "paths to purge (erase tiers via cmd.tsdb.delete_data_points)")
-      import ctx.spark.implicits._
-      // the named indexes are INDEPENDENT stores (disjoint roots,
-      // disjoint staging) — erase them concurrently: each pass is a
-      // short serial chain of small jobs that alone underfills the
-      // executor pool, so a 3-index compliance batch otherwise pays
-      // 3× the serial latency (the writeShingledTables idiom, lifted
-      // to the command layer). Each list is DEDUPED first: the serial
-      // execution tolerated a repeated path, but two concurrent erases
-      // of the same root would race on its staging dir and generation
-      // publish.
-      graft.store.Concurrent.eval(ctx.spark.sparkContext,
-        req.ivf.distinct.map(p => () => (s"ivf:$p",
-            graft.functions.Similarity.eraseFromIvfIndex(ctx.spark, p, req.ids))) ++
-          req.minhash.distinct.map(p => () => (s"minhash:$p",
-            graft.functions.Dedup.eraseFromMinhashIndex(ctx.spark, p, req.ids))) ++
-          req.bm25.distinct.map(p => () => (s"bm25:$p",
-            graft.functions.Retrieval.eraseFromBm25Index(ctx.spark, p, req.ids))))
-        .toDF("index", "rows_erased")
+      case Cmd.EraseIndexIds(req) =>
+        // EXTENSION: the delete_data_points stance carried to the DERIVED
+        // stores — refuses an empty request instead of silently attesting
+        // a no-op compliance pass; each index erases reader-atomically
+        // (manifest folds, no quiesce) and reclaims history
+        // unconditionally, so the response's rows_erased is the number of
+        // physical index rows that are now GONE, not merely hidden
+        if (req.ids.isEmpty) throw new IllegalArgumentException(
+          "refusing an empty erasure: give the ids to erase")
+        if (req.ivf.isEmpty && req.minhash.isEmpty && req.bm25.isEmpty)
+          throw new IllegalArgumentException(
+            "refusing an index-less erasure: name the ivf/minhash/bm25 index " +
+              "paths to purge (erase tiers via cmd.tsdb.delete_data_points)")
+        // the named indexes are INDEPENDENT stores (disjoint roots,
+        // disjoint staging) — erase them concurrently: each pass is a
+        // short serial chain of small jobs that alone underfills the
+        // executor pool, so a 3-index compliance batch otherwise pays
+        // 3× the serial latency (the writeShingledTables idiom, lifted
+        // to the command layer). Each list is DEDUPED first: the serial
+        // execution tolerated a repeated path, but two concurrent erases
+        // of the same root would race on its staging dir and generation
+        // publish.
+        graft.store.Concurrent.eval(ctx.spark.sparkContext,
+          req.ivf.distinct.map(p => () => (s"ivf:$p",
+              graft.functions.Similarity.eraseFromIvfIndex(ctx.spark, p, req.ids))) ++
+            req.minhash.distinct.map(p => () => (s"minhash:$p",
+              graft.functions.Dedup.eraseFromMinhashIndex(ctx.spark, p, req.ids))) ++
+            req.bm25.distinct.map(p => () => (s"bm25:$p",
+              graft.functions.Retrieval.eraseFromBm25Index(ctx.spark, p, req.ids))))
+          .toDF("index", "rows_erased")
 
-    case "cmd.tsdb.verify_tier_erasure" =>
-      // EXTENSION: the erasure audit for the CORPUS store — a raw
-      // physical walk of every tier file (current, superseded, folded)
-      // counting predicate matches ([[TierStore.auditErasure]]); the
-      // proof a delete_data_points + vacuum compliance pass hands the
-      // auditor. Same filter shape and refusals as the delete command.
-      val req = payload.asInstanceOf[GetDataPointsRequest]
-      val c = procCtx(ctx, req.procId)
-      val f = req.filters
-      if (req.measurementName.isEmpty && f.tags.isEmpty && f.devices.isEmpty &&
-        f.locations.isEmpty && f.devTypes.isEmpty)
-        throw new IllegalArgumentException(
-          "refusing an unbounded erasure audit: give a measurement or " +
-            "tag filters")
-      var pred = Planner.filterColumn(f)
-      if (req.measurementName.nonEmpty)
-        pred = pred && col("measurement") === req.measurementName
-      import ctx.spark.implicits._
-      // the per-tier walks are INDEPENDENT read-only scans of disjoint
-      // tier roots — fan them out like verify_erasure's per-index walks
-      // (guide §2.6): each tier's listing + bounded-union aggregates
-      // alone underfill the executor pool
-      graft.store.Concurrent.eval(ctx.spark.sparkContext,
-        c.store.retentionPolicies.map { t => () =>
-          val (files, scanned, found) = c.store.auditErasure(t, pred)
-          (t.name, files, scanned, found)
-        }).toDF("tier", "files", "rows_scanned", "rows_found")
+      case Cmd.VerifyTierErasure(req) =>
+        // EXTENSION: the erasure audit for the CORPUS store — a raw
+        // physical walk of every tier file (current, superseded, folded)
+        // counting predicate matches ([[TierStore.auditErasure]]); the
+        // proof a delete_data_points + vacuum compliance pass hands the
+        // auditor. Same filter shape and refusals as the delete command.
+        val c = procCtx(ctx, req.procId)
+        val pred = erasurePredicate(req,
+          "refusing an unbounded erasure audit: give a measurement or tag filters")
+        // the per-tier walks are INDEPENDENT read-only scans of disjoint
+        // tier roots — fan them out like verify_erasure's per-index walks
+        // (guide §2.6): each tier's listing + bounded-union aggregates
+        // alone underfill the executor pool
+        graft.store.Concurrent.eval(ctx.spark.sparkContext,
+          c.store.retentionPolicies.map { t => () =>
+            val (files, scanned, found) = c.store.auditErasure(t, pred)
+            (t.name, files, scanned, found)
+          }).toDF("tier", "files", "rows_scanned", "rows_found")
 
-    case "cmd.tsdb.verify_erasure" =>
-      // EXTENSION: audit-grade proof of a completed index erasure —
-      // resolver-BYPASSING raw scan of every parquet file still on
-      // disk under each named index root ([[graft.store.EraseAudit]]):
-      // rows_found must be 0 after a clean erase, and rows_scanned
-      // equals the survivors' physical row count (a walk that skipped
-      // files is visible too). Same request shape as erase_index_ids.
-      val req = payload.asInstanceOf[EraseIndexIdsRequest]
-      if (req.ids.isEmpty) throw new IllegalArgumentException(
-        "refusing an empty erasure audit: give the ids to verify")
-      if (req.ivf.isEmpty && req.minhash.isEmpty && req.bm25.isEmpty)
-        throw new IllegalArgumentException(
-          "refusing an index-less erasure audit: name the " +
-            "ivf/minhash/bm25 index paths to scan")
-      import ctx.spark.implicits._
-      // independent read-only walks of independent roots — run them
-      // concurrently (same rationale as the concurrent erase above)
-      graft.store.Concurrent.eval(ctx.spark.sparkContext,
-        req.ivf.map { p => () =>
-          val (f, s, m) = graft.store.EraseAudit.scan(ctx.spark, p, "vec_id",
-            req.ids, skipDirs = Set("centroids"))
-          (s"ivf:$p", f, s, m)
-        } ++ req.minhash.map { p => () =>
-          val (f, s, m) = graft.store.EraseAudit.scan(ctx.spark, p, "id", req.ids)
-          (s"minhash:$p", f, s, m)
-        } ++ req.bm25.map { p => () =>
-          val (f, s, m) = graft.store.EraseAudit.scan(ctx.spark,
-            s"$p/postings", "doc_id", req.ids)
-          (s"bm25:$p", f, s, m)
-        }).toDF("index", "files", "rows_scanned", "rows_found")
+      case Cmd.VerifyErasure(req) =>
+        // EXTENSION: audit-grade proof of a completed index erasure —
+        // resolver-BYPASSING raw scan of every parquet file still on
+        // disk under each named index root ([[graft.store.EraseAudit]]):
+        // rows_found must be 0 after a clean erase, and rows_scanned
+        // equals the survivors' physical row count (a walk that skipped
+        // files is visible too). Same request shape as erase_index_ids.
+        if (req.ids.isEmpty) throw new IllegalArgumentException(
+          "refusing an empty erasure audit: give the ids to verify")
+        if (req.ivf.isEmpty && req.minhash.isEmpty && req.bm25.isEmpty)
+          throw new IllegalArgumentException(
+            "refusing an index-less erasure audit: name the " +
+              "ivf/minhash/bm25 index paths to scan")
+        // independent read-only walks of independent roots — run them
+        // concurrently (same rationale as the concurrent erase above)
+        graft.store.Concurrent.eval(ctx.spark.sparkContext,
+          req.ivf.map { p => () =>
+            val (f, s, m) = graft.store.EraseAudit.scan(ctx.spark, p, "vec_id",
+              req.ids, skipDirs = Set("centroids"))
+            (s"ivf:$p", f, s, m)
+          } ++ req.minhash.map { p => () =>
+            val (f, s, m) = graft.store.EraseAudit.scan(ctx.spark, p, "id", req.ids)
+            (s"minhash:$p", f, s, m)
+          } ++ req.bm25.map { p => () =>
+            val (f, s, m) = graft.store.EraseAudit.scan(ctx.spark,
+              s"$p/postings", "doc_id", req.ids)
+            (s"bm25:$p", f, s, m)
+          }).toDF("index", "files", "rows_scanned", "rows_found")
 
-    case "cmd.tsdb.compact" =>
-      // EXTENSION: the round-8 layout/compaction surface, command-
-      // reachable so a deployment drives it without Scala (erasure
-      // command is the template). Refusals surface as thrown
-      // IllegalArgumentException → dispatchShaped's error envelope:
-      // zorder without clusterBy (TierStore.compact's require), unknown
-      // tier name (maintenanceTargets).
-      val req = payload.asInstanceOf[CompactRequest]
-      val c = procCtx(ctx, req.procId)
-      import ctx.spark.implicits._
-      maintenanceTargets(c, req.tier).map(t => (t.name,
-          c.store.compact(t, req.targetFileBytes, req.minFiles,
-            req.clusterBy, req.retainHistory, req.zorder).toLong))
-        .toDF("tier", "partitions_rewritten")
-    case "cmd.tsdb.vacuum" =>
-      // EXTENSION: explicit history reclaim (the commit/vacuum
-      // separation's second half) — bounds how far back readAsOf travels
-      val req = payload.asInstanceOf[VacuumRequest]
-      val c = procCtx(ctx, req.procId)
-      if (req.foldBatchMarkers) c.store.vacuumBatchMarkers()
-      import ctx.spark.implicits._
-      maintenanceTargets(c, req.tier)
-        .map(t => (t.name, c.store.vacuumTier(t).toLong))
-        .toDF("tier", "partitions_vacuumed")
-    case "cmd.tsdb.run_maintenance" =>
-      // EXTENSION: the full periodic maintenance pass (rollup cascade
-      // rebuild + retention + compaction), with the retainHistory knob
-      val req = payload.asInstanceOf[MaintenanceRequest]
-      val c = procCtx(ctx, req.procId)
-      graft.rollup.Downsampler.maintain(c.store, c.now(),
-        sinceDays = req.sinceDays, retainHistory = req.retainHistory,
-        profile = c.profile)
-      ctrlReport(ctx, "run_maintenance", "ok", "", req.procId)
+      case req: Cmd.CompactRequest =>
+        // refusals surface as dispatchShaped's error envelope: zorder
+        // without clusterBy (TierStore.compact's require), unknown tier
+        val c = procCtx(ctx, req.procId)
+        maintenanceTargets(c, req.tier).map(t => (t.name,
+            c.store.compact(t, req.targetFileBytes, req.minFiles,
+              req.clusterBy, req.retainHistory, req.zorder).toLong))
+          .toDF("tier", "partitions_rewritten")
+      case req: Cmd.VacuumRequest =>
+        val c = procCtx(ctx, req.procId)
+        if (req.foldBatchMarkers) c.store.vacuumBatchMarkers()
+        maintenanceTargets(c, req.tier)
+          .map(t => (t.name, c.store.vacuumTier(t).toLong))
+          .toDF("tier", "partitions_vacuumed")
+      case req: Cmd.MaintenanceRequest =>
+        val c = procCtx(ctx, req.procId)
+        graft.rollup.Downsampler.maintain(c.store, c.now(),
+          sinceDays = req.sinceDays, retainHistory = req.retainHistory,
+          profile = c.profile)
+        ctrlReport(ctx, "run_maintenance", "ok", "", req.procId)
+      case req: Cmd.BackfillRequest =>
+        val c = procCtx(ctx, req.procId)
+        graft.rollup.Downsampler.backfill(c.store, req.fromDate, req.toDate,
+          retainHistory = req.retainHistory, profile = c.profile)
+        ctrlReport(ctx, "backfill", "ok", "", req.procId)
+      case req: Cmd.VerifyRollupRequest =>
+        val c = procCtx(ctx, req.procId)
+        graft.rollup.Downsampler.verifyRollups(c.store, req.fromDate,
+          req.toDate, tolerance = req.tolerance, profile = c.profile)
+      case req: Cmd.DiffRequest =>
+        val c = procCtx(ctx, req.procId)
+        val t = c.store.tierByName(req.tier).getOrElse(
+          throw new IllegalArgumentException(s"unknown tier: ${req.tier}"))
+        c.store.diffAsOf(t, graft.store.AsOfPin.decode(req.fromPin),
+          graft.store.AsOfPin.decode(req.toPin))
 
-    case "cmd.tsdb.backfill" =>
-      // EXTENSION: windowed rollup repair (backfill corrects data; the
-      // periodic run_maintenance owns retention/compaction lifecycle)
-      val req = payload.asInstanceOf[BackfillRequest]
-      val c = procCtx(ctx, req.procId)
-      graft.rollup.Downsampler.backfill(c.store, req.fromDate, req.toDate,
-        retainHistory = req.retainHistory, profile = c.profile)
-      ctrlReport(ctx, "backfill", "ok", "", req.procId)
-    case "cmd.tsdb.verify_rollup" =>
-      // EXTENSION: the "can I trust my rollups" audit — all-zero
-      // mismatch columns = clean; anything else names the (tier,
-      // measurement, date) to backfill
-      val req = payload.asInstanceOf[VerifyRollupRequest]
-      val c = procCtx(ctx, req.procId)
-      graft.rollup.Downsampler.verifyRollups(c.store, req.fromDate,
-        req.toDate, tolerance = req.tolerance, profile = c.profile)
-    case "cmd.tsdb.diff_data_points" =>
-      // EXTENSION: what changed between two pinned corpus states
-      val req = payload.asInstanceOf[DiffRequest]
-      val c = procCtx(ctx, req.procId)
-      val t = c.store.tierByName(req.tier).getOrElse(
-        throw new IllegalArgumentException(s"unknown tier: ${req.tier}"))
-      c.store.diffAsOf(t, graft.store.AsOfPin.decode(req.fromPin),
-        graft.store.AsOfPin.decode(req.toPin))
+      case Cmd.Query(sql, procId) => // S7 raw passthrough (admin.go:156-177)
+        val qCtx = procId.fold(ctx)(procCtx(ctx, _))
+        // InfluxQL compatibility: the reference UI sends InfluxQL strings
+        // through this command (docs/api:9,194,251); the documented shapes
+        // route through the planner, everything else is Spark SQL
+        if (graft.query.InfluxQL.looksLike(sql)) influxQuery(qCtx, sql)
+        else qCtx.spark.sql(sql)
 
-    case "cmd.tsdb.query" => // S7 raw passthrough (admin.go:156-177)
-      val (qCtx, sql) = payload match {
-        case (procId: Int, s: String) => (procCtx(ctx, procId), s)
-        case s: String => (ctx, s)
-        case other => throw new IllegalArgumentException(s"bad query payload: $other")
-      }
-      // InfluxQL compatibility: the reference UI sends InfluxQL strings
-      // through this command (docs/api:9,194,251); the documented shapes
-      // route through the planner, everything else is Spark SQL
-      if (graft.query.InfluxQL.looksLike(sql)) influxQuery(qCtx, sql)
-      else qCtx.spark.sql(sql)
+      // --- process lifecycle (admin.go:75-155; integration.go manager) ---
+      case Cmd.GetList => // admin.go:75-77
+        registryOf(ctx).processes.map { case (c, status) =>
+          (c.id, c.name, status, c.profile, c.batchMaxSize, c.saveIntervalMs,
+            c.filters.size, c.selectors.size, c.autostart)
+        }.toDF("id", "name", "status", "profile", "batch_max_size",
+          "save_interval_ms", "n_filters", "n_selectors", "autostart")
+      case Cmd.AddProcess(conf) => // admin.go:100-112
+        val id = registryOf(ctx).add(conf)
+        ctrlReport(ctx, "add", "ok", "", id)
+      case Cmd.Ctrl(procId, op) => // admin.go:113-150
+        val (status, err) = registryOf(ctx).ctrl(procId, op)
+        ctrlReport(ctx, op, status, err, procId)
+      case Cmd.UpdateConfig(conf) => // admin.go:79-98
+        val (status, err) = registryOf(ctx).updateConfig(conf)
+        ctrlReport(ctx, "update_config", status, err, conf.id)
+      case Cmd.ResetToDefault => // admin.go:151-155
+        registryOf(ctx).resetToDefault()
+        ctx.spark.emptyDataFrame
+      case Cmd.CheckStorage => // disk-monitor tick (integration.go:283-306)
+        val (status, err) = registryOf(ctx).checkStorageQuota()
+        ctrlReport(ctx, "disk_monitor", status, err, 0)
 
-    // --- process lifecycle (admin.go:75-155; integration.go manager) ---
-    case "cmd.ecprocess.get_list" => { // admin.go:75-77
-      import ctx.spark.implicits._
-      registryOf(ctx).processes.map { case (c, status) =>
-        (c.id, c.name, status, c.profile, c.batchMaxSize, c.saveIntervalMs,
-          c.filters.size, c.selectors.size, c.autostart)
-      }.toDF("id", "name", "status", "profile", "batch_max_size",
-        "save_interval_ms", "n_filters", "n_selectors", "autostart")
-    }
-    case "cmd.ecprocess.add" => // admin.go:100-112
-      val id = registryOf(ctx).add(Option(payload).map(_.asInstanceOf[ProcessConfig]))
-      ctrlReport(ctx, "add", "ok", "", id)
-    case "cmd.ecprocess.ctrl" => // admin.go:113-150
-      val (procId, op) = payload.asInstanceOf[(Int, String)]
-      val (status, err) = registryOf(ctx).ctrl(procId, op)
-      ctrlReport(ctx, op, status, err, procId)
-    case "cmd.ecprocess.update_config" => // admin.go:79-98
-      val conf = payload.asInstanceOf[ProcessConfig]
-      val (status, err) = registryOf(ctx).updateConfig(conf)
-      ctrlReport(ctx, "update_config", status, err, conf.id)
-    case "cmd.ecprocess.reset_to_default" => // admin.go:151-155
-      registryOf(ctx).resetToDefault()
-      ctx.spark.emptyDataFrame
-    case "cmd.ecprocess.check_storage" => // disk-monitor tick (integration.go:283-306)
-      val (status, err) = registryOf(ctx).checkStorageQuota()
-      ctrlReport(ctx, "disk_monitor", status, err, 0)
-
-    case "cmd.log.set_level" => // admin.go:374-388
-      val level = payload.asInstanceOf[String].toUpperCase
-      val valid = Set("ALL", "DEBUG", "ERROR", "FATAL", "INFO", "OFF", "TRACE", "WARN")
-      if (valid(level)) {
-        ctx.spark.sparkContext.setLogLevel(level)
-        ctrlReport(ctx, "set_level", "ok", "", 0)
-      } else
-        // reference logs and keeps the old level (admin.go:385-387)
-        ctrlReport(ctx, "set_level", "error", s"unknown log level: $level", 0)
-    case "cmd.tsdb.write_data_points" => // S6 (admin.go:179-204)
-      // WriteDataPointsRequest carries a ProcID and an optional BUCKET
-      // (types.go:30-34); legacy (procId, points) / bare-points payload
-      // shapes remain accepted
-      def admitProc(procId: Int): Unit =
+      case Cmd.SetLogLevel(l) => // admin.go:374-388
+        val level = l.toUpperCase
+        val valid = Set("ALL", "DEBUG", "ERROR", "FATAL", "INFO", "OFF", "TRACE", "WARN")
+        if (valid(level)) {
+          ctx.spark.sparkContext.setLogLevel(level)
+          ctrlReport(ctx, "set_level", "ok", "", 0)
+        } else
+          // reference logs and keeps the old level (admin.go:385-387)
+          ctrlReport(ctx, "set_level", "error", s"unknown log level: $level", 0)
+      case req: Cmd.WriteDataPointsRequest => // S6 (admin.go:179-204)
         // admission control: a STOPPED process (operator stop or disk
         // alarm, integration.go:296-301) accepts no writes
-        ctx.registry.flatMap(_.byId(procId)).foreach { h =>
+        ctx.registry.flatMap(_.byId(req.procId)).foreach { h =>
           if (h.status == "STOPPED") throw new IllegalStateException(
-            s"process $procId is STOPPED: write rejected")
+            s"process ${req.procId} is STOPPED: write rejected")
         }
-      val (ctxW, bucket, points) = payload match {
-        case req: WriteDataPointsRequest =>
-          admitProc(req.procId)
-          (procCtx(ctx, req.procId), req.bucket, req.dp)
-        case (procId: Int, pts: Seq[_]) =>
-          admitProc(procId)
-          (procCtx(ctx, procId), "", pts.asInstanceOf[Seq[WritePoint]])
-        case pts: Seq[_] =>
-          // unrouted writes land in the default context, but a latched
-          // disk alarm stops ALL ingestion, not just per-process stores
-          ctx.registry.foreach { r =>
-            if (r.alarmActive) throw new IllegalStateException(
-              "storage quota alarm active: write rejected")
-          }
-          (ctx, "", pts.asInstanceOf[Seq[WritePoint]])
-        case other => throw new IllegalArgumentException(s"bad write payload: $other")
-      }
-      import ctxW.spark.implicits._
-      val df = points.map(p => (p.name, p.ts,
-          p.tags.getOrElse("dev_id", ""), p.tags.getOrElse("dev_type", ""),
-          p.tags.getOrElse("dir", null), p.tags.getOrElse("location_id", ""),
-          p.tags.getOrElse("service", null), null: String, p.tags.getOrElse("topic", ""),
-          p.fields.getOrElse("value", Double.NaN), p.fields.get("unit").map(_.toString).orNull))
-        .toDF("measurement", "time", "dev_id", "dev_type", "dir", "location_id",
-          "service", "src", "topic", "value", "unit")
-      if (bucket.isEmpty) ctxW.store.writeRouted(df, ctxW.profile)
-      else {
-        // WriteDirect (process.go:313-337): the caller pinned the target
-        // retention policy — no routing; an unknown bucket is refused
-        // rather than auto-created (the reference lets InfluxDB error)
-        val t = ctxW.store.tierByName(bucket).getOrElse(
-          throw new IllegalArgumentException(s"unknown bucket: $bucket"))
-        ctxW.store.write(t, df)
-      }
-      ctx.spark.emptyDataFrame
-    case "cmd.tsdb.get_measurements" => // S8 (admin.go / influxdb_v1.go:376-394)
-      import ctx.spark.implicits._
-      Tier.all.flatMap(t => ctx.store.measurements(t).map(m => (t.name, m)))
-        .toDF("tier", "measurement")
-    case "cmd.tsdb.get_retention_policies" => // S8 (influxdb_v1.go:396-413)
-      import ctx.spark.implicits._
-      ctx.store.retentionPolicies.map(t => (t.name, t.retention, t.resolution))
-        .toDF("name", "retention", "resolution")
-    case "cmd.tsdb.add_retention_policy" => // S9 (admin.go:292-311)
-      ctx.store.addRetentionPolicy(payload.asInstanceOf[Tier])
-      ctx.spark.emptyDataFrame
-    case "cmd.tsdb.update_retention_policy" => // S9 (admin.go:313-332)
-      ctx.store.updateRetentionPolicy(payload.asInstanceOf[Tier])
-      ctx.spark.emptyDataFrame
-    case "cmd.tsdb.add_cq" =>
-      // the reference's AddCQ surface (storage interface ds.go:23;
-      // CREATE CONTINUOUS QUERY templates influxdb_v1.go:333-354) as a
-      // command: register a src→target downsampling hop that every
-      // maintenance pass (cmd.tsdb.run_maintenance / Downsampler
-      // .maintain) and backfill executes after the built-in cascade
-      val (name, src, target, every) =
-        payload.asInstanceOf[(String, String, String, String)]
-      ctx.store.addCq(name, src, target, every)
-      cqsDf(ctx)
-    case "cmd.tsdb.get_cqs" => cqsDf(ctx) // SHOW CONTINUOUS QUERIES
-    case "cmd.tsdb.delete_object" => // S9 (admin.go:334-370): all four object types
-      payload match {
-        case ("retention_policy", name: String) =>
-          ctx.store.deleteRetentionPolicy(name)
-        case ("measurement", name: String) =>
-          ctx.store.retentionPolicies.foreach(t => ctx.store.dropMeasurement(t, name))
-        case ("cq", name: String) => // admin.go:364 DeleteCQ
-          ctx.store.deleteCq(name)
-        case ("database", _: String) => // admin.go:360-362 DropDB
-          ctx.store.drop()
-        case other => throw new IllegalArgumentException(s"unknown object: $other")
-      }
-      ctx.spark.emptyDataFrame
-    case "cmd.tsdb.get_configs" => { // admin.go:372-378
-      import ctx.spark.implicits._
-      val c = ctx.state.config
-      Seq((c.id, c.name, c.profile, c.batchMaxSize, c.saveIntervalMs,
-        c.filters.size, c.selectors.size))
-        .toDF("id", "name", "profile", "batch_max_size", "save_interval_ms",
-          "n_filters", "n_selectors")
+        val ctxW = procCtx(ctx, req.procId)
+        val df = req.dp.map(p => (p.name, p.ts,
+            p.tags.getOrElse("dev_id", ""), p.tags.getOrElse("dev_type", ""),
+            p.tags.getOrElse("dir", null), p.tags.getOrElse("location_id", ""),
+            p.tags.getOrElse("service", null), null: String, p.tags.getOrElse("topic", ""),
+            p.fields.getOrElse("value", Double.NaN), p.fields.get("unit").map(_.toString).orNull))
+          .toDF("measurement", "time", "dev_id", "dev_type", "dir", "location_id",
+            "service", "src", "topic", "value", "unit")
+        if (req.bucket.isEmpty) ctxW.store.writeRouted(df, ctxW.profile)
+        else {
+          // WriteDirect (process.go:313-337): the caller pinned the target
+          // retention policy — no routing; an unknown bucket is refused
+          // rather than auto-created (the reference lets InfluxDB error)
+          val t = ctxW.store.tierByName(req.bucket).getOrElse(
+            throw new IllegalArgumentException(s"unknown bucket: ${req.bucket}"))
+          ctxW.store.write(t, df)
+        }
+        ctx.spark.emptyDataFrame
+      case Cmd.GetMeasurements => // S8 (admin.go / influxdb_v1.go:376-394)
+        ctx.store.retentionPolicies.flatMap(t => ctx.store.measurements(t).map(m => (t.name, m)))
+          .toDF("tier", "measurement")
+      case Cmd.GetRetentionPolicies => // S8 (influxdb_v1.go:396-413)
+        ctx.store.retentionPolicies.map(t => (t.name, t.retention, t.resolution))
+          .toDF("name", "retention", "resolution")
+      case Cmd.AddRetentionPolicy(tier) => // S9 (admin.go:292-311)
+        ctx.store.addRetentionPolicy(tier)
+        ctx.spark.emptyDataFrame
+      case Cmd.UpdateRetentionPolicy(tier) => // S9 (admin.go:313-332)
+        ctx.store.updateRetentionPolicy(tier)
+        ctx.spark.emptyDataFrame
+      case Cmd.AddCq(name, src, target, every) =>
+        // the reference's AddCQ surface (storage interface ds.go:23;
+        // CREATE CONTINUOUS QUERY templates influxdb_v1.go:333-354) as a
+        // command: register a src→target downsampling hop that every
+        // maintenance pass (cmd.tsdb.run_maintenance / Downsampler
+        // .maintain) and backfill executes after the built-in cascade
+        ctx.store.addCq(name, src, target, every)
+        cqsDf(ctx)
+      case Cmd.GetCqs => cqsDf(ctx) // SHOW CONTINUOUS QUERIES
+      case Cmd.DeleteObject(objectType, name) => // S9 (admin.go:334-370): all four object types
+        objectType match {
+          case "retention_policy" => ctx.store.deleteRetentionPolicy(name)
+          case "measurement" =>
+            ctx.store.retentionPolicies.foreach(t => ctx.store.dropMeasurement(t, name))
+          case "cq" => ctx.store.deleteCq(name) // admin.go:364 DeleteCQ
+          case "database" => ctx.store.drop() // admin.go:360-362 DropDB
+          case other => throw new IllegalArgumentException(
+            s"unknown object: ($other,$name)")
+        }
+        ctx.spark.emptyDataFrame
+      case Cmd.GetConfigs => // admin.go:372-378
+        val c = ctx.state.config
+        Seq((c.id, c.name, c.profile, c.batchMaxSize, c.saveIntervalMs,
+          c.filters.size, c.selectors.size))
+          .toDF("id", "name", "profile", "batch_max_size", "save_interval_ms",
+            "n_filters", "n_selectors")
+      case Cmd.AddFilter(f) => // api.go:4-12
+        ctx.state.addFilter(f); filtersDf(ctx)
+      case Cmd.RemoveFilter(id) => // api.go:15-25
+        ctx.state.removeFilter(id); filtersDf(ctx)
+      case Cmd.AddSelector(sel) => // api.go:28-37
+        ctx.state.addSelector(sel); selectorsDf(ctx)
+      case Cmd.RemoveSelector(id) => // api.go:40-50
+        ctx.state.removeSelector(id); selectorsDf(ctx)
+      case Cmd.GetFilters => filtersDf(ctx) // api.go:54-56
+      case Cmd.GetSelectors => selectorsDf(ctx) // api.go:59-61
     }
-    case "cmd.tsdb.add_filter" => // api.go:4-12
-      ctx.state.addFilter(payload.asInstanceOf[Filter]); filtersDf(ctx)
-    case "cmd.tsdb.remove_filter" => // api.go:15-25
-      ctx.state.removeFilter(payload.asInstanceOf[Int]); filtersDf(ctx)
-    case "cmd.tsdb.add_selector" => // api.go:28-37
-      ctx.state.addSelector(payload.asInstanceOf[Selector]); selectorsDf(ctx)
-    case "cmd.tsdb.remove_selector" => // api.go:40-50
-      ctx.state.removeSelector(payload.asInstanceOf[Int]); selectorsDf(ctx)
-    case "cmd.tsdb.get_filters" => filtersDf(ctx) // api.go:54-56
-    case "cmd.tsdb.get_selectors" => selectorsDf(ctx) // api.go:59-61
-    case other =>
-      throw new IllegalArgumentException(s"unknown command: $other")
+  }
+
+  /** The message-type-named form the benchmark's query-history harness
+   *  calls (`perfbench/src/perfbench/QueryHistory.scala`: `dispatch(ctx,
+   *  cmd.msgType, cmd.payload)` on a decoded command): refuses a
+   *  `msgType` that does not name `cmd`, then runs [[dispatch]]. */
+  def dispatch(ctx: Context, msgType: String, cmd: Cmd): DataFrame = {
+    require(msgType == cmd.wireType,
+      s"message type $msgType does not name command ${cmd.wireType}")
+    dispatch(ctx, cmd)
   }
 
   /** Execute a parsed InfluxQL statement against the context's store. */
   private def influxQuery(ctx: Context, sql: String): DataFrame = {
     import graft.query.InfluxQL
+    val read: Tier => DataFrame = t => ctx.store.read(t)
+    val slice = Some(slicedRead(ctx, ""))
     InfluxQL.parse(sql) match {
       case InfluxQL.ShowMeasurements(pattern) =>
         // the pattern filters the CATALOG listing (metadata-sized),
         // unanchored like every other regex surface here
-        val cat = dispatch(ctx, "cmd.tsdb.get_measurements", null)
+        val cat = dispatch(ctx, Cmd.GetMeasurements)
         pattern.fold(cat)(p => cat.filter(col("measurement").rlike(p)))
       case InfluxQL.ShowRetentionPolicies =>
-        dispatch(ctx, "cmd.tsdb.get_retention_policies", null)
-      case InfluxQL.ShowContinuousQueries => dispatch(ctx, "cmd.tsdb.get_cqs", null)
+        dispatch(ctx, Cmd.GetRetentionPolicies)
+      case InfluxQL.ShowContinuousQueries => dispatch(ctx, Cmd.GetCqs)
       case InfluxQL.ShowDatabases =>
         import ctx.spark.implicits._
         Seq(ctx.store.databaseName).toDF("name")
@@ -715,20 +538,14 @@ object Api {
       case InfluxQL.ShowFieldKeys(m) => ctx.store.fieldKeys(m)
       case InfluxQL.ShowSeries(m) => ctx.store.seriesKeys(m)
       case sel: InfluxQL.Select =>
-        InfluxQL.dataPoints(sel, t => ctx.store.read(t),
-          ctx.store.tierByName(_), ctx.now(),
-          sliceResolve = Some(slicedRead(ctx, "")))
+        InfluxQL.dataPoints(sel, read, ctx.store.tierByName(_), ctx.now(), slice)
       case sub: InfluxQL.Subquery =>
-        InfluxQL.dataPoints(sub, t => ctx.store.read(t),
-          ctx.store.tierByName(_), ctx.now(),
-          sliceResolve = Some(slicedRead(ctx, "")))
+        InfluxQL.dataPoints(sub, read, ctx.store.tierByName(_), ctx.now(), slice)
       case rs: InfluxQL.RegexSelect =>
         // the regex matches against the store CATALOG (a listing, not a
         // data scan), across every retention tier the store carries
-        InfluxQL.dataPoints(rs, t => ctx.store.read(t),
-          ctx.store.tierByName(_), ctx.now(), Some(slicedRead(ctx, "")),
-          () => ctx.store.retentionPolicies
-            .flatMap(t => ctx.store.measurements(t)).distinct)
+        InfluxQL.dataPoints(rs, read, ctx.store.tierByName(_), ctx.now(), slice,
+          () => ctx.store.retentionPolicies.flatMap(t => ctx.store.measurements(t)).distinct)
       case si: InfluxQL.SelectInto => selectInto(ctx, si)
     }
   }
@@ -803,6 +620,20 @@ object Api {
       import ctx.spark.implicits._
       Seq((0L, n)).toDF("time", "written")
     } finally { pts.unpersist(); () }
+  }
+
+  /** The row predicate of a tier erasure or its audit: the request's
+   *  tag filters and measurement. A request naming neither is refused
+   *  with `refusal`. */
+  private def erasurePredicate(req: Cmd.GetDataPointsRequest,
+      refusal: String): org.apache.spark.sql.Column = {
+    val f = req.filters
+    if (req.measurementName.isEmpty && f.tags.isEmpty && f.devices.isEmpty &&
+      f.locations.isEmpty && f.devTypes.isEmpty)
+      throw new IllegalArgumentException(refusal)
+    val pred = Planner.filterColumn(f)
+    if (req.measurementName.isEmpty) pred
+    else pred && col("measurement") === req.measurementName
   }
 
   /** Route a command to the process's own store/state when a registry is
@@ -929,7 +760,7 @@ object Api {
         f.dataType.isInstanceOf[org.apache.spark.sql.types.NumericType] ||
           f.dataType == org.apache.spark.sql.types.BooleanType))
     val columnsJson =
-      ((if (dataShaped) Seq("time") else Nil) ++ valueCols).map(jstr).mkString(",")
+      ((if (dataShaped) Seq("time") else Nil) ++ valueCols).map(q).mkString(",")
     // single pass over series-contiguous rows
     val sb = new StringBuilder("[")
     var openKey: (String, Seq[String]) = null
@@ -940,9 +771,9 @@ object Api {
       anySeries = true
       val name = if (hasMeas) key._1 else measurement
       val tagJson = tagKeys.zip(key._2)
-        .map { case (k, v) => s"${jstr(k)}:${jstr(v)}" }
+        .map { case (k, v) => s"${q(k)}:${q(v)}" }
         .mkString("{", ",", "}")
-      sb.append(s"""{"name":${jstr(name)},"tags":$tagJson,"columns":[$columnsJson],"values":[""")
+      sb.append(s"""{"name":${q(name)},"tags":$tagJson,"columns":[$columnsJson],"values":[""")
       firstVal = true
       openKey = key
     }
@@ -964,7 +795,11 @@ object Api {
         if (dataShaped || i > 0) sb.append(',')
         val v = Option(r.getAs[Any](c))
         sb.append(v match {
-          case Some(s: String) => jstr(s) // catalog cells are JSON strings
+          case Some(s: String) => q(s) // catalog cells are JSON strings
+          // JSON has no NaN or Infinity token: a non-finite value (e.g. a
+          // written point with no `value` field) reads as null
+          case Some(d: Double) if !java.lang.Double.isFinite(d) => "null"
+          case Some(f: Float) if !java.lang.Float.isFinite(f) => "null"
           case Some(x) => x.toString
           case None => "null"
         })
@@ -977,15 +812,12 @@ object Api {
     s"""{"Results":[{"Series":$sb}]$nextMarker}"""
   }
 
-  private def jstr(s: String) =
-    "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"") + "\""
-
   /** The reference's error response payload for a failed query:
    *  `{"Results":null,"error":"<message>"}` (docs/api:364-380). */
   def shapeError(e: Throwable): String = {
     val msg = Option(e.getMessage).getOrElse(e.getClass.getSimpleName)
       .linesIterator.take(3).mkString(" ").take(500)
-    s"""{"Results":null,"error":${jstr(msg)}}"""
+    s"""{"Results":null,"error":${q(msg)}}"""
   }
 
   /**
@@ -999,35 +831,33 @@ object Api {
    * (a subquery's innermost) and GROUP BY tag keys: one Series per tag
    * tuple, named by the measurement, as InfluxDB answers.
    */
-  def dispatchShaped(ctx: Context, command: String, payload: Any,
+  def dispatchShaped(ctx: Context, cmd: Cmd,
       measurement: String = "", groupByTag: String = "",
       maxRows: Int = 100000, afterTimeSec: Long = Long.MinValue): String =
     try {
-      val df = dispatch(ctx, command, payload)
-      val (m, g) =
-        if (command != "cmd.tsdb.query" || measurement.nonEmpty ||
-            groupByTag.nonEmpty) (measurement, groupByTag)
-        else rawSeriesKey(payload)
+      val df = dispatch(ctx, cmd)
+      val (m, g) = cmd match {
+        case Cmd.Query(sql, _) if measurement.isEmpty && groupByTag.isEmpty =>
+          rawSeriesKey(sql)
+        case _ => (measurement, groupByTag)
+      }
       shapeResponse(df, m, g, maxRows, afterTimeSec)
     } catch { case e: Exception => shapeError(e) }
 
   /** The (measurement, group-by tags) a raw InfluxQL select names; empty
    *  for SELECT INTO, the SHOW forms and Spark SQL. */
-  private def rawSeriesKey(payload: Any): (String, String) = {
+  private def rawSeriesKey(sql: String): (String, String) = {
     import graft.query.InfluxQL._
     def innermost(st: Statement): String = st match {
       case sub: Subquery => innermost(sub.inner)
       case s: Select => s.req.measurement
       case _ => ""
     }
-    payload match {
-      case (_: Int, sql: String) => rawSeriesKey(sql)
-      case sql: String if looksLike(sql) => parse(sql) match {
-        case s: Select => (s.req.measurement, s.req.groupByTag)
-        case rs: RegexSelect => (rs.sel.req.measurement, rs.sel.req.groupByTag)
-        case sub: Subquery => (innermost(sub), sub.outer.req.groupByTag)
-        case _ => ("", "")
-      }
+    if (!looksLike(sql)) ("", "")
+    else parse(sql) match {
+      case s: Select => (s.req.measurement, s.req.groupByTag)
+      case rs: RegexSelect => (rs.sel.req.measurement, rs.sel.req.groupByTag)
+      case sub: Subquery => (innermost(sub), sub.outer.req.groupByTag)
       case _ => ("", "")
     }
   }
@@ -1044,10 +874,10 @@ object Api {
   def shapeFimpReport(resultsJson: String, corid: String, uid: String,
       ctime: String, msgType: String = "evt.tsdb.data_points_report",
       valT: String = "object"): String =
-    s"""{"type":${jstr(msgType)},"serv":"ecollector","val_t":${jstr(valT)},""" +
+    s"""{"type":${q(msgType)},"serv":"ecollector","val_t":${q(valT)},""" +
       s""""val":$resultsJson,"tags":null,"props":null,"ver":"1",""" +
-      s""""corid":${if (corid.isEmpty) "null" else jstr(corid)},""" +
-      s""""ctime":${jstr(ctime)},"uid":${jstr(uid)}}"""
+      s""""corid":${if (corid.isEmpty) "null" else q(corid)},""" +
+      s""""ctime":${q(ctime)},"uid":${q(uid)}}"""
 
   /** The catalog's documented wire shape (docs/api:403-440):
    *  `evt.tsdb.measurements_report` with `val_t: "str_array"` — the
@@ -1055,10 +885,10 @@ object Api {
    *  string array. */
   def measurementsFimpReport(ctx: Context, corid: String, uid: String,
       ctime: String): String = {
-    val names = dispatch(ctx, "cmd.tsdb.get_measurements", null)
+    val names = dispatch(ctx, Cmd.GetMeasurements)
       .select("measurement").distinct()
       .collect().map(_.getString(0)).sorted
-    shapeFimpReport(names.map(jstr).mkString("[", ",", "]"), corid, uid,
+    shapeFimpReport(names.map(q).mkString("[", ",", "]"), corid, uid,
       ctime, msgType = "evt.tsdb.measurements_report", valT = "str_array")
   }
 
@@ -1069,14 +899,15 @@ object Api {
    *  `evt.tsdb.query_report` (docs/api:24,209,263,367), the structured
    *  point queries as `evt.tsdb.data_points_report`
    *  (docs/data-exchange:7). */
-  def dispatchFimp(ctx: Context, command: String, payload: Any,
+  def dispatchFimp(ctx: Context, cmd: Cmd,
       corid: String, uid: String, ctime: String,
       measurement: String = "", groupByTag: String = "",
       maxRows: Int = 100000, afterTimeSec: Long = Long.MinValue): String = {
-    val msgType =
-      if (command == "cmd.tsdb.query") "evt.tsdb.query_report"
-      else "evt.tsdb.data_points_report"
-    shapeFimpReport(dispatchShaped(ctx, command, payload, measurement,
+    val msgType = cmd match {
+      case _: Cmd.Query => "evt.tsdb.query_report"
+      case _ => "evt.tsdb.data_points_report"
+    }
+    shapeFimpReport(dispatchShaped(ctx, cmd, measurement,
       groupByTag, maxRows, afterTimeSec), corid, uid, ctime, msgType)
   }
 }

@@ -7,8 +7,8 @@ import org.json4s.jackson.JsonMethods
 /**
  * Wire codec for the command surface: decodes a FIMP-enveloped command
  * message (`{"type":"cmd.tsdb...","val":{...},"uid":...,"corid":...}`
- * — docs/data-exchange:6-133) into the typed payload
- * [[Api.dispatch]] expects, so a transport (the [[graft.Service]] file
+ * — docs/data-exchange:6-133) into the typed [[Cmd]]
+ * [[Api.dispatch]] matches, so a transport (the [[graft.Service]] file
  * socket, stdin, or a future broker hop) can carry the SAME commands
  * the reference receives over MQTT (admin.go:404-416 onCommand)
  * without any Scala on the caller's side.
@@ -20,8 +20,8 @@ import org.json4s.jackson.JsonMethods
  */
 object CommandCodec {
 
-  /** JSON string literal with escaping — for transports composing raw
-   *  error payloads outside [[Api.dispatchShaped]]'s envelope. */
+  /** JSON string literal with escaping of quotes, backslashes and every
+   *  control character — the one escape behind every string on the wire. */
   def q(s: String): String = {
     val b = new StringBuilder("\"")
     Option(s).getOrElse("").foreach {
@@ -36,9 +36,10 @@ object CommandCodec {
     b.append("\"").toString
   }
 
-  /** A decoded command message. */
-  final case class Command(msgType: String, payload: Any, uid: String,
-      corid: String, measurement: String, groupByTag: String)
+  /** A decoded command message: the typed command, the envelope's
+   *  identity fields, and the Series-naming hints its `val` carries. */
+  final case class Command(payload: Cmd, uid: String, corid: String,
+      measurement: String, groupByTag: String) { def msgType: String = payload.wireType }
 
   private def str(v: JValue, d: String = ""): String = v match {
     case JString(s) => s
@@ -91,13 +92,8 @@ object CommandCodec {
     case JNull | JNothing => Nil
     case other => throw new IllegalArgumentException(s"not a long array: $other")
   }
-  private def strMap(v: JValue): Map[String, String] = v match {
-    case JObject(fs) => fs.map { case (k, x) => k -> str(x) }.toMap
-    case JNull | JNothing => Map.empty
-    case other => throw new IllegalArgumentException(s"not an object: $other")
-  }
-  private def dblMap(v: JValue): Map[String, Double] = v match {
-    case JObject(fs) => fs.map { case (k, x) => k -> dbl(x, 0.0) }.toMap
+  private def objMap[T](v: JValue)(f: JValue => T): Map[String, T] = v match {
+    case JObject(fs) => fs.map { case (k, x) => k -> f(x) }.toMap
     case JNull | JNothing => Map.empty
     case other => throw new IllegalArgumentException(s"not an object: $other")
   }
@@ -116,14 +112,14 @@ object CommandCodec {
       .find(j => j != JNothing && j != JNull).getOrElse(JNothing)
 
   private def filters(v: JValue): DataPointsFilter = DataPointsFilter(
-    tags = strMap(v \ "tags"),
+    tags = objMap(v \ "tags")(str(_)),
     devices = strSeq(v \ "devices"),
     locations = strSeq(v \ "locations"),
     devTypes = strSeq(field(v, "devTypes", "dev_types")))
 
-  private def getDataPoints(v: JValue): Api.GetDataPointsRequest =
-    Api.GetDataPointsRequest(
-      procId = int(field(v, "procId", "proc_id"), 1),
+  private def getDataPoints(v: JValue): Cmd.GetDataPointsRequest =
+    Cmd.GetDataPointsRequest(
+      procId = procId(v),
       fieldName = str(field(v, "fieldName", "field_name")),
       dataFunction = str(field(v, "dataFunction", "data_function")),
       transformFunction = str(field(v, "transformFunction", "transform_function")),
@@ -156,11 +152,22 @@ object CommandCodec {
     java.sql.Timestamp.from(inst)
   }
 
-  private def writePoint(v: JValue, now: () => java.time.Instant): Api.WritePoint =
-    Api.WritePoint(
+  private def eraseIndexIds(v: JValue): Cmd.EraseIndexIdsRequest =
+    Cmd.EraseIndexIdsRequest(
+      procId = procId(v),
+      ids = longSeq(v \ "ids"),
+      ivf = strSeq(field(v, "ivf", "ivf_paths")),
+      minhash = strSeq(field(v, "minhash", "minhash_paths")),
+      bm25 = strSeq(field(v, "bm25", "bm25_paths")))
+
+  private def tier(v: JValue): Tier =
+    Tier(str(v \ "name"), str(v \ "retention"), str(v \ "resolution"))
+
+  private def writePoint(v: JValue, now: () => java.time.Instant): Cmd.WritePoint =
+    Cmd.WritePoint(
       name = str(v \ "name"),
-      tags = strMap(v \ "tags"),
-      fields = dblMap(v \ "fields"),
+      tags = objMap(v \ "tags")(str(_)),
+      fields = objMap(v \ "fields")(dbl(_, 0.0)),
       ts = pointTs(v \ "ts", now))
 
   /** The reference's ProcessConfig/Filter/Selector structs carry no
@@ -184,6 +191,93 @@ object CommandCodec {
     profile = str(field(v, "profile", "Profile"), Tier.ProfileOptimized),
     autostart = bool(field(v, "autostart", "Autostart"), d = false))
 
+  private def procId(v: JValue): Int = int(field(v, "procId", "proc_id"), 1)
+
+  private type Decoder = (JValue, () => java.time.Instant) => Cmd
+  private def on(wireType: String)(d: Decoder): (String, Decoder) = wireType -> d
+
+  /** The one place a wire name selects a command: each message type the
+   *  transport accepts, with the decoder of its `val`. */
+  private val decoders: Map[String, Decoder] = (Seq(
+    on("cmd.tsdb.get_data_points")((v, _) => Cmd.GetDataPoints(getDataPoints(v))),
+    on("cmd.tsdb.get_energy_data_points")((v, _) =>
+      Cmd.GetEnergyDataPoints(getDataPoints(v))),
+    on("cmd.tsdb.delete_data_points")((v, _) => Cmd.DeleteDataPoints(getDataPoints(v))),
+    on("cmd.tsdb.verify_tier_erasure")((v, _) => Cmd.VerifyTierErasure(getDataPoints(v))),
+    on("cmd.tsdb.write_data_points")((v, now) => Cmd.WriteDataPointsRequest(
+      procId = procId(v), bucket = str(v \ "bucket"),
+      dp = (v \ "dp") match {
+        case JArray(xs) => xs.map(writePoint(_, now))
+        case _ => throw new IllegalArgumentException("write: 'dp' must be an array")
+      })),
+    on("cmd.tsdb.compact")((v, _) => Cmd.CompactRequest(
+      procId = procId(v), tier = str(v \ "tier"),
+      targetFileBytes = long(v \ "targetFileBytes", 128L * 1024 * 1024),
+      minFiles = int(v \ "minFiles", 4),
+      clusterBy = strSeq(v \ "clusterBy"),
+      zorder = bool(v \ "zorder", d = false),
+      retainHistory = bool(v \ "retainHistory", d = false))),
+    on("cmd.tsdb.erase_index_ids")((v, _) => Cmd.EraseIndexIds(eraseIndexIds(v))),
+    on("cmd.tsdb.verify_erasure")((v, _) => Cmd.VerifyErasure(eraseIndexIds(v))),
+    on("cmd.tsdb.vacuum")((v, _) => Cmd.VacuumRequest(
+      procId = procId(v), tier = str(v \ "tier"),
+      foldBatchMarkers = bool(v \ "foldBatchMarkers", d = true))),
+    on("cmd.tsdb.run_maintenance")((v, _) => Cmd.MaintenanceRequest(
+      procId = procId(v), sinceDays = int(v \ "sinceDays", 3),
+      retainHistory = bool(v \ "retainHistory", d = false))),
+    on("cmd.tsdb.backfill")((v, _) => Cmd.BackfillRequest(
+      procId = procId(v), fromDate = str(v \ "fromDate"),
+      toDate = str(v \ "toDate"),
+      retainHistory = bool(v \ "retainHistory", d = false))),
+    on("cmd.tsdb.verify_rollup")((v, _) => Cmd.VerifyRollupRequest(
+      procId = procId(v), fromDate = str(v \ "fromDate"),
+      toDate = str(v \ "toDate"), tolerance = dbl(v \ "tolerance", 1e-6))),
+    on("cmd.tsdb.diff_data_points")((v, _) => Cmd.DiffRequest(
+      procId = procId(v), tier = str(v \ "tier"),
+      fromPin = str(field(v, "fromPin", "from_pin")),
+      toPin = str(field(v, "toPin", "to_pin")))),
+    on("cmd.tsdb.query")((v, _) => v match {
+      case JString(sql) => Cmd.Query(sql)
+      case o => Cmd.Query(str(o \ "sql"), Some(int(o \ "procId", 1)))
+    }),
+    on("cmd.ecprocess.add")((v, _) => Cmd.AddProcess(
+      if (v == JNothing || v == JNull) None else Some(processConfig(v)))),
+    on("cmd.ecprocess.ctrl")((v, _) => Cmd.Ctrl(procId(v), str(v \ "op"))),
+    on("cmd.ecprocess.update_config")((v, _) => Cmd.UpdateConfig(processConfig(v))),
+    on("cmd.log.set_level")((v, _) => Cmd.SetLogLevel(str(v))),
+    on("cmd.tsdb.add_retention_policy")((v, _) => Cmd.AddRetentionPolicy(tier(v))),
+    on("cmd.tsdb.update_retention_policy")((v, _) => Cmd.UpdateRetentionPolicy(tier(v))),
+    on("cmd.tsdb.add_cq")((v, _) => Cmd.AddCq(str(v \ "name"), str(v \ "src"),
+      str(v \ "target"), str(v \ "every"))),
+    on("cmd.tsdb.delete_object")((v, _) =>
+      Cmd.DeleteObject(str(v \ "objectType"), str(v \ "name"))),
+    on("cmd.tsdb.add_filter")((v, _) => Cmd.AddFilter(Filter(
+      id = int(field(v, "id", "ID"), 0), name = str(field(v, "name", "Name")),
+      topic = str(field(v, "topic", "Topic")),
+      domain = str(field(v, "domain", "Domain")),
+      service = str(field(v, "service", "Service")),
+      msgType = str(field(v, "msgType", "MsgType")),
+      negation = bool(field(v, "negation", "Negation"), d = false),
+      linkedFilterBooleanOperation = str(field(v,
+        "linkedFilterBooleanOperation", "LinkedFilterBooleanOperation")),
+      linkedFilterId = int(field(v, "linkedFilterId", "LinkedFilterID"), 0),
+      isAtomic = bool(field(v, "isAtomic", "IsAtomic"), d = true),
+      tags = objMap(field(v, "tags", "Tags"))(str(_)),
+      measurementId = str(field(v, "measurementId", "MeasurementID"))))),
+    on("cmd.tsdb.remove_filter")((v, _) => Cmd.RemoveFilter(int(v, 0))),
+    on("cmd.tsdb.add_selector")((v, _) => Cmd.AddSelector(Selector(
+      id = int(field(v, "id", "ID"), 0),
+      topic = str(field(v, "topic", "Topic")),
+      inMemory = bool(field(v, "inMemory", "InMemory"), d = false)))),
+    on("cmd.tsdb.remove_selector")((v, _) => Cmd.RemoveSelector(int(v, 0)))) ++
+    // payload-free commands
+    Seq(Cmd.GetList, Cmd.ResetToDefault, Cmd.CheckStorage, Cmd.GetMeasurements,
+      Cmd.GetRetentionPolicies, Cmd.GetCqs, Cmd.GetConfigs, Cmd.GetFilters,
+      Cmd.GetSelectors).map(c => on(c.wireType)((_, _) => c))).toMap
+
+  /** Every message type [[decode]] accepts. */
+  private[graft] def wireTypes: Set[String] = decoders.keySet
+
   /** Decode one command message. Throws IllegalArgumentException on a
    *  malformed envelope or an unknown command type — the transport
    *  reports it through the standard error envelope. `now` supplies the
@@ -194,92 +288,10 @@ object CommandCodec {
     val env = JsonMethods.parse(json)
     val msgType = str(env \ "type")
     require(msgType.nonEmpty, "command message has no 'type'")
+    val decoder = decoders.getOrElse(msgType,
+      throw new IllegalArgumentException(s"unknown command: $msgType"))
     val v = env \ "val"
-    val payload: Any = msgType match {
-      case "cmd.tsdb.get_data_points" | "cmd.tsdb.get_energy_data_points" |
-           "cmd.tsdb.delete_data_points" |
-           "cmd.tsdb.verify_tier_erasure" => getDataPoints(v)
-      case "cmd.tsdb.write_data_points" => Api.WriteDataPointsRequest(
-        procId = int(field(v, "procId", "proc_id"), 1), bucket = str(v \ "bucket"),
-        dp = (v \ "dp") match {
-          case JArray(xs) => xs.map(writePoint(_, now))
-          case _ => throw new IllegalArgumentException("write: 'dp' must be an array")
-        })
-      case "cmd.tsdb.compact" => Api.CompactRequest(
-        procId = int(field(v, "procId", "proc_id"), 1), tier = str(v \ "tier"),
-        targetFileBytes = long(v \ "targetFileBytes", 128L * 1024 * 1024),
-        minFiles = int(v \ "minFiles", 4),
-        clusterBy = strSeq(v \ "clusterBy"),
-        zorder = bool(v \ "zorder", d = false),
-        retainHistory = bool(v \ "retainHistory", d = false))
-      case "cmd.tsdb.erase_index_ids" | "cmd.tsdb.verify_erasure" =>
-        Api.EraseIndexIdsRequest(
-        procId = int(field(v, "procId", "proc_id"), 1),
-        ids = longSeq(v \ "ids"),
-        ivf = strSeq(field(v, "ivf", "ivf_paths")),
-        minhash = strSeq(field(v, "minhash", "minhash_paths")),
-        bm25 = strSeq(field(v, "bm25", "bm25_paths")))
-      case "cmd.tsdb.vacuum" => Api.VacuumRequest(
-        procId = int(field(v, "procId", "proc_id"), 1), tier = str(v \ "tier"),
-        foldBatchMarkers = bool(v \ "foldBatchMarkers", d = true))
-      case "cmd.tsdb.run_maintenance" => Api.MaintenanceRequest(
-        procId = int(field(v, "procId", "proc_id"), 1), sinceDays = int(v \ "sinceDays", 3),
-        retainHistory = bool(v \ "retainHistory", d = false))
-      case "cmd.tsdb.backfill" => Api.BackfillRequest(
-        procId = int(field(v, "procId", "proc_id"), 1), fromDate = str(v \ "fromDate"),
-        toDate = str(v \ "toDate"),
-        retainHistory = bool(v \ "retainHistory", d = false))
-      case "cmd.tsdb.verify_rollup" => Api.VerifyRollupRequest(
-        procId = int(field(v, "procId", "proc_id"), 1), fromDate = str(v \ "fromDate"),
-        toDate = str(v \ "toDate"), tolerance = dbl(v \ "tolerance", 1e-6))
-      case "cmd.tsdb.diff_data_points" => Api.DiffRequest(
-        procId = int(field(v, "procId", "proc_id"), 1), tier = str(v \ "tier"),
-        fromPin = str(field(v, "fromPin", "from_pin")),
-        toPin = str(field(v, "toPin", "to_pin")))
-      case "cmd.tsdb.query" => v match {
-        case JString(sql) => sql
-        case o => (int(o \ "procId", 1), str(o \ "sql"))
-      }
-      case "cmd.ecprocess.add" =>
-        if (v == JNothing || v == JNull) null else processConfig(v)
-      // the reference's ctrl payload is a str_map with "proc_id"/"op"
-      // (admin.go:44 reads val["proc_id"])
-      case "cmd.ecprocess.ctrl" => (int(field(v, "procId", "proc_id"), 1), str(v \ "op"))
-      case "cmd.ecprocess.update_config" => processConfig(v)
-      case "cmd.log.set_level" => str(v)
-      case "cmd.tsdb.add_retention_policy" | "cmd.tsdb.update_retention_policy" =>
-        Tier(str(v \ "name"), str(v \ "retention"), str(v \ "resolution"))
-      case "cmd.tsdb.add_cq" =>
-        (str(v \ "name"), str(v \ "src"), str(v \ "target"), str(v \ "every"))
-      case "cmd.tsdb.delete_object" => (str(v \ "objectType"), str(v \ "name"))
-      case "cmd.tsdb.add_filter" => Filter(
-        id = int(field(v, "id", "ID"), 0), name = str(field(v, "name", "Name")),
-        topic = str(field(v, "topic", "Topic")),
-        domain = str(field(v, "domain", "Domain")),
-        service = str(field(v, "service", "Service")),
-        msgType = str(field(v, "msgType", "MsgType")),
-        negation = bool(field(v, "negation", "Negation"), d = false),
-        linkedFilterBooleanOperation = str(field(v,
-          "linkedFilterBooleanOperation", "LinkedFilterBooleanOperation")),
-        linkedFilterId = int(field(v, "linkedFilterId", "LinkedFilterID"), 0),
-        isAtomic = bool(field(v, "isAtomic", "IsAtomic"), d = true),
-        tags = strMap(field(v, "tags", "Tags")),
-        measurementId = str(field(v, "measurementId", "MeasurementID")))
-      case "cmd.tsdb.remove_filter" | "cmd.tsdb.remove_selector" => int(v, 0)
-      case "cmd.tsdb.add_selector" => Selector(
-        id = int(field(v, "id", "ID"), 0),
-        topic = str(field(v, "topic", "Topic")),
-        inMemory = bool(field(v, "inMemory", "InMemory"), d = false))
-      // payload-free commands
-      case "cmd.ecprocess.get_list" | "cmd.ecprocess.reset_to_default" |
-           "cmd.ecprocess.check_storage" | "cmd.tsdb.get_measurements" |
-           "cmd.tsdb.get_retention_policies" | "cmd.tsdb.get_cqs" |
-           "cmd.tsdb.get_configs" | "cmd.tsdb.get_filters" |
-           "cmd.tsdb.get_selectors" => null
-      case other =>
-        throw new IllegalArgumentException(s"unknown command: $other")
-    }
-    Command(msgType, payload, str(env \ "uid"), str(env \ "corid"),
+    Command(decoder(v, now), str(env \ "uid"), str(env \ "corid"),
       measurement = str(field(v, "measurementName", "measurement_name")),
       groupByTag = str(field(v, "groupByTag", "group_by_tag")))
   }

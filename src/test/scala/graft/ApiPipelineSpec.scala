@@ -4,7 +4,7 @@ import java.nio.file.Files
 import java.sql.Timestamp
 import java.time.Instant
 
-import graft.api.Api
+import graft.api.{Api, Cmd}
 import graft.ingest.IngestPipeline
 import graft.model._
 import graft.sources.LogReplay
@@ -87,10 +87,10 @@ class ApiPipelineSpec extends SparkSpec {
 
     val ctx = Api.Context(spark, store,
       now = () => Instant.parse("2024-01-01T12:00:00Z"))
-    val df = Api.dispatch(ctx, "cmd.tsdb.get_data_points",
-      Api.GetDataPointsRequest(measurementName = "electricity_meter_power",
+    val df = Api.dispatch(ctx,
+      Cmd.GetDataPoints(Cmd.GetDataPointsRequest(measurementName = "electricity_meter_power",
         relativeTime = "3h", groupByTime = "1h", dataFunction = "mean",
-        fillType = "none"))
+        fillType = "none")))
     val got = df.collect().map(r => (r.getAs[Long]("time"), r.getAs[Double]("value"))).toSet
     // 10:00 bucket: mean(1200,1300)=1250; 11:00 bucket: 900
     assert(got == Set((1704103200L, 1250.0), (1704106800L, 900.0)))
@@ -122,9 +122,9 @@ class ApiPipelineSpec extends SparkSpec {
 
     val ctx = Api.Context(spark, store,
       now = () => Instant.parse("2024-01-01T12:00:00Z"))
-    def q(asOf: String) = Api.dispatch(ctx, "cmd.tsdb.get_data_points",
-      Api.GetDataPointsRequest(measurementName = "electricity_meter_power",
-        relativeTime = "3h", asOfPin = asOf))
+    def q(asOf: String) = Api.dispatch(ctx,
+      Cmd.GetDataPoints(Cmd.GetDataPointsRequest(measurementName = "electricity_meter_power",
+        relativeTime = "3h", asOfPin = asOf)))
       .select("value").collect().map(_.getDouble(0)).toSet
     assert(q("") == Set(1200.0, 1300.0, 5000.0)) // current read
     assert(q(pinned.encoded) == Set(1200.0, 1300.0)) // the pinned corpus
@@ -141,36 +141,36 @@ class ApiPipelineSpec extends SparkSpec {
     store.writeRouted(rows.toDF(
       "measurement", "time", "value", "dev_id", "location_id", "dev_type"))
     val ctx = Api.Context(spark, store)
-    val res = Api.dispatch(ctx, "cmd.tsdb.delete_data_points",
-      Api.GetDataPointsRequest(measurementName = "app_click",
-        filters = graft.model.DataPointsFilter(devices = Seq("7"))))
+    val res = Api.dispatch(ctx,
+      Cmd.DeleteDataPoints(Cmd.GetDataPointsRequest(measurementName = "app_click",
+        filters = graft.model.DataPointsFilter(devices = Seq("7")))))
       .collect().map(r => (r.getString(0), r.getLong(1))).toMap
     assert(res("gen_default") == 1L) // the one hit partition rewritten
     assert(store.read(Tier.GenDefault)
       .select("dev_id", "value").as[(String, Double)].collect().toSet ==
       Set(("8", 300.0)))
     intercept[IllegalArgumentException] {
-      Api.dispatch(ctx, "cmd.tsdb.delete_data_points",
-        Api.GetDataPointsRequest())
+      Api.dispatch(ctx,
+        Cmd.DeleteDataPoints(Cmd.GetDataPointsRequest()))
     }
     // half-given or relative time bounds are refused, not silently
     // widened to full history
     intercept[IllegalArgumentException] {
-      Api.dispatch(ctx, "cmd.tsdb.delete_data_points",
-        Api.GetDataPointsRequest(measurementName = "app_click",
-          fromTime = "2024-01-01T00:00:00Z"))
+      Api.dispatch(ctx,
+        Cmd.DeleteDataPoints(Cmd.GetDataPointsRequest(measurementName = "app_click",
+          fromTime = "2024-01-01T00:00:00Z")))
     }
     intercept[IllegalArgumentException] {
-      Api.dispatch(ctx, "cmd.tsdb.delete_data_points",
-        Api.GetDataPointsRequest(measurementName = "app_click",
-          relativeTime = "2h"))
+      Api.dispatch(ctx,
+        Cmd.DeleteDataPoints(Cmd.GetDataPointsRequest(measurementName = "app_click",
+          relativeTime = "2h")))
     }
     // a time-bounded erasure corrects RAW tiers only (rollup rows are
     // bucket-start-stamped aggregates — rebuilt via maintain, not
     // row-deleted): the response must not list rollup tiers
-    val bounded = Api.dispatch(ctx, "cmd.tsdb.delete_data_points",
-      Api.GetDataPointsRequest(measurementName = "app_click",
-        fromTime = "2024-01-01T00:00:00Z", toTime = "2024-01-02T00:00:00Z"))
+    val bounded = Api.dispatch(ctx,
+      Cmd.DeleteDataPoints(Cmd.GetDataPointsRequest(measurementName = "app_click",
+        fromTime = "2024-01-01T00:00:00Z", toTime = "2024-01-02T00:00:00Z")))
       .select("tier").collect().map(_.getString(0)).toSet
     assert(!bounded.exists(Set("gen_day", "gen_week", "gen_month", "gen_year")),
       bounded.mkString(","))
@@ -189,18 +189,18 @@ class ApiPipelineSpec extends SparkSpec {
 
     // refusals surface, not silent no-ops
     intercept[IllegalArgumentException] {
-      Api.dispatch(ctx, "cmd.tsdb.compact",
-        Api.CompactRequest(tier = "gen_default", zorder = true))
+      Api.dispatch(ctx,
+        Cmd.CompactRequest(tier = "gen_default", zorder = true))
     }
     intercept[IllegalArgumentException] {
-      Api.dispatch(ctx, "cmd.tsdb.compact", Api.CompactRequest(tier = "nope"))
+      Api.dispatch(ctx, Cmd.CompactRequest(tier = "nope"))
     }
 
     // pin the pre-compaction corpus, then drive a device-clustered
     // retained-history compaction through the command
     val pinned = store.pinNow()
-    val res = Api.dispatch(ctx, "cmd.tsdb.compact",
-      Api.CompactRequest(tier = "gen_default", minFiles = 2,
+    val res = Api.dispatch(ctx,
+      Cmd.CompactRequest(tier = "gen_default", minFiles = 2,
         clusterBy = Seq("dev_id"), retainHistory = true))
       .collect().map(r => (r.getString(0), r.getLong(1))).toMap
     assert(res == Map("gen_default" -> 1L))
@@ -211,8 +211,8 @@ class ApiPipelineSpec extends SparkSpec {
       Set(100.0, 200.0, 300.0, 400.0)) // history retained: the pin holds
 
     // vacuum through the command reclaims the history the pin rode on
-    val vac = Api.dispatch(ctx, "cmd.tsdb.vacuum",
-      Api.VacuumRequest(tier = "gen_default"))
+    val vac = Api.dispatch(ctx,
+      Cmd.VacuumRequest(tier = "gen_default"))
       .collect().map(r => (r.getString(0), r.getLong(1))).toMap
     assert(vac("gen_default") >= 1L)
     assert(vals(store.read(Tier.GenDefault)) == Set(100.0, 200.0, 300.0, 400.0))
@@ -223,7 +223,7 @@ class ApiPipelineSpec extends SparkSpec {
       store.readAsOf(Tier.GenDefault, pinned).count()
     }
     intercept[IllegalArgumentException] {
-      Api.dispatch(ctx, "cmd.tsdb.vacuum", Api.VacuumRequest(tier = "nope"))
+      Api.dispatch(ctx, Cmd.VacuumRequest(tier = "nope"))
     }
   }
 
@@ -239,8 +239,8 @@ class ApiPipelineSpec extends SparkSpec {
 
     // maintenance trigger with the retainHistory knob (expiry + vacuum
     // deferred): the cascade materializes rollups from the raw tier
-    val rep = Api.dispatch(ctx, "cmd.tsdb.run_maintenance",
-      Api.MaintenanceRequest(sinceDays = 5, retainHistory = true)).collect()
+    val rep = Api.dispatch(ctx,
+      Cmd.MaintenanceRequest(sinceDays = 5, retainHistory = true)).collect()
     assert(rep.head.getAs[String]("status") == "ok")
     assert(store.read(Tier.GenDay).count() > 0L, "cascade did not materialize")
 
@@ -248,9 +248,9 @@ class ApiPipelineSpec extends SparkSpec {
     // command must reclaim the retained history in the same call — the
     // pinned read cannot resurrect the erased rows
     val pinned = store.pinNow()
-    val res = Api.dispatch(ctx, "cmd.tsdb.delete_data_points",
-      Api.GetDataPointsRequest(measurementName = "sensor_click",
-        filters = graft.model.DataPointsFilter(devices = Seq("7"))))
+    val res = Api.dispatch(ctx,
+      Cmd.DeleteDataPoints(Cmd.GetDataPointsRequest(measurementName = "sensor_click",
+        filters = graft.model.DataPointsFilter(devices = Seq("7")))))
       .collect().map(r => (r.getString(0), (r.getLong(1), r.getLong(2)))).toMap
     assert(res("gen_raw")._1 >= 1L)
     def devs(df: org.apache.spark.sql.DataFrame): Set[String] =
@@ -274,21 +274,21 @@ class ApiPipelineSpec extends SparkSpec {
     "unknown bucket refused") {
     val store = new TierStore(spark, tmpDir())
     val ctx = Api.Context(spark, store)
-    def pt(name: String) = Api.WritePoint(name,
+    def pt(name: String) = Cmd.WritePoint(name,
       Map("dev_id" -> "d1", "location_id" -> "1"), Map("value" -> 7.0),
       Timestamp.valueOf("2024-01-01 10:00:00"))
     // app_click would ROUTE to gen_default; the bucket pins gen_week
-    Api.dispatch(ctx, "cmd.tsdb.write_data_points",
-      Api.WriteDataPointsRequest(bucket = "gen_week", dp = Seq(pt("app_click"))))
+    Api.dispatch(ctx,
+      Cmd.WriteDataPointsRequest(bucket = "gen_week", dp = Seq(pt("app_click"))))
     assert(store.read(Tier.GenWeek).count() == 1L)
     assert(store.read(Tier.GenDefault).count() == 0L)
     // empty bucket = the auto-routing path (types.go:33)
-    Api.dispatch(ctx, "cmd.tsdb.write_data_points",
-      Api.WriteDataPointsRequest(dp = Seq(pt("app_click"))))
+    Api.dispatch(ctx,
+      Cmd.WriteDataPointsRequest(dp = Seq(pt("app_click"))))
     assert(store.read(Tier.GenDefault).count() == 1L)
     intercept[IllegalArgumentException] {
-      Api.dispatch(ctx, "cmd.tsdb.write_data_points",
-        Api.WriteDataPointsRequest(bucket = "nope", dp = Seq(pt("app_click"))))
+      Api.dispatch(ctx,
+        Cmd.WriteDataPointsRequest(bucket = "nope", dp = Seq(pt("app_click"))))
     }
   }
 
@@ -300,9 +300,9 @@ class ApiPipelineSpec extends SparkSpec {
       .toDF("measurement", "time", "value", "dev_id", "location_id", "dev_type"))
     val ctx = Api.Context(spark, store,
       now = () => Instant.parse("2024-01-01T12:00:00Z"))
-    val wire = Api.dispatchFimp(ctx, "cmd.tsdb.get_data_points",
-      Api.GetDataPointsRequest(measurementName = "sensor_temp",
-        relativeTime = "3h"),
+    val wire = Api.dispatchFimp(ctx,
+      Cmd.GetDataPoints(Cmd.GetDataPointsRequest(measurementName = "sensor_temp",
+        relativeTime = "3h")),
       corid = "req-123", uid = "resp-456",
       ctime = "2024-01-01T12:00:00.000+00:00",
       measurement = "sensor_temp")
@@ -313,8 +313,8 @@ class ApiPipelineSpec extends SparkSpec {
         """"tags":null,"props":null,"ver":"1","corid":"req-123",""" +
         """"ctime":"2024-01-01T12:00:00.000+00:00","uid":"resp-456"}""", wire)
     // a failing command rides the documented error envelope INSIDE val
-    val err = Api.dispatchFimp(ctx, "cmd.tsdb.query",
-      """SELECT mean("v") FROM "nope_rp"."m" WHERE time > now()-5h GROUP BY time(1m) FILL(null)""",
+    val err = Api.dispatchFimp(ctx,
+      Cmd.Query("""SELECT mean("v") FROM "nope_rp"."m" WHERE time > now()-5h GROUP BY time(1m) FILL(null)"""),
       corid = "", uid = "u", ctime = "2024-01-01T12:00:00.000+00:00")
     assert(err.contains(""""val":{"Results":null,"error":"""), err.take(160))
     assert(err.contains(""""corid":null"""), err.take(160))
@@ -346,7 +346,7 @@ class ApiPipelineSpec extends SparkSpec {
     val ctx = Api.Context(spark, store,
       now = () => Instant.parse("2024-01-01T12:00:00Z"))
     def series(q: String): String = {
-      val wire = Api.dispatchFimp(ctx, "cmd.tsdb.query", q,
+      val wire = Api.dispatchFimp(ctx, Cmd.Query(q),
         corid = "c", uid = "u", ctime = "2024-01-01T12:00:00.000+00:00")
       wire.substring(wire.indexOf(""""val":""") + 6, wire.indexOf(""","tags":null"""))
     }
@@ -403,32 +403,32 @@ class ApiPipelineSpec extends SparkSpec {
     val ctx = Api.Context(spark, new TierStore(spark, root + "/proc_1"),
       registry = Some(reg))
     // initial list: the default process, RUNNING via autostart
-    val l0 = Api.dispatch(ctx, "cmd.ecprocess.get_list", null).collect()
+    val l0 = Api.dispatch(ctx, Cmd.GetList).collect()
     assert(l0.length == 1 && l0.head.getAs[String]("status") == "RUNNING")
     // add: template clone, id = max+1, autostart off → LOADED
-    val add = Api.dispatch(ctx, "cmd.ecprocess.add", null).collect().head
+    val add = Api.dispatch(ctx, Cmd.AddProcess()).collect().head
     assert(add.getAs[String]("status") == "ok" && add.getAs[Int]("proc_id") == 2)
-    val l1 = Api.dispatch(ctx, "cmd.ecprocess.get_list", null).collect()
+    val l1 = Api.dispatch(ctx, Cmd.GetList).collect()
     assert(l1.map(r => (r.getAs[Int]("id"), r.getAs[String]("status"))).toSet ==
       Set((1, "RUNNING"), (2, "LOADED")))
     // ctrl start/stop; reference quirk: unknown op on live proc reports ok
-    assert(Api.dispatch(ctx, "cmd.ecprocess.ctrl", (2, "start"))
+    assert(Api.dispatch(ctx, Cmd.Ctrl(2, "start"))
       .collect().head.getAs[String]("status") == "ok")
     assert(reg.byId(2).get.status == "RUNNING")
-    assert(Api.dispatch(ctx, "cmd.ecprocess.ctrl", (2, "bogus_op"))
+    assert(Api.dispatch(ctx, Cmd.Ctrl(2, "bogus_op"))
       .collect().head.getAs[String]("status") == "ok") // admin.go:127-139 quirk
-    assert(Api.dispatch(ctx, "cmd.ecprocess.ctrl", (99, "start"))
+    assert(Api.dispatch(ctx, Cmd.Ctrl(99, "start"))
       .collect().head.getAs[String]("error") == "unknown process id")
     // update_config replaces the config by id
-    val upd = Api.dispatch(ctx, "cmd.ecprocess.update_config",
-      ProcessConfig(id = 2, name = "renamed")).collect().head
+    val upd = Api.dispatch(ctx,
+      Cmd.UpdateConfig(ProcessConfig(id = 2, name = "renamed"))).collect().head
     assert(upd.getAs[String]("status") == "ok")
     assert(reg.byId(2).get.state.config.name == "renamed")
     // ctrl delete, then reset restores the default set
-    Api.dispatch(ctx, "cmd.ecprocess.ctrl", (2, "delete"))
+    Api.dispatch(ctx, Cmd.Ctrl(2, "delete"))
     assert(reg.processes.map(_._1.id) == Seq(1))
-    Api.dispatch(ctx, "cmd.ecprocess.add", null)
-    Api.dispatch(ctx, "cmd.ecprocess.reset_to_default", null)
+    Api.dispatch(ctx, Cmd.AddProcess())
+    Api.dispatch(ctx, Cmd.ResetToDefault)
     assert(reg.processes.map(_._1.id) == Seq(1))
   }
 
@@ -444,15 +444,15 @@ class ApiPipelineSpec extends SparkSpec {
     import spark.implicits._
     reg.byId(2).get.store.write(Tier.GenDefault, // m_x is low-frequency → gen_default
       rs.toDF("measurement", "time", "value", "dev_id", "location_id", "dev_type"))
-    def q(procId: Int) = Api.dispatch(ctx, "cmd.tsdb.get_data_points",
-      Api.GetDataPointsRequest(procId = procId, measurementName = "m_x",
-        relativeTime = "2h")).count()
+    def q(procId: Int) = Api.dispatch(ctx,
+      Cmd.GetDataPoints(Cmd.GetDataPointsRequest(procId = procId, measurementName = "m_x",
+        relativeTime = "2h"))).count()
     assert(q(2) == 1 && q(1) == 0) // same command, different process → different store
     val err = intercept[IllegalArgumentException](q(77))
     assert(err.getMessage.contains("unknown process"))
-    // routed WRITE: (procId, points) payload lands in that process's store
-    Api.dispatch(ctx, "cmd.tsdb.write_data_points", (1,
-      Seq(Api.WritePoint("m_y", Map("dev_id" -> "d9"), Map("value" -> 3.0),
+    // routed WRITE: the request's procId lands it in that process's store
+    Api.dispatch(ctx, Cmd.WriteDataPointsRequest(procId = 1,
+      dp = Seq(Cmd.WritePoint("m_y", Map("dev_id" -> "d9"), Map("value" -> 3.0),
         Timestamp.valueOf("2024-01-01 00:45:00")))))
     assert(reg.byId(1).get.store.read(Tier.GenDefault)
       .filter(col("measurement") === "m_y").count() == 1)
@@ -469,16 +469,17 @@ class ApiPipelineSpec extends SparkSpec {
       Seq(ProcessConfig(id = 1, autostart = true), ProcessConfig(id = 2, autostart = true)),
       quota = Some(Api.StorageQuota(maxBytes = 1024, usedPercentLimit = 100.0)))
     val ctx = Api.Context(spark, reg.byId(1).get.store, registry = Some(reg))
-    def writeOne(procId: Int) = Api.dispatch(ctx, "cmd.tsdb.write_data_points", (procId,
-      Seq(Api.WritePoint("m_q", Map("dev_id" -> "d1"), Map("value" -> 1.0),
-        Timestamp.valueOf("2024-01-01 10:00:00")))))
+    def write(procId: Int) = Cmd.WriteDataPointsRequest(procId = procId,
+      dp = Seq(Cmd.WritePoint("m_q", Map("dev_id" -> "d1"), Map("value" -> 1.0),
+        Timestamp.valueOf("2024-01-01 10:00:00"))))
+    def writeOne(procId: Int) = Api.dispatch(ctx, write(procId))
     // under budget: monitor tick reports ok, writes flow
-    val ok = Api.dispatch(ctx, "cmd.ecprocess.check_storage", null).collect().head
+    val ok = Api.dispatch(ctx, Cmd.CheckStorage).collect().head
     assert(ok.getAs[String]("op") == "disk_monitor" && ok.getAs[String]("status") == "ok")
     // blow the budget (a single parquet file's footer alone exceeds 1 KiB)
     writeOne(1)
     assert(reg.usedStoreBytes > 1024)
-    val alarm = Api.dispatch(ctx, "cmd.ecprocess.check_storage", null).collect().head
+    val alarm = Api.dispatch(ctx, Cmd.CheckStorage).collect().head
     assert(alarm.getAs[String]("op") == "disk_monitor") // ctrl_report shape
     assert(alarm.getAs[String]("status") == "alarm")
     assert(alarm.getAs[String]("error").contains("DISK LOW SPACE"))
@@ -487,21 +488,11 @@ class ApiPipelineSpec extends SparkSpec {
     assert(reg.processes.forall(_._2 == "STOPPED"))
     val rej = intercept[IllegalStateException](writeOne(2))
     assert(rej.getMessage.contains("STOPPED"))
-    // unrouted (default-context) writes are rejected too while the alarm
-    // is latched — the reference stops ALL ingestion on breach
-    assert(reg.alarmActive)
-    val rejDefault = intercept[IllegalStateException](
-      Api.dispatch(ctx, "cmd.tsdb.write_data_points",
-        Seq(Api.WritePoint("m_q", Map("dev_id" -> "d1"), Map("value" -> 1.0),
-          Timestamp.valueOf("2024-01-01 10:00:00")))))
-    assert(rejDefault.getMessage.contains("quota alarm"))
     // operator restart re-admits writes (and the envelope shape carries
     // the rejection for shaped dispatch)
-    Api.dispatch(ctx, "cmd.ecprocess.ctrl", (1, "start"))
+    Api.dispatch(ctx, Cmd.Ctrl(1, "start"))
     writeOne(1)
-    assert(Api.dispatchShaped(ctx, "cmd.tsdb.write_data_points", (2, Seq(
-      Api.WritePoint("m_q", Map.empty[String, String], Map("value" -> 1.0),
-        Timestamp.valueOf("2024-01-01 10:00:00")))))
+    assert(Api.dispatchShaped(ctx, write(2))
       .startsWith("""{"Results":null,"error":"""))
   }
 
@@ -509,39 +500,87 @@ class ApiPipelineSpec extends SparkSpec {
     val store = new TierStore(spark, tmpDir())
     val ctx = Api.Context(spark, store)
     // bad raw SQL → {"Results":null,"error":...}
-    val bad = Api.dispatchShaped(ctx, "cmd.tsdb.query", "SELEC nonsense FRO")
+    val bad = Api.dispatchShaped(ctx, Cmd.Query("SELEC nonsense FRO"))
     assert(bad.startsWith("""{"Results":null,"error":""""), bad)
-    // unknown command → error envelope too
-    val unk = Api.dispatchShaped(ctx, "cmd.tsdb.nope", null)
-    assert(unk.contains("unknown command"), unk)
     // a good query still returns the Series shape
-    val ok = Api.dispatchShaped(ctx, "cmd.tsdb.query", "SELECT 5 AS value", "m", "")
+    val ok = Api.dispatchShaped(ctx, Cmd.Query("SELECT 5 AS value"), "m", "")
     assert(ok.startsWith("""{"Results":[{"Series":"""), ok)
     // log level: valid applies, invalid reports error without throwing
-    assert(Api.dispatch(ctx, "cmd.log.set_level", "ERROR")
+    assert(Api.dispatch(ctx, Cmd.SetLogLevel("ERROR"))
       .collect().head.getAs[String]("status") == "ok")
-    assert(Api.dispatch(ctx, "cmd.log.set_level", "NOISY")
+    assert(Api.dispatch(ctx, Cmd.SetLogLevel("NOISY"))
       .collect().head.getAs[String]("status") == "error")
   }
 
   test("write_data_points (S6) routes client points into the right tier") {
     val store = new TierStore(spark, tmpDir())
     val ctx = Api.Context(spark, store)
-    Api.dispatch(ctx, "cmd.tsdb.write_data_points", Seq(
-      Api.WritePoint("custom_metric", Map("dev_id" -> "d1"), Map("value" -> 5.0),
-        Timestamp.valueOf("2024-01-01 10:00:00"))))
+    Api.dispatch(ctx, Cmd.WriteDataPointsRequest(dp = Seq(
+      Cmd.WritePoint("custom_metric", Map("dev_id" -> "d1"), Map("value" -> 5.0),
+        Timestamp.valueOf("2024-01-01 10:00:00")))))
     assert(store.read(Tier.GenDefault).count() == 1) // non-sensor → gen_default
-    val rp = Api.dispatch(ctx, "cmd.tsdb.get_retention_policies", null)
+    val rp = Api.dispatch(ctx, Cmd.GetRetentionPolicies)
     assert(rp.count() == 6)
-    val ms = Api.dispatch(ctx, "cmd.tsdb.get_measurements", null)
+    val ms = Api.dispatch(ctx, Cmd.GetMeasurements)
     assert(ms.filter(col("measurement") === "custom_metric").count() == 1)
+  }
+
+  test("wire JSON escapes control characters in tag values and the " +
+    "echoed corid") {
+    import org.json4s._
+    import org.json4s.jackson.JsonMethods.parse
+    val store = new TierStore(spark, tmpDir())
+    val ctx = Api.Context(spark, store,
+      now = () => Instant.parse("2024-01-01T12:00:00Z"))
+    val dev = "a\tb\u0001"
+    Api.dispatch(ctx, Cmd.WriteDataPointsRequest(dp = Seq(Cmd.WritePoint("m_ctl",
+      Map("dev_id" -> dev), Map("value" -> 2.0), Timestamp.valueOf("2024-01-01 10:00:00")))))
+    val body = Api.dispatchShaped(ctx, Cmd.GetDataPoints(Cmd.GetDataPointsRequest(
+      measurementName = "m_ctl", dataFunction = "max", relativeTime = "3h",
+      groupByTime = "1h", groupByTag = "dev_id", fillType = "none")),
+      measurement = "m_ctl", groupByTag = "dev_id")
+    assert(parse(body) \\ "tags" \ "dev_id" == JString(dev), body)
+    val wire = Api.shapeFimpReport(body, corid = "x\ty", uid = "u", ctime = "t")
+    assert(parse(wire) \ "corid" == JString("x\ty"), wire)
+  }
+
+  test("a non-finite value reads as JSON null on the wire") {
+    import org.json4s._
+    import org.json4s.jackson.JsonMethods.parse
+    val store = new TierStore(spark, tmpDir())
+    val ctx = Api.Context(spark, store,
+      now = () => Instant.parse("2024-01-01T12:00:00Z"))
+    // a written point with no `value` field stores NaN
+    Api.dispatch(ctx, Cmd.WriteDataPointsRequest(dp = Seq(Cmd.WritePoint("m_nan",
+      Map("dev_id" -> "d1"), Map.empty, Timestamp.valueOf("2024-01-01 10:00:00")))))
+    val body = Api.dispatchShaped(ctx, Cmd.GetDataPoints(Cmd.GetDataPointsRequest(
+      measurementName = "m_nan", relativeTime = "3h")), measurement = "m_nan")
+    assert(parse(body) \\ "values" == JArray(List(JArray(List(JInt(1704103200), JNull)))),
+      body)
+    val inf = spark.range(1).select(lit(1L).as("time"),
+      lit(Double.PositiveInfinity).as("value"))
+    assert(Api.shapeResponse(inf, "m", "").contains("[1,null]"))
+  }
+
+  test("the measurement catalog lists custom retention policies") {
+    val store = new TierStore(spark, tmpDir())
+    val ctx = Api.Context(spark, store)
+    Api.dispatch(ctx, Cmd.AddRetentionPolicy(Tier("rp_custom", "4 weeks", "")))
+    Api.dispatch(ctx, Cmd.WriteDataPointsRequest(bucket = "rp_custom",
+      dp = Seq(Cmd.WritePoint("m_rp", Map("dev_id" -> "d1"), Map("value" -> 1.0),
+        Timestamp.valueOf("2024-01-01 10:00:00")))))
+    assert(store.read(store.tierByName("rp_custom").get).count() == 1L)
+    assert(Api.dispatch(ctx, Cmd.GetMeasurements).as[(String, String)].collect()
+      .toSeq == Seq(("rp_custom", "m_rp")))
+    assert(Api.dispatch(ctx, Cmd.Query("SHOW MEASUREMENTS"))
+      .select("measurement").as[String].collect().toSeq == Seq("m_rp"))
   }
 
   test("raw SQL passthrough (S7)") {
     val store = new TierStore(spark, tmpDir())
     val ctx = Api.Context(spark, store)
     spark.range(3).createOrReplaceTempView("t_s7")
-    assert(Api.dispatch(ctx, "cmd.tsdb.query", "SELECT count(*) AS n FROM t_s7")
+    assert(Api.dispatch(ctx, Cmd.Query("SELECT count(*) AS n FROM t_s7"))
       .collect().head.getAs[Long]("n") == 3)
   }
 
@@ -718,9 +757,9 @@ class ApiPipelineSpec extends SparkSpec {
     val store = new TierStore(spark, tmpDir())
     val ctx = Api.Context(spark, store)
     // custom retention policy lifecycle
-    Api.dispatch(ctx, "cmd.tsdb.add_retention_policy", Tier("gen_custom", "4 weeks", ""))
-    assert(Api.dispatch(ctx, "cmd.tsdb.get_retention_policies", null).count() == 7)
-    Api.dispatch(ctx, "cmd.tsdb.update_retention_policy", Tier("gen_custom", "8 weeks", ""))
+    Api.dispatch(ctx, Cmd.AddRetentionPolicy(Tier("gen_custom", "4 weeks", "")))
+    assert(Api.dispatch(ctx, Cmd.GetRetentionPolicies).count() == 7)
+    Api.dispatch(ctx, Cmd.UpdateRetentionPolicy(Tier("gen_custom", "8 weeks", "")))
     assert(store.tierByName("gen_custom").get.retention == "8 weeks")
     // write into the custom tier, expire honors the generalized parser
     store.write(store.tierByName("gen_custom").get, spark.createDataFrame(
@@ -732,18 +771,18 @@ class ApiPipelineSpec extends SparkSpec {
     store.expire(store.tierByName("gen_custom").get,
       Instant.parse("2024-06-01T00:00:00Z")) // > 8 weeks later
     assert(store.read(store.tierByName("gen_custom").get).count() == 0)
-    Api.dispatch(ctx, "cmd.tsdb.delete_object", ("retention_policy", "gen_custom"))
-    assert(Api.dispatch(ctx, "cmd.tsdb.get_retention_policies", null).count() == 6)
+    Api.dispatch(ctx, Cmd.DeleteObject("retention_policy", "gen_custom"))
+    assert(Api.dispatch(ctx, Cmd.GetRetentionPolicies).count() == 6)
     // filter/selector CRUD with the reference's id semantics
-    Api.dispatch(ctx, "cmd.tsdb.add_filter", Filter(id = 0, service = "s1"))
-    Api.dispatch(ctx, "cmd.tsdb.add_filter", Filter(id = 0, service = "s2"))
-    assert(Api.dispatch(ctx, "cmd.tsdb.get_filters", null).count() == 2)
-    Api.dispatch(ctx, "cmd.tsdb.remove_filter", 1)
-    val left = Api.dispatch(ctx, "cmd.tsdb.get_filters", null).collect()
+    Api.dispatch(ctx, Cmd.AddFilter(Filter(id = 0, service = "s1")))
+    Api.dispatch(ctx, Cmd.AddFilter(Filter(id = 0, service = "s2")))
+    assert(Api.dispatch(ctx, Cmd.GetFilters).count() == 2)
+    Api.dispatch(ctx, Cmd.RemoveFilter(1))
+    val left = Api.dispatch(ctx, Cmd.GetFilters).collect()
     assert(left.length == 1 && left.head.getAs[Int]("id") == 2)
-    Api.dispatch(ctx, "cmd.tsdb.add_selector", Selector(0, "pt:j1/#"))
-    assert(Api.dispatch(ctx, "cmd.tsdb.get_selectors", null).count() == 1)
-    assert(Api.dispatch(ctx, "cmd.tsdb.get_configs", null)
+    Api.dispatch(ctx, Cmd.AddSelector(Selector(0, "pt:j1/#")))
+    assert(Api.dispatch(ctx, Cmd.GetSelectors).count() == 1)
+    assert(Api.dispatch(ctx, Cmd.GetConfigs)
       .collect().head.getAs[Int]("n_selectors") == 1)
   }
 

@@ -1,5 +1,6 @@
 package graft
 
+import graft.api.Cmd
 import graft.functions.{Dedup, Similarity}
 import org.apache.hadoop.fs.{Path => HPath}
 import org.apache.spark.sql.DataFrame
@@ -384,7 +385,7 @@ class IndexEraseSpec extends SparkSpec {
          |"ivf_paths":[${graft.api.CommandCodec.q(idx)}],
          |"minhash_paths":[${graft.api.CommandCodec.q(mh)}],
          |"bm25_paths":[${graft.api.CommandCodec.q(bm)}]}}""".stripMargin)
-    val rsp = graft.api.Api.dispatch(ctx, cmd.msgType, cmd.payload)
+    val rsp = graft.api.Api.dispatch(ctx, cmd.payload)
       .as[(String, Long)].collect().toMap
     assert(rsp == Map(s"ivf:$idx" -> 2L, s"minhash:$mh" -> 2L,
       s"bm25:$bm" -> 2L), rsp.toString)
@@ -399,7 +400,7 @@ class IndexEraseSpec extends SparkSpec {
          |"ivf_paths":[${graft.api.CommandCodec.q(idx)}],
          |"minhash_paths":[${graft.api.CommandCodec.q(mh)}],
          |"bm25_paths":[${graft.api.CommandCodec.q(bm)}]}}""".stripMargin)
-    val audit = graft.api.Api.dispatch(ctx, auditCmd.msgType, auditCmd.payload)
+    val audit = graft.api.Api.dispatch(ctx, auditCmd.payload)
       .as[(String, Long, Long, Long)].collect()
       .map(r => (r._1, (r._3, r._4))).toMap
     assert(audit(s"ivf:$idx") == ((18L, 0L)), audit.toString)
@@ -409,23 +410,23 @@ class IndexEraseSpec extends SparkSpec {
     // present again) and the audit reports them found
     graft.functions.Retrieval.buildBm25Index(
       (0 until 8).map(doc).toDF("doc_id", "text"), s"$work/bm25_dirty")
-    val dirty = graft.api.Api.dispatch(ctx, "cmd.tsdb.verify_erasure",
-      graft.api.Api.EraseIndexIdsRequest(ids = Seq(2L, 5L),
-        bm25 = Seq(s"$work/bm25_dirty")))
+    val dirty = graft.api.Api.dispatch(ctx,
+      Cmd.VerifyErasure(Cmd.EraseIndexIdsRequest(ids = Seq(2L, 5L),
+        bm25 = Seq(s"$work/bm25_dirty"))))
       .as[(String, Long, Long, Long)].collect()(0)
     assert(dirty._4 > 0L, s"audit failed to flag surviving rows: $dirty")
     // refusals: empty ids, and ids with no index named
     intercept[IllegalArgumentException] {
-      graft.api.Api.dispatch(ctx, "cmd.tsdb.erase_index_ids",
-        graft.api.Api.EraseIndexIdsRequest(ivf = Seq(idx)))
+      graft.api.Api.dispatch(ctx,
+        Cmd.EraseIndexIds(Cmd.EraseIndexIdsRequest(ivf = Seq(idx))))
     }
     intercept[IllegalArgumentException] {
-      graft.api.Api.dispatch(ctx, "cmd.tsdb.erase_index_ids",
-        graft.api.Api.EraseIndexIdsRequest(ids = Seq(1L)))
+      graft.api.Api.dispatch(ctx,
+        Cmd.EraseIndexIds(Cmd.EraseIndexIdsRequest(ids = Seq(1L))))
     }
     intercept[IllegalArgumentException] {
-      graft.api.Api.dispatch(ctx, "cmd.tsdb.verify_erasure",
-        graft.api.Api.EraseIndexIdsRequest(ids = Seq(1L)))
+      graft.api.Api.dispatch(ctx,
+        Cmd.VerifyErasure(Cmd.EraseIndexIdsRequest(ids = Seq(1L))))
     }
   }
 

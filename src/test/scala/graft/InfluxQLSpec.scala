@@ -3,7 +3,7 @@ package graft
 import java.sql.Timestamp
 import java.time.Instant
 
-import graft.api.Api
+import graft.api.{Api, Cmd}
 import graft.model.{DataPointsFilter, DataPointsRequest, SelectItem, Tier}
 import graft.query.{InfluxQL, Planner}
 import graft.store.TierStore
@@ -124,7 +124,7 @@ class InfluxQLSpec extends SparkSpec {
       """SELECT abs(difference(max("value"))) AS "value" FROM "historian"."gen_raw"."electricity_meter_energy" WHERE time > :dashboardTime: GROUP BY time(1h), "dev_id" FILL(null)""",
       """SELECT mean(*) INTO "historian"."gen_day".:MEASUREMENT FROM "historian"."gen_raw"./.*/ GROUP BY time(1m),*""")
       .foreach { q =>
-        val resp = Api.dispatchShaped(ctx, "cmd.tsdb.query", q)
+        val resp = Api.dispatchShaped(ctx, Cmd.Query(q))
         assert(resp.startsWith("""{"Results":null,"error":"""), resp.take(120))
       }
   }
@@ -520,66 +520,66 @@ class InfluxQLSpec extends SparkSpec {
       ("sensor_temp", 1704240000L, 99.0, "1"))) // outside the queried day
     val ctx = Api.Context(spark, store, now = () => now)
     // rp-pinned InfluxQL through the raw-query command
-    val out = Api.dispatch(ctx, "cmd.tsdb.query",
-      """SELECT mean("value") FROM "gen_raw"."sensor_temp" WHERE time >= '2024-01-02T00:00:00Z' AND time <= '2024-01-02T23:59:59Z' GROUP BY time(1h) FILL(none)""")
+    val out = Api.dispatch(ctx,
+      Cmd.Query("""SELECT mean("value") FROM "gen_raw"."sensor_temp" WHERE time >= '2024-01-02T00:00:00Z' AND time <= '2024-01-02T23:59:59Z' GROUP BY time(1h) FILL(none)"""))
       .collect().map(r => (r.getAs[Long]("time"), r.getAs[Double]("value"))).toSeq
     assert(out == Seq((1704153600L, 15.0)))
     // a one-level subquery through the same dispatch (round 13): daily
     // max of the hourly means, reading through the listing-sliced
     // resolver — 99.0 (next day) must still be excluded by the inner
-    val subOut = Api.dispatch(ctx, "cmd.tsdb.query",
-      """SELECT max("mv") FROM (SELECT mean("value") AS "mv" FROM "gen_raw"."sensor_temp" WHERE time >= '2024-01-02T00:00:00Z' AND time <= '2024-01-02T23:59:59Z' GROUP BY time(1h)) GROUP BY time(1d) FILL(none)""")
+    val subOut = Api.dispatch(ctx,
+      Cmd.Query("""SELECT max("mv") FROM (SELECT mean("value") AS "mv" FROM "gen_raw"."sensor_temp" WHERE time >= '2024-01-02T00:00:00Z' AND time <= '2024-01-02T23:59:59Z' GROUP BY time(1h)) GROUP BY time(1d) FILL(none)"""))
       .collect().map(r => (r.getAs[Long]("time"), r.getAs[Double]("value"))).toSeq
     assert(subOut == Seq((1704153600L, 15.0)), s"subquery: $subOut")
     // SHOW forms route to the catalog commands
-    val ms = Api.dispatch(ctx, "cmd.tsdb.query", "SHOW MEASUREMENTS")
+    val ms = Api.dispatch(ctx, Cmd.Query("SHOW MEASUREMENTS"))
       .collect().map(_.getAs[String]("measurement")).toSeq
     assert(ms == Seq("sensor_temp"))
-    val rps = Api.dispatch(ctx, "cmd.tsdb.query", "SHOW RETENTION POLICIES")
+    val rps = Api.dispatch(ctx, Cmd.Query("SHOW RETENTION POLICIES"))
       .collect().map(_.getAs[String]("name")).toSeq
     assert(rps.contains("gen_raw") && rps.contains("gen_year"))
     // unknown rp errors as InfluxQL
     val err = intercept[IllegalArgumentException] {
-      Api.dispatch(ctx, "cmd.tsdb.query",
-        """SELECT mean("value") FROM "default_20w"."sensor_temp" WHERE time > now()-5h GROUP BY time(1m) FILL(null)""")
+      Api.dispatch(ctx,
+        Cmd.Query("""SELECT mean("value") FROM "default_20w"."sensor_temp" WHERE time > now()-5h GROUP BY time(1m) FILL(null)"""))
     }
     assert(err.getMessage.contains("unknown retention policy"))
     // the Grafana template-variable catalog forms (round 12)
-    val tk = Api.dispatch(ctx, "cmd.tsdb.query", """SHOW TAG KEYS FROM "sensor_temp"""")
+    val tk = Api.dispatch(ctx, Cmd.Query("""SHOW TAG KEYS FROM "sensor_temp""""))
       .collect().map(r => (r.getString(0), r.getString(1))).toSeq
     assert(tk == Seq(("sensor_temp", "dev_id"), ("sensor_temp", "dev_type"),
       ("sensor_temp", "location_id")), s"tag keys: $tk")
-    val tv = Api.dispatch(ctx, "cmd.tsdb.query",
-      """SHOW TAG VALUES FROM "sensor_temp" WITH KEY = "dev_id"""")
+    val tv = Api.dispatch(ctx,
+      Cmd.Query("""SHOW TAG VALUES FROM "sensor_temp" WITH KEY = "dev_id""""))
       .collect().map(r => (r.getString(0), r.getString(1))).toSeq
     assert(tv == Seq(("dev_id", "1")), s"tag values: $tv")
     // an unknown (or field-typed) key answers EMPTY, not an error — a
     // ported dashboard's template variable must survive schema drift
-    assert(Api.dispatch(ctx, "cmd.tsdb.query",
-      """SHOW TAG VALUES FROM "sensor_temp" WITH KEY = "host"""").count() == 0)
-    assert(Api.dispatch(ctx, "cmd.tsdb.query",
-      """SHOW TAG VALUES WITH KEY = "value"""").count() == 0)
-    val fk = Api.dispatch(ctx, "cmd.tsdb.query", "SHOW FIELD KEYS")
+    assert(Api.dispatch(ctx,
+      Cmd.Query("""SHOW TAG VALUES FROM "sensor_temp" WITH KEY = "host"""")).count() == 0)
+    assert(Api.dispatch(ctx,
+      Cmd.Query("""SHOW TAG VALUES WITH KEY = "value"""")).count() == 0)
+    val fk = Api.dispatch(ctx, Cmd.Query("SHOW FIELD KEYS"))
       .collect().map(r => (r.getString(0), r.getString(1))).toSeq
     assert(fk == Seq(("value", "float")), s"field keys: $fk")
-    val series = Api.dispatch(ctx, "cmd.tsdb.query", """SHOW SERIES FROM "sensor_temp"""")
+    val series = Api.dispatch(ctx, Cmd.Query("""SHOW SERIES FROM "sensor_temp""""))
       .collect().map(_.getString(0)).toSeq
     assert(series ==
       Seq("sensor_temp,dev_id=1,dev_type=sensor,location_id=1"), s"series: $series")
-    val dbs = Api.dispatch(ctx, "cmd.tsdb.query", "SHOW DATABASES")
+    val dbs = Api.dispatch(ctx, Cmd.Query("SHOW DATABASES"))
       .collect().map(_.getString(0)).toSeq
     assert(dbs.length == 1 && dbs.head.nonEmpty)
     // ON db accepted and ignored; an InfluxQL-claimed SHOW outside the
     // grammar errors as InfluxQL (a non-InfluxQL SHOW keeps flowing to
     // the Spark SQL fallback)
-    assert(Api.dispatch(ctx, "cmd.tsdb.query",
-      """SHOW TAG KEYS ON "historian" FROM "sensor_temp"""").count() == 3)
+    assert(Api.dispatch(ctx,
+      Cmd.Query("""SHOW TAG KEYS ON "historian" FROM "sensor_temp"""")).count() == 3)
     intercept[IllegalArgumentException] {
-      Api.dispatch(ctx, "cmd.tsdb.query",
-        """SHOW TAG KEYS FROM "sensor_temp" WHERE time > now()-1h""")
+      Api.dispatch(ctx,
+        Cmd.Query("""SHOW TAG KEYS FROM "sensor_temp" WHERE time > now()-1h"""))
     }
     // Spark SQL fallback unaffected
-    val n = Api.dispatch(ctx, "cmd.tsdb.query", "SELECT 1 AS one")
+    val n = Api.dispatch(ctx, Cmd.Query("SELECT 1 AS one"))
       .collect().head.getAs[Int]("one")
     assert(n == 1)
   }
@@ -779,69 +779,69 @@ class InfluxQLSpec extends SparkSpec {
         """WHERE time >= '2024-01-02T00:00:00Z' AND time <= '2024-01-02T23:59:59Z' """ +
         """GROUP BY time(1h) FILL(none)""")
     assert(si.isInstanceOf[InfluxQL.SelectInto])
-    val res = Api.dispatch(ctx, "cmd.tsdb.query",
-      """SELECT mean("value") INTO "gen_default"."temp_hourly" FROM "gen_raw"."sensor_temp" """ +
+    val res = Api.dispatch(ctx,
+      Cmd.Query("""SELECT mean("value") INTO "gen_default"."temp_hourly" FROM "gen_raw"."sensor_temp" """ +
         """WHERE time >= '2024-01-02T00:00:00Z' AND time <= '2024-01-02T23:59:59Z' """ +
-        """GROUP BY time(1h) FILL(none)""").collect()
+        """GROUP BY time(1h) FILL(none)""")).collect()
     assert(res.map(r => (r.getAs[Long]("time"), r.getAs[Long]("written"))).toSeq ==
       Seq((0L, 2L)))
     // read the materialized measurement back through the ordinary grammar
-    val back = Api.dispatch(ctx, "cmd.tsdb.query",
-      """SELECT "value" FROM "gen_default"."temp_hourly" """ +
-        """WHERE time >= '2024-01-02T00:00:00Z' AND time <= '2024-01-02T23:59:59Z'""")
+    val back = Api.dispatch(ctx,
+      Cmd.Query("""SELECT "value" FROM "gen_default"."temp_hourly" """ +
+        """WHERE time >= '2024-01-02T00:00:00Z' AND time <= '2024-01-02T23:59:59Z'"""))
       .collect().map(r => (r.getAs[Long]("time"), r.getAs[Double]("value"))).toSet
     assert(back == Set((1704153600L, 15.0), (1704157200L, 30.0)), s"into: $back")
     // a whole-range aggregate has no point time to write at — envelope
     val err = intercept[IllegalArgumentException] {
-      Api.dispatch(ctx, "cmd.tsdb.query",
-        """SELECT mean("value") INTO "t2" FROM "gen_raw"."sensor_temp" WHERE time > now()-1d""")
+      Api.dispatch(ctx,
+        Cmd.Query("""SELECT mean("value") INTO "t2" FROM "gen_raw"."sensor_temp" WHERE time > now()-1d"""))
     }
     assert(err.getMessage.contains("time axis"))
     // a MULTI-item source writes one field column per item, each
     // readable back by name through fieldName
-    val multiRes = Api.dispatch(ctx, "cmd.tsdb.query",
-      """SELECT mean("value") AS "mu", max("value") AS "mx" INTO "gen_default"."temp_pair" """ +
+    val multiRes = Api.dispatch(ctx,
+      Cmd.Query("""SELECT mean("value") AS "mu", max("value") AS "mx" INTO "gen_default"."temp_pair" """ +
         """FROM "gen_raw"."sensor_temp" WHERE time >= '2024-01-02T00:00:00Z' """ +
-        """AND time <= '2024-01-02T23:59:59Z' GROUP BY time(1h) FILL(none)""").collect()
+        """AND time <= '2024-01-02T23:59:59Z' GROUP BY time(1h) FILL(none)""")).collect()
     assert(multiRes.head.getAs[Long]("written") == 2L)
-    def readField(f: String) = Api.dispatch(ctx, "cmd.tsdb.query",
-      s"""SELECT "$f" FROM "gen_default"."temp_pair" """ +
-        """WHERE time >= '2024-01-02T00:00:00Z' AND time <= '2024-01-02T23:59:59Z'""")
+    def readField(f: String) = Api.dispatch(ctx,
+      Cmd.Query(s"""SELECT "$f" FROM "gen_default"."temp_pair" """ +
+        """WHERE time >= '2024-01-02T00:00:00Z' AND time <= '2024-01-02T23:59:59Z'"""))
       .collect().map(r => (r.getAs[Long]("time"), r.getAs[Double]("value"))).toSet
     assert(readField("mu") == Set((1704153600L, 15.0), (1704157200L, 30.0)))
     assert(readField("mx") == Set((1704153600L, 20.0), (1704157200L, 30.0)))
     // a subquery with a MULTI outer as the INTO source (the shape that
     // used to crash on an unresolved `value` column) writes both fields
-    val subRes = Api.dispatch(ctx, "cmd.tsdb.query",
-      """SELECT max("mu") AS "dmu", min("mx") AS "dmx" INTO "gen_default"."temp_daily" FROM """ +
+    val subRes = Api.dispatch(ctx,
+      Cmd.Query("""SELECT max("mu") AS "dmu", min("mx") AS "dmx" INTO "gen_default"."temp_daily" FROM """ +
         """(SELECT mean("value") AS "mu", max("value") AS "mx" FROM "gen_raw"."sensor_temp" """ +
         """WHERE time >= '2024-01-02T00:00:00Z' AND time <= '2024-01-02T23:59:59Z' """ +
-        """GROUP BY time(1h)) GROUP BY time(1d) FILL(none)""").collect()
+        """GROUP BY time(1h)) GROUP BY time(1d) FILL(none)""")).collect()
     assert(subRes.head.getAs[Long]("written") == 1L)
-    val daily = Api.dispatch(ctx, "cmd.tsdb.query",
-      """SELECT "dmu" FROM "gen_default"."temp_daily" """ +
-        """WHERE time >= '2024-01-02T00:00:00Z' AND time <= '2024-01-02T23:59:59Z'""")
+    val daily = Api.dispatch(ctx,
+      Cmd.Query("""SELECT "dmu" FROM "gen_default"."temp_daily" """ +
+        """WHERE time >= '2024-01-02T00:00:00Z' AND time <= '2024-01-02T23:59:59Z'"""))
       .collect().map(r => (r.getAs[Long]("time"), r.getAs[Double]("value"))).toSet
     assert(daily == Set((1704153600L, 30.0)), s"sub-multi INTO: $daily")
     // the catalog sees the INTO target's typed columns as FIELDS (tags
     // are strings, fields are typed values), not as tag keys
-    val fk = Api.dispatch(ctx, "cmd.tsdb.query",
-      """SHOW FIELD KEYS FROM "temp_pair"""")
+    val fk = Api.dispatch(ctx,
+      Cmd.Query("""SHOW FIELD KEYS FROM "temp_pair""""))
       .collect().map(r => (r.getString(0), r.getString(1))).toSet
     assert(fk == Set(("mu", "float"), ("mx", "float")), s"INTO field keys: $fk")
-    assert(Api.dispatch(ctx, "cmd.tsdb.query",
-      """SHOW TAG KEYS FROM "temp_pair"""").count() == 0)
+    assert(Api.dispatch(ctx,
+      Cmd.Query("""SHOW TAG KEYS FROM "temp_pair"""")).count() == 0)
     // a BARE grouped multi source takes the mean default — the INTO
     // column derivation must use the PLANNED aliases (mean, mean_1),
     // not the raw bare names (this shape used to crash)
-    val bareRes = Api.dispatch(ctx, "cmd.tsdb.query",
-      """SELECT "value", "value" INTO "gen_default"."temp_bare" """ +
+    val bareRes = Api.dispatch(ctx,
+      Cmd.Query("""SELECT "value", "value" INTO "gen_default"."temp_bare" """ +
         """FROM "gen_raw"."sensor_temp" WHERE time >= '2024-01-02T00:00:00Z' """ +
-        """AND time <= '2024-01-02T23:59:59Z' GROUP BY time(1h) FILL(none)""").collect()
+        """AND time <= '2024-01-02T23:59:59Z' GROUP BY time(1h) FILL(none)""")).collect()
     assert(bareRes.head.getAs[Long]("written") == 2L)
-    val bareBack = Api.dispatch(ctx, "cmd.tsdb.query",
-      """SELECT "mean" FROM "gen_default"."temp_bare" """ +
-        """WHERE time >= '2024-01-02T00:00:00Z' AND time <= '2024-01-02T23:59:59Z'""")
+    val bareBack = Api.dispatch(ctx,
+      Cmd.Query("""SELECT "mean" FROM "gen_default"."temp_bare" """ +
+        """WHERE time >= '2024-01-02T00:00:00Z' AND time <= '2024-01-02T23:59:59Z'"""))
       .collect().map(r => (r.getAs[Long]("time"), r.getAs[Double]("value"))).toSet
     assert(bareBack == Set((1704153600L, 15.0), (1704157200L, 30.0)),
       s"bare INTO: $bareBack")

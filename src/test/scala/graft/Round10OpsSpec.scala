@@ -2,7 +2,7 @@ package graft
 
 import java.sql.Timestamp
 
-import graft.api.Api
+import graft.api.{Api, Cmd}
 import graft.model.Tier
 import graft.rollup.Downsampler
 import graft.store.TierStore
@@ -76,9 +76,9 @@ class Round10OpsSpec extends SparkSpec {
 
     // the typo: device "nope" never existed — nothing rewritten, and
     // crucially NOTHING vacuumed: the pin must survive
-    val res = Api.dispatch(ctx, "cmd.tsdb.delete_data_points",
-      Api.GetDataPointsRequest(measurementName = "sensor_click",
-        filters = graft.model.DataPointsFilter(devices = Seq("nope"))))
+    val res = Api.dispatch(ctx,
+      Cmd.DeleteDataPoints(Cmd.GetDataPointsRequest(measurementName = "sensor_click",
+        filters = graft.model.DataPointsFilter(devices = Seq("nope")))))
       .collect().map(r => (r.getString(0), (r.getLong(1), r.getLong(2)))).toMap
     assert(res.values.forall(_ == ((0L, 0L))),
       s"typo'd erasure must rewrite and vacuum nothing: $res")
@@ -108,9 +108,9 @@ class Round10OpsSpec extends SparkSpec {
     // current snapshot is clean) but history still holds the device —
     // the command must vacuum that tier anyway, or the rows stay
     // readable through readAsOf
-    val res = Api.dispatch(ctx, "cmd.tsdb.delete_data_points",
-      Api.GetDataPointsRequest(measurementName = "sensor_click",
-        filters = graft.model.DataPointsFilter(devices = Seq("7"))))
+    val res = Api.dispatch(ctx,
+      Cmd.DeleteDataPoints(Cmd.GetDataPointsRequest(measurementName = "sensor_click",
+        filters = graft.model.DataPointsFilter(devices = Seq("7")))))
       .collect().map(r => (r.getString(0), (r.getLong(1), r.getLong(2)))).toMap
     assert(res("gen_day")._1 == 0L, "current gen_day snapshot was already clean")
     assert(res("gen_day")._2 >= 1L,

@@ -3,6 +3,7 @@ package graft
 import java.time.Instant
 import java.sql.Timestamp
 
+import graft.api.Cmd
 import graft.model.{DataPointsFilter, DataPointsRequest, Tier}
 import graft.query.{InfluxQL, Planner}
 import graft.store.TierStore
@@ -237,9 +238,9 @@ class Round13Spec extends SparkSpec {
     // and the command path composes: get_data_points answers the same
     // values through the sliced resolver
     val ctx = graft.api.Api.Context(spark, store, now = () => now)
-    val viaApi = graft.api.Api.dispatch(ctx, "cmd.tsdb.get_data_points",
-      graft.api.Api.GetDataPointsRequest(measurementName = "app_a",
-        fromTime = "2024-01-02T00:00:00Z", toTime = "2024-01-03T12:00:00Z"))
+    val viaApi = graft.api.Api.dispatch(ctx,
+      Cmd.GetDataPoints(Cmd.GetDataPointsRequest(measurementName = "app_a",
+        fromTime = "2024-01-02T00:00:00Z", toTime = "2024-01-03T12:00:00Z")))
       .select("value").collect().map(_.getDouble(0)).toSet
     assert(viaApi == Set(2.0, 3.0), s"api got $viaApi")
   }

@@ -3,7 +3,7 @@ package graft
 import java.time.Instant
 import java.sql.Timestamp
 
-import graft.api.Api
+import graft.api.{Api, Cmd}
 import graft.model.{DataPointsRequest, Tier}
 import graft.query.{InfluxQL, Planner}
 import graft.store.TierStore
@@ -106,16 +106,16 @@ class Round14Spec extends SparkSpec {
     val store = new TierStore(spark, root)
     store.writeRouted(twoTag.withColumnRenamed("dir", "dev_type"))
     val ctx = Api.Context(spark, store, now = () => now)
-    Api.dispatch(ctx, "cmd.tsdb.query",
-      """SELECT mean("value") AS "foo" INTO "gen_default"."hourly" FROM "app_t" """ +
+    Api.dispatch(ctx,
+      Cmd.Query("""SELECT mean("value") AS "foo" INTO "gen_default"."hourly" FROM "app_t" """ +
         """WHERE time >= '2024-01-01T00:00:00Z' AND time <= '2024-01-01T02:00:00Z' """ +
-        """GROUP BY time(1h) FILL(none)""").collect()
+        """GROUP BY time(1h) FILL(none)""")).collect()
     // the written measurement answers a read of FIELD "foo" (InfluxDB
     // stores the alias as the field key — the pre-fix behavior stored
     // `value` and a "foo" read found nothing)
-    val back = Api.dispatch(ctx, "cmd.tsdb.query",
-      """SELECT "foo" FROM "gen_default"."hourly" """ +
-        """WHERE time >= '2024-01-01T00:00:00Z' AND time <= '2024-01-01T02:00:00Z'""")
+    val back = Api.dispatch(ctx,
+      Cmd.Query("""SELECT "foo" FROM "gen_default"."hourly" """ +
+        """WHERE time >= '2024-01-01T00:00:00Z' AND time <= '2024-01-01T02:00:00Z'"""))
     assert(back.select("value").collect().map(_.getDouble(0)).sorted.toSeq
       == Seq(25.0, 60.0)) // hour-0 mean of {10,20,30,40}, hour-1 of {50,70}
   }
@@ -268,10 +268,10 @@ class Round14Spec extends SparkSpec {
     store.writeRouted(twoTag.withColumnRenamed("dir", "dev_type"))
     val ctx = Api.Context(spark, store, now = () => now)
     intercept[IllegalArgumentException] {
-      Api.dispatch(ctx, "cmd.tsdb.query",
-        """SELECT mean("value") AS "time" INTO "t2" FROM "app_t" """ +
+      Api.dispatch(ctx,
+        Cmd.Query("""SELECT mean("value") AS "time" INTO "t2" FROM "app_t" """ +
           """WHERE time >= '2024-01-01T00:00:00Z' AND time <= '2024-01-01T02:00:00Z' """ +
-          """GROUP BY time(1h) FILL(none)""").collect()
+          """GROUP BY time(1h) FILL(none)""")).collect()
     }
   }
 
@@ -342,8 +342,8 @@ class Round14Spec extends SparkSpec {
     // relative-time form: carries the now()-dur marker looksLike claims
     // (a bare absolute-range select has no distinctive InfluxQL marker
     // and falls through to Spark SQL by design)
-    val df = Api.dispatch(ctx, "cmd.tsdb.query",
-      """SELECT "value" FROM "app_t" WHERE time > now()-2d AND "value" > 30""")
+    val df = Api.dispatch(ctx,
+      Cmd.Query("""SELECT "value" FROM "app_t" WHERE time > now()-2d AND "value" > 30"""))
     // the predicate must reach the scan as a pushed data filter (so
     // parquet row-group min/max skipping applies at 100 TB), not sit
     // only in a post-scan Filter node. Inspect the scan node's

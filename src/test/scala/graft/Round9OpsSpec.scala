@@ -2,7 +2,7 @@ package graft
 
 import java.sql.Timestamp
 
-import graft.api.Api
+import graft.api.{Api, Cmd}
 import graft.model.Tier
 import graft.rollup.Downsampler
 import graft.store.TierStore
@@ -179,8 +179,8 @@ class Round9OpsSpec extends SparkSpec {
       store.addCq("x", "gen_raw", "fast", "7m") // 7 min does not divide a day
     }
 
-    val cqs = Api.dispatch(ctx, "cmd.tsdb.add_cq",
-      ("raw_to_fast", "gen_raw", "fast", "5m"))
+    val cqs = Api.dispatch(ctx,
+      Cmd.AddCq("raw_to_fast", "gen_raw", "fast", "5m"))
       .collect().map(r => (r.getString(0), r.getString(1), r.getString(2),
         r.getLong(3)))
     assert(cqs.toSeq == Seq(("raw_to_fast", "gen_raw", "fast", 5L)))
@@ -218,11 +218,11 @@ class Round9OpsSpec extends SparkSpec {
     assert(reattached.continuousQueries.map(_.name) == Seq("raw_to_fast"))
 
     // delete_object parity: "cq" unregisters (admin.go:364)...
-    Api.dispatch(ctx, "cmd.tsdb.delete_object", ("cq", "raw_to_fast"))
-    assert(Api.dispatch(ctx, "cmd.tsdb.get_cqs", null).count() == 0L)
+    Api.dispatch(ctx, Cmd.DeleteObject("cq", "raw_to_fast"))
+    assert(Api.dispatch(ctx, Cmd.GetCqs).count() == 0L)
     assert(new TierStore(spark, storeRoot).continuousQueries.isEmpty) // durable
     // ...and "database" drops the store root (admin.go:360-362 DropDB)
-    Api.dispatch(ctx, "cmd.tsdb.delete_object", ("database", "any"))
+    Api.dispatch(ctx, Cmd.DeleteObject("database", "any"))
     assert(store.read(Tier.GenRaw).count() == 0L)
   }
 
@@ -292,14 +292,14 @@ class Round9OpsSpec extends SparkSpec {
     val ctx = Api.Context(spark, store)
     val t1 = store.pinNow()
 
-    val rep = Api.dispatch(ctx, "cmd.tsdb.backfill",
-      Api.BackfillRequest(fromDate = "2024-01-01", toDate = "2024-01-02"))
+    val rep = Api.dispatch(ctx,
+      Cmd.BackfillRequest(fromDate = "2024-01-01", toDate = "2024-01-02"))
       .collect()
     assert(rep.head.getAs[String]("status") == "ok")
     assert(store.read(Tier.GenDay).count() == 2L)
 
-    val audit = Api.dispatch(ctx, "cmd.tsdb.verify_rollup",
-      Api.VerifyRollupRequest(fromDate = "2024-01-01", toDate = "2024-01-02"))
+    val audit = Api.dispatch(ctx,
+      Cmd.VerifyRollupRequest(fromDate = "2024-01-01", toDate = "2024-01-02"))
       .filter(col("tier") === "gen_day").collect()
     assert(audit.length == 2 &&
       audit.forall(r => r.getAs[Long]("n_missing") == 0L &&
@@ -307,13 +307,13 @@ class Round9OpsSpec extends SparkSpec {
         r.getAs[Long]("n_value_mismatch") == 0L))
 
     val t2 = store.pinNow()
-    val d = Api.dispatch(ctx, "cmd.tsdb.diff_data_points",
-      Api.DiffRequest(tier = "gen_day", fromPin = t1.encoded, toPin = t2.encoded))
+    val d = Api.dispatch(ctx,
+      Cmd.DiffRequest(tier = "gen_day", fromPin = t1.encoded, toPin = t2.encoded))
       .select("change").as[String].collect()
     assert(d.length == 2 && d.forall(_ == "added")) // rollups born after t1
     intercept[IllegalArgumentException] {
-      Api.dispatch(ctx, "cmd.tsdb.diff_data_points",
-        Api.DiffRequest(tier = "nope", fromPin = t1.encoded, toPin = t2.encoded))
+      Api.dispatch(ctx,
+        Cmd.DiffRequest(tier = "nope", fromPin = t1.encoded, toPin = t2.encoded))
     }
   }
 }

@@ -211,6 +211,10 @@ class ServiceSpec extends SparkSpec {
     assert(e.contains("error"), e)
     val g = svc.execute("not json at all")
     assert(g.contains("error"), g)
+    // an unknown type is refused where the envelope is decoded, and still
+    // answers an error report
+    val u = svc.execute("""{"type":"cmd.tsdb.nope","uid":"n","val":{}}""")
+    assert(u.contains("unknown command: cmd.tsdb.nope"), u)
   }
 
   test("command-dir retention: the maintenance sweep reclaims old " +

@@ -147,7 +147,7 @@ class StoreStreamSpec extends SparkSpec {
 
   test("under the simple profile, rollup maintenance still carries " +
     "electricity_meter_energy_sampled into gen_year through the cascade") {
-    import graft.api.Api
+    import graft.api.{Api, Cmd}
     val store = new TierStore(spark, tmpDir())
     // the simple profile routes both points to gen_raw; gen_year is
     // reached only by the cascade, which the energy queries read
@@ -159,18 +159,18 @@ class StoreStreamSpec extends SparkSpec {
     def sampled() = store.read(Tier.GenYear)
       .filter(col("measurement") === "electricity_meter_energy_sampled")
       .collect().map(_.getAs[Double]("value")).toSeq
-    Api.dispatch(ctx, "cmd.tsdb.run_maintenance",
-      Api.MaintenanceRequest(sinceDays = 5)).collect()
+    Api.dispatch(ctx,
+      Cmd.MaintenanceRequest(sinceDays = 5)).collect()
     assert(sampled() == Seq(1.5), "the cascade did not publish the rollup")
     assert(store.read(Tier.GenYear).count() == 2)
     // a backfill recomputes the same rollup rather than skipping it
     store.write(Tier.GenRaw, pts(("electricity_meter_energy_sampled", "2024-01-01", 2.5)))
-    Api.dispatch(ctx, "cmd.tsdb.backfill",
-      Api.BackfillRequest(fromDate = "2024-01-01", toDate = "2024-01-01")).collect()
+    Api.dispatch(ctx,
+      Cmd.BackfillRequest(fromDate = "2024-01-01", toDate = "2024-01-01")).collect()
     assert(sampled() == Seq(2.0), "backfill did not replace the stale rollup")
     // and the audit compares the rollup rather than leaving it out
-    val audit = Api.dispatch(ctx, "cmd.tsdb.verify_rollup",
-      Api.VerifyRollupRequest(fromDate = "2024-01-01", toDate = "2024-01-01"))
+    val audit = Api.dispatch(ctx,
+      Cmd.VerifyRollupRequest(fromDate = "2024-01-01", toDate = "2024-01-01"))
       .filter(col("tier") === "gen_year").collect()
     assert(audit.map(_.getAs[String]("measurement")).toSet ==
       Set("electricity_meter_energy_sampled", "electricity_meter_power"))
