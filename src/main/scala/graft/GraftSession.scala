@@ -48,7 +48,19 @@ import org.apache.spark.sql.SparkSession
  *    later caller gets: a deployment that does not build its session
  *    through this builder must set both keys (`fs.file.impl` and
  *    `fs.AbstractFileSystem.file.impl`, `spark.hadoop.`-prefixed in a
- *    SparkConf) before its first `file://` access.
+ *    SparkConf) before its first `file://` access;
+ *  - `spark.sql.artifact.isolation.enabled` off, a fixed setting: Spark
+ *    keys its generated-code cache by (context class loader, source),
+ *    and with isolation on each streaming query runs its tasks under a
+ *    class loader of its own, so every new query (each
+ *    `Service.reconcileIngest` restart included) recompiles every
+ *    generated class, its compiler's class lookups going through RPC —
+ *    measured, a second identical aggregator query compiled 13 classes
+ *    in its first batch, where on one shared class loader it compiles
+ *    none (StoreStreamSpec's codegen budget). Isolation only keeps
+ *    session artifacts apart, and the engine adds none (no `addArtifact`
+ *    or `addJar`); every entry point builds its session through this
+ *    builder.
  */
 object GraftSession {
 
@@ -101,6 +113,8 @@ object GraftSession {
       // any single query's lifetime (long-lived production streams can
       // lower it per session)
       .config("spark.sql.streaming.stateStore.maintenanceInterval", "600s")
+      // one executor class loader for every query: see the scaladoc
+      .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.sql.extensions", classOf[GraftExtensions].getName)
       .config(localFsConf)
 

@@ -183,8 +183,10 @@ final class Service(val spark: SparkSession, conf: Service.Config) {
   /** Execute one command-envelope JSON and return the FIMP report the
    *  transport writes back — also the in-process entry for tests. A
    *  [[Cmd.SeriesShaped]] command answers the reference's Results
-   *  document; everything else answers its rows as a JSON array in an
-   *  `evt.<command>_report` envelope. */
+   *  document; `cmd.tsdb.get_measurements` answers the documented
+   *  `evt.tsdb.measurements_report` string array; everything else
+   *  answers its rows as a JSON array in an `evt.<command>_report`
+   *  envelope. */
   def execute(json: String): String = dispatchLock.synchronized {
     val ctime = java.time.Instant.now().toString
     val uid = java.util.UUID.randomUUID().toString
@@ -194,6 +196,8 @@ final class Service(val spark: SparkSession, conf: Service.Config) {
         case series: Cmd.SeriesShaped =>
           Api.dispatchFimp(ctx, series, corid = cmd.uid, uid = uid, ctime = ctime,
             measurement = cmd.measurement, groupByTag = cmd.groupByTag)
+        case Cmd.GetMeasurements =>
+          Api.measurementsFimpReport(ctx, corid = cmd.uid, uid = uid, ctime = ctime)
         case c =>
           val reportType = c.wireType.replaceFirst("^cmd\\.", "evt.") + "_report"
           val body =

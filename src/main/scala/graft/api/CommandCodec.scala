@@ -238,7 +238,7 @@ object CommandCodec {
       toPin = str(field(v, "toPin", "to_pin")))),
     on("cmd.tsdb.query")((v, _) => v match {
       case JString(sql) => Cmd.Query(sql)
-      case o => Cmd.Query(str(o \ "sql"), Some(int(o \ "procId", 1)))
+      case o => Cmd.Query(str(o \ "sql"), Some(procId(o)))
     }),
     on("cmd.ecprocess.add")((v, _) => Cmd.AddProcess(
       if (v == JNothing || v == JNull) None else Some(processConfig(v)))),

@@ -748,6 +748,7 @@ class ApiPipelineSpec extends SparkSpec {
     val s = graft.GraftSession.getOrCreate(master = "local[2]")
     assert(s.conf.get("spark.sql.session.timeZone") == "UTC")
     assert(s.conf.get("spark.sql.files.maxPartitionBytes") == "256m")
+    assert(s.conf.get("spark.sql.artifact.isolation.enabled") == "false")
     // custom functions reachable from raw SQL right away
     assert(s.sql("SELECT vec_l2norm(array(3.0D, 4.0D)) AS n")
       .collect().head.getDouble(0) == 5.0)

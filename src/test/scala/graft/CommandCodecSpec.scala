@@ -104,6 +104,11 @@ class CommandCodecSpec extends SparkSpec {
     assert(decode("cmd.tsdb.query", """"SELECT 1"""") == Cmd.Query("SELECT 1"))
     assert(decode("cmd.tsdb.query", """{"procId":3,"sql":"SELECT 2"}""") ==
       Cmd.Query("SELECT 2", Some(3)))
+    // the reference's snake_case spelling, as every other command reads it
+    assert(decode("cmd.tsdb.query", """{"proc_id":2,"sql":"SELECT 1"}""") ==
+      Cmd.Query("SELECT 1", Some(2)))
+    assert(decode("cmd.tsdb.query", """{"sql":"SELECT 1"}""") ==
+      Cmd.Query("SELECT 1", Some(1)))
   }
 
   test("process lifecycle, DDL, filter/selector CRUD, log level") {

@@ -217,6 +217,24 @@ class ServiceSpec extends SparkSpec {
     assert(u.contains("unknown command: cmd.tsdb.nope"), u)
   }
 
+  test("execute: get_measurements answers the documented " +
+    "evt.tsdb.measurements_report string array") {
+    val root = tmpDir()
+    val svc = new Service(spark, Service.Config(storeRoot = root))
+    val ts = java.time.Instant.now().minusSeconds(60).toString
+    val wrote = svc.execute(
+      s"""{"type":"cmd.tsdb.write_data_points","uid":"w",
+         |"val":{"dp":[{"name":"m_b","tags":{"dev_id":"d1"},"fields":{"value":1.0},"ts":"$ts"},
+         |{"name":"m_a","tags":{"dev_id":"d1"},"fields":{"value":2.0},"ts":"$ts"},
+         |{"name":"m_b","tags":{"dev_id":"d2"},"fields":{"value":3.0},"ts":"$ts"}]}}""".stripMargin)
+    assert(!wrote.contains("error"), wrote)
+    val r = svc.execute("""{"type":"cmd.tsdb.get_measurements","uid":"m"}""")
+    assert(r.contains(""""type":"evt.tsdb.measurements_report""""), r)
+    assert(r.contains(""""val_t":"str_array""""), r)
+    assert(r.contains(""""val":["m_a","m_b"]"""), r)
+    assert(r.contains(""""corid":"m""""), r)
+  }
+
   test("command-dir retention: the maintenance sweep reclaims old " +
     "rsp-/done/ files while in-flight exchanges survive (r10 ask #4)") {
     val root = tmpDir()

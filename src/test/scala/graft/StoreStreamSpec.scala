@@ -407,6 +407,117 @@ class StoreStreamSpec extends SparkSpec {
     }
   }
 
+  test("streaming aggregator codegen budget: steady batches and a second " +
+    "query's first batch compile no class, and no AppendColumns is planned") {
+    import spark.implicits._
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.execution.{AppendColumnsExec, AppendColumnsWithObjectExec}
+    import org.apache.spark.sql.execution.streaming.runtime.StreamingQueryWrapper
+    implicit val sqlCtx = spark.sqlContext
+    // one histogram update per compiled class, JVM-wide: the suites run
+    // one after another, so nothing else compiles while a batch runs
+    def compiled(): Long = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val base = 1704067200L
+    def batch(b: Int) = for (f <- Seq("mean", "last", "difference"); s <- 0 until 3)
+      yield Aggregator.StreamIn(s"s_${f}_$s", "m", f,
+        new Timestamp((base + b * 600L) * 1000), 100.0 + 7 * b + s, "sensor")
+    // (classes compiled per batch, executed plan of the last batch)
+    def run(tag: String, batches: Int) = {
+      val input = MemoryStream[Aggregator.StreamIn]
+      val q = Aggregator.streaming(input.toDS())
+        .writeStream.format("memory").queryName(s"agg_codegen_$tag")
+        .outputMode("append").start()
+      try {
+        val perBatch = (0 until batches).map { b =>
+          val before = compiled()
+          input.addData(batch(b))
+          q.processAllAvailable()
+          compiled() - before
+        }
+        (perBatch, q.asInstanceOf[StreamingQueryWrapper].streamingQuery
+          .lastExecution.executedPlan)
+      } finally q.stop()
+    }
+    // the counter counts: a never-seen literal is a new class
+    val before = compiled()
+    spark.range(1).select(col("id") * System.nanoTime()).collect()
+    assert(compiled() > before)
+    // Measured at commit 1ff9dcab6: 1 class in every steady batch (the
+    // state deserializer's MapObjects lambda variable took a new id each
+    // batch) and 13 in a second query's first batch (one executor class
+    // loader per query).
+    val (first, plan) = run("first", 5)
+    assert(first.drop(2).forall(_ == 0), s"classes compiled per batch: $first")
+    val (second, _) = run("second", 1)
+    assert(second == Seq(0L), s"second query's first batch compiled $second")
+    assert(plan.collect { case p: AppendColumnsExec => p
+      case p: AppendColumnsWithObjectExec => p }.isEmpty, plan.treeString)
+    assert(plan.treeString.contains("FlatMapGroupsWithState"), plan.treeString)
+  }
+
+  test("streaming difference: a seed carried across a stop and a restart " +
+    "on the same checkpoint emits the rows of an unbroken run, under the " +
+    "HDFS and RocksDB state stores") {
+    import spark.implicits._
+    implicit val sqlCtx = spark.sqlContext
+    val base = 1704067200L // on a 10-minute tick, so `difference` emits
+    val series = Seq(("s_diff", "sensor"), ("s_hourly", Aggregator.HourlyProfileDevType))
+    // batch b: x_b one minute before the tick, x_b + b + 1 on it, with
+    // x_b = 100 + 10 b²; the seed carried in from batch b-1 adds
+    // x_b - x_{b-1} - b to the window's difference
+    val batches = (0 until 4).map { b =>
+      val tick = base + b * 600L
+      val x = 100.0 + 10 * b * b
+      series.flatMap { case (id, dev) =>
+        Seq(Aggregator.StreamIn(id, "m", "difference", new Timestamp((tick - 60) * 1000), x, dev),
+          Aggregator.StreamIn(id, "m", "difference", new Timestamp(tick * 1000), x + b + 1, dev))
+      }
+    }
+    // sorted output rows of `batches` fed to queries over one checkpoint,
+    // a stop and a restart at each cut
+    def run(cuts: Set[Int]): Seq[Aggregator.StreamOut] = {
+      val input = MemoryStream[Aggregator.StreamIn]
+      val ck = tmpDir()
+      val parts = batches.indices.foldLeft(Vector(Vector.empty[Int])) { (acc, b) =>
+        if (cuts(b)) acc :+ Vector(b) else acc.init :+ (acc.last :+ b)
+      }
+      // the memory sink cannot restart from a checkpoint; foreachBatch can
+      val out = new java.util.concurrent.ConcurrentLinkedQueue[Aggregator.StreamOut]()
+      parts.foreach { bs =>
+        val q = Aggregator.streaming(input.toDS()).writeStream
+          .option("checkpointLocation", ck)
+          .foreachBatch { (ds: org.apache.spark.sql.Dataset[Aggregator.StreamOut], _: Long) =>
+            ds.collect().foreach(out.add); ()
+          }
+          .start()
+        try bs.foreach { b => input.addData(batches(b)); q.processAllAvailable() }
+        finally q.stop()
+      }
+      out.toArray(Array.empty[Aggregator.StreamOut]).toSeq
+        .sortBy(o => (o.series_id, o.time.getTime, o.value))
+    }
+    val provider = "spark.sql.streaming.stateStore.providerClass"
+    val hdfsWhole = run(Set.empty)
+    val hdfsCut = run(Set(2))
+    spark.conf.set(provider,
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
+    val (rocksWhole, rocksCut) =
+      try (run(Set.empty), run(Set(2)))
+      finally {
+        spark.conf.unset(provider)
+        org.apache.spark.sql.graft.StateStoreHygiene.unloadAll()
+      }
+    // batch 2, the first after the restart, reads x_1 + 2 = 112 as its
+    // seed: 140 - 112 + 3 = 31, where an unseeded window gives 3
+    val tick2 = new Timestamp((base + 2 * 600L) * 1000)
+    assert(hdfsWhole.exists(o => o.series_id == "s_diff" && o.time == tick2 &&
+      o.value == 31.0), hdfsWhole)
+    assert(hdfsWhole.count(_.series_id == "s_hourly") == batches.length, hdfsWhole)
+    assert(hdfsCut == hdfsWhole)
+    assert(rocksWhole == hdfsWhole)
+    assert(rocksCut == hdfsWhole)
+  }
+
   test("watermarked streaming window aggregation (A1 windowed form)") {
     import spark.implicits._
     implicit val sqlCtx = spark.sqlContext
